@@ -7,10 +7,14 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
 The real registry lives in :mod:`ascii_hydra_spark.verification`; this file
 is a thin adapter so the engine package stays importable on its own.
+Callers of this contract build their own session, not through
+``build_spark``, so the adapter ships the package to that session's
+workers (once per application).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -20,16 +24,27 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ascii_hydra_spark import verification  # noqa: E402
+from ascii_hydra_spark.session import ship_package  # noqa: E402
+
+
+def _shipped(fn: Callable[[SparkSession, str], DataFrame]):
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ship_package(spark)
+        return fn(spark, sf_dir)
+
+    return run
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
+    ship_package(spark)
     return verification.flagship(spark)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return verification.queries()
+    return {name: _shipped(fn) for name, fn in verification.queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -15,6 +15,8 @@ plumbing:
 `sql()` resolves names through the engine catalog (views registered
 lazily), so query text is identical across execution modes; `analyze()`
 upgrades the views to stat-bearing external tables for CBO.
+`materialize()` writes through `plans.sink`, the same write-and-report
+path `Pipeline.run` uses, so both return one report shape.
 """
 
 from __future__ import annotations
@@ -24,8 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ascii_hydra_spark.catalog import TABLES, Catalog
+from ascii_hydra_spark.plans import sink
 from ascii_hydra_spark.session import ExecutionMode, SessionProfile, build_spark
-from ascii_hydra_spark.sources import write_parquet
 
 
 @dataclass
@@ -94,9 +96,10 @@ class HydraEngine:
         name: str,
         partition_by: tuple[str, ...] = (),
     ) -> dict:
-        """Write a result as a named parquet dataset + run report (A21)."""
-        path = f"{self.output_root}/{name}"
-        write_parquet(df, path, partition_by=partition_by)
-        back = self.spark.read.parquet(path)
-        self.catalog.overrides[name] = path
-        return {"asset": name, "path": path, "row_count": back.count()}
+        """Write a result as a named parquet dataset + run report (A21).
+
+        The report is `plans.sink`'s; its `row_count` is the rows this call
+        wrote (on a partition rerun, the rerun partitions only)."""
+        report = sink(df, f"{self.output_root}/{name}", partition_by)
+        self.catalog.overrides[name] = report["path"]
+        return report

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ascii_hydra_spark.functions import word_tokens
 from ascii_hydra_spark.operators.lineage import truncate_lineage
+from ascii_hydra_spark.operators.distrank import single_partition
+from ascii_hydra_spark.operators.similarity import block_pair_sides
 
 # Okapi defaults, shared with the verification oracle so both engines
 # compute with bit-identical constants (0.25 / 0.75 / 2.2 are interpolated
@@ -196,7 +198,7 @@ def tfidf_doc_neighbors(
 
     * kept vocab <= `dense_vocab_max`: each doc's weights densify into a
       |vocab|-dim float64 vector and every unordered block pair computes
-      its dots as ONE numpy GEMM (`cosine_pairs_blocked`'s grid), so the
+      its dots as ONE numpy GEMM (`similarity.block_pair_sides`'s grid), so the
       per-term postings blowup — Σ_term df² product rows through a
       shuffle on the degenerate hot vocabulary — never exists. cos =
       round(dot / (na*nb), 6) with norms from the same tid-ordered
@@ -222,9 +224,10 @@ def tfidf_doc_neighbors(
     """
     toks = docs.select(F.col(id_col).alias("doc"), F.explode(word_tokens(text_col)).alias("term"))
     tf = toks.groupBy("doc", "term").agg(F.count("*").alias("tf")).persist()
-    stats = tf.agg(F.count_distinct("doc").alias("n_docs"))
+    # N as an uncorrelated scalar subquery: a value, not a 1-row join side
+    n_docs = tf.agg(F.count_distinct("doc")).scalar()
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    kept = dfreq.crossJoin(F.broadcast(stats)).filter(
+    kept = dfreq.withColumn("n_docs", n_docs).filter(
         F.col("df") <= F.lit(float(max_df_ratio)) * F.col("n_docs")
     )
     # EAGER: the arm choice needs the kept-vocabulary size; this one job
@@ -237,9 +240,8 @@ def tfidf_doc_neighbors(
     )
     # the dense arm ships doc ids through int64 numpy arrays, so it only
     # applies to integral ids; any other id type keeps the postings join
-    integral_id = isinstance(
-        docs.schema[id_col].dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
+    id_type = docs.schema[id_col].dataType
+    integral_id = isinstance(id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
     if 0 < n_kept_terms <= dense_vocab_max and integral_id:
         # the GEMM emits a conservative SUPERSET of candidate pairs with
         # their (dot, na, nb) doubles; the final cosine, rounding and
@@ -247,11 +249,11 @@ def tfidf_doc_neighbors(
         # postings arm uses, so engine-side semantics (round ties, NaN
         # ordering for zero-norm docs) cannot diverge between the arms
         cand = _tfidf_dense_pairs(
-            weighted, kept.select("term"), n_kept_terms, threshold, block_size
+            weighted, kept.select("term", "df"), n_kept_terms, threshold, block_size
         )
-        cos = cand.select(
-            "doc_a",
-            "doc_b",
+        cos = cand.select(  # back from numpy's int64 to the caller's id type
+            F.col("doc_a").cast(id_type).alias("doc_a"),
+            F.col("doc_b").cast(id_type).alias("doc_b"),
             F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6).alias("cos"),
         ).filter(F.col("cos") >= F.lit(float(threshold)))
     else:
@@ -294,7 +296,7 @@ def _tfidf_dense_pairs(
     block_size: int,
 ) -> DataFrame:
     """(doc_a, doc_b, dot, na, nb) candidate pairs with doc_a < doc_b,
-    via the blocked-GEMM grid of `cosine_pairs_blocked`: docs hash into
+    via the blocked-GEMM grid of `similarity.block_pair_sides`: docs hash into
     ~n/block_size blocks, every unordered block pair is one task, and
     each task densifies its rows into (rows x vocab) float64 matrices
     and computes dots as ONE numpy matmul.
@@ -302,7 +304,8 @@ def _tfidf_dense_pairs(
     The numpy side only PRUNES: it keeps a conservative superset —
     NOT(dot/(na*nb) < threshold - 1e-6), where the 1e-6 margin covers
     the at-most-5e-7 a 6-dp round can move the value and the NOT(<)
-    form keeps NaN rows (zero-norm docs: every term at df == N) — and
+    form keeps NaN rows (zero-norm docs: every term at df == N); like the
+    postings arm it also drops pairs that share no kept term — and
     the caller computes round(dot/(na*nb), 6) and the threshold cut in
     Spark, so rounding ties and NaN-ordering semantics are decided by
     the same engine expressions as the postings arm. The norms sum each
@@ -314,7 +317,9 @@ def _tfidf_dense_pairs(
     """
     import pandas as pd
 
-    tidw = Window.orderBy("term")  # bounded: <= dense_vocab_max rows
+    # bounded: <= dense_vocab_max rows; pmod(df, 1) is the annotated
+    # single-partition marker (df is any non-null integral column)
+    tidw = Window.partitionBy(single_partition("df")).orderBy("term")
     tids = kept_terms.select(
         "term", (F.row_number().over(tidw) - 1).alias("__tid")
     )
@@ -333,33 +338,11 @@ def _tfidf_dense_pairs(
     )
     # eager: the doc-vector table feeds both sides of the block grid
     # (distinct sub-plans — the racing-lazy-cache pathology), and the
-    # grid itself is sized from n
-    n = docvecs.count()
-    n_blocks = max(1, -(-n // block_size))
-    spark = weighted.sparkSession
-    block_pairs = (
-        spark.range(n_blocks)
-        .select(F.col("id").cast("int").alias("bi"))
-        .join(
-            spark.range(n_blocks).select(F.col("id").cast("int").alias("bj")),
-            F.col("bi") <= F.col("bj"),
-        )
-    )
-    vecs = docvecs.select(
-        "doc",
-        "__tids",
-        "__ws",
-        F.pmod(F.xxhash64(F.col("doc")), F.lit(n_blocks)).cast("int").alias("__b"),
-    )
-    left = block_pairs.join(vecs, F.col("__b") == F.col("bi")).select(
-        "bi", "bj", "doc", "__tids", "__ws", F.lit(0).alias("__side")
-    )
-    right = block_pairs.join(vecs, F.col("__b") == F.col("bj")).select(
-        "bi", "bj", "doc", "__tids", "__ws", F.lit(1).alias("__side")
-    )
+    # grid is sized from its count, which also materializes the cache
+    sides = block_pair_sides(docvecs, "doc", block_size)
     thr = float(threshold)
 
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         bi, bj = key
@@ -392,7 +375,13 @@ def _tfidf_dense_pairs(
         with np.errstate(divide="ignore", invalid="ignore"):
             sims = dots / np.outer(na, nb)
         # NOT (cos < thr - margin): conservative superset; keeps NaN rows
-        ia, ib = np.nonzero(~(sims < thr - 1e-6))
+        cand = ~(sims < thr - 1e-6)
+        # the postings arm only pairs docs that share a kept term. Weights
+        # are > 0 except at df == N, and a df == N term is in every doc,
+        # so docs share a term iff dot > 0 or the task holds a zero weight
+        if not any((np.asarray(w) == 0).any() for w in l["__ws"]):
+            cand &= dots > 0
+        ia, ib = np.nonzero(cand)
         ids_l = l["doc"].to_numpy()
         ids_r = r["doc"].to_numpy()
         id_a, id_b = ids_l[ia], ids_r[ib]
@@ -417,8 +406,7 @@ def _tfidf_dense_pairs(
         return out
 
     return (
-        left.unionByName(right)
-        .groupBy("bi", "bj")
+        sides.groupBy("bi", "bj")
         .applyInPandas(score, "doc_a LONG, doc_b LONG, dot DOUBLE, na DOUBLE, nb DOUBLE")
     )
 

@@ -238,6 +238,34 @@ def _normalize(v):
     return F.transform(v, lambda x: x / norm)
 
 
+def block_pair_sides(rows: DataFrame, key_col: str, block_size: int) -> DataFrame:
+    """`rows` laid out for blocked all-pairs work, with (bi, bj, __side)
+    added: rows hash by `key_col` into ~n/block_size blocks, and each row
+    is replicated into every unordered block pair (bi <= bj) holding its
+    block — as side 0 where it is block bi, side 1 where it is block bj
+    (both when bi == bj). Grouping by (bi, bj) then gives one task per
+    block pair that sees at most ~2 * block_size rows.
+
+    EAGER: one `count()` of `rows` sizes the grid. The O(n_blocks^2) grid
+    is generated DISTRIBUTIVELY as explode(sequence(bi, n_blocks - 1)),
+    never as a driver-side Python list (at ~10M rows / block 1024 it is
+    ~50M pairs) and never as a `bi <= bj` non-equi self-join (a
+    BroadcastNestedLoopJoin); both sides then attach by equi-join.
+    """
+    n_blocks = max(1, -(-rows.count() // block_size))
+    grid = (
+        rows.sparkSession.range(n_blocks)
+        .select(F.col("id").cast("int").alias("bi"))
+        .select("bi", F.explode(F.sequence("bi", F.lit(n_blocks - 1))).alias("bj"))
+    )
+    tagged = rows.withColumn(
+        "__b", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_blocks)).cast("int")
+    )
+    left = grid.join(tagged, F.col("__b") == F.col("bi")).withColumn("__side", F.lit(0))
+    right = grid.join(tagged, F.col("__b") == F.col("bj")).withColumn("__side", F.lit(1))
+    return left.unionByName(right).drop("__b")
+
+
 def cosine_pairs_blocked(
     emb: DataFrame,
     threshold: float = 0.9,
@@ -258,39 +286,17 @@ def cosine_pairs_blocked(
     pairs. The quadratic total cost is inherent to exactness — the escape
     hatch is the LSH arm, not a better exact algorithm.
 
-    NOTE: `emb.count()` makes this operator EAGER at plan-construction time
-    (one scan to size the block grid) — acceptable for a terminal batch op.
-    The O(n_blocks^2) block-pair table is generated DISTRIBUTIVELY
-    (`spark.range` self-join), never as a driver-side Python list: at ~10M
-    vectors / block 1024 that grid is ~50M pairs, which would bottleneck
-    the driver long before the executors.
+    NOTE: sizing the block grid (:func:`block_pair_sides`) makes this
+    operator EAGER at plan-construction time (one scan) — acceptable for a
+    terminal batch op.
     """
     import pandas as pd
 
-    n = emb.count()
-    n_blocks = max(1, -(-n // block_size))
-    spark = emb.sparkSession
-    block_pairs = (
-        spark.range(n_blocks)
-        .select(F.col("id").cast("int").alias("bi"))
-        .join(
-            spark.range(n_blocks).select(F.col("id").cast("int").alias("bj")),
-            F.col("bi") <= F.col("bj"),
-        )
-    )
     vecs = emb.select(
-        F.col(id_col).alias("__id"),
-        to_double_array(vec_col).alias("__v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("__b"),
-    )
-    left = block_pairs.join(vecs, F.col("__b") == F.col("bi")).select(
-        "bi", "bj", "__id", "__v", F.lit(0).alias("__side")
-    )
-    right = block_pairs.join(vecs, F.col("__b") == F.col("bj")).select(
-        "bi", "bj", "__id", "__v", F.lit(1).alias("__side")
+        F.col(id_col).alias("__id"), to_double_array(vec_col).alias("__v")
     )
 
-    def score(key, pdf: pd.DataFrame):
+    def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         bi, bj = key
@@ -318,7 +324,7 @@ def cosine_pairs_blocked(
         return out
 
     return (
-        left.unionByName(right)
+        block_pair_sides(vecs, "__id", block_size)
         .groupBy("bi", "bj")
         .applyInPandas(score, "id_a LONG, id_b LONG, sim DOUBLE")
     )

@@ -9,11 +9,17 @@ named DataFrame-producing function with declared deps; a `Pipeline` runs
 them in topological order, materializes each to parquet, and returns a run
 report per asset. Cloud submission (EMR/Databricks clients in the
 reference) is infra, not query capability — out of scope per SURVEY §2.4.
+
+`sink` is the one write-and-report path: `Pipeline.run` and
+`HydraEngine.materialize` both call it, so every materialization reports
+the same `{asset, path, row_count, n_columns, duration_sec}`, where
+`row_count` is the rows that call wrote.
 """
 
 from __future__ import annotations
 
 import inspect
+import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -44,6 +50,31 @@ def plan_report(df: DataFrame) -> dict:
         and "PartitionFilters: []" not in formatted,
         "take_ordered": "TakeOrderedAndProject" in simple,
         "scans": simple.count("Scan parquet"),
+    }
+
+
+def sink(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> dict:
+    """Write `df` as parquet under `path` and report the materialization.
+
+    The row count rides the WRITE job through `observe()`: counting a
+    re-read of the sink would cost a second full scan per asset, which at
+    100 TB doubles pipeline I/O for a metadata field. `row_count` is the
+    rows this call wrote; on a dynamic-overwrite partition rerun that is
+    the rerun partitions' rows, not the whole dataset's.
+    """
+    t0 = time.monotonic()
+    obs = Observation()
+    write_parquet(
+        df.observe(obs, F.count(F.lit(1)).alias("row_count")),
+        path,
+        partition_by=partition_by,
+    )
+    return {
+        "asset": os.path.basename(path.rstrip("/")),
+        "path": path,
+        "row_count": obs.get["row_count"],
+        "n_columns": len(df.columns),
+        "duration_sec": round(time.monotonic() - t0, 3),
     }
 
 
@@ -81,15 +112,10 @@ class Pipeline:
     def run(
         self,
         spark: SparkSession,
-        analyze: bool = False,
         partition_key: str | None = None,
     ) -> dict[str, dict]:
         """Materialize all assets in dependency order; returns run reports
         (the Dagster-free equivalent of report_asset_materialization).
-
-        `analyze=True` runs ANALYZE TABLE after each materialization so
-        downstream CBO join reordering has real cardinalities — the
-        reference enables CBO but never feeds it stats (SURVEY §4).
 
         `partition_key` is handed to asset fns that declare a third
         parameter (reference: partition_key extras flow into
@@ -108,29 +134,11 @@ class Pipeline:
                 df = a.fn(spark, deps, partition_key)
             else:
                 df = a.fn(spark, deps)
-            path = f"{self.base_path}/{name}"
-            # row count via observe(): the metric rides the WRITE job.
-            # The previous shape (count() on a re-read of the sink) costs a
-            # second full scan per asset — at 100 TB that doubles pipeline
-            # I/O for a metadata field.
-            obs = Observation(f"asset_{name}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("row_count"))
-            write_parquet(df, path, partition_by=a.partition_by)
-            materialized = spark.read.parquet(path)
-            if analyze:
-                # ANALYZE needs a catalog table (not a temp view): register
-                # the materialized parquet as an external table, then stat it
-                spark.sql(f"DROP TABLE IF EXISTS __asset_{name}")
-                spark.sql(
-                    f"CREATE TABLE __asset_{name} USING parquet LOCATION '{path}'"
-                )
-                spark.sql(f"ANALYZE TABLE __asset_{name} COMPUTE STATISTICS")
-            outputs[name] = materialized
-            reports[name] = {
-                "asset": name,
-                "path": path,
-                "row_count": obs.get["row_count"],
-                "n_columns": len(materialized.columns),
-                "duration_sec": round(time.monotonic() - t0, 3),
-            }
+            report = sink(df, f"{self.base_path}/{name}", a.partition_by)
+            # dependents read the materialized dataset, not the asset's plan
+            outputs[name] = spark.read.parquet(report["path"])
+            # an asset's time includes building its DataFrame: eager
+            # operators (PageRank, tf-idf, ...) run jobs there
+            report["duration_sec"] = round(time.monotonic() - t0, 3)
+            reports[name] = report
         return reports

@@ -13,6 +13,9 @@ under /root/reference/src/pipelines/ascii_library/ascii_library/):
 - Configurable broadcast threshold (spark.py:42 uses 500 MB; we default far
   lower — at 100 TB scale a 500 MB broadcast per executor is a driver/executor
   OOM risk, so the threshold is a per-profile knob).
+- Library shipping (`ship_package`): the reference builds and uploads a
+  wheel per job (orchestration/pipes/utils.py:28-53); `build_spark` ships
+  the package zip to the session's workers.
 - Parallelism heuristic `calculate_parallelism` (utils.py:65-71) and
   runtime conf programming `configure_runtime` (utils.py:74-103), kept as
   pure/unit-testable functions in the reference's style.
@@ -28,6 +31,8 @@ nothing assumes a single JVM.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 from enum import Enum
 
@@ -60,7 +65,7 @@ class SessionProfile:
 
     app_name: str = "ascii-hydra-spark"
     master: str | None = None  # None -> local[$SPARK_GRAFT_CPUS]
-    shuffle_partitions: int | None = None  # None -> 2x cores locally
+    shuffle_partitions: int | None = None  # None -> 1x cores locally, 4096 otherwise
     broadcast_threshold: str = "64MB"
     max_partition_bytes: str = "128MB"
     parquet_compression: str = "snappy"  # reference uses gzip (spark.py:62); snappy is the speed default
@@ -163,6 +168,35 @@ CLOUD_CONF: dict[str, str] = {
 }
 
 
+_SHIPPED_APPS: set[str] = set()
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make `ascii_hydra_spark` importable on executor Python workers.
+
+    cloudpickle serializes module-level functions (pandas UDFs, UDTFs,
+    custom data sources) by REFERENCE, so workers must be able to import
+    the package themselves — zip it once per application and `addPyFile`
+    it. `build_spark` calls this for every session it builds; sessions
+    built elsewhere (a caller importing `__spark_entry__` from an
+    arbitrary cwd) get it from that adapter. This is the local-mode form
+    of shipping the library wheel to the cluster (the reference builds +
+    uploads a wheel per job, orchestration/pipes/utils.py:28-53); on a real
+    1000-executor cluster the same call distributes the zip with the
+    application.
+    """
+    app = spark.sparkContext.applicationId
+    if app in _SHIPPED_APPS:
+        return
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    base = os.path.join(tempfile.gettempdir(), f"ascii_hydra_spark_pkg_{os.getpid()}")
+    zip_path = shutil.make_archive(
+        base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="ascii_hydra_spark"
+    )
+    spark.sparkContext.addPyFile(zip_path)
+    _SHIPPED_APPS.add(app)
+
+
 def build_spark(profile: SessionProfile | None = None) -> SparkSession:
     """Build (or get) a SparkSession honouring the engine's semantic contract."""
     p = profile or SessionProfile.dev()
@@ -190,7 +224,9 @@ def build_spark(profile: SessionProfile | None = None) -> SparkSession:
         b = b.config("spark.driver.memory", p.driver_memory)
     for k, v in p.extra_conf.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    ship_package(spark)
+    return spark
 
 
 def calculate_parallelism(record_count: int, cap: int = 90_000, floor: int = 200) -> int:

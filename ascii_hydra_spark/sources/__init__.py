@@ -52,7 +52,6 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
     partition_by: tuple[str, ...] = (),
-    compression: str | None = None,
     sort_within: tuple[str, ...] = (),
 ) -> None:
     """Parquet sink; Hive-style partition layout when partition_by is given.
@@ -72,8 +71,6 @@ def write_parquet(
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if compression:
-        w = w.option("compression", compression)
     w.parquet(path)
 
 

@@ -45,6 +45,7 @@ from ascii_hydra_spark.operators import (
     windows,
 )
 from ascii_hydra_spark import sources, streaming
+from ascii_hydra_spark.session import ship_package  # noqa: F401  (re-export)
 
 
 @dataclass
@@ -57,49 +58,10 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-_SHIPPED_APPS: set[str] = set()
-
-
-def ship_package(spark: SparkSession) -> None:
-    """Make `ascii_hydra_spark` importable on executor Python workers.
-
-    The external driver imports `__spark_entry__` from an arbitrary cwd via
-    a sys.path insert; cloudpickle serializes module-level functions (pandas
-    UDFs, UDTFs, custom data sources) by REFERENCE, so workers must be able
-    to import the package themselves — zip it once per session and
-    `addPyFile` it. This is the local-mode form of shipping the library
-    wheel to the cluster (the reference builds+uploads a wheel per job,
-    orchestration/pipes/utils.py:28-53); on a real 1000-executor cluster
-    the same call distributes the zip with the application.
-    """
-    app = spark.sparkContext.applicationId
-    if app in _SHIPPED_APPS:
-        return
-    import os
-    import shutil
-
-    import ascii_hydra_spark
-
-    pkg_dir = os.path.dirname(os.path.abspath(ascii_hydra_spark.__file__))
-    base = os.path.join(
-        tempfile.gettempdir(), f"ascii_hydra_spark_pkg_{os.getpid()}"
-    )
-    zip_path = shutil.make_archive(
-        base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="ascii_hydra_spark"
-    )
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED_APPS.add(app)
-
 
 def q(name: str, sql: str | None, note: str = ""):
     def reg(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            ship_package(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        REGISTRY[name] = QuerySpec(name, wrapped, sql, note)
+        REGISTRY[name] = QuerySpec(name, fn, sql, note)
         return fn
 
     return reg
@@ -4376,7 +4338,6 @@ def orc_roundtrip(spark, sf_dir):
 
 def flagship(spark: SparkSession) -> DataFrame:
     """Driver smoke entry: the star-join revenue query at sf0.001."""
-    ship_package(spark)
     return star_revenue_by_nation(spark, "/root/testdata/sf0.001")
 
 

@@ -11,6 +11,7 @@ bug that happens to match it.
 from __future__ import annotations
 
 import math
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -168,26 +169,34 @@ def test_tfidf_max_df_prunes_stop_terms(spark):
 def test_tfidf_dense_and_postings_arms_agree(spark):
     # r11: the pair phase has two physical arms (blocked numpy GEMM for
     # bounded kept vocabularies, inverted-index postings join otherwise).
-    # Both must produce the identical neighbor table on the same corpus;
-    # dense_vocab_max=0 forces the postings arm.
+    # Both must produce the identical neighbor table — schema and rows —
+    # on the same corpus; dense_vocab_max=0 forces the postings arm. An
+    # int id must stay int, and at threshold 0 only docs sharing a term
+    # are neighbors (the postings arm never emits zero-overlap pairs).
     docs = [
         (i, " ".join(f"w{(i * 7 + j * 3) % 11}" for j in range(5 + i % 4)))
         for i in range(1, 41)
-    ] + [(100, "w1 w2 w3"), (101, "w1 w2 w3"), (102, "w2 w3 w1 w1")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    for thr in (0.3, 0.8):
-        dense = {
-            r["doc_id"]: (r["n_neighbors"], r["best_cos"])
-            for r in retrieval.tfidf_doc_neighbors(df, threshold=thr).collect()
-        }
-        sparse = {
-            r["doc_id"]: (r["n_neighbors"], r["best_cos"])
-            for r in retrieval.tfidf_doc_neighbors(
-                df, threshold=thr, dense_vocab_max=0
-            ).collect()
-        }
-        assert dense == sparse, f"arms disagree at threshold {thr}"
-    assert dense  # non-degenerate: the corpus has matching pairs
+    ] + [(100, "w1 w2 w3"), (101, "w1 w2 w3"), (102, "w2 w3 w1 w1"),
+         (103, "z1 z2"), (104, "z2 z3")]
+    for id_type in ("bigint", "int"):
+        df = spark.createDataFrame(docs, f"doc_id {id_type}, text string")
+        for thr in (0.0, 0.3, 0.8):
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", UserWarning)
+                arms = [
+                    retrieval.tfidf_doc_neighbors(df, threshold=thr, **kw)
+                    for kw in ({}, {"dense_vocab_max": 0})
+                ]
+            dense, sparse = (
+                {r["doc_id"]: (r["n_neighbors"], r["best_cos"]) for r in a.collect()}
+                for a in arms
+            )
+            assert arms[0].schema == arms[1].schema, (id_type, thr)
+            assert arms[0].schema["doc_id"].dataType.simpleString() == id_type
+            assert dense == sparse, f"arms disagree at threshold {thr} ({id_type} ids)"
+            assert dense  # non-degenerate: the corpus has matching pairs
+            if thr == 0.0:
+                assert dense[103][0] == dense[104][0] == 1  # only each other
 
 
 def test_tfidf_zero_norm_docs_agree_across_arms(spark):

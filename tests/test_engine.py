@@ -37,6 +37,20 @@ def test_engine_materialize_and_reread(spark, sf_dir):
     assert eng.table("orders_by_status").count() == report["row_count"]
 
 
+def test_engine_materialize_reports_rows_written_on_partition_rerun(spark, sf_dir):
+    """The report counts the rows this call wrote: on a one-partition
+    rerun that is the partition, while the dataset keeps every partition."""
+    eng = _engine(spark, sf_dir)
+    ev = eng.table("events").select("event_id", "event_type")
+    full = eng.materialize(ev, "ev_by_type", partition_by=("event_type",))
+    clicks = ev.filter(F.col("event_type") == "click")
+    rerun = eng.materialize(clicks, "ev_by_type", partition_by=("event_type",))
+    n_clicks = clicks.count()
+    assert 0 < rerun["row_count"] == n_clicks < full["row_count"]
+    assert eng.table("ev_by_type").count() == full["row_count"] == ev.count()
+    assert rerun["n_columns"] == 2 and rerun["asset"] == "ev_by_type"
+
+
 def test_pipeline_partition_rerun_replaces_only_touched_partition(spark, sf_dir):
     """B7: dynamic partition overwrite — rerunning one partition must not
     clobber the others (the reference's idempotent-rerun commitment)."""

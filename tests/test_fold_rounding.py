@@ -62,15 +62,6 @@ def _pre_rounded_published() -> "list[tuple[str, str]]":
 PRE_ROUNDED_PUBLISHED = _pre_rounded_published()
 
 
-def _underlying(fn):
-    """Registry fns are wrapped by the @q ship_package closure — unwrap."""
-    for cell in fn.__closure__ or ():
-        v = cell.cell_contents
-        if callable(v) and getattr(v, "__name__", "") == fn.__name__:
-            return v
-    return fn
-
-
 def _fold_inner_exprs(sql: str) -> list[str]:
     """Each LIST_REDUCE(LIST(<expr> [ORDER BY ...])) inner <expr>."""
     out = []
@@ -118,7 +109,7 @@ def test_pre_rounded_fold_has_rounded_oracle():
     for name, spec in REGISTRY.items():
         if spec.sql is None or "LIST_REDUCE(LIST(" not in spec.sql:
             continue
-        src = inspect.getsource(_underlying(spec.fn))
+        src = inspect.getsource(spec.fn)
         for op_marker, col in PRE_ROUNDED_PUBLISHED:
             if op_marker not in src:
                 continue

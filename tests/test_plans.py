@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from ascii_hydra_spark import plans
@@ -188,7 +189,18 @@ EAGER_PREFIXES = (
 )
 
 
-def test_no_forced_broadcast_of_scaling_tables(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_dfs(spark, sf_dir):
+    """Every lazily-plannable registry entry's DataFrame, built once for
+    all the registry sweeps below (building them is the sweeps' cost)."""
+    return {
+        name: spec.fn(spark, sf_dir)
+        for name, spec in REGISTRY.items()
+        if not name.startswith(EAGER_PREFIXES)
+    }
+
+
+def test_no_forced_broadcast_of_scaling_tables(registry_dfs):
     """customer/supplier grow linearly with the corpus: a broadcast HINT on
     them OOMs executors at 100x. The logical plans of the star/graph queries
     must carry hints only for fixed-cardinality dims (nation/region); any
@@ -197,10 +209,7 @@ def test_no_forced_broadcast_of_scaling_tables(spark, sf_dir):
     # legitimate on region/nation (fixed cardinality).
     SCALING = ("customer", "supplier", "part.parquet", "orders", "lineitem",
                "documents", "embeddings", "events")
-    for name, spec in REGISTRY.items():
-        if name.startswith(EAGER_PREFIXES):
-            continue
-        df = spec.fn(spark, sf_dir)
+    for name, df in registry_dfs.items():
         lines = df._jdf.queryExecution().analyzed().toString().split("\n")
         for i, line in enumerate(lines):
             if "UnresolvedHint" not in line and "ResolvedHint" not in line:
@@ -344,15 +353,13 @@ GLOBAL_WINDOW_OK = {
 }
 
 
-def test_registry_plans_free_of_join_antipatterns(spark, sf_dir):
+def test_registry_plans_free_of_join_antipatterns(registry_dfs):
     """Sweep every lazily-plannable registry query: no CartesianProduct
     anywhere; BroadcastNestedLoopJoin only where it is the RIGHT plan —
     1-row query-vector/scalar-subquery broadcasts, or the documented exact
     all-pairs oracle arms (whose scale counterparts are LSH-bucketed); no
     window with an empty/constant partition spec (a single-reducer sort of
     its whole input) outside the annotated bounded-grain allowlist."""
-    from ascii_hydra_spark.verification import REGISTRY
-
     BNLJ_OK = {
         "sim_topk",        # single query vector broadcast
         "sim_topk_quantized",  # single quantized query row broadcast
@@ -498,11 +505,8 @@ def test_registry_plans_free_of_join_antipatterns(spark, sf_dir):
         "priority_mix_drift_monthly",  # 1-row baseline-total broadcast
     }
     offenders = []
-    for name, spec in REGISTRY.items():
-        if name.startswith(EAGER_PREFIXES):
-            continue  # executes writes eagerly; plan inspected elsewhere
-        df = spec.fn(spark, sf_dir)
-        if spec.sql is not None:
+    for name, df in registry_dfs.items():
+        if REGISTRY[name].sql is not None:
             # canonicalizer safety, piggybacked on this sweep's DataFrame:
             # the driver hash sorts columns in pandas, where array/map/
             # struct/binary cells are unhashable (round 1's collect_sorted

@@ -65,6 +65,19 @@ def test_configure_runtime_full_vs_dev(spark):
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
 
 
+def test_build_spark_ships_the_package(spark):
+    # the `spark` fixture comes from build_spark, which ships the package
+    # zip before any query runs: a Python worker has it on sys.path, so
+    # pandas UDFs resolve ascii_hydra_spark whatever the caller's cwd
+    def shipped(_):
+        import sys
+
+        return [p for p in sys.path if "ascii_hydra_spark_pkg_" in p]
+
+    paths = spark.sparkContext.parallelize([0], 1).map(shipped).first()
+    assert paths and paths[0].endswith(".zip")
+
+
 def test_catalog_mode_resolution_and_overrides():
     cat = Catalog(
         roots={
