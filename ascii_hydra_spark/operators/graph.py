@@ -8,7 +8,17 @@ connected components lives in :mod:`ascii_hydra_spark.operators.dedup`
 (duplicate clustering); PageRank lives here (domain authority scoring for
 crawl prioritization / quality weighting).
 
-Iterative-algorithm discipline at 100 TB (same rules as
+PageRank has two physical arms behind one signature, switched on the
+distinct edge count (the Chukonu split: small inputs on a native engine,
+Spark for the rest):
+
+- at most ``_LOCAL_MAX_EDGES`` distinct edges: a driver-local numpy power
+  iteration (``_pagerank_local``) — the whole edge list is about one
+  post-shuffle partition, so every Spark job an iteration would schedule
+  is overhead;
+- above it: the distributed arm (``_pagerank_spark``), the 100 TB path.
+
+Iterative-algorithm discipline at 100 TB (the Spark arm of PageRank, and
 dedup.connected_components):
 
 - the edge list is computed ONCE, persisted, and reused every iteration —
@@ -23,9 +33,27 @@ dedup.connected_components):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ascii_hydra_spark.operators.lineage import truncate_lineage
+
+# Largest distinct edge count PageRank runs driver-local. Measured on a
+# 4-core host, local[4], 10 iterations, edges read from parquet and the
+# ranks consumed by a noop write (best of 3, seconds):
+#
+#   distinct edges    10^4    10^5    10^6
+#   local arm         0.99    1.30    6.49
+#   Spark arm         5.34    5.05   13.67
+#
+# The local arm still wins at 10^6, but its margin has shrunk from 5x to
+# 2x, its cost is now mostly the take of 10^6 rows, and it holds them in
+# the driver's Python heap (~470 MB peak growth at 10^6). The Spark arm
+# spreads that per-edge cost over executors, so on a cluster the
+# crossover only moves down; 10^6 is the switch.
+_LOCAL_MAX_EDGES = 1_000_000
 
 
 def pagerank(
@@ -42,6 +70,86 @@ def pagerank(
     normalization). Dangling nodes (no out-edges) redistribute their mass
     uniformly each iteration, so total mass is conserved — the property
     tests pin both conservation and hand-computed small-graph values.
+    Edges with a NULL endpoint are dropped before anything else: a NULL
+    is not a node, in either arm.
+
+    Two arms, one result (same schema; the ranks differ only by summation
+    order, and the tests hold them to 1e-12):
+
+    - the distinct edge list is built and persisted once, and ONE bounded
+      job reads at most ``_LOCAL_MAX_EDGES + 1`` of its rows to the driver
+      (a take: it scans partitions only until it has that many rows);
+    - if the graph fits, the power iteration runs in numpy
+      (``_pagerank_local``) and the ranks return through
+      ``createDataFrame`` — no further Spark job;
+    - otherwise the distributed arm (``_pagerank_spark``) continues on
+      the already-persisted edge list, so the gate costs no second pass.
+
+    The switch sits at ``_LOCAL_MAX_EDGES`` = 10^6 distinct edges: on a
+    4-core host the local arm wins 5x at 10^4-10^5 edges and 2x at 10^6,
+    where the driver holds ~470 MB of edge rows (timings in the
+    constant's comment).
+    """
+    # persist the deduped edge list FIRST: both arms read it, and the
+    # Spark arm derives nodes, out_deg and ew from it — unpersisted each
+    # would re-run the caller's whole edge pipeline (scan + expression
+    # analysis); on an expression-heavy source (e.g. the eTLD+1 suffix
+    # probe over WARC extraction) those re-evaluations dominated the run.
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+        .persist()
+    )
+    # a take, not an Arrow collect: a LIMIT collected through Arrow shuffles
+    # up to _LOCAL_MAX_EDGES + 1 rows from EVERY partition into one, while
+    # a take scans partitions only until it has enough rows
+    head = e.take(_LOCAL_MAX_EDGES + 1)
+    if len(head) > _LOCAL_MAX_EDGES:
+        return _pagerank_spark(e, iterations, damping, reliable)
+    e.unpersist()
+    nodes, ranks = _pagerank_local([r[0] for r in head], [r[1] for r in head], iterations, damping)
+    # the Spark arm's node type is the src/dst union's (int + bigint -> bigint)
+    node_type = e.select("src").union(e.select("dst")).schema[0].dataType
+    schema = StructType(
+        [StructField("node", node_type), StructField("rank", DoubleType())]
+    )
+    return edges.sparkSession.createDataFrame(
+        list(zip(nodes.tolist(), ranks.tolist())), schema
+    )
+
+
+def _pagerank_local(
+    src: list, dst: list, iterations: int, damping: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-local power iteration over DISTINCT, non-NULL (src, dst)
+    pairs; returns (nodes, ranks). Same model and the same IEEE operation
+    order per node as the Spark arm —
+    ``((1-d)/n + (d*dangling)/n) + d*contrib`` — so the arms differ only by
+    summation order inside ``contrib`` and ``dangling``."""
+    if not src:  # empty graph: empty ranks, not a ZeroDivisionError
+        return np.array([]), np.array([])
+    # hash factorization: string ids stay Python objects (a numpy string
+    # array would be fixed-width, sized by the longest id)
+    idx, nodes = pd.factorize(pd.Series(src + dst))
+    nodes = nodes.to_numpy()
+    n = len(nodes)
+    s, t = idx[: len(src)], idx[len(src) :]
+    out_deg = np.bincount(s, minlength=n)
+    sinks = out_deg == 0
+    rank = np.full(n, 1.0 / n)
+    for _ in range(iterations):
+        contrib = np.bincount(t, weights=rank[s] / out_deg[s], minlength=n)
+        dangling = rank[sinks].sum()
+        rank = ((1.0 - damping) / n + damping * dangling / n) + damping * contrib
+    return nodes, rank
+
+
+def _pagerank_spark(
+    e: DataFrame, iterations: int, damping: float, reliable: bool
+) -> DataFrame:
+    """The distributed arm over the persisted distinct edge list ``e``
+    (unpersisted here once the loop invariants are cached).
 
     Shuffle budget per iteration: ONE exchange (contributions grouped on
     dst). The rank-to-edge join co-partitions on src because `edges` is
@@ -52,16 +160,6 @@ def pagerank(
     `reliable=True` checkpoints through the session checkpoint dir so an
     executor loss mid-run recomputes nothing fatal — see lineage.py).
     """
-    # persist the deduped edge list FIRST: nodes, out_deg and ew all
-    # derive from it, and unpersisted each would re-run the caller's
-    # whole edge pipeline (scan + expression analysis) — on an
-    # expression-heavy source (e.g. the eTLD+1 suffix probe over WARC
-    # extraction) those re-evaluations dominated the entire run.
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .persist()
-    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -72,7 +170,7 @@ def pagerank(
     if n == 0:  # empty graph: empty ranks, not a driver-side ZeroDivisionError
         e.unpersist()
         nodes.unpersist()
-        return nodes.select("node", F.lit(0.0).alias("rank"))
+        return nodes.select("node", F.lit(None).cast("double").alias("rank"))
     # out_deg is a loop invariant too: the dangling-mass anti-join
     # reads it EVERY iteration — keep it pinned, not just derivable.
     out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg")).persist()

@@ -122,23 +122,34 @@ class Pipeline:
         execute_business_logic, spark_script_abc.py:76,116-118). Combined
         with `partition_by` + the session's dynamic partition overwrite,
         rerunning one partition replaces only that partition's files —
-        the idempotent-rerun contract (utils.py:87)."""
+        the idempotent-rerun contract (utils.py:87).
+
+        Every Spark job an asset launches — building, sinking and reading
+        it back — carries the job description ``asset:<name>``; the
+        caller's description is restored afterwards. A description, not a
+        job group, so callers' own job groups stay theirs."""
         order = list(TopologicalSorter({n: a.deps for n, a in self.assets.items()}).static_order())
         outputs: dict[str, DataFrame] = {}
         reports: dict[str, dict] = {}
-        for name in order:
-            a = self.assets[name]
-            t0 = time.monotonic()
-            deps = {d: outputs[d] for d in a.deps}
-            if len(inspect.signature(a.fn).parameters) >= 3:
-                df = a.fn(spark, deps, partition_key)
-            else:
-                df = a.fn(spark, deps)
-            report = sink(df, f"{self.base_path}/{name}", a.partition_by)
-            # dependents read the materialized dataset, not the asset's plan
-            outputs[name] = spark.read.parquet(report["path"])
-            # an asset's time includes building its DataFrame: eager
-            # operators (PageRank, tf-idf, ...) run jobs there
-            report["duration_sec"] = round(time.monotonic() - t0, 3)
-            reports[name] = report
+        sc = spark.sparkContext
+        caller_description = sc.getLocalProperty("spark.job.description")
+        try:
+            for name in order:
+                sc.setJobDescription(f"asset:{name}")
+                a = self.assets[name]
+                t0 = time.monotonic()
+                deps = {d: outputs[d] for d in a.deps}
+                if len(inspect.signature(a.fn).parameters) >= 3:
+                    df = a.fn(spark, deps, partition_key)
+                else:
+                    df = a.fn(spark, deps)
+                report = sink(df, f"{self.base_path}/{name}", a.partition_by)
+                # dependents read the materialized dataset, not the asset's plan
+                outputs[name] = spark.read.parquet(report["path"])
+                # an asset's time includes building its DataFrame: eager
+                # operators (PageRank, tf-idf, ...) run jobs there
+                report["duration_sec"] = round(time.monotonic() - t0, 3)
+                reports[name] = report
+        finally:
+            sc.setJobDescription(caller_description)
         return reports

@@ -220,6 +220,14 @@ def build_spark(profile: SessionProfile | None = None) -> SparkSession:
         # not a feature (reference violates this at demo step_2.py:29-30).
         .config("spark.driver.maxResultSize", "4g")
     )
+    if master.startswith("local["):
+        # the scan's split size is total bytes (each file padded by the 4 MB
+        # open cost) / minPartitionNum; at the default (defaultParallelism)
+        # local[N] packs 2N small files into N partitions — a many-file
+        # dataset must fan out to one task per file. A cluster keeps the
+        # default: its parallelism already exceeds any small file count.
+        n = master[len("local[") :].split(",")[0].rstrip("]")
+        b = b.config("spark.sql.files.minPartitionNum", str(2 * (cpus if n == "*" else int(n))))
     if p.driver_memory:
         b = b.config("spark.driver.memory", p.driver_memory)
     for k, v in p.extra_conf.items():

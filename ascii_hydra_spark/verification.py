@@ -4039,8 +4039,10 @@ def domain_graph_aggr(spark, sf_dir):
     "composition, paper.md:139-167): the WAT fixture's asymmetric "
     "domain graph (hosts 0-2 receive cross-host links from all seven "
     "hosts, hosts 3-6 only self-links) ranks in two distinct tiers; "
-    "5-iteration damped PageRank hash-matched against the unrolled "
-    "CTE oracle over the closed-form edge list",
+    "5-iteration damped PageRank (the graph is far under the local-arm "
+    "switch, so it runs as a driver-local numpy power iteration) "
+    "hash-matched against the unrolled CTE oracle over the closed-form "
+    "edge list",
 )
 def wat_domain_pagerank(spark, sf_dir):
     from ascii_hydra_spark.operators.crawl import domain_link_aggr
@@ -4263,8 +4265,9 @@ def domain_graph_aggr_etld1(spark, sf_dir):
     "reference pipeline's NodesOnly -> Edges -> Graph -> GraphAggr "
     "composition at its true domain grain (paper.md:139-167). 18 "
     "registered-domain nodes (6 families x 3 groups; the bare-suffix "
-    "template drops), 5-iteration damped PageRank hash-matched against "
-    "the unrolled CTE oracle whose edge list replays the suffix match",
+    "template drops), 5-iteration damped PageRank (driver-local numpy "
+    "arm: far under the edge-count switch) hash-matched against the "
+    "unrolled CTE oracle whose edge list replays the suffix match",
 )
 def wat_pagerank_etld1(spark, sf_dir):
     from ascii_hydra_spark.operators.crawl import domain_link_aggr
@@ -5070,10 +5073,13 @@ def token_drift_snapshots(spark, sf_dir):
     _pagerank_unrolled_sql(5),
     "fixed-iteration PageRank over the customer->supplier purchase graph "
     "(paper-parity: the reference's graph assets are relational ops; this "
-    "adds the canonical iterative one). Edge list persisted once, one "
-    "shuffle per iteration, localCheckpoint lineage truncation; "
-    "conservation + hand-computed-value tests in tests/test_graph.py. "
-    "Hash-matched against the UNROLLED 5-iteration SQL in DuckDB",
+    "adds the canonical iterative one). Under 10^6 distinct edges (this "
+    "graph) it runs as a driver-local numpy power iteration; above, the "
+    "Spark arm persists the edge list once, shuffles once per iteration "
+    "and truncates lineage with localCheckpoint — tests/test_graph.py "
+    "runs both arms (conservation, hand-computed values, this entry's "
+    "oracle with the Spark arm forced). Hash-matched against the "
+    "UNROLLED 5-iteration SQL in DuckDB",
 )
 def graph_pagerank_top(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")

@@ -1,23 +1,47 @@
 """PageRank properties (operators/graph.py).
 
-No SQL oracle (iterative; DuckDB recursive CTEs can't interleave per-round
-aggregation), so correctness is pinned by conservation, symmetry, and a
-hand-computed reference implementation.
+Correctness is pinned by conservation, symmetry, and a hand-computed
+reference implementation, on BOTH physical arms: every PageRank helper
+here runs the driver-local numpy arm and the Spark arm (forced by setting
+``graph._LOCAL_MAX_EDGES`` below any edge count) and requires the same
+schema and the same ranks. The DuckDB oracle (an unrolled CTE, see
+``verification._pagerank_unrolled_sql``) covers the registry entries.
 """
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 
 from ascii_hydra_spark.operators import graph
+from ascii_hydra_spark.verification import REGISTRY
+from tests.oracle_compare import assert_results_match
+
+# -1 is below any edge count, the empty graph's included
+SPARK_ARM = -1
+
+
+def _both_arms(edges, **kw) -> dict:
+    """Run pagerank on each arm; assert equal schemas, node sets and ranks
+    (1e-12) and return {node: rank}."""
+    out = {}
+    for arm, cap in (("local", graph._LOCAL_MAX_EDGES), ("spark", SPARK_ARM)):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "_LOCAL_MAX_EDGES", cap)
+            ranks = graph.pagerank(edges, **kw)
+            out[arm] = (ranks.schema, {r.node: r.rank for r in ranks.collect()})
+    (local_schema, local), (spark_schema, dist) = out["local"], out["spark"]
+    assert local_schema == spark_schema
+    assert local.keys() == dist.keys()
+    for v in local:
+        assert local[v] == pytest.approx(dist[v], abs=1e-12), v
+    return local
 
 
 def _ranks(spark, edge_rows, iterations=20, damping=0.85):
     e = spark.createDataFrame(edge_rows, "src LONG, dst LONG")
-    return {
-        r.node: r.rank
-        for r in graph.pagerank(e, iterations=iterations, damping=damping).collect()
-    }
+    return _both_arms(e, iterations=iterations, damping=damping)
 
 
 def _reference_pagerank(edge_rows, iterations, damping=0.85):
@@ -69,15 +93,67 @@ def test_pagerank_star_hub_dominates(spark):
 def test_pagerank_loop_body_has_no_collect(spark):
     """The dangling-mass term stays in-plan (1-row aggregate cross-broadcast
     into the rank update); an iteration must not issue a driver .collect().
-    Pinned at the source level: the loop body of pagerank contains no
+    Pinned at the source level: the loop body of the Spark arm contains no
     .collect call (localCheckpoint is the only per-round action)."""
-    import inspect
-
-    from ascii_hydra_spark.operators import graph
-
-    src = inspect.getsource(graph.pagerank)
+    src = inspect.getsource(graph._pagerank_spark)
     loop = src.split("for _ in range(iterations):", 1)[1].split("ew.unpersist()", 1)[0]
     assert ".collect()" not in loop
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        ([], "src LONG, dst LONG"),
+        ([(7, 7)], "src LONG, dst LONG"),
+        ([(1, 2), (1, 2), (2, 1), (1, 3), (1, 3)], "src LONG, dst LONG"),
+        ([(1, 2), (1, 3), (1, 4), (5, 4)], "src LONG, dst LONG"),
+        ([(1, 2), (2, 3), (3, 1), (3, 4)], "src INT, dst INT"),
+        ([(1, 2), (2, 3), (3, 1), (3, 4)], "src INT, dst BIGINT"),
+        ([("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src STRING, dst STRING"),
+        ([(1, 2), (None, 2), (2, None), (None, None), (2, 3)], "src LONG, dst LONG"),
+    ],
+    ids=["empty", "self_loop", "duplicates", "all_dangling_sinks", "int_ids",
+         "int_bigint_ids", "string_ids", "null_endpoints"],
+)
+def test_pagerank_arms_agree_on_edge_cases(spark, rows, ddl):
+    got = _both_arms(spark.createDataFrame(rows, ddl), iterations=7)
+    assert None not in got  # a NULL endpoint is not a node
+    pairs = [(s, d) for s, d in rows if s is not None and d is not None]
+    want = _reference_pagerank(pairs, iterations=7) if pairs else {}
+    assert got.keys() == want.keys()
+    for v in want:
+        assert got[v] == pytest.approx(want[v], abs=1e-12), v
+    if got:
+        assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_pagerank_small_graph_job_budget(spark):
+    """A graph under the switch costs the distinct edge build plus the one
+    bounded take: at most 3 Spark jobs, whatever the iteration count."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 1) % 50) for i in range(50)] + [(i, 99) for i in range(20)],
+        "src LONG, dst LONG",
+    )
+    sc.setJobGroup("pagerank_job_budget", "pagerank job budget")
+    try:
+        ranks = graph.pagerank(edges, iterations=10)
+        jobs = sc.statusTracker().getJobIdsForGroup("pagerank_job_budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(jobs) <= 3, jobs
+    assert sum(r.rank for r in ranks.collect()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_pagerank_spark_arm_matches_oracle(spark, oracle, sf_dir, monkeypatch):
+    """The registry PageRank entries take the local arm at fixture scale;
+    this keeps the 100 TB arm under the DuckDB oracle too."""
+    monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", SPARK_ARM)
+    spec = REGISTRY["graph_pagerank_top"]
+    assert_results_match(
+        spec.fn(spark, sf_dir), oracle.execute(spec.sql).fetchdf(), name=spec.name
+    )
 
 
 def test_triangle_count_hand_crafted(spark):

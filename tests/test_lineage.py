@@ -52,7 +52,9 @@ def test_reliable_truncation_writes_checkpoint_files(spark, ckpt_dir):
     assert found, "reliable=True produced no files in the checkpoint dir"
 
 
-def test_pagerank_reliable_matches_default(spark, ckpt_dir):
+def test_pagerank_reliable_matches_default(spark, ckpt_dir, monkeypatch):
+    # only the Spark arm truncates lineage; force it below any edge count
+    monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", -1)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 1)], ["src", "dst"]
     )

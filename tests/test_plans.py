@@ -107,6 +107,34 @@ def test_pipeline_dag_runs_in_dependency_order(spark, sf_dir):
     ]["row_count"]
 
 
+def test_pipeline_labels_asset_jobs_and_restores_caller_description(spark):
+    """Inside an asset fn the job description names the asset; after
+    `run` the caller's own description is back in place."""
+    sc = spark.sparkContext
+    pipe = plans.Pipeline(base_path=tempfile.mkdtemp(prefix="ahs_pipe_"))
+    seen = {}
+
+    @pipe.asset("first")
+    def first(spark_, deps):
+        seen["first"] = sc.getLocalProperty("spark.job.description")
+        return spark_.range(3)
+
+    @pipe.asset("second", deps=("first",))
+    def second(spark_, deps):
+        seen["second"] = sc.getLocalProperty("spark.job.description")
+        return deps["first"]
+
+    sc.setJobDescription("caller")
+    try:
+        pipe.run(spark)
+        assert seen == {"first": "asset:first", "second": "asset:second"}
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    pipe.run(spark)
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
 def test_disjunctive_predicate_partial_pushdown(spark, sf_dir):
     """Q19-shape OR-of-ANDs: the single-side conjuncts extractable from the
     disjunction (p_size bands on part, l_quantity bands on lineitem) must be

@@ -58,11 +58,27 @@ def test_profile_full_scales_up():
 
 
 def test_configure_runtime_full_vs_dev(spark):
-    applied_dev = configure_runtime(spark, ExecutionMode.DEV_SAMPLE_LOCAL, parallelism=500)
-    assert "spark.sql.shuffle.partitions" not in applied_dev  # dev keeps defaults
-    applied_full = configure_runtime(spark, ExecutionMode.FULL, parallelism=500)
-    assert applied_full["spark.sql.shuffle.partitions"] == "500"
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
+    # the session is shared by the whole suite: put back what FULL mode
+    # sets, or every later test runs 500 shuffle partitions (a stateful
+    # streaming query then opens 500 state stores per micro-batch)
+    keys = (
+        "spark.sql.sources.partitionOverwriteMode",
+        "spark.sql.shuffle.partitions",
+        "spark.default.parallelism",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        applied_dev = configure_runtime(spark, ExecutionMode.DEV_SAMPLE_LOCAL, parallelism=500)
+        assert "spark.sql.shuffle.partitions" not in applied_dev  # dev keeps defaults
+        applied_full = configure_runtime(spark, ExecutionMode.FULL, parallelism=500)
+        assert applied_full["spark.sql.shuffle.partitions"] == "500"
+        assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_build_spark_ships_the_package(spark):

@@ -698,6 +698,44 @@ def main() -> int:
 
     stage("wat_graph_pipeline", wat_graph_pipeline)
 
+    # ---- PageRank's Spark arm: every graph up to _LOCAL_MAX_EDGES runs
+    # driver-local (wat_graph_pipeline's 25 pairs included), so this stage
+    # feeds it one edge more. Edge id -> (id mod n, a target 1 + k*7919
+    # further on a ring of 1.25n): distinct pairs, no self-loops, and the
+    # ring's last quarter only receives (dangling nodes). Checked for
+    # mass conservation and against the numpy arm on the same edges ----
+    def pagerank_spark_arm():
+        from ascii_hydra_spark.operators import graph
+
+        m = graph._LOCAL_MAX_EDGES + 1
+        n = m // 8
+        edges = spark.range(m).select(
+            (F.col("id") % n).alias("src"),
+            ((F.col("id") % n + 1 + (F.col("id") / n).cast("long") * 7919)
+             % (n + n // 4)).alias("dst"),
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("pagerank_spark_arm", "pagerank spark arm")
+        try:
+            got = {r["node"]: r["rank"] for r in graph.pagerank(edges, iterations=5).collect()}
+            jobs = len(sc.statusTracker().getJobIdsForGroup("pagerank_spark_arm"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert jobs > 5, f"{jobs} jobs: the local arm ran"
+        total = sum(got.values())
+        assert abs(total - 1.0) < 1e-9, total
+        pdf = edges.toPandas()
+        nodes, ranks = graph._pagerank_local(
+            pdf["src"].tolist(), pdf["dst"].tolist(), 5, 0.85
+        )
+        assert len(nodes) == len(got), (len(nodes), len(got))
+        err = max(abs(got[v] - r) for v, r in zip(nodes.tolist(), ranks.tolist()))
+        assert err <= 1e-12, err
+        return {"edges": m, "nodes": len(got), "jobs": jobs, "max_abs_diff": err}
+
+    stage("pagerank_spark_arm", pagerank_spark_arm)
+
     # ---- eTLD+1 rollup at 1M page edges (round-10 family): the
     # registered-domain probe (functions/psl.py snapshot, InSet
     # membership — no join) keys a 1M-row rollup with closed forms.
