@@ -130,10 +130,3 @@ class Catalog:
             spark.sql(f"CREATE TABLE {n} USING parquet LOCATION '{self.path(n)}'")
             spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS")
 
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Convenience: load every fixture table from one scale-factor dir."""
-    cat = Catalog.for_dir(sf_dir)
-    return {n: cat.load(spark, n) for n in names}

@@ -171,24 +171,6 @@ def as_of_join_nearest(
     )
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_start: str,
-    right_end: str,
-) -> DataFrame:
-    """left.ts in [right.start, right.end) per key — plain theta join; AQE
-    plus the equality on `key` keeps it a hash join with a residual filter."""
-    cond = (
-        (left[key] == right[key])
-        & (left[left_ts] >= right[right_start])
-        & (left[left_ts] < right[right_end])
-    )
-    return left.join(right, cond)
-
-
 def banded_interval_join(
     left: DataFrame,
     right: DataFrame,

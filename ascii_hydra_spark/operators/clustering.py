@@ -22,7 +22,7 @@ Scale notes:
   and crucially NOT a posexplode (which would multiply shuffle volume
   by the dimension for no information gain).
 - Per-iteration lineage is truncated through operators/lineage.py
-  (`reliable=True` for executor-loss resilience on long runs); the
+  (executor-loss resilient when the session has a checkpoint dir); the
   centroid table is k rows, so the checkpoint cost is nil.
 """
 
@@ -57,7 +57,6 @@ def kmeans_assign(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    reliable: bool = False,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means: returns (id, cluster_id, dist2).
 
@@ -70,7 +69,7 @@ def kmeans_assign(
     k=None sizes the cluster count to the data via :func:`auto_k`.
     """
     assigned = _kmeans_assign_full(
-        emb, k, iterations, id_col, vec_col, reliable
+        emb, k, iterations, id_col, vec_col
     )
     return assigned.select(
         F.col("__id").alias(id_col),
@@ -85,7 +84,6 @@ def _kmeans_assign_full(
     iterations: int,
     id_col: str,
     vec_col: str,
-    reliable: bool,
 ) -> DataFrame:
     """kmeans_assign's engine: (__id, cluster_id, __d2, __v) with __v the
     double-cast vector — the assignment is computed map-side, so the
@@ -115,7 +113,7 @@ def _kmeans_assign_full(
             F.col("__v").alias("__c"),
         )
     )
-    centroids = truncate_lineage(centroids, reliable=reliable)
+    centroids = truncate_lineage(centroids)
 
     assigned = None
     for it in range(iterations):
@@ -171,7 +169,6 @@ def _kmeans_assign_full(
                 "cluster_id",
                 F.coalesce(F.col("new.__c"), F.col("old.__c")).alias("__c"),
             ),
-            reliable=reliable,
         )
 
     return assigned
@@ -196,7 +193,6 @@ def semantic_dup_pairs(
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    reliable: bool = False,
 ) -> DataFrame:
     """SemDeDup candidate pairs: cosine >= threshold, compared only
     WITHIN a k-means cluster. Returns (id_a, id_b, sim) with id_a < id_b.
@@ -212,7 +208,7 @@ def semantic_dup_pairs(
     # join back to the corpus is needed (np.asarray(float64) of the
     # original floats and the cast are the same exact widening)
     side = _kmeans_assign_full(
-        emb, k, iterations, id_col, vec_col, reliable
+        emb, k, iterations, id_col, vec_col
     ).select("__id", "cluster_id", "__v")
 
     # Per-cluster GEMM via applyInPandas: one numpy matmul per cluster

@@ -212,7 +212,6 @@ def bigram_lm_scores(
     text_col: str = "text",
     k: float = 0.5,
     model_docs: DataFrame | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """Per-document fluency scores from an add-k-smoothed bigram language
     model — the CCNet/Wikipedia-LM perplexity-filter stage of a training
@@ -234,7 +233,8 @@ def bigram_lm_scores(
     orders of magnitude below the corpus), so AQE broadcasts them when
     small and shuffles on the (u,w) key otherwise. V is a 1-row aggregate
     cross-broadcast, never collected. The extraction is materialized once
-    via truncate_lineage (reliable=True -> checkpoint-dir resilience).
+    via truncate_lineage (checkpoint-dir resilience when the session
+    has one).
     """
     def bigrams(df: DataFrame) -> DataFrame:
         t = word_tokens(text_col)
@@ -246,7 +246,7 @@ def bigram_lm_scores(
             F.col(id_col), F.explode(pair).alias("p")
         ).select(id_col, F.col("p.u").alias("u"), F.col("p.w").alias("w"))
 
-    scored_bg = truncate_lineage(bigrams(docs), reliable=reliable)
+    scored_bg = truncate_lineage(bigrams(docs))
     model_bg = scored_bg if model_docs is None else bigrams(model_docs)
     model_src = docs if model_docs is None else model_docs
 
@@ -383,7 +383,6 @@ def token_distribution_drift(
     new: DataFrame,
     text_col: str = "text",
     smoothing: float = 0.5,
-    reliable: bool = False,
 ) -> DataFrame:
     """Jensen-Shannon divergence between the token unigram distributions of
     two corpus snapshots — the drift monitor between crawl ingests (a new
@@ -409,13 +408,12 @@ def token_distribution_drift(
     # counted ONCE (without it, the crossJoin's plan embeds a second full
     # copy of the explode+count subtree for both snapshots). Checkpoint
     # rather than persist: the vocab-sized blocks are GC-reclaimed with
-    # the returned plan instead of living until session end. reliable=True
-    # survives executor loss via the session checkpoint dir (lineage.py).
+    # the returned plan instead of living until session end. With a
+    # session checkpoint dir set it survives executor loss (lineage.py).
     j = truncate_lineage(
         counts(old, "c_old")
         .join(counts(new, "c_new"), "tok", "full_outer")
         .fillna(0, ["c_old", "c_new"]),
-        reliable=reliable,
     )
     tot = j.agg(
         F.sum("c_old").alias("t_old"),

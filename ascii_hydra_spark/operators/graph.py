@@ -24,9 +24,10 @@ dedup.connected_components):
 - the edge list is computed ONCE, persisted, and reused every iteration —
   the shuffle that builds it is paid once, and each iteration's only
   shuffle is the rank aggregation on dst;
-- lineage is truncated with localCheckpoint every iteration, otherwise the
-  plan doubles per round and the job dies on planning long before it dies
-  on data;
+- lineage is truncated every iteration (`truncate_lineage`), otherwise
+  the plan doubles per round and the job dies on planning long before it
+  dies on data; the session's checkpoint dir decides whether the cut is
+  local or survives executor loss (operators/lineage.py);
 - iteration count is FIXED (not convergence-polled per row), so the run is
   deterministic and schedulable.
 """
@@ -62,7 +63,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -106,7 +106,7 @@ def pagerank(
     # a take scans partitions only until it has enough rows
     head = e.take(_LOCAL_MAX_EDGES + 1)
     if len(head) > _LOCAL_MAX_EDGES:
-        return _pagerank_spark(e, iterations, damping, reliable)
+        return _pagerank_spark(e, iterations, damping)
     e.unpersist()
     nodes, ranks = _pagerank_local([r[0] for r in head], [r[1] for r in head], iterations, damping)
     # the Spark arm's node type is the src/dst union's (int + bigint -> bigint)
@@ -146,7 +146,7 @@ def _pagerank_local(
 
 
 def _pagerank_spark(
-    e: DataFrame, iterations: int, damping: float, reliable: bool
+    e: DataFrame, iterations: int, damping: float
 ) -> DataFrame:
     """The distributed arm over the persisted distinct edge list ``e``
     (unpersisted here once the loop invariants are cached).
@@ -156,9 +156,9 @@ def _pagerank_spark(
     persisted already hash-partitioned from the previous join, and the
     dangling-mass term is a 1-row aggregate DataFrame cross-broadcast into
     the rank update — no `.collect()` in the loop body; the only per-round
-    driver action is the lineage truncation (localCheckpoint by default;
-    `reliable=True` checkpoints through the session checkpoint dir so an
-    executor loss mid-run recomputes nothing fatal — see lineage.py).
+    driver action is the lineage truncation (lineage.py: a reliable
+    checkpoint when the session has a checkpoint dir, a local one
+    otherwise).
     """
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -204,7 +204,6 @@ def _pagerank_spark(
                     + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
                 ).alias("rank"),
             ),
-            reliable=reliable,
         )
     ew.unpersist()
     out_deg.unpersist()
@@ -213,7 +212,7 @@ def _pagerank_spark(
 
 
 def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", reliable: bool = False
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Global triangle count over an undirected graph (1 row: n_triangles).
 
@@ -257,7 +256,6 @@ def triangle_count(
             F.when(fwd, F.col("du")).otherwise(F.col("dv")).alias("da"),
             F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
         ),
-        reliable=reliable,
     )
     o1 = oriented.select(
         F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx")
@@ -282,7 +280,6 @@ def label_propagation(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, the deterministic variant): every node starts labeled
@@ -343,7 +340,7 @@ def label_propagation(
             )
             .select("node", F.col("__b.l").alias("label"))
         )
-        labels = truncate_lineage(new, reliable=reliable)
+        labels = truncate_lineage(new)
     und.unpersist()
     return labels
 
@@ -391,7 +388,6 @@ def powerlaw_alpha(
 def kcore_peel(
     edges: DataFrame, k: int = 3, rounds: int = 3,
     src_col: str = "src", dst_col: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Per peel round (round, n_nodes, n_edges): iterative k-core
     peeling — drop every node with degree < k, drop incident edges,
@@ -433,7 +429,7 @@ def kcore_peel(
     # join+distinct chain (98 MB of parquet input) executed TWICE before
     # this barrier; rounds only shrink the set, so the cost is bounded
     # by the first survivor set (same discipline as the per-round cur)
-    cur = truncate_lineage(und, reliable=reliable)
+    cur = truncate_lineage(und)
     # The per-round stats row is derived from the NEXT degree table rather
     # than a separate full pass over cur (r10 optimization, guide §2.4):
     # deg(cur_r) has one row per distinct endpoint (n_nodes = COUNT(*)) and
@@ -456,7 +452,6 @@ def kcore_peel(
             cur.join(keep, "a", "semi")
             .join(keep.select(F.col("a").alias("b")), "b", "semi")
             .select("a", "b"),
-            reliable=reliable,
         )
         # round r's cur is checkpointed (eager) above, so deg r-1 has no
         # remaining consumer once round r's deg exists — unpersist it
@@ -558,7 +553,6 @@ def clustering_coefficients(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """One-row clustering summary: (n_nodes_deg2, n_wedges,
     n_closed_wedges, transitivity, avg_local_cc).
@@ -614,7 +608,6 @@ def clustering_coefficients(
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
             F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
         ),
-        reliable=reliable,
     )
     o1 = oriented.select(F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx"))
     o2 = oriented.select(F.col("a"), F.col("b").alias("y"), F.col("db").alias("dy"))
@@ -739,7 +732,6 @@ def bfs_frontier_counts(
     hops: int = 3,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Per-hop row (hop, n_frontier, n_visited): breadth-first frontier
     expansion from a seed node set — the reachability probe behind
@@ -757,11 +749,9 @@ def bfs_frontier_counts(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct(),
-        reliable=reliable,
     )
     frontier = truncate_lineage(
         seeds.select(F.col(seeds.columns[0]).alias("n")).distinct(),
-        reliable=reliable,
     )
     visited = frontier
     stats = []
@@ -771,9 +761,8 @@ def bfs_frontier_counts(
             .select(F.col("b").alias("n"))
             .distinct()
             .join(visited, "n", "left_anti"),
-            reliable=reliable,
         )
-        visited = truncate_lineage(visited.union(nxt), reliable=reliable)
+        visited = truncate_lineage(visited.union(nxt))
         stats.append(
             nxt.agg(
                 F.lit(k).alias("hop"),
@@ -799,7 +788,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     k: int = 10,
-    reliable: bool = False,
 ) -> DataFrame:
     """Top-k nodes by HITS authority after a fixed number of
     hub/authority power iterations — the bipartite-flavored authority
@@ -819,12 +807,11 @@ def hits(
         .filter(F.col("s") != F.col("d"))
         .distinct()
     )
-    e = truncate_lineage(e, reliable=reliable)
+    e = truncate_lineage(e)
     nodes = truncate_lineage(
         e.select(F.col("s").alias("n"))
         .union(e.select(F.col("d").alias("n")))
         .distinct(),
-        reliable=reliable,
     )
     auth = nodes.select("n", F.lit(1.0).alias("a"))
     for _ in range(iterations):
@@ -838,7 +825,6 @@ def hits(
             e.join(auth.withColumnRenamed("n", "d"), "d")
             .groupBy(F.col("s").alias("n"))
             .agg(F.sum("a").alias("h")),
-            reliable=reliable,
         )
         hub = hub.crossJoin(
             F.broadcast(hub.agg(F.max("h").alias("__mx")))
@@ -847,7 +833,6 @@ def hits(
             e.join(hub.withColumnRenamed("n", "s"), "s")
             .groupBy(F.col("d").alias("n"))
             .agg(F.sum("h").alias("a")),
-            reliable=reliable,
         )
         auth = auth.crossJoin(
             F.broadcast(auth.agg(F.max("a").alias("__mx")))

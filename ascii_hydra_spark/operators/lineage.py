@@ -1,25 +1,29 @@
-"""Lineage truncation with an executor-loss-resilience knob.
+"""Lineage truncation; the session decides how the cut is made.
 
 Iterative and reused-subtree operators (PageRank, connected components,
 boilerplate removal, snapshot drift) must materialize intermediate
 DataFrames: without truncation the lineage grows per iteration (planning
 blows up) or the same expensive subtree is recomputed per consumer.
 
-Two materialization strategies, chosen per call site via `reliable`:
+Whether a cut must survive executor loss is a property of the
+deployment, not of the call, so no operator takes an option for it: the
+session's checkpoint directory decides, the rule Spark ML's
+``checkpointInterval`` follows.
 
-- ``reliable=False`` (default): ``localCheckpoint`` — blocks are
-  executor-local disk/memory, written with no extra I/O beyond the
-  shuffle, and reclaimed by the ContextCleaner when the plan is dropped
-  (no session-lifetime cache leak). The cost at cluster scale: blocks are
-  NOT replicated, so losing one executor mid-query kills the query
-  instead of recomputing lineage (which was truncated). Right for
-  local-mode and short interactive queries.
-- ``reliable=True``: ``checkpoint`` against the session checkpoint
-  directory (``spark.sparkContext.setCheckpointDir`` — on a real cluster,
-  an HDFS/S3 path). Survives executor loss; costs a write+read of the
-  materialized data through the distributed FS. Right for 100 TB runs on
-  preemptible/spot executors where a lost node must not kill an
-  hours-long job. See SCALE.md "Lineage truncation" for the tradeoff.
+- No checkpoint dir (local mode, short interactive queries):
+  ``localCheckpoint`` — blocks are executor-local disk/memory, written
+  with no extra I/O beyond the shuffle, and reclaimed by the
+  ContextCleaner when the plan is dropped. The cost at cluster scale:
+  blocks are NOT replicated, so losing one executor mid-query kills the
+  query instead of recomputing lineage (which was truncated).
+- A checkpoint dir set (``spark.sparkContext.setCheckpointDir``; on a
+  cluster of preemptible/spot executors, an HDFS/S3 path): ``checkpoint``
+  through it. Survives executor loss; costs a write+read of the
+  materialized data through the distributed FS. See SCALE.md "Lineage
+  truncation" for the tradeoff.
+
+Every cut is eager: the operators that call this rely on the
+materialization happening at the call.
 """
 
 from __future__ import annotations
@@ -27,23 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def truncate_lineage(
-    df: DataFrame, reliable: bool = False, eager: bool = True
-) -> DataFrame:
-    """Materialize `df` and cut its lineage; see module docstring.
-
-    With ``reliable=True`` the session must have a checkpoint directory
-    set (``spark.sparkContext.setCheckpointDir``); a missing one is
-    raised eagerly with an actionable message instead of Spark's generic
-    failure at materialization time.
-    """
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if not sc.getCheckpointDir():
-            raise ValueError(
-                "reliable=True needs a checkpoint directory: call "
-                "spark.sparkContext.setCheckpointDir(<HDFS/S3/local path>) "
-                "before running this operator"
-            )
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """Materialize `df` and cut its lineage: a reliable checkpoint when
+    the session has a checkpoint dir, a local one otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

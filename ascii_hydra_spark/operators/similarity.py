@@ -476,20 +476,18 @@ def embedding_dedup(
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact: bool = True,
 ) -> DataFrame:
     """Drop rows that are embedding-cosine near-duplicates of a lower-id row.
 
     Canonical-winner rule: a row survives iff NO earlier row (smaller id) is
     within `threshold` cosine of it — deterministic regardless of partition
-    order. `exact=False` swaps in the LSH candidate path (same winners as
-    long as LSH recall covers the duplicate pairs; asserted in tests, not
-    hash-matched).
+    order. Pairs come from the exact blocked-GEMM arm
+    (`cosine_pairs_blocked`); the approximate form at scale is
+    `cosine_pairs_lsh` followed by the same anti-join on `id_b`.
     """
-    pair_fn = cosine_pairs_blocked if exact else cosine_pairs_lsh
-    dups = pair_fn(emb, threshold=threshold, id_col=id_col, vec_col=vec_col).select(
-        F.col("id_b").alias(id_col)
-    )
+    dups = cosine_pairs_blocked(
+        emb, threshold=threshold, id_col=id_col, vec_col=vec_col
+    ).select(F.col("id_b").alias(id_col))
     return emb.join(dups, id_col, "left_anti")
 
 

@@ -259,7 +259,6 @@ def remove_boilerplate(
     text_col: str = "text",
     segments=token_window_segments,
     min_docs: int = 3,
-    reliable: bool = False,
 ) -> DataFrame:
     """Corpus-wide boilerplate removal (CCNet-style paragraph dedup).
 
@@ -283,8 +282,8 @@ def remove_boilerplate(
     # disk-backed (spill not OOM at 100 TB) and are reclaimed by the
     # ContextCleaner when the returned plan is dropped — a bare persist()
     # here accumulated MEMORY_AND_DISK blocks for the session lifetime on
-    # every call. Cost: the operator is EAGER. `reliable=True` routes
-    # through the session checkpoint dir so a lost executor recomputes
+    # every call. Cost: the operator is EAGER. With a session checkpoint
+    # dir set the cut goes through it, so a lost executor recomputes
     # nothing fatal (see operators/lineage.py for the tradeoff).
     # min-parallelism spread (guide §2.1): the segment explode feeding this
     # checkpoint otherwise runs on the scan's split count — ONE 1.5-1.65 s
@@ -295,7 +294,6 @@ def remove_boilerplate(
         _ensure_min_parallelism(docs).select(
             F.col(id_col), F.posexplode(segments(text_col)).alias("pos", "seg")
         ),
-        reliable=reliable,
     )
     blacklist = (
         seg.select(id_col, "seg")

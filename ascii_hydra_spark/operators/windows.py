@@ -65,17 +65,6 @@ def with_running_agg(
     )
 
 
-def top_n_per_group(
-    df: DataFrame,
-    partition: Sequence[str | Column],
-    order: Sequence[Column],
-    n: int,
-) -> DataFrame:
-    """Classic top-N-per-key via row_number — one shuffle on the keys."""
-    w = keyed_window(partition, order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= n).drop("__rn")
-
-
 def forward_fill(
     df: DataFrame,
     partition: Sequence[str | Column],

@@ -44,6 +44,7 @@ from ascii_hydra_spark.operators import (
     text,
     windows,
 )
+from ascii_hydra_spark.operators.lineage import truncate_lineage
 from ascii_hydra_spark import sources, streaming
 from ascii_hydra_spark.session import ship_package  # noqa: F401  (re-export)
 
@@ -4119,8 +4120,9 @@ def _wat_edges_multisuffix(spark):
     """Engine side of the eTLD+1 pipeline entries: multi-suffix linked
     WARC fixture -> 200/text-html gate -> anchor extraction. 240
     records = 2 full template x group x status cycles (lcm(8,3,5) =
-    120). The extracted edge list is localCheckpoint-ed: downstream the
-    registered-domain probe references each surt column ~10x, and an
+    120). The extracted edge list is checkpointed (`truncate_lineage`,
+    the session-wide policy): downstream the registered-domain probe
+    references each surt column ~10x, and an
     un-truncated lineage clones the whole surt_url extraction tree into
     every reference AND into the pushed-down null-domain filter — a
     ~40x optimized-plan blowup (measured 858k plan chars / tens of
@@ -4146,7 +4148,7 @@ def _wat_edges_multisuffix(spark):
     live = recs.filter(
         (F.col("http_status") == 200) & (F.col("content_type") == "text/html")
     )
-    return wat_outlinks(live).localCheckpoint()
+    return truncate_lineage(wat_outlinks(live))
 
 
 @q(
@@ -5076,7 +5078,7 @@ def token_drift_snapshots(spark, sf_dir):
     "adds the canonical iterative one). Under 10^6 distinct edges (this "
     "graph) it runs as a driver-local numpy power iteration; above, the "
     "Spark arm persists the edge list once, shuffles once per iteration "
-    "and truncates lineage with localCheckpoint — tests/test_graph.py "
+    "and truncates lineage every iteration — tests/test_graph.py "
     "runs both arms (conservation, hand-computed values, this entry's "
     "oracle with the Spark arm forced). Hash-matched against the "
     "UNROLLED 5-iteration SQL in DuckDB",
@@ -20692,8 +20694,6 @@ def theil_sen_slope_ci(spark, sf_dir):
     # consumer re-executed the whole quadratic join before this (stage
     # capture: ~6 executions, 16.6 s total at sf0.1); pair-count-sized,
     # so the checkpoint is bounded
-    from ascii_hydra_spark.operators.lineage import truncate_lineage
-
     p = truncate_lineage(p)
     ranked = distrank.global_row_number(
         p, F.col("slope"), [F.col("i"), F.col("j")], out_col="rk"

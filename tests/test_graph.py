@@ -94,7 +94,7 @@ def test_pagerank_loop_body_has_no_collect(spark):
     """The dangling-mass term stays in-plan (1-row aggregate cross-broadcast
     into the rank update); an iteration must not issue a driver .collect().
     Pinned at the source level: the loop body of the Spark arm contains no
-    .collect call (localCheckpoint is the only per-round action)."""
+    .collect call (the lineage cut is the only per-round action)."""
     src = inspect.getsource(graph._pagerank_spark)
     loop = src.split("for _ in range(iterations):", 1)[1].split("ew.unpersist()", 1)[0]
     assert ".collect()" not in loop

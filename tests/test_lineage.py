@@ -1,20 +1,20 @@
-"""The `reliable` lineage-truncation knob (operators/lineage.py).
+"""The session-decided lineage-truncation policy (operators/lineage.py).
 
-Default (`reliable=False`) uses localCheckpoint: executor-local blocks,
-cheapest, but a lost executor kills the query (lineage was truncated, so
-nothing can be recomputed). `reliable=True` checkpoints through the
-session checkpoint directory — survives executor loss at the cost of a
-distributed-FS write+read. These tests pin three things: both paths give
-identical answers, the reliable path actually writes to the checkpoint
-dir (i.e. it is not a silent fallback to the local variant), and a
-missing checkpoint dir fails eagerly with an actionable message.
+With no checkpoint directory set, `truncate_lineage` uses
+localCheckpoint: executor-local blocks, cheapest, but a lost executor
+kills the query (lineage was truncated, so nothing can be recomputed).
+With a directory set it checkpoints through it — survives executor loss
+at the cost of a distributed-FS write+read. These tests pin both sides:
+the answers are identical, a set dir really receives checkpoint files
+(not a silent fallback to the local variant), no dir means nothing is
+written, and the helpers leave the session's dir as they found it (a
+leaked dir would switch every later cut in the run to disk checkpoints).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -22,72 +22,121 @@ from ascii_hydra_spark.operators import dedup, graph, text
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 
-@pytest.fixture()
-def ckpt_dir(spark, tmp_path):
-    """Point the session at a per-test checkpoint dir, restoring after."""
-    prev = spark.sparkContext.getCheckpointDir()
+def _put_checkpoint_dir(sc, path):
+    """Set the session checkpoint dir to exactly `path`, or clear it with
+    None. `setCheckpointDir` cannot clear, and it nests a fresh
+    subdirectory under its argument, so it cannot restore either."""
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(path))
+
+
+@contextlib.contextmanager
+def checkpoint_dir(spark, path):
+    """Run the block with the checkpoint dir under `path` (None: no dir),
+    then put back whatever the session had before."""
+    sc = spark.sparkContext
+    prev = sc.getCheckpointDir()
+    if path is None:
+        _put_checkpoint_dir(sc, None)
+    else:
+        sc.setCheckpointDir(path)
+    try:
+        yield
+    finally:
+        _put_checkpoint_dir(sc, prev)
+
+
+def _files(d):
+    return [os.path.join(r, f) for r, _, fs in os.walk(d) for f in fs]
+
+
+def _with_and_without_dir(spark, tmp_path, run):
+    """`run()` once with no checkpoint dir and once with one; returns both
+    results after checking the dir run really wrote checkpoint files."""
+    with checkpoint_dir(spark, None):
+        base = run()
     d = str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(d)
-    yield d
-    if prev:
-        spark.sparkContext.setCheckpointDir(prev)
+    with checkpoint_dir(spark, d):
+        rel = run()
+    assert _files(d), "a set checkpoint dir received no checkpoint files"
+    return base, rel
 
 
-def test_reliable_without_checkpoint_dir_raises(spark):
-    if spark.sparkContext.getCheckpointDir():
-        pytest.skip("session already has a checkpoint dir")
-    df = spark.range(10)
-    with pytest.raises(ValueError, match="checkpoint directory"):
-        truncate_lineage(df, reliable=True)
+def test_checkpoint_dir_helper_restores_session_dir(spark, tmp_path):
+    sc = spark.sparkContext
+    prev = sc.getCheckpointDir()
+    with checkpoint_dir(spark, str(tmp_path / "a")):
+        assert sc.getCheckpointDir().startswith(f"file:{tmp_path / 'a'}")
+        with checkpoint_dir(spark, None):
+            assert sc.getCheckpointDir() is None
+        assert sc.getCheckpointDir().startswith(f"file:{tmp_path / 'a'}")
+    assert sc.getCheckpointDir() == prev
 
 
-def test_reliable_truncation_writes_checkpoint_files(spark, ckpt_dir):
+def test_reliable_truncation_writes_checkpoint_files(spark, tmp_path):
     df = spark.range(100).withColumn("v", F.col("id") * 2)
-    out = truncate_lineage(df, reliable=True)
-    assert out.count() == 100
-    # a real reliable checkpoint materializes RDD files under the dir
-    found = [
-        os.path.join(r, f) for r, _, fs in os.walk(ckpt_dir) for f in fs
-    ]
-    assert found, "reliable=True produced no files in the checkpoint dir"
+    d = str(tmp_path / "ckpt")
+    with checkpoint_dir(spark, d):
+        out = truncate_lineage(df)
+        assert out.count() == 100
+    assert _files(d), "truncate_lineage wrote nothing to the set checkpoint dir"
 
 
-def test_pagerank_reliable_matches_default(spark, ckpt_dir, monkeypatch):
+def test_no_checkpoint_dir_writes_nothing(spark, tmp_path):
+    d = str(tmp_path / "ckpt")
+    with checkpoint_dir(spark, d):
+        # the dir exists and is the one a reliable cut would write to ...
+        assert not _files(d)
+        with checkpoint_dir(spark, None):
+            out = truncate_lineage(spark.range(100))
+            assert out.count() == 100
+            assert sorted(r["id"] for r in out.collect()) == list(range(100))
+    # ... but with the session's dir cleared the cut stayed local
+    assert not _files(d)
+
+
+def test_pagerank_reliable_matches_default(spark, tmp_path, monkeypatch):
     # only the Spark arm truncates lineage; force it below any edge count
     monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", -1)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 1)], ["src", "dst"]
     )
-    base = {
-        r["node"]: round(r["rank"], 9)
-        for r in graph.pagerank(edges, iterations=5).collect()
-    }
-    rel = {
-        r["node"]: round(r["rank"], 9)
-        for r in graph.pagerank(edges, iterations=5, reliable=True).collect()
-    }
+    base, rel = _with_and_without_dir(
+        spark,
+        tmp_path,
+        lambda: {
+            r["node"]: round(r["rank"], 9)
+            for r in graph.pagerank(edges, iterations=5).collect()
+        },
+    )
     assert base == rel
 
 
-def test_cluster_dedup_reliable_matches_default(spark, ckpt_dir):
+def test_cluster_dedup_reliable_matches_default(spark, tmp_path):
     df = spark.range(10).select(F.col("id").alias("doc_id"))
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (5, 6)], ["id_a", "id_b"]
     )
-    keep = lambda d: sorted(r["doc_id"] for r in d.collect())  # noqa: E731
-    assert keep(dedup.cluster_dedup(df, pairs, "doc_id")) == keep(
-        dedup.cluster_dedup(df, pairs, "doc_id", reliable=True)
+    base, rel = _with_and_without_dir(
+        spark,
+        tmp_path,
+        lambda: sorted(
+            r["doc_id"] for r in dedup.cluster_dedup(df, pairs, "doc_id").collect()
+        ),
     )
+    assert base == rel == [0, 3, 4, 5, 7, 8, 9]
 
 
-def test_remove_boilerplate_reliable_matches_default(spark, ckpt_dir):
+def test_remove_boilerplate_reliable_matches_default(spark, tmp_path):
     docs = spark.createDataFrame(
         [(i, f"body{i} unique tokens here\nshared footer line") for i in range(6)],
         ["doc_id", "text"],
     )
-    rows = lambda d: sorted(  # noqa: E731
-        (r["doc_id"], r["text_clean"], r["n_segments_kept"]) for r in d.collect()
+    base, rel = _with_and_without_dir(
+        spark,
+        tmp_path,
+        lambda: sorted(
+            (r["doc_id"], r["text_clean"], r["n_segments_kept"])
+            for r in text.remove_boilerplate(docs).collect()
+        ),
     )
-    assert rows(text.remove_boilerplate(docs)) == rows(
-        text.remove_boilerplate(docs, reliable=True)
-    )
+    assert base == rel

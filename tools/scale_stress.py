@@ -131,7 +131,6 @@ def main() -> int:
     os.makedirs(out, exist_ok=True)
 
     spark = build_spark(SessionProfile.dev())
-    spark.sparkContext.setCheckpointDir(os.path.join(out, "__ckpt"))
     results: dict[str, dict] = {}
     failures: list[str] = []
 
