@@ -30,6 +30,7 @@ nothing assumes a single JVM.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -107,6 +108,10 @@ SEMANTIC_CONF: dict[str, str] = {
     # TIMESTAMP(NANOS) fixtures — it is a no-op for us-precision files —
     # and the catalog handles both generations (catalog.normalize_events).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Delete a reliable checkpoint's files once its RDD is garbage
+    # collected (Spark's default keeps them forever): every
+    # `truncate_lineage` cut writes one when a checkpoint dir is set.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
 OPTIMIZER_CONF: dict[str, str] = {
@@ -168,6 +173,22 @@ CLOUD_CONF: dict[str, str] = {
 }
 
 
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for data that must not outlive this process
+    (registry fixtures, default stream sinks and checkpoints). Every one
+    sits under a single per-process root, made on first use and removed
+    at interpreter exit, so repeated calls never pile up in the temp dir.
+    """
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix=f"ahs_{os.getpid()}_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
 _SHIPPED_APPS: set[str] = set()
 
 
@@ -189,7 +210,7 @@ def ship_package(spark: SparkSession) -> None:
     if app in _SHIPPED_APPS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(tempfile.gettempdir(), f"ascii_hydra_spark_pkg_{os.getpid()}")
+    base = os.path.join(scratch_dir("ahs_pkg_"), f"ascii_hydra_spark_pkg_{os.getpid()}")
     zip_path = shutil.make_archive(
         base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="ascii_hydra_spark"
     )

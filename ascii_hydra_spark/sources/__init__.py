@@ -11,6 +11,11 @@ turns into partition pruning.
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -327,8 +332,6 @@ def compact_parquet(
     this is the plain-parquet maintenance tool.
     """
     import glob
-    import os
-    import shutil
 
     if "://" in path and not path.startswith("file://"):
         raise ValueError(
@@ -336,24 +339,6 @@ def compact_parquet(
             "On HDFS/object stores compact inside a table format."
         )
     path = path.removeprefix("file://").rstrip("/")
-    staging = path + "__compacting"
-    old = path + "__precompact"
-    # recover from a previous crashed run FIRST (the dataset may currently
-    # live at the backup path): a stranded backup means the swap never
-    # completed — restore it; stale staging is always safe to drop
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-
-    if any(
-        "=" in e.name and e.is_dir() for e in os.scandir(path) if not e.name.startswith("_")
-    ):
-        raise ValueError(
-            f"{path!r} is Hive-partitioned; a flat rewrite would demote the "
-            "partition column and break pruned readers. Compact per "
-            "partition directory, or use a table format's OPTIMIZE."
-        )
 
     def data_files(root: str) -> list[str]:
         return [
@@ -362,17 +347,25 @@ def compact_parquet(
             if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
         ]
 
-    files = data_files(path)
-    n_before = len(files)
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_target = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path).coalesce(n_target)
-    if sort_within:
-        df = df.sortWithinPartitions(sort_within)
-    df.write.mode("overwrite").parquet(staging)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
+    with _swap_dir(path) as staging:
+        if any(
+            "=" in e.name and e.is_dir()
+            for e in os.scandir(path)
+            if not e.name.startswith("_")
+        ):
+            raise ValueError(
+                f"{path!r} is Hive-partitioned; a flat rewrite would demote the "
+                "partition column and break pruned readers. Compact per "
+                "partition directory, or use a table format's OPTIMIZE."
+            )
+        files = data_files(path)
+        n_before = len(files)
+        total_bytes = sum(os.path.getsize(f) for f in files)
+        n_target = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
+        df = spark.read.parquet(path).coalesce(n_target)
+        if sort_within:
+            df = df.sortWithinPartitions(sort_within)
+        df.write.mode("overwrite").parquet(staging)
     return n_before, len(data_files(path))
 
 
@@ -382,8 +375,6 @@ def repair_compacted_parquet(path: str) -> bool:
     missing). Returns True when a restore happened, False when there was
     nothing to repair. Callers hitting a read failure on a compacted path
     run this instead of waiting for the next compaction cycle."""
-    import os
-
     if "://" in path and not path.startswith("file://"):
         raise ValueError(f"repair_compacted_parquet is local-only; got {path!r}")
     path = path.removeprefix("file://").rstrip("/")
@@ -392,6 +383,28 @@ def repair_compacted_parquet(path: str) -> bool:
         os.rename(old, path)
         return True
     return False
+
+
+@contextmanager
+def _swap_dir(path: str) -> Iterator[str]:
+    """Rewrite the local directory `path` in place: yields a staging path
+    for the body to write the new data to, then swaps it in with two
+    renames, the old data parked at `<path>__precompact` between them.
+
+    A crash between the renames leaves `path` missing and its data at the
+    backup, so the next use restores a stranded backup FIRST — before the
+    body reads `path` — and drops stale staging. If the body raises,
+    nothing is swapped."""
+    repair_compacted_parquet(path)
+    staging = path + "__compacting"
+    old = path + "__precompact"
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    yield staging
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def write_xml(

@@ -14,10 +14,11 @@ equivalent formulation* that hash-matches it (S ≡ Q pattern):
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
+
+from ascii_hydra_spark.session import scratch_dir
+from ascii_hydra_spark.sources import _swap_dir
 
 
 def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -29,7 +30,7 @@ def read_parquet_stream(spark: SparkSession, path: str) -> DataFrame:
 
     watch_dir = path
     if os.path.isfile(path):
-        watch_dir = tempfile.mkdtemp(prefix="ahs_stream_src_")
+        watch_dir = scratch_dir("ahs_stream_src_")
         os.symlink(path, os.path.join(watch_dir, os.path.basename(path)))
     return (
         spark.readStream.schema(spark.read.parquet(path).schema)
@@ -112,8 +113,8 @@ def run_available_now(
     """Run a streaming DataFrame to completion (availableNow) into a parquet
     sink; returns the sink path. Deterministic + replayable: the test/oracle
     contract for every streaming recipe."""
-    sink = sink_dir or tempfile.mkdtemp(prefix="ahs_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ahs_ckpt_")
+    sink = sink_dir or scratch_dir("ahs_sink_")
+    ckpt = checkpoint_dir or scratch_dir("ahs_ckpt_")
     q = (
         stream_df.writeStream.format("parquet")
         .option("path", sink)
@@ -260,40 +261,34 @@ def run_foreach_batch_upsert(
     the dataset in via staging-dir rename. At scale the same foreachBatch
     body targets Delta MERGE or a key-value store; the micro-batch
     orchestration, checkpointing, and exactly-once-per-batch contract are
-    identical.
+    identical. A crash mid-swap is repaired when the batch is replayed:
+    the swap restores a stranded previous state before the merge reads it.
     """
     import os
-    import shutil
 
-    state = state_dir or tempfile.mkdtemp(prefix="ahs_upsert_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ahs_upsert_ckpt_")
+    state = state_dir or scratch_dir("ahs_upsert_")
+    ckpt = checkpoint_dir or scratch_dir("ahs_upsert_ckpt_")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window, functions as F2
 
         spark = batch_df.sparkSession
-        merged = batch_df
-        has_state = os.path.isdir(state) and any(
-            f.endswith(".parquet") for f in os.listdir(state)
-        )
-        if has_state:
-            merged = spark.read.parquet(state).unionByName(batch_df)
-        w = Window.partitionBy(*key_cols).orderBy(
-            F2.desc(order_col), *[F2.desc(c) for c in merged.columns]
-        )
-        latest = (
-            merged.withColumn("__rn", F2.row_number().over(w))
-            .filter(F2.col("__rn") == 1)
-            .drop("__rn")
-        )
-        staging = state + ".staging"
-        latest.write.mode("overwrite").parquet(staging)
-        old = state + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(state):
-            os.rename(state, old)
-        os.rename(staging, state)
-        shutil.rmtree(old, ignore_errors=True)
+        with _swap_dir(state) as staging:
+            merged = batch_df
+            has_state = os.path.isdir(state) and any(
+                f.endswith(".parquet") for f in os.listdir(state)
+            )
+            if has_state:
+                merged = spark.read.parquet(state).unionByName(batch_df)
+            w = Window.partitionBy(*key_cols).orderBy(
+                F2.desc(order_col), *[F2.desc(c) for c in merged.columns]
+            )
+            latest = (
+                merged.withColumn("__rn", F2.row_number().over(w))
+                .filter(F2.col("__rn") == 1)
+                .drop("__rn")
+            )
+            latest.write.mode("overwrite").parquet(staging)
 
     q = (
         stream_df.writeStream.foreachBatch(upsert)

@@ -21,7 +21,6 @@ value-hash, so the contract is:
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -46,6 +45,7 @@ from ascii_hydra_spark.operators import (
 )
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 from ascii_hydra_spark import sources, streaming
+from ascii_hydra_spark.session import scratch_dir
 from ascii_hydra_spark.session import ship_package  # noqa: F401  (re-export)
 
 
@@ -62,6 +62,8 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def q(name: str, sql: str | None, note: str = ""):
     def reg(fn):
+        if name in REGISTRY:
+            raise ValueError(f"duplicate registry name: {name!r}")
         REGISTRY[name] = QuerySpec(name, fn, sql, note)
         return fn
 
@@ -1099,7 +1101,7 @@ def make_datetime(spark, sf_dir):
 )
 def csv_roundtrip(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    path = tempfile.mkdtemp(prefix="ahs_csv_")
+    path = scratch_dir("ahs_csv_")
     sources.write_csv(o, path)
     back = sources.read_csv(spark, path, "o_orderkey BIGINT, o_orderstatus STRING")
     return back.groupBy("o_orderstatus").agg(
@@ -1115,7 +1117,7 @@ def csv_roundtrip(spark, sf_dir):
 )
 def json_roundtrip(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
-    path = tempfile.mkdtemp(prefix="ahs_json_")
+    path = scratch_dir("ahs_json_")
     sources.write_json(o, path)
     back = sources.read_json(spark, path, "o_custkey BIGINT, o_orderpriority STRING")
     return back.groupBy("o_orderpriority").agg(
@@ -1133,7 +1135,7 @@ def text_scan_count(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select(
         F.concat_ws("|", F.col("o_orderkey"), F.col("o_orderstatus")).alias("value")
     )
-    path = tempfile.mkdtemp(prefix="ahs_text_")
+    path = scratch_dir("ahs_text_")
     o.write.mode("overwrite").text(path)
     back = spark.read.text(path)
     parsed = back.select(F.split("value", r"\|").alias("p"))
@@ -1166,7 +1168,7 @@ def approx_stats(spark, sf_dir):
 )
 def partitioned_pruned_read(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="ahs_part_")
+    root = scratch_dir("ahs_part_")
     sources.write_parquet(e, root, partition_by=("event_type",))
     back = sources.read_partitioned(spark, root, event_type="click")
     return back.agg(
@@ -3735,7 +3737,7 @@ def pyds_jsonl_sink(spark, sf_dir):
 
     register_synthetic_docs(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    path = tempfile.mkdtemp(prefix="ahs_jsonl_") + "/out"
+    path = scratch_dir("ahs_jsonl_") + "/out"
     d.write.format("ahs_jsonl").mode("overwrite").option("path", path).save()
     back = spark.read.json(f"{path}/part-*.jsonl")
     return back.groupBy("lang").agg(
@@ -3761,8 +3763,8 @@ def pyds_stream_feed(spark, sf_dir):
     from ascii_hydra_spark.sources.pydatasource import register_synthetic_docs
 
     register_synthetic_docs(spark)
-    sink = tempfile.mkdtemp(prefix="ahs_feed_sink_")
-    ckpt = tempfile.mkdtemp(prefix="ahs_feed_ckpt_")
+    sink = scratch_dir("ahs_feed_sink_")
+    ckpt = scratch_dir("ahs_feed_ckpt_")
     for until in (60, 137):  # feed grows between runs; offset resumes
         q_ = (
             spark.readStream.format("synthetic_feed")
@@ -3828,7 +3830,7 @@ def warc_records_scan(spark, sf_dir):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_warc_")
+    d = scratch_dir("ahs_warc_")
     write_warc_fixture(d, n_records=600, n_files=4, compress=True)
     df = spark.read.format("warc").option("path", d).load()
     return df.withColumn("surt", surt_url("target_uri"))
@@ -3868,7 +3870,7 @@ def warc_host_dedup(spark, sf_dir):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_warc_")
+    d = scratch_dir("ahs_warc_")
     write_warc_fixture(d, n_records=600, n_files=4, compress=True)
     df = spark.read.format("warc").option("path", d).load()
     return (
@@ -3969,7 +3971,7 @@ def _wat_edges(spark):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_wat_")
+    d = scratch_dir("ahs_wat_")
     write_warc_fixture(
         d, n_records=600, n_files=4, compress=True,
         record_fn=fixture_linked_record,
@@ -4139,7 +4141,7 @@ def _wat_edges_multisuffix(spark):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_etld_")
+    d = scratch_dir("ahs_etld_")
     write_warc_fixture(
         d, n_records=240, n_files=4, compress=True,
         record_fn=fixture_multisuffix_record,
@@ -4294,8 +4296,6 @@ def wat_pagerank_etld1(spark, sf_dir):
     "ONE task, the bottleneck the partitioning options exist to avoid",
 )
 def jdbc_roundtrip(spark, sf_dir):
-    import tempfile
-
     # embedded Derby writes derby.log to user.dir unless told otherwise
     spark._jvm.System.setProperty("derby.stream.error.file", "/tmp/ahs_derby.log")
     o = (
@@ -4303,7 +4303,7 @@ def jdbc_roundtrip(spark, sf_dir):
         .filter(F.col("o_orderkey") <= 1000)
         .select("o_orderkey", "o_orderstatus", F.col("o_totalprice").cast("double"))
     )
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='ahs_derby_')}/db;create=true"
+    url = f"jdbc:derby:{scratch_dir('ahs_derby_')}/db;create=true"
     sources.write_jdbc(
         o.coalesce(1), url, "orders_rt", mode="overwrite",
         driver="org.apache.derby.jdbc.EmbeddedDriver",
@@ -4329,7 +4329,7 @@ def jdbc_roundtrip(spark, sf_dir):
 )
 def orc_roundtrip(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    path = tempfile.mkdtemp(prefix="ahs_orc_")
+    path = scratch_dir("ahs_orc_")
     sources.write_orc(li, path)
     back = sources.read_orc(spark, path)
     return back.groupBy("l_returnflag").agg(
@@ -5259,7 +5259,7 @@ def stream_incremental_dedup_q(spark, sf_dir):
     # sink/checkpoint stay fresh per call, which is what exactly-once needs
     tmp = _STREAM_BATCH_STAGING.get(sf_dir)
     if tmp is None:
-        tmp = tempfile.mkdtemp(prefix="ahs_docs_batch_")
+        tmp = scratch_dir("ahs_docs_batch_")
         batch.write.mode("overwrite").parquet(tmp)
         _STREAM_BATCH_STAGING[sf_dir] = tmp
     stream = spark.readStream.schema(batch.schema).parquet(tmp)
@@ -6639,7 +6639,7 @@ def warc_curation_pipeline(spark, sf_dir):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_warc_")
+    d = scratch_dir("ahs_warc_")
     write_warc_fixture(d, n_records=600, n_files=4, compress=True)
     scanned = (
         spark.read.format("warc")
@@ -6759,7 +6759,7 @@ def warc_content_dedup_pipeline(spark, sf_dir):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_warc_html_")
+    d = scratch_dir("ahs_warc_html_")
     write_warc_fixture(
         d, n_records=240, n_files=4, compress=True,
         record_fn=fixture_html_record,
@@ -6850,7 +6850,7 @@ def cdx_index_build(spark, sf_dir):
     )
 
     register_cdx_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_cdx_")
+    d = scratch_dir("ahs_cdx_")
     write_warc_fixture(
         d, n_records=600, n_files=4, compress=True,
         record_fn=fixture_hostfile_record,
@@ -6906,7 +6906,7 @@ def cdx_pruned_fetch(spark, sf_dir):
     )
 
     register_cdx_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_cdx_")
+    d = scratch_dir("ahs_cdx_")
     write_warc_fixture(
         d, n_records=600, n_files=4, compress=True,
         record_fn=fixture_hostfile_record,
@@ -6965,13 +6965,13 @@ def cdx_index_jsonl_sink(spark, sf_dir):
 
     register_cdx_source(spark)
     register_synthetic_docs(spark)
-    d = tempfile.mkdtemp(prefix="ahs_cdx_")
+    d = scratch_dir("ahs_cdx_")
     write_warc_fixture(
         d, n_records=600, n_files=4, compress=True,
         record_fn=fixture_hostfile_record,
     )
     idx = spark.read.format("cdx").option("path", d).load()
-    sink = tempfile.mkdtemp(prefix="ahs_cdx_jsonl_") + "/index"
+    sink = scratch_dir("ahs_cdx_jsonl_") + "/index"
     idx.write.format("ahs_jsonl").mode("overwrite").option(
         "path", sink
     ).save()
@@ -7747,7 +7747,7 @@ def binaryfile_scan(spark, sf_dir):
 
     from ascii_hydra_spark.sources.warc import fixture_record
 
-    d = tempfile.mkdtemp(prefix="ahs_binfiles_")
+    d = scratch_dir("ahs_binfiles_")
     for i in range(200):
         body = fixture_record(i)[5]
         with open(os.path.join(d, f"{i:05d}.bin"), "wb") as f:
@@ -8395,7 +8395,7 @@ def xml_roundtrip(spark, sf_dir):
     from ascii_hydra_spark.operators.dedup import _ensure_min_parallelism
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    path = tempfile.mkdtemp(prefix="ahs_xml_") + "/data"
+    path = scratch_dir("ahs_xml_") + "/data"
     # spread XML row serialization across the cores: the sf0.1 parquet is
     # one 10.8 MB split, so the write was ONE task serializing 600k rows
     # (and the read-back one task parsing them). No-op at scale (splits
@@ -16879,7 +16879,7 @@ def cdx_revisit_detection(spark, sf_dir):
     )
 
     register_cdx_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_cdx_rv_")
+    d = scratch_dir("ahs_cdx_rv_")
     write_warc_fixture(
         d, n_records=600, n_files=4, compress=True,
         record_fn=fixture_revisit_record,
@@ -21130,7 +21130,7 @@ def warc_content_type_mix(spark, sf_dir):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_warc_mix_")
+    d = scratch_dir("ahs_warc_mix_")
     write_warc_fixture(
         d, n_records=600, n_files=4, compress=True, record_fn=fixture_record
     )
@@ -22195,335 +22195,3 @@ def pareto_chart_priorities(spark, sf_dir):
             F.col("cum").cast("double") / F.col("total").cast("double"), 6
         ).alias("cum_share"),
     )
-
-
-# ===================================================================
-# Registry ordering
-# ===================================================================
-# The external driver evaluates only the first _DRIVER_HEAD entries of the
-# registry (rounds 1-6 each checked exactly 50), so the head is a ROTATING
-# evidence window: a handful of anchor entries (one per core family) stay
-# pinned every round, and the remaining slots are filled with entries that
-# have NEVER had a driver row. Round-10 rotation: the round-7
-# continuation analytics queue (time-series diagnostics, AB-test
-# statistics, language profiling, multimodal channel stats) — the
-# pool the round-9 verdict named for this head
-# ("granger_orders_to_revenue ... durbin_watson_daily") — every
-# name SQL-oracled, first-time (round 4 spent 10 of its 50 slots on
-# rows-only entries that can only ever come back `no_oracle`, so the
-# window hard-requires an oracle for every head name — guard below).
-# Position 51+ holds the round-12/13 pools, then everything
-# previously driver-checked; the repo-local differential suite checks
-# the FULL registry either way.
-_DRIVER_HEAD = 50
-
-_ANCHORS: tuple[str, ...] = (
-    "scan_minmax", "star_revenue_by_nation", "pricing_summary",
-    "dedup_exact_events", "sessionize",
-)
-
-# Every name here must be first-time driver evidence AND carry a DuckDB
-# oracle (both enforced below — round 3's off-by-one silently pushed the
-# 51st name out of the window, and round 4 burned 10 slots on rows-only
-# entries that can only ever record `no_oracle`).
-_ROTATION: tuple[str, ...] = (
-    "warc_records_scan", "warc_host_dedup", "incremental_minhash_portable",
-    "customer_revenue_rank_tiles", "cumulative_daily_revenue",
-    "url_canonical_dedup", "gopher_quality_gate", "distributed_median_price",
-    "binaryfile_scan", "dsir_importance_en", "html_text_extraction",
-    "price_ending_profile", "gini_by_segment", "stream_quality_gate",
-    "warc_curation_pipeline", "warc_content_dedup_pipeline",
-    "cdx_index_build", "cdx_pruned_fetch", "cdx_index_jsonl_sink",
-    "surt_blocklist_filter", "luhn_card_audit", "robots_url_gate",
-    "mojibake_audit", "invisible_char_scrub", "nelson_aalen_lifetimes",
-    "logrank_value_ab", "cuped_value_ab", "lpa_communities",
-    "filtered_aggs_monthly", "freshness_audit_event_types",
-    "gaps_islands_user_days", "asof_join_nearest_views", "cohens_d_value_ab",
-    "mcnemar_doc_gates", "mann_kendall_daily_revenue",
-    "runs_test_daily_revenue", "kruskal_wallis_value_by_type",
-    "ccnet_perplexity_buckets", "quality_feature_matrix",
-    "odds_ratio_purchase_ab", "cdx_revisit_detection",
-    "hurst_rescaled_range_daily", "nbinom_moments_user_events",
-    "bartlett_value_by_type", "stable_rank_embeddings",
-)
-# (Round-11 rotation = the former _ROUND11_POOL promoted verbatim per
-# the round-10 verdict's task 3 — the rounds-6/7 WARC/CDX ingestion +
-# distributed-rank + portable-conversion wave. The round-10 rotation
-# moved to _PAST_DRIVER_GREEN after CORRECTNESS_r10.json recorded all
-# 50 head rows green.)
-
-# Pools are named for the round whose rotation they hold (renamed at
-# round 10 from the historical offset _ROUND{N}_POOL names per the
-# round-9 advisor finding). _ROUND12_POOL is promoted verbatim into
-# _ROTATION at round 12, and so on. Same first-time/disjoint/
-# oracle-able contract for every pool.
-
-# Frozen record of every name with a driver-green row (rows+schema+hash,
-# no error) in CORRECTNESS_r01-r06. Guards below reject a rotation slot
-# spent on an already-green name.
-_PAST_DRIVER_GREEN: frozenset[str] = frozenset({
-    # ---- green in CORRECTNESS_r10 (45 first-time rows; 50/50 incl. the
-    # 5 anchors, zero errors) ----
-    "granger_orders_to_revenue", "simpsons_paradox_segments",
-    "eclat_brand_triples", "nb_langid_confusion",
-    "lang_unigram_cosine_pairs", "fano_factor_hourly_by_type",
-    "sax_weekly_revenue", "quantile_normalize_by_type",
-    "seasonal_decompose_dow", "mantel_haenszel_purchase_ab",
-    "ivf_recall_at_k", "nth_value_windows", "chunk_dedup_rate",
-    "missing_days_audit", "chi2_residuals_segment_priority",
-    "code_switch_audit", "hill_tail_index_totals",
-    "markov_entropy_rate_events", "doc_keywords_top3", "srm_check_ab",
-    "value_decile_kl_by_type", "hapax_profile_by_lang",
-    "wilson_ci_purchase_ab", "aa_test_value", "audio_rms_frames",
-    "bmp_channel_stats", "weekly_user_jaccard", "theil_u_priority_segment",
-    "grouped_median_value_by_type", "events_to_convert_hist", "weekly_arpu",
-    "user_hour_entropy_topk", "capture_recapture_users",
-    "ratio_metric_delta_ab", "grouped_iqr_value_by_type",
-    "term_burstiness_top", "chow_break_midpoint",
-    "jonckheere_priority_value", "monthly_top_decile_share",
-    "doc_length_quartiles_by_lang", "benford_conformity_verdict",
-    "session_threshold_sensitivity", "ks_drift_month_halves",
-    "interarrival_expfit_ks", "durbin_watson_daily",
-    # ---- green in CORRECTNESS_r09 (45 first-time rows; 50/50 incl. the
-    # 5 anchors, zero errors) ----
-    "user_lifecycle_states", "power_user_curve",
-    "intersession_gap_percentiles", "immediate_repeat_tokens_by_source",
-    "nation_trade_balance", "size_price_corr_by_type",
-    "stopword_ratio_by_lang", "quantization_error_stats",
-    "trigram_top_by_lang", "customer_value_migration",
-    "ship_lead_time_by_priority", "peak_concurrency_sessions",
-    "weekly_wow_volatility", "churn_rate_by_segment", "brand_yoy_growth",
-    "hits_top_authorities", "graph_reciprocity",
-    "demand_curve_price_deciles", "user_type_entropy_hist",
-    "customer_order_frequency_hist", "part_name_top_words",
-    "quantity_discount_profile", "supply_hhi_by_nation",
-    "monthly_seasonality_revenue", "cohort_ltv_monthly",
-    "discount_band_effectiveness", "value_profile_by_type",
-    "gram_top_eigenvalue", "brand_type_nested_shares", "value_ecdf_points",
-    "ytd_revenue_share", "decayed_customer_value",
-    "label_balance_embeddings", "header_line_consistency_audit",
-    "linenumber_continuity_audit", "nation_mix_entropy_by_segment",
-    "vocab_coverage_top100", "priority_mix_drift_monthly",
-    "sessions_per_user_hist", "single_source_parts_by_brand",
-    "region_revenue_share_trend", "part_size_price_profile",
-    "wat_outlink_edges", "domain_graph_aggr", "wat_domain_pagerank",
-    # ---- green in CORRECTNESS_r08 (45 first-time rows; 50/50 incl. the
-    # 5 anchors, zero errors) ----
-    "cms_portable_estimates", "hll_portable_distinct",
-    "near_dup_minhash_portable", "sim_topk_ivf",
-    "minhash_dedup_survivors_portable", "simhash_pairs_portable",
-    "mmr_rerank_topk", "sim_pairs_lsh_portable",
-    "containment_pairs_portable", "clustering_coefficient_users",
-    "degree_assortativity_users", "max_drawdown_revenue",
-    "kendall_tau_daily", "poisson_dispersion_users",
-    "referential_integrity_audit", "uniqueness_candidate_keys",
-    "chi2_uniform_dow_orders", "benford_second_digit_totals",
-    "abc_classification_parts", "pareto_coverage_customers",
-    "returns_ratio_by_nation", "repeat_interval_segments",
-    "monthly_stickiness", "dow_hour_heatmap_events", "event_type_lift",
-    "session_entry_exit_types", "ols_price_quantity_discount",
-    "jarque_bera_totals", "l_diversity_customers",
-    "char_class_profile_sources", "token_length_hist_by_lang",
-    "prefix_dup_rate_by_source", "multibyte_ratio_by_lang",
-    "embedding_dim_stats", "cosine_pair_histogram", "order_lines_histogram",
-    "price_spread_by_brand", "acctbal_sign_profile", "monthly_order_mix",
-    "customer_recency_bands", "supplier_coverage_hist",
-    "top_part_types_per_region", "bfs_reachable_3hop",
-    "event_transition_triples", "weekday_weekend_revenue",
-    # ---- green in CORRECTNESS_r07 (45 first-time rows; 50/50 incl. the
-    # 5 anchors, zero errors) ----
-    "user_day_streaks", "welch_ttest_value_ab", "crosscorr_orders_lagged",
-    "bloom_membership_counts", "supplier_jaccard_links",
-    "shingle_novelty_scores", "twap_user_values",
-    "decision_stump_purchase_value", "classification_metrics_value",
-    "auc_value_purchase", "calibration_value_purchase",
-    "association_rules_parts", "readability_docs", "hashed_features_docs",
-    "target_encode_segment", "bollinger_daily_revenue",
-    "embedding_covariance_gram", "fixed_size_sample_docs",
-    "mutual_info_value_type", "cumulative_user_growth", "weighted_median_price",
-    "ndcg_user_value_purchase", "map_at_k_user", "bootstrap_ci_user_value",
-    "wasserstein_value_ab", "label_centroid_separation", "k_anonymity_customers",
-    "seasonal_naive_mape_revenue", "anova_value_by_type", "hbos_event_outliers",
-    "theil_sen_revenue_trend", "bh_fdr_nation_urgency",
-    "calinski_harabasz_labels", "cohens_kappa_langid",
-    "incremental_rollup_maintenance", "ece_value_purchase", "psi_value_ab",
-    "conformal_orders_priority", "dataset_fingerprint_orders",
-    "moments_order_total", "tukey_fences_outliers", "new_vs_returning_weekly",
-    "simpson_diversity_by_source", "session_duration_percentiles",
-    "dup_rate_by_source",
-    # ---- green in CORRECTNESS_r06 (45 first-time rows; 50/50 incl. the
-    # 5 anchors, zero errors) ----
-    "event_transitions",
-    "distinctive_terms_by_lang", "powerlaw_alpha_degrees",
-    "hourly_rate_anomalies", "winsorized_order_totals",
-    "segment_priority_chi2", "session_bounce_rate", "join_skew_report",
-    "hhi_revenue", "negative_pairs_ring", "nfc_normalized_fingerprints",
-    "mixing_weights_temperature", "xml_roundtrip",
-    "uniformized_length_by_lang", "split_unigram_kl", "group_by_all_status",
-    "kaplan_meier_lifetimes", "multimodal_resize",
-    "ab_conversion_ztest", "log2_hist_user_events", "mann_whitney_value_ab",
-    "ks_two_sample_value_ab", "cramers_v_segment_priority",
-    "source_vocab_jaccard", "theil_revenue", "spearman_orders_revenue",
-    "autocorr_daily_revenue", "dow_seasonality_revenue", "open_lines_by_day",
-    "rolling_active_users_7d", "mad_outliers_quantity",
-    "trimmed_mean_order_total", "lexical_diversity_by_source",
-    "zipf_slope_tokens", "format_mask_profile_props", "session_path_topk",
-    "touch_attribution_purchase", "item_cf_neighbors", "embedding_norm_hist",
-    "mom_revenue_growth", "kcore_peel_rounds", "cusum_changepoint_events",
-    "skyline_price_size", "multimodal_decode_features",
-    "isotonic_calibration_value",
-    # ---- green in CORRECTNESS_r05 (45 first-time rows; 50/50 incl. the
-    # 5 anchors, zero errors) ----
-    "percent_rank_cume", "explode_outer_rare_tokens", "dedup_docs_distinct",
-    "cluster_dedup_survivors", "corpus_pipeline", "term_freq_top",
-    "doc_freq", "ngram_bigrams", "udtf_tokenize", "regex_extract_filter",
-    "quality_scores", "fingerprints_md5", "asof_join_forward",
-    "graph_degree_hist", "profile_orders_columns", "applyinarrow_demean",
-    "lm_perplexity_scores", "perplexity_gate_counts", "tokenize_ids",
-    "shuffle_order_head", "kmeans_clusters", "semantic_dup_pairs",
-    "semantic_dedup_survivors", "triangle_count_users", "ewma_user_values",
-    "time_to_convert_funnel", "multimodal_gif_decode", "fuzzy_name_pairs",
-    "tokenizer_prep_pipeline", "substring_dedup_clean", "pyds_jsonl_sink",
-    "ohlc_bars", "bm25_topk", "hybrid_rrf_topk", "weighted_sample_by_lang",
-    "pmi_collocations", "token_entropy", "normalized_text_dedup",
-    "event_runs_stats", "interarrival_user_stats", "gini_revenue",
-    "benford_order_totals", "histogram_order_totals", "decile_revenue_lift",
-    "tfidf_doc_neighbors",
-    # ---- green in CORRECTNESS_r04 (35 first-time rows; the other 10
-    # r4 head names were rows-only `no_oracle` and are NOT green) ----
-    "tpch_q2_like", "tpch_q3_like", "tpch_q4_like", "tpch_q6_like",
-    "tpch_q7_like", "tpch_q8_like", "tpch_q9_like", "tpch_q10_like",
-    "tpch_q11_like", "tpch_q12_like", "tpch_q13_like", "tpch_q14_like",
-    "tpch_q15_like", "tpch_q16_like", "tpch_q17_like", "tpch_q18_like",
-    "tpch_q19_like", "tpch_q20_like", "tpch_q21_like", "tpch_q22_like",
-    "multimodal_wav_decode", "multimodal_png_decode",
-    "multimodal_frame_sample", "sim_topk_quantized", "embedding_dedup",
-    "stream_stream_join", "stream_static_join",
-    "funnel_view_click_purchase", "value_quartiles", "regr_stats",
-    "lateral_topn", "hypertable_rollup", "scd2_temporal_lookup",
-    "revenue_share_by_nation", "collect_sorted",
-    # ---- green in CORRECTNESS_r01-r03 ----
-    "anti_join_segments", "applyinpandas_demean", "array_ops",
-    "asof_join_events", "balanced_resample_counts", "basket_pairs",
-    "bitwise_aggs", "boilerplate_removal", "bpe_merge_pairs",
-    "calendar_months", "case_math", "cogroup_user_activity",
-    "contamination_check", "corpus_diff_counts", "corpus_split_counts",
-    "corr_stats", "correlated_scalar_subquery", "csv_roundtrip",
-    "cube_orders", "datetime_arith", "datetime_extract", "dedup_clusters",
-    "dedup_exact_events", "dedup_fingerprint", "doc_chunking",
-    "dq_audit_orders", "embedding_quantize", "encoding_funcs",
-    "exact_distinct_median", "except_keys", "explode_words",
-    "forward_fill_values", "full_outer_nation", "graph_domain_aggr",
-    "graph_pagerank_top", "group_quantiles", "grouping_sets_orders",
-    "having_balance", "hof_array_funcs", "incremental_dedup",
-    "inmemory_source", "intersect_keys", "jdbc_roundtrip", "json_extract",
-    "json_roundtrip", "lang_id_counts", "listagg_nations", "make_datetime",
-    "map_ops", "mapinarrow_charlen", "minmax_by", "multimodal_bmp_decode",
-    "multimodal_payload_stats", "near_dup_jaccard", "nested_min_join",
-    "null_safe_compare", "orc_roundtrip", "outer_join_histogram",
-    "pandas_udaf_weighted", "pandas_udf_charge", "part_textstats",
-    "partitioned_pruned_read", "pii_redaction", "pivot_status",
-    "pricing_summary", "projection_filter", "pyds_docs",
-    "pyds_stream_feed", "range_join_banded", "recursive_cte_walk",
-    "region_revenue", "repetition_quality_gate", "retention_cohorts",
-    "rfm_segmentation", "rollup_revenue", "salted_join_revenue",
-    "scalar_subquery", "scan_minmax", "scd2_user_values",
-    "semi_join_segments", "sequence_packing", "sessionize", "sim_pairs",
-    "sim_topk", "skew_join_hot_key", "sliding_15min",
-    "star_revenue_by_nation", "stratified_sample", "stream_dedup",
-    "stream_incremental_dedup", "stream_session", "stream_sliding",
-    "stream_stateful_counts", "stream_tumbling_hourly",
-    "stream_upsert_latest", "string_funcs", "text_scan_count",
-    "text_stats_by_lang", "tfidf_top_terms", "token_budget_by_source",
-    "token_counts", "token_drift_snapshots", "top_terms_per_lang",
-    "topk_orders", "try_arith", "tumbling_hourly", "udtf_polymorphic",
-    "union_all_keys", "unpivot_balances", "url_parsing", "variant_ops",
-    "vocab_build", "window_analytic", "window_range_time", "window_rank",
-    "window_running", "zorder_clustering", "zscore_outlier_counts",
-})
-
-# Round-12 pool: the 23-name evidence-queue tail (round-8 additions
-# minus the WAT trio, which the round-9 rotation pulled forward, plus
-# the three product-analytics names that made room for it); round-10
-# additions fill the remaining slots toward 45. Same contract.
-_ROUND12_POOL: tuple[str, ...] = (
-    "pacf_lag2_daily", "theil_sen_slope_ci", "weekly_periodogram_power",
-    "eb_shrunken_urgent_rates", "best_30d_revenue_window",
-    "effective_price_multiplier_profile", "warc_content_type_mix",
-    "ks_acctbal_customer_supplier", "sn_scale_daily_revenue",
-    "t_closeness_customers", "ljung_box_daily", "rich_club_coefficient",
-    "burstiness_hist_users", "chi2_uniform_quantity",
-    "winsorized_acctbal_by_nation", "tukey_fences_acctbal_by_nation",
-    "dow_share_goodman_ci", "cramers_v_corrected_segment_priority",
-    "record_days_revenue", "pareto_chart_priorities",
-    # displaced from the round-9 rotation by the WAT trio
-    "aov_by_segment", "hourly_value_profile",
-    "new_customer_order_share_monthly",
-    # round-10 additions: the eTLD+1 registered-domain grain (closing
-    # the round-9 verdict's host-vs-domain GraphAggr gap)
-    "registered_domain_map", "domain_graph_aggr_etld1",
-    "wat_pagerank_etld1",
-)
-
-# Round-13 pool: new entries queue here once round 12's tail fills
-# toward 45. Same contract.
-_ROUND13_POOL: tuple[str, ...] = (
-)
-
-_POOLS: tuple[tuple[str, ...], ...] = (
-    _ROUND12_POOL, _ROUND13_POOL,
-)
-
-_PRIORITY: tuple[str, ...] = (
-    _ANCHORS + _ROTATION
-    + tuple(n for pool in _POOLS for n in pool)
-)
-
-
-def _reorder_registry() -> None:
-    global REGISTRY
-    missing = [n for n in _PRIORITY if n not in REGISTRY]
-    if missing:  # fail loudly at import: a typo here silently un-checks a family
-        raise RuntimeError(f"_PRIORITY names not in REGISTRY: {missing}")
-    # Window-size guard: the driver checks exactly the first _DRIVER_HEAD
-    # entries. Round 3's rotation was 51 names, so the last one silently
-    # fell outside the window and got no driver row.
-    head = _ANCHORS + _ROTATION
-    if len(head) != _DRIVER_HEAD:
-        raise RuntimeError(
-            f"driver head is {len(head)} names, must be exactly "
-            f"{_DRIVER_HEAD}: a short head wastes evidence slots, a long "
-            f"head silently un-checks its tail"
-        )
-    if len(set(_PRIORITY)) != len(_PRIORITY):
-        dupes = sorted({n for n in _PRIORITY if _PRIORITY.count(n) > 1})
-        raise RuntimeError(f"duplicate names in _PRIORITY: {dupes}")
-    wasted = sorted(set(_ROTATION) & _PAST_DRIVER_GREEN)
-    if wasted:  # a rotation slot must buy FIRST-TIME driver evidence
-        raise RuntimeError(
-            f"rotation slots wasted on already-driver-green names: {wasted}"
-        )
-    # The driver's only green mode is a full rows+schema+value-hash match
-    # against the entry's own oracle SQL: a rows-only (sql=None) name in
-    # the head — or queued for a future head — can only ever record
-    # `no_oracle`, wasting the slot (round 4 lost 10 of 50 this way).
-    # Rows-only entries are verified in pytest and stay in the tail.
-    no_oracle = sorted(
-        n
-        for n in _ROTATION + tuple(n for pool in _POOLS for n in pool)
-        if REGISTRY[n].sql is None
-    )
-    if no_oracle:
-        raise RuntimeError(
-            f"head/queue slots spent on rows-only (no-oracle) names: "
-            f"{no_oracle}"
-        )
-    not_green = sorted(set(_ANCHORS) - _PAST_DRIVER_GREEN)
-    if not_green:  # anchors exist to re-confirm known-green families
-        raise RuntimeError(f"anchors never driver-green: {not_green}")
-    ordered = {n: REGISTRY[n] for n in _PRIORITY}
-    ordered.update({n: s for n, s in REGISTRY.items() if n not in ordered})
-    REGISTRY = ordered
-
-
-_reorder_registry()

@@ -14,7 +14,9 @@ leaked dir would switch every later cut in the run to disk checkpoints).
 from __future__ import annotations
 
 import contextlib
+import gc
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -79,6 +81,23 @@ def test_reliable_truncation_writes_checkpoint_files(spark, tmp_path):
         out = truncate_lineage(df)
         assert out.count() == 100
     assert _files(d), "truncate_lineage wrote nothing to the set checkpoint dir"
+
+
+def test_dropped_reliable_cut_files_are_reclaimed(spark, tmp_path):
+    # build_spark turns on cleanCheckpoints: once the cut's DataFrame is
+    # garbage collected, the ContextCleaner deletes its checkpoint files
+    d = str(tmp_path / "ckpt")
+    with checkpoint_dir(spark, d):
+        out = truncate_lineage(spark.range(100).withColumn("v", F.col("id") * 2))
+        assert out.count() == 100
+        assert _files(d)
+        del out
+        deadline = time.monotonic() + 60
+        while _files(d) and time.monotonic() < deadline:
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            time.sleep(0.5)
+    assert not _files(d), "a dropped reliable cut left its checkpoint files"
 
 
 def test_no_checkpoint_dir_writes_nothing(spark, tmp_path):

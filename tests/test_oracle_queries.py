@@ -7,8 +7,11 @@ require identical row count, column names, and canonical values.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
+from ascii_hydra_spark import verification
 from ascii_hydra_spark.verification import REGISTRY
 from tests.oracle_compare import assert_results_match
 
@@ -39,3 +42,17 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert set(entry_mod.oracle_sql()) <= set(entry_mod.queries())
+
+
+def test_registry_keeps_declaration_order():
+    with open(verification.__file__) as f:
+        declared = re.findall(r'^@q\(\s*"([^"]+)"', f.read(), re.M)
+    assert list(REGISTRY) == declared
+
+
+def test_q_rejects_duplicate_name(monkeypatch):
+    monkeypatch.setattr(verification, "REGISTRY", {})
+    verification.q("dup", None)(lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match="duplicate registry name: 'dup'"):
+        verification.q("dup", "SELECT 1")(lambda spark, sf_dir: None)
+    assert verification.REGISTRY["dup"].sql is None

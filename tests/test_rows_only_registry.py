@@ -1,14 +1,11 @@
 """Execute every rows-only (sql=None) registry entry end-to-end.
 
-Rows-only entries are excluded from the driver's hash-match window (a
-sql=None name there can only record `no_oracle`), so THIS module is
-where each one's registry callable provably runs: schema stays stable
-and the result is non-trivial at sf0.001. The deeper semantic checks
-(LSH recall, sketch error bounds, JPEG PSNR, MMR demotion, isotonic
-pooling) live in the per-operator test modules; this sweep guarantees
-that removing a name from the driver head never removes its execution
-coverage. Names asserted here (kept in sync by test_rotation_window's
-`test_rows_only_entries_stay_verified_in_pytest`):
+Rows-only entries have no DuckDB oracle, so the oracle hash-check in
+test_oracle_queries cannot cover them; THIS module is where each one's
+registry callable provably runs: schema stays stable and the result is
+non-trivial at sf0.001. The deeper semantic checks (LSH recall, sketch
+error bounds, JPEG PSNR, MMR demotion, isotonic pooling) live in the
+per-operator test modules. Names asserted here:
 
 approx_stats, near_dup_minhash, minhash_dedup_survivors, simhash_pairs,
 containment_pairs, sim_pairs_lsh, hll_sketch_distinct,
@@ -35,7 +32,7 @@ ROWS_ONLY = sorted(n for n, s in v.REGISTRY.items() if s.sql is None)
 
 
 def test_rows_only_set_is_the_documented_tail() -> None:
-    # additions must register here (docstring) and stay out of the head
+    # additions must register here (docstring)
     documented = {
         "approx_stats", "near_dup_minhash", "minhash_dedup_survivors",
         "simhash_pairs", "containment_pairs", "sim_pairs_lsh",

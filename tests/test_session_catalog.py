@@ -7,6 +7,10 @@ pure functions asserted without a JVM where possible.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from ascii_hydra_spark.catalog import Catalog, DIMENSION_TABLES, TABLES
@@ -92,6 +96,27 @@ def test_build_spark_ships_the_package(spark):
 
     paths = spark.sparkContext.parallelize([0], 1).map(shipped).first()
     assert paths and paths[0].endswith(".zip")
+
+
+def test_build_spark_reclaims_reliable_checkpoints(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
+def test_scratch_dirs_share_one_root_removed_at_exit():
+    code = (
+        "from ascii_hydra_spark.session import scratch_dir\n"
+        "print(scratch_dir('ahs_a_')); print(scratch_dir('ahs_b_'))\n"
+        "print(scratch_dir('ahs_a_'))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    ).stdout.split()
+    assert len(out) == len(set(out)) == 3
+    roots = {os.path.dirname(p) for p in out}
+    assert len(roots) == 1
+    assert not os.path.exists(roots.pop())
 
 
 def test_catalog_mode_resolution_and_overrides():

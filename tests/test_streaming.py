@@ -162,6 +162,48 @@ def test_foreach_batch_upsert_keeps_latest_per_key(spark):
     assert got == {(7, 3), (8, 2), (9, 4)}
 
 
+def test_foreach_batch_upsert_survives_crash_mid_swap(spark, monkeypatch, tmp_path):
+    """A crash between the swap's two renames leaves the previous state
+    parked at its backup; the replayed batch must merge into it, not
+    replace it."""
+    import pytest
+
+    src, state, ckpt = (str(tmp_path / n) for n in ("src", "state", "ckpt"))
+
+    def run_once():
+        ev = spark.readStream.schema(
+            "event_id BIGINT, user_id BIGINT, ts TIMESTAMP"
+        ).parquet(f"{src}/*")
+        streaming.run_foreach_batch_upsert(
+            ev, key_cols=["user_id"], order_col="ts", state_dir=state, checkpoint_dir=ckpt
+        )
+
+    _write_batch(
+        spark, src, "b1", [(1, 7, "2024-01-01 10:00:00"), (2, 8, "2024-01-01 10:05:00")]
+    )
+    run_once()
+
+    real_rename = os.rename
+    failed = []
+
+    def rename_failing_once(src_path, dst_path):
+        # the swap's second rename moves the staged data onto `state`
+        if dst_path == state and not failed:
+            failed.append(src_path)
+            raise OSError("injected crash between the swap's renames")
+        real_rename(src_path, dst_path)
+
+    monkeypatch.setattr(os, "rename", rename_failing_once)
+    _write_batch(spark, src, "b2", [(3, 9, "2024-01-01 11:00:00")])
+    with pytest.raises(Exception, match="injected crash"):
+        run_once()
+    assert failed and not os.path.exists(state)
+
+    run_once()  # same checkpoint: the failed batch is replayed
+    got = {(r.user_id, r.event_id) for r in spark.read.parquet(state).collect()}
+    assert got == {(7, 1), (8, 2), (9, 3)}
+
+
 def test_stream_dedup_emits_first_occurrence_only(spark):
     src = tempfile.mkdtemp(prefix="ahs_dd_src_")
     _write_batch(

@@ -27,7 +27,7 @@ TABLES = (
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--head", type=int, default=50, help="check the first N registry entries")
+    ap.add_argument("--head", type=int, default=50, help="check the first N entries in declaration order")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--names", default=None, help="comma-separated subset instead of --head")
     args = ap.parse_args()
