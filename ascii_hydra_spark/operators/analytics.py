@@ -26,6 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ascii_hydra_spark.operators import distrank
+from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 
 def _two_group_labels(df: DataFrame, group_col: str, op_name: str):
@@ -219,15 +220,14 @@ def decile_shares(
             F.col("__i"), F.col("__n"), tiles
         ).cast("bigint").alias("tile"),
     )
-    per = tiled.groupBy("tile").agg(
+    # cut: `per` is <= `tiles` rows but feeds BOTH the total agg and the
+    # final crossJoin — uncut, the whole upstream rank machinery
+    # (distrank two-pass + tile groupBy) executed twice (r10 before-plan:
+    # 8 parquet scans)
+    per = truncate_lineage(tiled.groupBy("tile").agg(
         F.count("*").cast("bigint").alias("n"),
         _dsum(F.col("__x")).alias("revenue"),
-    ).persist()
-    # eager barrier: `per` is <= `tiles` rows but feeds BOTH the total
-    # agg and the final crossJoin — unpersisted, the whole upstream rank
-    # machinery (distrank two-pass + tile groupBy) executed twice
-    # (r10 before-plan: 8 parquet scans)
-    per.count()
+    ))
     total = per.agg(F.sum(F.col("revenue").cast("decimal(18,2)")).cast("double").alias("__t"))
     # shared non-foldable constant-0 partition spec (see
     # distrank.single_partition): this window's input is <= `tiles` rows
@@ -925,12 +925,11 @@ def mann_whitney_u(
     ga, _gb = _two_group_labels(df, group_col, "mann_whitney_u")
     # distinct-value grain, but its recompute drags the caller's whole
     # scan+aggregate chain along for each of distrank's three plan
-    # branches — eager barrier (r10 stats-family sweep)
-    per_v = df.groupBy(F.col(value_col).alias("__x")).agg(
+    # branches — cut (r10 stats-family sweep)
+    per_v = truncate_lineage(df.groupBy(F.col(value_col).alias("__x")).agg(
         F.count("*").cast("long").alias("__t"),
         F.sum((F.col(group_col) == F.lit(ga)).cast("long")).alias("__ta"),
-    ).persist()
-    per_v.count()
+    ))
     cum = distrank.global_running_sum(
         per_v, F.col("__x"), F.col("__t"), out_col="__cum"
     )
@@ -987,13 +986,12 @@ def ks_two_sample(
     comparison deciding the argmax. Raises unless exactly two groups.
     """
     ga, _gb = _two_group_labels(df, group_col, "ks_two_sample")
-    # four plan branches read this (totals + distrank's three) — eager
-    # barrier, same rationale as mann_whitney_u
-    per_v = df.groupBy(F.col(value_col).alias("__x")).agg(
+    # four plan branches read this (totals + distrank's three) — cut,
+    # same rationale as mann_whitney_u
+    per_v = truncate_lineage(df.groupBy(F.col(value_col).alias("__x")).agg(
         F.sum((F.col(group_col) == F.lit(ga)).cast("bigint")).alias("__da"),
         F.sum((F.col(group_col) != F.lit(ga)).cast("bigint")).alias("__db"),
-    ).persist()
-    per_v.count()
+    ))
     totals = per_v.agg(
         F.sum("__da").alias("__na"), F.sum("__db").alias("__nb")
     )
@@ -1542,11 +1540,9 @@ def spearman_rank_corr(
     # the input feeds SEVEN plan branches (each axis's per-value table is
     # read 3x by distrank's probe/aggregate/offsets, plus the final
     # row-level join base) — the r10 before-plan showed the caller's
-    # scan+groupBy chain planned 10 times. One eager persist barrier;
-    # this is the chained-consumer case the distrank A/B showed winning
-    # (the single-call loss case has 3 consumers, not 7).
-    df = df.persist()
-    df.count()
+    # scan+groupBy chain planned 10 times. One cut of a copy: the
+    # caller's own DataFrame is left uncached.
+    df = truncate_lineage(df)
 
     def _avg_ranks(col: str, out: str) -> DataFrame:
         per_v = df.groupBy(F.col(col).alias("__v")).agg(
@@ -2564,9 +2560,6 @@ def theil_sen_trend(
     # The (i, j) tiebreak totally orders equal slopes; equal values make
     # any pick at a rank value-identical. The lattice is materialized
     # once — distrank reads its input from three plan branches.
-    from ascii_hydra_spark.operators import distrank
-    from ascii_hydra_spark.operators.lineage import truncate_lineage
-
     pairs = truncate_lineage(
         a.join(b, F.col("__da") < F.col("__db")).select(
             slope.alias("__s"), F.col("__da").alias("__i"), F.col("__db").alias("__j")
@@ -3093,11 +3086,12 @@ def abc_classification(
     ranked = distrank.global_row_number(
         d, F.col("__v"), [F.col("__k")], desc=True, out_col="__i"
     )
+    # cut: `ranked` embeds the row_number call's window+join chain, which
+    # the running sum's probe, aggregate and offsets join would each
+    # re-execute (abc 4.7 -> 3.8 s at sf0.1 once materialized)
     cum = distrank.global_running_sum(
-        # materialize: `ranked` embeds the row_number call's window+join
-        # chain — the A/B-proven chained-call case (see distrank._bucketed)
-        ranked, F.col("__i"), F.col("__v"), out_col="__cum", total_col="__tot",
-        materialize_input=True,
+        truncate_lineage(ranked), F.col("__i"), F.col("__v"),
+        out_col="__cum", total_col="__tot",
     ).select("__k", "__v", "__cum", "__tot")
     cls = cum.select(
         "__v",
@@ -3143,9 +3137,9 @@ def pareto_coverage(
         d, F.col("__v"), [F.col("__k")], desc=True, out_col="__i"
     )
     cum = distrank.global_running_sum(
-        # materialize: chained distrank input (see abc_classification)
-        ranked, F.col("__i"), F.col("__v"), out_col="__cum", total_col="__tot",
-        materialize_input=True,
+        # cut: chained distrank input (see abc_classification)
+        truncate_lineage(ranked), F.col("__i"), F.col("__v"),
+        out_col="__cum", total_col="__tot",
     ).select("__v", "__cum", "__tot")
     flagged = cum.select(
         "__v",

@@ -236,20 +236,16 @@ def jaccard_pairs(
     corpus. `prefix_filter=False` (or threshold == 0, where the prefix is
     the whole document) falls back to the direct self-join.
 
-    EAGER + caches: constructing this DataFrame runs one job (the token
-    table is cached and count()-materialized — independent AQE leaf
-    stages race a lazy cache, re-running the explode+distinct once per
-    consumer), and the doc-token-sized cache entry lives until the
-    caller clears it (session `clearCache()` or unpersist). Same
-    contract as `remove_boilerplate`.
+    EAGER: constructing this DataFrame runs one job, the
+    `truncate_lineage` cut of the token table (independent AQE leaf
+    stages would otherwise re-run the explode+distinct once per
+    consumer). The cut's blocks are reclaimed when the returned plan is
+    dropped; nothing stays cached. Same contract as `remove_boilerplate`.
     """
-    toks = _doc_tokens(df, id_col, text_col).cache()
-    # eager barrier: the token table feeds the size aggregate plus both
-    # self-join sides (and the prefix index when enabled) — independent AQE
-    # leaf stages race a lazy cache and re-run the explode+distinct per
-    # consumer (stage capture at sf0.1: 8 identical exchange writes in
-    # dedup_clusters before this barrier)
-    toks.count()
+    # cut: the token table feeds the size aggregate plus both self-join
+    # sides (and the prefix index when enabled) — stage capture at sf0.1
+    # showed 8 identical exchange writes in dedup_clusters without it
+    toks = truncate_lineage(_doc_tokens(df, id_col, text_col))
     sizes = toks.groupBy("__id").agg(F.count("*").alias("__sz"))
     if prefix_filter and threshold > 0:
         idx = prefix_index(toks, sizes, threshold)
@@ -381,22 +377,17 @@ def minhash_lsh_pairs(
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     rows = num_hashes // bands
-    # persist: the signature table feeds BOTH sides of the candidate
-    # self-join plus the estimate prefilter — uncached, the shingle
-    # explode + 64-way min aggregation would recompute 4x. Signatures are
-    # 64 ints/doc, ~1/1000th of corpus size, so MEMORY_AND_DISK holds at
-    # scale (the production form is build-once-at-ingest, like the IVF
-    # index).
-    sig = minhash_signatures(
+    # cut: the signature table feeds BOTH sides of the candidate
+    # self-join plus the estimate prefilter. A lazy persist would not stop
+    # AQE from submitting all consumer leaf stages concurrently, each
+    # racing to compute the signature UDF subtree (measured at sf0.1: 4
+    # racing stages, ~4x the UDF CPU and a 128-process Python worker fork
+    # storm); the eager cut runs the Arrow/numpy stage exactly once.
+    # Signatures are 64 ints/doc, ~1/1000th of corpus size (the production
+    # form is build-once-at-ingest, like the IVF index).
+    sig = truncate_lineage(minhash_signatures(
         _ensure_min_parallelism(df), id_col, text_col, num_hashes, shingle_k
-    ).persist()
-    # EAGER barrier: a lazy persist does not stop AQE from submitting all
-    # consumer leaf stages concurrently, and each then races to compute
-    # the signature UDF subtree before the cache is populated (measured
-    # at sf0.1: 4 racing stages, ~4x the UDF CPU and a 128-process Python
-    # worker fork storm). One count() materializes the cache once, so the
-    # expensive Arrow/numpy stage runs exactly one wave of tasks.
-    sig.count()
+    ))
     band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
     banded = sig.select(
         "__id",
@@ -434,20 +425,17 @@ def minhash_lsh_pairs(
             lambda m: m == 1,
         )
     ) / F.lit(float(num_hashes))
-    candidates = (
+    # cut: three consumers (both cand_ids sides and the verify join)
+    # would each re-run the banded self-join + est filter. The three
+    # cuts here replaced persist + count() on sig and shingle_sets and a
+    # lazy persist with no barrier on this table; 10 alternating
+    # fresh-process pairs of q_near_dup_minhash at sf0.01 on 4 cores:
+    # 22 -> 15 Spark jobs, median wall 11.51 -> 8.76 s, faster in 10/10.
+    candidates = truncate_lineage(
         candidates.join(sa_sig, "id_a")
         .join(sb_sig, "id_b")
         .filter(est >= est_cut)
         .select("id_a", "id_b")
-        # LAZY persist, deliberately no count() barrier (r11 barrier-diet
-        # ABAB, 6 legs): the candidate table is tiny and its recompute
-        # (a join over the already-materialized sig cache) is cheaper
-        # than serializing the pipeline behind an extra job — dropping
-        # the barrier won 4/6 paired legs (min 3.00 vs 3.14 s, mean 3.80
-        # vs 4.41). Dropping the persist TOO lost 3/3 legs (each of the
-        # 3 consumers then re-runs the banded self-join + est filter);
-        # do not re-try either direction without new evidence.
-        .persist()
     )
     # exact verification on the surviving candidates only: semi-join the
     # corpus down to docs that appear in some candidate pair BEFORE paying
@@ -462,16 +450,14 @@ def minhash_lsh_pairs(
     # scan's partitioning (ONE split at sf0.1), so the shingle-set
     # materialization below otherwise runs as a single 0.25-0.55 s task.
     # Spreading the surviving (id, text) rows is cheap; no-op at scale.
-    shingle_sets = (
+    # cut: sa and sb below are independent AQE leaf stages — without it
+    # each side re-runs the candidate semi-join + shingle explode
+    shingle_sets = truncate_lineage(
         _ensure_min_parallelism(
             df.join(F.broadcast(cand_ids), F.col(id_col) == F.col("__cid"), "left_semi")
         )
         .select(F.col(id_col).alias("__id"), F.array_distinct(char_shingles(text_col, shingle_k)).alias("__set"))
-        .persist()
     )
-    # eager: sa and sb below are independent AQE leaf stages — without the
-    # barrier each side re-runs the candidate semi-join + shingle explode
-    shingle_sets.count()
     sa = shingle_sets.select(F.col("__id").alias("id_a"), F.col("__set").alias("__seta"))
     sb = shingle_sets.select(F.col("__id").alias("id_b"), F.col("__set").alias("__setb"))
     verified = (
@@ -775,11 +761,9 @@ def simhash_pairs(
         raise ValueError("raise `chunks` so pigeonhole banding stays sound")
     if bits % chunks != 0:
         raise ValueError("chunks must divide bits")
-    # persist: one 8-byte hash per doc, read by both sides of the self-join
-    sh = simhash(df, id_col, text_col, bits=bits, hash_fn=hash_fn).persist()
-    # eager barrier — both join sides are independent AQE leaf stages and
-    # would otherwise race to compute the hash scan before the cache fills
-    sh.count()
+    # cut: one 8-byte hash per doc, read by both sides of the self-join —
+    # independent AQE leaf stages that would each recompute the hash scan
+    sh = truncate_lineage(simhash(df, id_col, text_col, bits=bits, hash_fn=hash_fn))
     width = bits // chunks
     chunk_vals = F.array(
         *[
@@ -965,18 +949,12 @@ def minhash_lsh_pairs_portable(
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # persisted: the shingle table feeds FOUR consumers (signatures,
-    # sizes, both verify-join sides) — without this each one re-runs
-    # tokenize + explode + distinct
-    sh = (
-        toked.select("__id", F.explode(bigrams).alias("__s"))
-        .distinct()
-        .persist()
+    # cut: the shingle table feeds FOUR consumers (signatures, sizes,
+    # both verify-join sides), independent AQE leaf stages that would
+    # each re-run tokenize + explode + distinct
+    sh = truncate_lineage(
+        toked.select("__id", F.explode(bigrams).alias("__s")).distinct()
     )
-    # eager barrier: the four consumers are independent AQE leaf stages;
-    # lazily persisted they race to re-run tokenize + explode + distinct
-    # before the cache is populated (see minhash_lsh_pairs)
-    sh.count()
 
     def hv(i: int):
         return F.conv(

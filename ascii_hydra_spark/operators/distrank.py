@@ -98,30 +98,10 @@ def _bucketed(
     key: Column,
     desc: bool,
     num_buckets: "int | None",
-    materialize: bool = False,
 ) -> "tuple[DataFrame, int]":
     p = num_buckets or _default_buckets(df)
     if p <= 1:
         return df.withColumn(_B, F.lit(0)), 1
-    # materialize=True: persist the input ONCE (lazy — the probe below is
-    # a sequential driver action that fully scans df, populating the
-    # cache before any concurrent consumer stage launches; an extra
-    # eager count() was A/B-measured as pure added latency). Three
-    # consumers read this subtree — the probe, the per-bucket aggregate,
-    # and the offsets join — so an unmaterialized input computes three
-    # times per call. Whether that matters depends on what the input IS:
-    # paired A/B at sf0.1 showed a clear win ONLY for CHAINED calls
-    # whose input embeds a prior distrank output (abc/pareto/
-    # quantile_normalize: the inner call's window+join chain otherwise
-    # re-executes per consumer — abc 4.7 -> 3.8 s), and a consistent
-    # LOSS for single calls over cheap entity aggregates
-    # (customer_value_migration 2.3 -> 4.1 s: columnar cache build +
-    # two deserializing reads cost more than two cheap recomputes).
-    # Hence opt-in: the chained callers pass materialize_input=True;
-    # everything else keeps the recompute. Blocks are dropped by
-    # clearCache()/ContextCleaner with the plan.
-    if materialize:
-        df = df.persist()
     probs = [i / p for i in range(1, p)]
     # driver-side bounded probe: p-1 doubles, embedded as literals so
     # every plan branch sees the SAME split points unconditionally
@@ -182,18 +162,14 @@ def global_row_number(
     out_col: str = "__i",
     total_col: "str | None" = None,
     num_buckets: "int | None" = None,
-    materialize_input: bool = False,
 ) -> DataFrame:
     """``df`` + ``out_col`` = exact 1-based global row number under
     (key asc|desc, tiebreaks... asc) — which must be a TOTAL order —
     with no single-partition sort of the data. With ``total_col`` the
     total row count rides along from the already-built per-bucket
     counts (no extra pass) — NTILE-style consumers need it.
-    ``materialize_input`` persists the input before the three-consumer
-    fan-out — pass True when ``df`` embeds an expensive subtree (e.g. a
-    prior distrank output); see ``_bucketed``.
     """
-    base, _ = _bucketed(df, key, desc, num_buckets, materialize_input)
+    base, _ = _bucketed(df, key, desc, num_buckets)
     counts = base.groupBy(_B).agg(F.count("*").alias("__dr_cnt"))
     order = [key.desc() if desc else key.asc()] + [
         t.asc() for t in (tiebreaks or [])
@@ -215,7 +191,6 @@ def global_running_sum(
     out_col: str = "__cum",
     total_col: "str | None" = None,
     num_buckets: "int | None" = None,
-    materialize_input: bool = False,
 ) -> DataFrame:
     """``df`` + ``out_col`` = exact INCLUSIVE running sum of
     ``value_col`` under ``key`` ascending (callers pass a key that is
@@ -227,10 +202,7 @@ def global_running_sum(
     extra pass over the data, no 1-row cross join) — share-of-total
     consumers (ABC cuts, Pareto coverage) need it.
     """
-    base, _ = _bucketed(
-        df.withColumn("__dr_v", value_col), key, False, num_buckets,
-        materialize_input,
-    )
+    base, _ = _bucketed(df.withColumn("__dr_v", value_col), key, False, num_buckets)
     sums = base.groupBy(_B).agg(F.sum("__dr_v").alias("__dr_psum"))
     local = F.sum("__dr_v").over(
         Window.partitionBy(_B)

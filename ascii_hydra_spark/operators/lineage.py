@@ -1,9 +1,14 @@
 """Lineage truncation; the session decides how the cut is made.
 
-Iterative and reused-subtree operators (PageRank, connected components,
-boilerplate removal, snapshot drift) must materialize intermediate
-DataFrames: without truncation the lineage grows per iteration (planning
-blows up) or the same expensive subtree is recomputed per consumer.
+Any intermediate read by more than one consumer (a self-join's two
+sides, distrank's probe/aggregate/offsets branches, an iteration's next
+round) is held by a cut from this module: without one the lineage grows
+per iteration (planning blows up) or the same expensive subtree is
+recomputed per consumer, since independent AQE leaf stages race a lazy
+cache. A cut's blocks are reclaimed by the ContextCleaner with the plan,
+so nothing outlives the call that made it. The one exception is a
+call-scoped cache that the operator releases before it returns
+(``graph.pagerank``, ``label_propagation``, ``kcore_peel``).
 
 Whether a cut must survive executor loss is a property of the
 deployment, not of the call, so no operator takes an option for it: the

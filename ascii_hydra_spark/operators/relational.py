@@ -20,6 +20,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ascii_hydra_spark.operators.lineage import truncate_lineage
+
 
 def dim_join(
     fact: DataFrame,
@@ -312,16 +314,17 @@ def item_cf_neighbors(
     keyed row_number window with a neighbor tiebreak. All inputs to the
     cosine are exact integers, so the double is identical everywhere.
     """
-    bi = baskets.select(
-        F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
-    ).distinct().persist()
-    # eager barrier: THREE consumers (both self-join sides + support) are
+    # cut: THREE consumers (both self-join sides + support) are
     # independent AQE leaf stages — stage capture at sf0.1 showed the
     # scan+distinct subtree executed twice (identical 6.2 MB shuffle
-    # writes) before this materialization (see dedup.py for the pattern)
-    bi.count()
-    support = bi.groupBy("__i").agg(F.count("*").cast("bigint").alias("__n")).persist()
-    support.count()  # two consumers below (sa, sb)
+    # writes) without a materialization
+    bi = truncate_lineage(baskets.select(
+        F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
+    ).distinct())
+    # two consumers below (sa, sb)
+    support = truncate_lineage(
+        bi.groupBy("__i").agg(F.count("*").cast("bigint").alias("__n"))
+    )
     a, b = bi.alias("a"), bi.alias("b")
     co = (
         a.join(

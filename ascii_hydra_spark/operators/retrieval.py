@@ -209,12 +209,12 @@ def tfidf_doc_neighbors(
       there are short by Zipf + the max_df prune, which is exactly when
       the postings join beats densification.
 
-    EAGER + caches: constructing this DataFrame runs one job (the tf
-    table is cached and count()-materialized — it feeds the stats/df
-    aggregates plus the pair arm, and the arm choice needs the kept-term
-    count); the dense arm additionally materializes the doc-vector
-    table. Cache entries live until the caller clears them (same
-    contract as `jaccard_pairs` / `remove_boilerplate`).
+    EAGER: constructing this DataFrame cuts the tf table with
+    `truncate_lineage` (it feeds the stats/df aggregates plus the pair
+    arm) and counts the kept terms (the arm choice needs it); the dense
+    arm additionally cuts the doc-vector table. The cuts' blocks are
+    reclaimed when the returned plan is dropped; nothing stays cached
+    (same contract as `jaccard_pairs` / `remove_boilerplate`).
 
     This is the EXACT arm (the pair phase is quadratic in docs whatever
     the physical shape). Its oracle-checked results baseline the
@@ -223,15 +223,14 @@ def tfidf_doc_neighbors(
     — exactly as `sim_pairs` (exact GEMM) baselines `sim_pairs_lsh`.
     """
     toks = docs.select(F.col(id_col).alias("doc"), F.explode(word_tokens(text_col)).alias("term"))
-    tf = toks.groupBy("doc", "term").agg(F.count("*").alias("tf")).persist()
+    tf = truncate_lineage(toks.groupBy("doc", "term").agg(F.count("*").alias("tf")))
     # N as an uncorrelated scalar subquery: a value, not a 1-row join side
     n_docs = tf.agg(F.count_distinct("doc")).scalar()
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     kept = dfreq.withColumn("n_docs", n_docs).filter(
         F.col("df") <= F.lit(float(max_df_ratio)) * F.col("n_docs")
     )
-    # EAGER: the arm choice needs the kept-vocabulary size; this one job
-    # also materializes the tf cache for every later consumer.
+    # EAGER: the arm choice needs the kept-vocabulary size
     n_kept_terms = kept.count()
     weighted = tf.join(F.broadcast(kept), "term").withColumn(
         "w",
@@ -323,7 +322,10 @@ def _tfidf_dense_pairs(
     tids = kept_terms.select(
         "term", (F.row_number().over(tidw) - 1).alias("__tid")
     )
-    docvecs = (
+    # cut: the doc-vector table feeds both sides of the block grid
+    # (distinct sub-plans that would each recompute it), and the grid is
+    # sized from its count
+    docvecs = truncate_lineage(
         weighted.join(F.broadcast(tids), "term")
         .groupBy("doc")
         .agg(
@@ -334,11 +336,7 @@ def _tfidf_dense_pairs(
             F.col("__tw.__tid").alias("__tids"),
             F.col("__tw.w").alias("__ws"),
         )
-        .persist()
     )
-    # eager: the doc-vector table feeds both sides of the block grid
-    # (distinct sub-plans — the racing-lazy-cache pathology), and the
-    # grid is sized from its count, which also materializes the cache
     sides = block_pair_sides(docvecs, "doc", block_size)
     thr = float(threshold)
 

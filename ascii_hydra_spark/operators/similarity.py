@@ -20,6 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ascii_hydra_spark.functions import cosine_similarity, l2_norm, to_double_array
+from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 
 def _as_query_array(query: Sequence[float]):
@@ -899,12 +900,11 @@ def cosine_pairs_lsh_portable(
     for j in range(n_planes):
         term = F.when(dot_j(j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
-    base = emb.select(
+    # cut: the self-join's sides are independent AQE leaf stages and
+    # would each recompute the n_planes sign folds
+    base = truncate_lineage(emb.select(
         F.col(id_col).alias("__id"), v.alias("__v"), bucket.alias("__b")
-    ).persist()
-    # eager barrier — the self-join's sides are independent AQE leaf
-    # stages and would race to recompute the n_planes sign folds
-    base.count()
+    ))
     a, b = base.alias("a"), base.alias("b")
     sim = F.round(
         cosine_similarity(F.col("a.__v"), F.col("b.__v")), 6

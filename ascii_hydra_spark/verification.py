@@ -6789,15 +6789,12 @@ def warc_content_dedup_pipeline(spark, sf_dir):
         stop_words=("shared", "crawl"),
         min_stop_words=1,
     )
-    # persisted: the gated text feeds FOUR consumers (minhash shingles,
-    # the cluster seed set, the survivor semi-join, the final select) —
-    # without this each one re-drives the Python DataSource scan + gate
-    kept = (
-        flags.filter("passes")
-        .select(F.col("id").alias("doc_id"), "text")
-        .persist()
+    # cut: the gated text feeds FOUR consumers (minhash shingles, the
+    # cluster seed set, the survivor semi-join, the final select) —
+    # without it each one re-drives the Python DataSource scan + gate
+    kept = truncate_lineage(
+        flags.filter("passes").select(F.col("id").alias("doc_id"), "text")
     )
-    kept.count()  # eager: AQE leaf stages race a lazy persist (dedup.py)
     pairs = dedup.minhash_lsh_pairs_portable(
         kept, "doc_id", "text", threshold=0.8, num_hashes=16, bands=4
     )
@@ -14216,21 +14213,19 @@ def peak_concurrency_sessions(spark, sf_dir):
     # session-grain aggregate: feeds the sweep-point union TWICE, and the
     # downstream point table feeds four plan branches — unpersisted, the
     # events scan + two session windows executed 8x (r10 before-plan).
-    # Eager barriers on both grains (guide §2.4/§5).
-    per = tagged.groupBy("user_id", "session_id").agg(
+    # Cuts on both grains (guide §2.4/§5).
+    per = truncate_lineage(tagged.groupBy("user_id", "session_id").agg(
         F.min(us).alias("s"), F.max(us).alias("en")
-    ).persist()
-    per.count()
+    ))
     pts = per.select(F.col("s").alias("us"), F.lit(1).alias("d")).unionAll(
         per.select((F.col("en") + 1).alias("us"), F.lit(-1).alias("d"))
     )
     grp = pts.groupBy("us", "d").agg(F.count("*").cast("long").alias("__cnt"))
-    keyed = grp.withColumn(
+    keyed = truncate_lineage(grp.withColumn(
         "__key",
         F.col("us") * 2
         + F.when(F.col("d") == 1, F.lit(0)).otherwise(F.lit(1)).cast("long"),
-    ).persist()
-    keyed.count()
+    ))
     sweep = distrank.global_running_sum(
         keyed,
         F.col("__key"),

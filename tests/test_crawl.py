@@ -230,9 +230,7 @@ def test_domain_link_aggr_counts_distinct_pages_and_pairs(spark):
     assert got == {("com,a", "com,b"): (3, 2), ("com,a", "com,a"): (1, 1)}
 
 
-def test_wat_fixture_pipeline_closed_form(spark):
-    import tempfile
-
+def test_wat_fixture_pipeline_closed_form(spark, tmp_path):
     from ascii_hydra_spark.operators.graph import pagerank
     from ascii_hydra_spark.sources.warc import (
         fixture_linked_record,
@@ -241,7 +239,7 @@ def test_wat_fixture_pipeline_closed_form(spark):
     )
 
     register_warc_source(spark)
-    d = tempfile.mkdtemp(prefix="ahs_wat_test_")
+    d = str(tmp_path)
     write_warc_fixture(
         d, n_records=105, n_files=2, compress=True,
         record_fn=fixture_linked_record,

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ascii_hydra_spark import plans
@@ -11,23 +9,23 @@ from ascii_hydra_spark.catalog import Catalog
 from ascii_hydra_spark.engine import HydraEngine
 
 
-def _engine(spark, sf_dir) -> HydraEngine:
+def _engine(spark, sf_dir, output_root) -> HydraEngine:
     return HydraEngine(
         spark=spark,
         catalog=Catalog.for_dir(sf_dir),
-        output_root=tempfile.mkdtemp(prefix="ahs_eng_"),
+        output_root=str(output_root),
     )
 
 
-def test_engine_table_and_sql_agree(spark, sf_dir):
-    eng = _engine(spark, sf_dir)
+def test_engine_table_and_sql_agree(spark, sf_dir, tmp_path):
+    eng = _engine(spark, sf_dir, tmp_path)
     via_api = eng.table("orders").count()
     via_sql = eng.sql("SELECT COUNT(*) AS n FROM orders").first().n
     assert via_api == via_sql > 0
 
 
-def test_engine_materialize_and_reread(spark, sf_dir):
-    eng = _engine(spark, sf_dir)
+def test_engine_materialize_and_reread(spark, sf_dir, tmp_path):
+    eng = _engine(spark, sf_dir, tmp_path)
     out = eng.sql(
         "SELECT o_orderstatus, COUNT(*) AS n FROM orders GROUP BY o_orderstatus"
     )
@@ -37,10 +35,12 @@ def test_engine_materialize_and_reread(spark, sf_dir):
     assert eng.table("orders_by_status").count() == report["row_count"]
 
 
-def test_engine_materialize_reports_rows_written_on_partition_rerun(spark, sf_dir):
+def test_engine_materialize_reports_rows_written_on_partition_rerun(
+    spark, sf_dir, tmp_path
+):
     """The report counts the rows this call wrote: on a one-partition
     rerun that is the partition, while the dataset keeps every partition."""
-    eng = _engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir, tmp_path)
     ev = eng.table("events").select("event_id", "event_type")
     full = eng.materialize(ev, "ev_by_type", partition_by=("event_type",))
     clicks = ev.filter(F.col("event_type") == "click")
@@ -51,10 +51,10 @@ def test_engine_materialize_reports_rows_written_on_partition_rerun(spark, sf_di
     assert rerun["n_columns"] == 2 and rerun["asset"] == "ev_by_type"
 
 
-def test_pipeline_partition_rerun_replaces_only_touched_partition(spark, sf_dir):
+def test_pipeline_partition_rerun_replaces_only_touched_partition(spark, sf_dir, tmp_path):
     """B7: dynamic partition overwrite — rerunning one partition must not
     clobber the others (the reference's idempotent-rerun commitment)."""
-    base = tempfile.mkdtemp(prefix="ahs_dynpart_")
+    base = str(tmp_path)
     pipe = plans.Pipeline(base_path=base)
 
     @pipe.asset("ev_by_type", partition_by=("event_type",))

@@ -9,18 +9,35 @@ the answers are identical, a set dir really receives checkpoint files
 (not a silent fallback to the local variant), no dir means nothing is
 written, and the helpers leave the session's dir as they found it (a
 leaked dir would switch every later cut in the run to disk checkpoints).
+
+A reused intermediate is held one way: a `truncate_lineage` cut, which
+the ContextCleaner reclaims with the plan. The last tests pin that no
+operator leaves a cache entry behind, and that no function in the
+package persists without releasing before it returns.
 """
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import gc
 import os
+import pathlib
 import time
 
 from pyspark.sql import functions as F
 
-from ascii_hydra_spark.operators import dedup, graph, text
+import ascii_hydra_spark
+from ascii_hydra_spark import verification
+from ascii_hydra_spark.operators import (
+    analytics,
+    dedup,
+    graph,
+    relational,
+    retrieval,
+    similarity,
+    text,
+)
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 
@@ -159,3 +176,106 @@ def test_remove_boilerplate_reliable_matches_default(spark, tmp_path):
         ),
     )
     assert base == rel
+
+
+def _no_cache_entries(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_reused_intermediates_leave_no_cache_entries(spark, sf_dir):
+    docs = spark.createDataFrame(
+        [
+            (i, f"the quick brown fox {i % 3} jumps over the lazy dog again")
+            for i in range(8)
+        ]
+        + [(8, "an unrelated sentence about parquet files and shuffles")],
+        "doc_id long, text string",
+    )
+    baskets = spark.createDataFrame(
+        [(b, i) for b in range(6) for i in range(b % 3, b % 3 + 3)], "b long, i long"
+    )
+    ab = spark.createDataFrame(
+        [("A", float(v)) for v in (1, 3, 5, 7, 7)]
+        + [("B", float(v)) for v in (2, 4, 6, 7)],
+        "grp string, x double",
+    )
+    ent = spark.createDataFrame(
+        [(k, float(k * k % 17)) for k in range(20)], "k long, v double"
+    )
+    vec = [float(i % 5 - 2) for i in range(8)]
+    emb = spark.createDataFrame(
+        [(0, vec), (1, vec), (2, [float(-x) for x in vec])],
+        "vec_id long, embedding array<double>",
+    )
+    xy = spark.createDataFrame(
+        [(float(i), float(i * 7 % 5)) for i in range(12)], "x double, y double"
+    )
+    builds = {
+        "item_cf_neighbors": lambda: relational.item_cf_neighbors(baskets, "b", "i"),
+        "jaccard_pairs": lambda: dedup.jaccard_pairs(docs, "doc_id", "text"),
+        "jaccard_pairs_direct": lambda: dedup.jaccard_pairs(
+            docs, "doc_id", "text", prefix_filter=False
+        ),
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text", threshold=0.5
+        ),
+        "simhash_pairs": lambda: dedup.simhash_pairs(docs, "doc_id", "text"),
+        "minhash_lsh_pairs_portable": lambda: dedup.minhash_lsh_pairs_portable(
+            docs, "doc_id", "text", threshold=0.5
+        ),
+        "decile_shares": lambda: analytics.decile_shares(ent, "v", "k", tiles=4),
+        "mann_whitney_u": lambda: analytics.mann_whitney_u(ab, "grp", "x"),
+        "ks_two_sample": lambda: analytics.ks_two_sample(ab, "grp", "x"),
+        "spearman_rank_corr": lambda: analytics.spearman_rank_corr(xy, "x", "y"),
+        "abc_classification": lambda: analytics.abc_classification(ent, "k", "v"),
+        "pareto_coverage": lambda: analytics.pareto_coverage(ent, "k", "v"),
+        "cosine_pairs_lsh_portable": lambda: similarity.cosine_pairs_lsh_portable(
+            emb, threshold=0.5, n_planes=4, dim=8
+        ),
+        "tfidf_doc_neighbors_dense": lambda: retrieval.tfidf_doc_neighbors(docs, 0.3),
+        "tfidf_doc_neighbors_sparse": lambda: retrieval.tfidf_doc_neighbors(
+            docs, 0.3, dense_vocab_max=0
+        ),
+        "warc_content_dedup_pipeline": lambda: verification.REGISTRY[
+            "warc_content_dedup_pipeline"
+        ].fn(spark, sf_dir),
+        "peak_concurrency_sessions": lambda: verification.REGISTRY[
+            "peak_concurrency_sessions"
+        ].fn(spark, sf_dir),
+    }
+    spark.catalog.clearCache()
+    leaked = []
+    for name, build in builds.items():
+        build().collect()
+        if not _no_cache_entries(spark):
+            leaked.append(name)
+            spark.catalog.clearCache()
+    assert leaked == [], f"left cache entries behind: {leaked}"
+    # the operator cuts a copy; the caller's DataFrame stays uncached
+    assert xy.is_cached is False
+
+
+def _persist_without_release():
+    """(file:line function) for every function in the package that calls
+    `.persist(` or `.cache(` but never `.unpersist(`."""
+    root = pathlib.Path(ascii_hydra_spark.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            called = {
+                n.func.attr
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            }
+            if called & {"persist", "cache"} and "unpersist" not in called:
+                bad.append(f"{path.relative_to(root)}:{fn.lineno} {fn.name}")
+    return bad
+
+
+def test_every_persist_is_released_in_its_function():
+    # cut a reused intermediate with truncate_lineage, or release the
+    # cache before the function returns
+    assert _persist_without_release() == []

@@ -8,8 +8,6 @@ whole job.
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,11 +44,11 @@ def test_topk_avoids_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_partition_pruned_scan(spark, sf_dir):
+def test_partition_pruned_scan(spark, sf_dir, tmp_path):
     from ascii_hydra_spark import sources
 
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    root = tempfile.mkdtemp(prefix="ahs_prune_")
+    root = str(tmp_path)
     sources.write_parquet(e, root, partition_by=("event_type",))
     df = sources.read_partitioned(spark, root, event_type="click")
     plan = _plan(df)
@@ -80,8 +78,8 @@ def test_plan_report_structure(spark, sf_dir):
     assert rep3["has_pushed_filters"]
 
 
-def test_pipeline_dag_runs_in_dependency_order(spark, sf_dir):
-    base = tempfile.mkdtemp(prefix="ahs_pipe_")
+def test_pipeline_dag_runs_in_dependency_order(spark, sf_dir, tmp_path):
+    base = str(tmp_path)
     pipe = plans.Pipeline(base_path=base)
 
     @pipe.asset("orders_slim")
@@ -107,11 +105,11 @@ def test_pipeline_dag_runs_in_dependency_order(spark, sf_dir):
     ]["row_count"]
 
 
-def test_pipeline_labels_asset_jobs_and_restores_caller_description(spark):
+def test_pipeline_labels_asset_jobs_and_restores_caller_description(spark, tmp_path):
     """Inside an asset fn the job description names the asset; after
     `run` the caller's own description is back in place."""
     sc = spark.sparkContext
-    pipe = plans.Pipeline(base_path=tempfile.mkdtemp(prefix="ahs_pipe_"))
+    pipe = plans.Pipeline(base_path=str(tmp_path))
     seen = {}
 
     @pipe.asset("first")

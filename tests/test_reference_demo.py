@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import random
 import string
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -32,9 +31,9 @@ def _random_data_rows():
     ]
 
 
-def test_demo_pipeline_replay(spark):
+def test_demo_pipeline_replay(spark, tmp_path):
     rows = _random_data_rows()
-    base = tempfile.mkdtemp(prefix="ahs_demo_")
+    base = str(tmp_path)
     pipe = plans.Pipeline(base_path=base)
 
     @pipe.asset("random_data")
@@ -93,7 +92,7 @@ def test_spark_script_pattern(spark, sf_dir):
     assert ctx.reports[-1]["__run__"] and ctx.reports[-1]["duration_sec"] >= 0
 
 
-def test_three_level_hive_layout_wildcard_and_prune(spark, sf_dir):
+def test_three_level_hive_layout_wildcard_and_prune(spark, sf_dir, tmp_path):
     """The reference's .../seed_nodes=X/crawl_id=Y/main_language=* layout:
     wildcard == no filter; single-language read prunes to one directory."""
     e = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -103,7 +102,7 @@ def test_three_level_hive_layout_wildcard_and_prune(spark, sf_dir):
         (F.col("doc_id") % 2).cast("string").alias("crawl_id"),
         F.col("lang").alias("main_language"),
     )
-    root = tempfile.mkdtemp(prefix="ahs_3lvl_")
+    root = str(tmp_path)
     sources.write_parquet(
         e, root, partition_by=("seed_nodes", "crawl_id", "main_language")
     )

@@ -82,11 +82,9 @@ def test_skew_join_aqe_handles_hot_key(spark):
     assert joined.count() == 20000
 
 
-def test_multifile_scan_parallelism(spark, sf_dir):
+def test_multifile_scan_parallelism(spark, sf_dir, tmp_path):
     """A 100 TB dataset arrives as many files; the scan must fan out."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="ahs_manyfiles_")
+    path = str(tmp_path)
     spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(8).write.mode(
         "overwrite"
     ).parquet(path)

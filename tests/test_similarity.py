@@ -42,12 +42,10 @@ def test_ivf_topk_recall(spark, sf_dir):
     assert overlap >= 0.3, f"IVF recall@{k} {overlap} < 0.3"
 
 
-def test_persisted_ivf_index_prunes_partitions(spark, sf_dir):
+def test_persisted_ivf_index_prunes_partitions(spark, sf_dir, tmp_path):
     """The at-scale IVF form: cell id as partition column, probe = pruned scan."""
-    import tempfile
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    path = tempfile.mkdtemp(prefix="ahs_ivf_") + "/idx"
+    path = str(tmp_path / "idx")
     similarity.build_ivf_index(emb, path, n_centroids=8)
 
     dim = len(emb.select("embedding").first()[0])
@@ -148,13 +146,11 @@ def test_quantized_topk_by_id_matches_literal_form(spark, sf_dir):
     assert [r.vec_id for r in by_id] == [r.vec_id for r in lit_form]
 
 
-def test_quantized_ivf_index_composes(spark, sf_dir):
+def test_quantized_ivf_index_composes(spark, sf_dir, tmp_path):
     """quantize=True index: 4x narrower storage, identical probe pruning,
     and near-identical neighborhoods vs the float index."""
-    import tempfile
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = tempfile.mkdtemp(prefix="ahs_ivfq_")
+    base = str(tmp_path)
     fpath, qpath = base + "/fidx", base + "/qidx"
     similarity.build_ivf_index(emb, fpath, n_centroids=8)
     similarity.build_ivf_index(emb, qpath, n_centroids=8, quantize=True)

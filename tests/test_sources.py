@@ -9,17 +9,16 @@ parquet + explicit-schema sources.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from ascii_hydra_spark import sources
 
 
-def test_parquet_schema_evolution_merge(spark):
+def test_parquet_schema_evolution_merge(spark, tmp_path):
     """Old files lack a column added later; mergeSchema unifies the read
     (missing values NULL) — the reference's schema-evolution commitment."""
-    root = tempfile.mkdtemp(prefix="ahs_evo_")
+    root = str(tmp_path)
     spark.createDataFrame([(1, "a")], "id INT, s STRING").write.parquet(f"{root}/p1")
     spark.createDataFrame(
         [(2, "b", 9.5)], "id INT, s STRING, score DOUBLE"
@@ -32,22 +31,22 @@ def test_parquet_schema_evolution_merge(spark):
     assert rows == {(1, "a", None), (2, "b", 9.5)}
 
 
-def test_parquet_compression_codecs_roundtrip(spark):
+def test_parquet_compression_codecs_roundtrip(spark, tmp_path):
     """gzip (reference default) and zstd (our full-profile default) both
     round-trip; codec is visible in the file names."""
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     for codec in ("gzip", "zstd", "snappy"):
-        path = tempfile.mkdtemp(prefix=f"ahs_{codec}_")
+        path = str(tmp_path / codec)
         df.write.mode("overwrite").option("compression", codec).parquet(path)
         files = [f for f in os.listdir(path) if f.endswith(".parquet")]
         assert files and all(codec.replace("gzip", "gz") in f for f in files)
         assert spark.read.parquet(path).count() == 100
 
 
-def test_csv_malformed_rows_are_quarantined(spark):
+def test_csv_malformed_rows_are_quarantined(spark, tmp_path):
     """PERMISSIVE mode with a corrupt-record column: bad rows land in the
     quarantine column instead of failing the 100 TB job at row 3 billion."""
-    path = tempfile.mkdtemp(prefix="ahs_badcsv_")
+    path = str(tmp_path)
     with open(f"{path}/data.csv", "w") as f:
         f.write("1,alpha,10\n2,beta,notanumber\n3,gamma,30\n")
     df = spark.read.csv(
@@ -63,9 +62,9 @@ def test_csv_malformed_rows_are_quarantined(spark):
     assert bad[0]._corrupt == "2,beta,notanumber"
 
 
-def test_json_lines_preserves_specials(spark):
+def test_json_lines_preserves_specials(spark, tmp_path):
     """Explicit-schema JSON keeps nulls and unicode intact round-trip."""
-    path = tempfile.mkdtemp(prefix="ahs_jsonl_")
+    path = str(tmp_path)
     df = spark.createDataFrame(
         [(1, None), (2, "café — ok")], "id INT, note STRING"
     )

@@ -9,7 +9,6 @@ two-batch replay rather than a single-shot query.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -23,10 +22,15 @@ def _write_batch(spark, dir_, name, rows):
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(dir_, name))
 
 
-def test_watermark_drops_late_data(spark):
-    src = tempfile.mkdtemp(prefix="ahs_late_src_")
-    sink = tempfile.mkdtemp(prefix="ahs_late_sink_")
-    ckpt = tempfile.mkdtemp(prefix="ahs_late_ckpt_")
+def _fresh_dirs(tmp_path, *names):
+    """One new empty dir per name under the test's own `tmp_path`."""
+    for n in names:
+        (tmp_path / n).mkdir()
+    return [str(tmp_path / n) for n in names]
+
+
+def test_watermark_drops_late_data(spark, tmp_path):
+    src, sink, ckpt = _fresh_dirs(tmp_path, "src", "sink", "ckpt")
 
     # batch 1: events up to 12:00 -> watermark advances to 11:50
     _write_batch(
@@ -93,7 +97,7 @@ def test_watermark_drops_late_data(spark):
     assert ("2024-01-01T12:00:00", 1) in final
 
 
-def test_transform_with_state_max(spark):
+def test_transform_with_state_max(spark, tmp_path):
     """Spark 4 transformWithStateInPandas arm of C28 — requires
     google.protobuf (TWS worker protocol), absent from this container."""
     import pytest
@@ -102,7 +106,7 @@ def test_transform_with_state_max(spark):
         from google.protobuf import descriptor  # noqa: F401
     except ImportError:
         pytest.skip("google.protobuf not usable (TWS driver-worker dependency)")
-    src = tempfile.mkdtemp(prefix="ahs_tws_src_")
+    src = str(tmp_path)
     _write_batch(
         spark,
         src,
@@ -127,10 +131,8 @@ def test_transform_with_state_max(spark):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def test_foreach_batch_upsert_keeps_latest_per_key(spark):
-    src = tempfile.mkdtemp(prefix="ahs_up_src_")
-    state = tempfile.mkdtemp(prefix="ahs_up_state_")
-    ckpt = tempfile.mkdtemp(prefix="ahs_up_ckpt_")
+def test_foreach_batch_upsert_keeps_latest_per_key(spark, tmp_path):
+    src, state, ckpt = _fresh_dirs(tmp_path, "src", "state", "ckpt")
     _write_batch(
         spark,
         src,
@@ -204,8 +206,8 @@ def test_foreach_batch_upsert_survives_crash_mid_swap(spark, monkeypatch, tmp_pa
     assert got == {(7, 1), (8, 2), (9, 3)}
 
 
-def test_stream_dedup_emits_first_occurrence_only(spark):
-    src = tempfile.mkdtemp(prefix="ahs_dd_src_")
+def test_stream_dedup_emits_first_occurrence_only(spark, tmp_path):
+    src = str(tmp_path)
     _write_batch(
         spark,
         src,
