@@ -37,6 +37,16 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+# ---------------------------------------------------------------- aggregates
+
+def dsum(col: Column | str, scale: int = 2) -> Column:
+    """Decimal-accumulated sum, surfaced as double: exact and
+    independent of partition order, so it is deterministic across
+    engines."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
+
+
 # ---------------------------------------------------------------- text
 
 def word_tokens(text: Column | str) -> Column:

@@ -25,6 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ascii_hydra_spark.functions import dsum
 from ascii_hydra_spark.operators import distrank
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
@@ -48,31 +49,6 @@ def _two_group_labels(df: DataFrame, group_col: str, op_name: str):
             f"found {row['k']}"
         )
     return row["ga"], row["gb"]
-
-
-def _numeric_order_key(df: DataFrame, col: str) -> "Column | None":
-    """A double-castable expression ordering identically to ``col`` —
-    what distrank's approxQuantile bucket probe needs. Dates go through
-    ``unix_date`` (CAST(date AS DOUBLE) is illegal), timestamps through
-    an epoch cast; numerics pass through. Monotone in the original
-    column, so bucket order == time order. Returns None for STRING
-    grains (ISO day strings order lexicographically but have no double
-    embedding): the caller falls back to one bucket — the pre-distrank
-    single-partition shape, acceptable because a string time grain is a
-    bounded calendar axis by contract."""
-    dt = dict(df.dtypes)[col]
-    if dt == "date":
-        return F.unix_date(F.col(col))
-    if dt.startswith("timestamp"):
-        return F.col(col).cast("timestamp").cast("double")
-    if dt == "string" or dt.startswith(("varchar", "char")):
-        return None
-    return F.col(col)
-
-
-def _dsum(col: Column, scale: int = 2) -> Column:
-    """Decimal-accumulated sum (order-independent), surfaced as double."""
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
 
 
 def gini_coefficient(
@@ -226,7 +202,7 @@ def decile_shares(
     # 8 parquet scans)
     per = truncate_lineage(tiled.groupBy("tile").agg(
         F.count("*").cast("bigint").alias("n"),
-        _dsum(F.col("__x")).alias("revenue"),
+        dsum("__x").alias("revenue"),
     ))
     total = per.agg(F.sum(F.col("revenue").cast("decimal(18,2)")).cast("double").alias("__t"))
     # shared non-foldable constant-0 partition spec (see
@@ -916,7 +892,7 @@ def mann_whitney_u(
     Scale shape: the rank never touches raw rows — subjects reduce to
     DISTINCT-VALUE grain first (count + group-a count per value), then
     the average rank per value comes from a distributed running count
-    (:func:`distrank.global_running_sum`: percentile-bucketed shuffle +
+    (:func:`distrank.global_running_sums`: percentile-bucketed shuffle +
     broadcast bucket offsets — no single-reducer sort at any size), and
     rank_sum_a = sum(count_a * avg_rank) is algebraically identical to
     the per-row rank sum. Group labels order ascending (a = min label).
@@ -930,8 +906,8 @@ def mann_whitney_u(
         F.count("*").cast("long").alias("__t"),
         F.sum((F.col(group_col) == F.lit(ga)).cast("long")).alias("__ta"),
     ))
-    cum = distrank.global_running_sum(
-        per_v, F.col("__x"), F.col("__t"), out_col="__cum"
+    cum = distrank.global_running_sums(
+        per_v, F.col("__x"), {"__cum": F.col("__t")}
     )
     # avg rank of a value = (#rows below) + (t+1)/2 — exact half-integer
     avg_rank = (F.col("__cum") - F.col("__t")).cast("double") + (
@@ -1031,7 +1007,7 @@ def kruskal_wallis(
     Scale + exactness shape: midranks are carried in HALF-UNITS so they
     stay integers — for a distinct value with cnt occurrences after
     cum_before smaller rows, 2*avg_rank = 2*cum_before + cnt + 1 — and
-    the cumulative counts come from :func:`distrank.global_running_sum`
+    the cumulative counts come from :func:`distrank.global_running_sums`
     over DISTINCT values (percentile-bucketed two-pass; a continuous
     value column never lands on one reducer). Per-group doubled rank
     sums R2_g = sum(cnt_g * 2*avg_rank) are exact DECIMAL(38,0); the
@@ -1045,8 +1021,8 @@ def kruskal_wallis(
         F.col(group_col).alias("__g"), F.col(value_col).alias("__x")
     )
     per_v = v.groupBy("__x").agg(F.count("*").cast("bigint").alias("__cnt"))
-    rank2 = distrank.global_running_sum(
-        per_v, F.col("__x"), F.col("__cnt"), out_col="__cum"
+    rank2 = distrank.global_running_sums(
+        per_v, F.col("__x"), {"__cum": F.col("__cnt")}
     ).select(
         "__x",
         (
@@ -1185,6 +1161,73 @@ def bartlett(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     )
 
 
+def _grouped_value_counts(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    scale: int,
+    extra: "dict[str, Column] | None" = None,
+) -> "tuple[DataFrame, DataFrame]":
+    """The composite-key pipeline behind the grouped exact quantiles:
+    within-group ranks with no per-group window (k groups = k reducers
+    once groups are few and data is huge). A composite integer key
+    __ck = gidx*10^13 + value*10^scale is g-major monotone (group bands
+    of width 2*10^12 can't overlap), so ONE
+    :func:`distrank.global_running_sums` over per-(group, value) counts
+    yields cumulative counts across all groups; subtracting each
+    group's exclusive offset (a k-row side table) makes them
+    within-group.
+
+    Returns ``(rows, counts)``. ``rows`` is the input as (__g, __x,
+    ``extra``..., __gi, __xi, __ck), with NULL values AND NULL groups
+    dropped (filtered explicitly — the group-index equi-join would
+    silently drop NULL groups anyway, so the filter makes the contract
+    visible in the plan). ``counts`` has one row per (group, value):
+    __g, __ck, __cnt, __xv (the value), __wcum (the within-group
+    INCLUSIVE cumulative count) and __ng (the group size). The value
+    must be exactly representable at ``scale`` decimals with
+    |value| < 10^(12-scale).
+    """
+    e = df.filter(
+        F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
+    ).select(
+        F.col(group_col).alias("__g"),
+        F.col(value_col).alias("__x"),
+        *[c.alias(n) for n, c in (extra or {}).items()],
+    )
+    w_g = Window.partitionBy(
+        F.pmod(F.length("__g"), F.lit(1))
+    ).orderBy("__g")
+    gi = (
+        # groupBy (an Aggregate) rather than distinct (a Deduplicate):
+        # the k-row result is what gets broadcast, and the plan guard
+        # only recognizes Aggregate as a derived-relation boundary
+        e.groupBy("__g")
+        .agg(F.count("*").alias("__gn"))
+        .select("__g", F.row_number().over(w_g).cast("long").alias("__gi"))
+    )
+    rows = (
+        e.join(F.broadcast(gi), "__g")
+        .withColumn("__xi", (F.col("__x") * 10**scale).cast("long"))
+        .withColumn("__ck", F.col("__gi") * F.lit(10**13) + F.col("__xi"))
+    )
+    pv = rows.groupBy("__g", "__ck").agg(
+        F.count("*").cast("bigint").alias("__cnt"),
+        F.max("__x").alias("__xv"),
+    )
+    cum = distrank.global_running_sums(
+        pv, F.col("__ck"), {"__cum": F.col("__cnt")}
+    )
+    ng = rows.groupBy("__g", "__gi").agg(
+        F.count("*").cast("bigint").alias("__ng")
+    )
+    offs = distrank.group_offsets(ng, "__gi", "__ng", keep=["__g"])
+    counts = cum.join(F.broadcast(offs), "__g").withColumn(
+        "__wcum", F.col("__cum") - F.col("__off")
+    )
+    return rows, counts
+
+
 def quantile_normalize(
     df: DataFrame,
     group_col: str,
@@ -1202,15 +1245,9 @@ def quantile_normalize(
 
     Scale shape — every data-sized stage is parallel:
 
-    - within-group ranks do NOT use a per-group window (k groups = k
-      reducers once groups are few and data is huge). Instead, a
-      composite integer key gidx*10^13 + value*10^scale is g-major
-      monotone (group bands of width 2*10^12 can't overlap), so ONE
-      :func:`distrank.global_running_sum` over per-(group, value)
-      counts yields cumulative counts across all groups; subtracting
-      each group's exclusive offset (a k-row side table) converts them
-      to within-group bases. Tie rows fan out by row_number over the
-      HIGH-cardinality (group, value) key.
+    - within-group ranks come from :func:`_grouped_value_counts` (one
+      composite-key running count, no per-group window); tie rows fan
+      out by row_number over the HIGH-cardinality (group, value) key.
     - the pooled order statistics come from ONE
       :func:`distrank.global_row_number` under (value, id); the rank
       lookup is a plain equi-join on the rank integer.
@@ -1218,54 +1255,21 @@ def quantile_normalize(
     Requires value_col exactly representable at `scale` decimals
     (cast decimal upstream) and |value| < 10^(12-scale); r*N must fit
     a bigint (documented ~3e9-row bound, decimal-widen beyond). NULL
-    values AND NULL groups are dropped (filtered explicitly — the
-    group-index equi-join would silently drop NULL groups anyway,
-    so the filter makes the contract visible in the plan).
+    values AND NULL groups are dropped.
     """
-    e = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        F.col(value_col).alias("__x"),
-        F.col(id_col).alias("__id"),
+    e2, counts = _grouped_value_counts(
+        df, group_col, value_col, scale, {"__id": F.col(id_col)}
     )
-    w_g = Window.partitionBy(
-        F.pmod(F.length("__g"), F.lit(1))
-    ).orderBy("__g")
-    gi = (
-        # groupBy (an Aggregate) rather than distinct (a Deduplicate):
-        # the k-row result is what gets broadcast, and the plan guard
-        # only recognizes Aggregate as a derived-relation boundary
-        e.groupBy("__g")
-        .agg(F.count("*").alias("__gn"))
-        .select("__g", F.row_number().over(w_g).cast("long").alias("__gi"))
-    )
-    mult = 10**scale
-    e2 = e.join(F.broadcast(gi), "__g").withColumn(
-        "__xi", (F.col("__x") * mult).cast("long")
-    ).withColumn(
-        "__ck", F.col("__gi") * F.lit(10**13) + F.col("__xi")
-    )
-    pv = e2.groupBy("__g", "__ck", "__xi").agg(
-        F.count("*").cast("bigint").alias("__cnt")
-    )
-    cum = distrank.global_running_sum(
-        pv, F.col("__ck"), F.col("__cnt"), out_col="__cum"
-    )
-    ng = e2.groupBy("__g", "__gi").agg(
-        F.count("*").cast("bigint").alias("__ng")
-    )
-    offs = distrank.group_offsets(ng, "__gi", "__ng", keep=["__g"])
-    base = cum.join(F.broadcast(offs), "__g").select(
+    base = counts.select(
         "__g",
         "__ck",
         "__ng",
-        (F.col("__cum") - F.col("__cnt") - F.col("__off")).alias("__base"),
+        (F.col("__wcum") - F.col("__cnt")).alias("__base"),
     )
     j_col = F.row_number().over(
         Window.partitionBy("__g", "__ck").orderBy("__id")
     )
-    n_total = e.agg(F.count("*").cast("bigint").alias("__N"))
+    n_total = e2.agg(F.count("*").cast("bigint").alias("__N"))
     ranked = (
         e2.withColumn("__j", j_col.cast("long"))
         .join(base, ["__g", "__ck"])
@@ -1304,52 +1308,17 @@ def grouped_exact_median(
     k-small-groups/huge-data shape where Window.partitionBy(group)
     collapses to k reducers.
 
-    Same composite-key trick as :func:`quantile_normalize`: one
-    :func:`distrank.global_running_sum` over per-(group, value) counts
-    keyed g-major (gidx*10^13 + value*10^scale) gives within-group
-    cumulative counts after subtracting each group's exclusive offset
-    (k-row side table). The median ranks lo = (n+1)//2 and
+    The within-group cumulative counts come from
+    :func:`_grouped_value_counts` (one composite-key running count over
+    per-(group, value) counts). The median ranks lo = (n+1)//2 and
     hi = n//2 + 1 are then found by a plain conditional MIN over the
     distinct-value grain — every data-sized stage parallel. Value must
     be exactly representable at `scale` decimals; NULL values AND
-    NULL groups are dropped (explicit filter — the group-index
-    equi-join would silently drop NULL groups anyway).
+    NULL groups are dropped.
     Returns (group, n, median) with median = (x_lo + x_hi)/2 computed
     in decimal before one double cast.
     """
-    e = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-    ).select(F.col(group_col).alias("__g"), F.col(value_col).alias("__x"))
-    w_g = Window.partitionBy(
-        F.pmod(F.length("__g"), F.lit(1))
-    ).orderBy("__g")
-    gi = (
-        # groupBy (an Aggregate) rather than distinct (a Deduplicate):
-        # the k-row result is what gets broadcast, and the plan guard
-        # only recognizes Aggregate as a derived-relation boundary
-        e.groupBy("__g")
-        .agg(F.count("*").alias("__gn"))
-        .select("__g", F.row_number().over(w_g).cast("long").alias("__gi"))
-    )
-    mult = 10**scale
-    e2 = e.join(F.broadcast(gi), "__g").withColumn(
-        "__ck",
-        F.col("__gi") * F.lit(10**13) + (F.col("__x") * mult).cast("long"),
-    )
-    pv = e2.groupBy("__g", "__ck").agg(
-        F.count("*").cast("bigint").alias("__cnt"),
-        F.max("__x").alias("__xv"),
-    )
-    cum = distrank.global_running_sum(
-        pv, F.col("__ck"), F.col("__cnt"), out_col="__cum"
-    )
-    ng = e2.groupBy("__g", "__gi").agg(
-        F.count("*").cast("bigint").alias("__ng")
-    )
-    offs = distrank.group_offsets(ng, "__gi", "__ng", keep=["__g"])
-    j = cum.join(F.broadcast(offs), "__g").withColumn(
-        "__wcum", F.col("__cum") - F.col("__off")
-    )
+    _, j = _grouped_value_counts(df, group_col, value_col, scale)
     lo_t = F.expr("(__ng + 1) div 2")
     hi_t = F.expr("__ng div 2 + 1")
     picked = j.groupBy("__g").agg(
@@ -1379,51 +1348,17 @@ def grouped_exact_quantiles(
     q, position h = (n-1)*q, value = x[floor(h)] + (x[floor(h)+1] -
     x[floor(h)])*(h - floor(h)) over the group's sorted values.
 
-    Same composite-key distrank machinery (one global running sum over
-    g-major integer keys + k-row offsets); the bracketing order
-    statistics for ALL requested quantiles resolve in ONE conditional-
-    MIN aggregate over the distinct-value grain. NULL values AND NULL
-    groups are dropped (explicit filter, same contract as
-    :func:`grouped_exact_median`). Quantile probabilities should be
+    Same composite-key counts (:func:`_grouped_value_counts`); the
+    bracketing order statistics for ALL requested quantiles resolve in
+    ONE conditional-MIN aggregate over the distinct-value grain. NULL
+    values AND NULL groups are dropped. Quantile probabilities should be
     binary-exact (k/2^m — 0.25/0.5/0.75 are; 0.1 is not): the
     bracket rank floor((n-1)*q) is evaluated in doubles, and a
     non-representable q can land one rank off an oracle's exact
     rational quantile_cont arithmetic at integer-h boundaries.
     Returns (group, n, q_<p> ...) with each quantile 6-dp rounded.
     """
-    e = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-    ).select(F.col(group_col).alias("__g"), F.col(value_col).alias("__x"))
-    w_g = Window.partitionBy(
-        F.pmod(F.length("__g"), F.lit(1))
-    ).orderBy("__g")
-    gi = (
-        # groupBy (an Aggregate) rather than distinct (a Deduplicate):
-        # the k-row result is what gets broadcast, and the plan guard
-        # only recognizes Aggregate as a derived-relation boundary
-        e.groupBy("__g")
-        .agg(F.count("*").alias("__gn"))
-        .select("__g", F.row_number().over(w_g).cast("long").alias("__gi"))
-    )
-    mult = 10**scale
-    e2 = e.join(F.broadcast(gi), "__g").withColumn(
-        "__ck",
-        F.col("__gi") * F.lit(10**13) + (F.col("__x") * mult).cast("long"),
-    )
-    pv = e2.groupBy("__g", "__ck").agg(
-        F.count("*").cast("bigint").alias("__cnt"),
-        F.max("__x").alias("__xv"),
-    )
-    cum = distrank.global_running_sum(
-        pv, F.col("__ck"), F.col("__cnt"), out_col="__cum"
-    )
-    ng = e2.groupBy("__g", "__gi").agg(
-        F.count("*").cast("bigint").alias("__ng")
-    )
-    offs = distrank.group_offsets(ng, "__gi", "__ng", keep=["__g"])
-    j = cum.join(F.broadcast(offs), "__g").withColumn(
-        "__wcum", F.col("__cum") - F.col("__off")
-    )
+    _, j = _grouped_value_counts(df, group_col, value_col, scale)
     nd = F.col("__ng").cast("double")
     aggs = [F.min("__ng").cast("bigint").alias("n")]
     names = []
@@ -1530,7 +1465,7 @@ def spearman_rank_corr(
 
     Scale shape: each axis's tie-averaged rank is a DISTINCT-VALUE-grain
     table (value -> avg rank) built from a distributed running count
-    (:func:`distrank.global_running_sum` — percentile-bucketed shuffle +
+    (:func:`distrank.global_running_sums` — percentile-bucketed shuffle +
     broadcast bucket offsets, no single-reducer sort), joined back to the rows
     by value (null-safe, matching the window form's treatment of NULL
     keys). Two bounded rank tables + two shuffle joins replace the two
@@ -1548,8 +1483,8 @@ def spearman_rank_corr(
         per_v = df.groupBy(F.col(col).alias("__v")).agg(
             F.count("*").cast("long").alias("__t")
         )
-        cum = distrank.global_running_sum(
-            per_v, F.col("__v"), F.col("__t"), out_col="__cum"
+        cum = distrank.global_running_sums(
+            per_v, F.col("__v"), {"__cum": F.col("__t")}
         )
         return cum.select(
             F.col("__v"),
@@ -1873,12 +1808,10 @@ def cusum_changepoint(
     tot = base.agg(
         F.sum("__x").alias("__total"), F.count("*").alias("__n")
     )
-    key = _numeric_order_key(base, "__t")
     cum = distrank.global_running_sums(
         base,
-        key if key is not None else F.col("__t"),
+        F.col("__t"),
         {"__cum": F.col("__x"), "__i": F.lit(1).cast("bigint")},
-        num_buckets=None if key is not None else 1,
     ).select("__t", "__cum", "__i")
     j = cum.crossJoin(F.broadcast(tot)).withColumn(
         "__num",
@@ -2271,8 +2204,7 @@ def poisson_bootstrap_ci(
     )
     point = df.agg(
         (
-            F.sum(F.col(value_col).cast(f"decimal(18,{scale})")).cast("double")
-            / F.count("*").cast("double")
+            dsum(value_col, scale) / F.count("*").cast("double")
         ).alias("__point")
     )
     return per_rep.agg(
@@ -2862,13 +2794,8 @@ def max_drawdown(
         F.col(time_col).alias("__t"),
         F.col(value_col).cast("decimal(18,2)").alias("__v"),
     )
-    key = _numeric_order_key(base, "__t")
     d = distrank.global_running_max(
-        base,
-        key if key is not None else F.col("__t"),
-        F.col("__v"),
-        out_col="__peak",
-        num_buckets=None if key is not None else 1,
+        base, F.col("__t"), F.col("__v"), out_col="__peak"
     )
     dd = d.withColumn("__dd", F.col("__peak") - F.col("__v"))
     pick = dd.orderBy(F.desc("__dd"), F.col("__t")).limit(1)
@@ -3089,9 +3016,9 @@ def abc_classification(
     # cut: `ranked` embeds the row_number call's window+join chain, which
     # the running sum's probe, aggregate and offsets join would each
     # re-execute (abc 4.7 -> 3.8 s at sf0.1 once materialized)
-    cum = distrank.global_running_sum(
-        truncate_lineage(ranked), F.col("__i"), F.col("__v"),
-        out_col="__cum", total_col="__tot",
+    cum = distrank.global_running_sums(
+        truncate_lineage(ranked), F.col("__i"), {"__cum": F.col("__v")},
+        total_col="__tot",
     ).select("__k", "__v", "__cum", "__tot")
     cls = cum.select(
         "__v",
@@ -3136,10 +3063,10 @@ def pareto_coverage(
     ranked = distrank.global_row_number(
         d, F.col("__v"), [F.col("__k")], desc=True, out_col="__i"
     )
-    cum = distrank.global_running_sum(
+    cum = distrank.global_running_sums(
         # cut: chained distrank input (see abc_classification)
-        truncate_lineage(ranked), F.col("__i"), F.col("__v"),
-        out_col="__cum", total_col="__tot",
+        truncate_lineage(ranked), F.col("__i"), {"__cum": F.col("__v")},
+        total_col="__tot",
     ).select("__v", "__cum", "__tot")
     flagged = cum.select(
         "__v",

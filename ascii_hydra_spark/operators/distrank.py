@@ -33,14 +33,15 @@ sums with every data-sized stage parallel:
    bucket's LOCAL ordered aggregate — a window partitioned by bucket,
    so the big sort runs fully parallel.
 
-Global rank = bucket offset + local row_number: exact, total-order
+Global rank = bucket offset + local running count: exact, total-order
 deterministic (callers pass tiebreakers making the order total), and
 identical to the single-window answer — the oracle SQL of every
 converted entry is unchanged. Heavy ties on a single key value
-concentrate in that value's bucket (same behavior as a range shuffle);
-the key must be approxQuantile-able (cast-to-double orderable —
-date/timestamp keys convert first, e.g. ``F.unix_date``/
-``F.unix_timestamp``, as cumulative_daily_revenue does).
+concentrate in that value's bucket (same behavior as a range shuffle).
+All three public scans (row number, running sums, running max) run on
+one private core, ``_scan``. The bucket count is the session's
+``spark.sql.shuffle.partitions``; ``_bucketed`` embeds date and
+timestamp keys itself and gives a string key one bucket.
 """
 
 from __future__ import annotations
@@ -48,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 _B = "__dr_b"
+_K = "__dr_k"
+_UNB = Window.unboundedPreceding
 
 
 def _default_buckets(df: DataFrame) -> int:
@@ -93,33 +96,44 @@ def median_interp(vlo: Column, vhi: Column, total: Column) -> Column:
     return (F.lit(1.0) - g) * vlo + g * vhi
 
 
-def _bucketed(
-    df: DataFrame,
-    key: Column,
-    desc: bool,
-    num_buckets: "int | None",
-) -> "tuple[DataFrame, int]":
-    p = num_buckets or _default_buckets(df)
-    if p <= 1:
-        return df.withColumn(_B, F.lit(0)), 1
+def _bucketed(df: DataFrame, desc: bool) -> DataFrame:
+    """``df`` + ``_B``: the bucket of each row's ``_K`` value. Numeric
+    keys bucket by their double value, date keys by ``unix_date``,
+    timestamp keys by epoch seconds (each monotone in the key, so
+    bucket order == key order). A string key has no order-preserving
+    double embedding and falls back to one bucket, the single-window
+    shape (acceptable for its callers: a string time grain is a bounded
+    calendar axis by contract)."""
+    dt = dict(df.dtypes)[_K]
+    k = F.col(_K)
+    if dt == "date":
+        kd = F.unix_date(k).cast("double")
+    elif dt.startswith("timestamp"):
+        kd = k.cast("timestamp").cast("double")
+    elif dt == "string" or dt.startswith(("varchar", "char")):
+        kd = None
+    else:
+        kd = k.cast("double")
+    p = _default_buckets(df)
+    if kd is None or p <= 1:
+        return df.withColumn(_B, F.lit(0))
     probs = [i / p for i in range(1, p)]
     # driver-side bounded probe: p-1 doubles, embedded as literals so
     # every plan branch sees the SAME split points unconditionally
     splits = (
-        df.select(key.cast("double").alias("__dr_k"))
+        df.select(kd.alias("__dr_kd"))
         .dropna()
-        .stat.approxQuantile("__dr_k", probs, 0.001)
+        .stat.approxQuantile("__dr_kd", probs, 0.001)
     )
     splits = sorted(set(splits))
     if not splits:  # empty or all-NULL input
-        return df.withColumn(_B, F.lit(0)), 1
-    kd = key.cast("double")
+        return df.withColumn(_B, F.lit(0))
     # summed literal-comparison chain, NOT a higher-order function:
     # filter(array(...), s -> s < key) carries an OUTER lambda reference
     # that Catalyst mis-binds once the bucket expression is inlined into
     # a grouping key ([INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND] — reproduced;
     # the when-chain form is bind-safe). O(#buckets) comparisons per row
-    # either way; pick a coarser num_buckets if that ever dominates —
+    # either way; a coarser spark.sql.shuffle.partitions bounds it —
     # buckets only bound sort parallelism, not correctness.
     if desc:
         raw = sum(
@@ -127,29 +141,104 @@ def _bucketed(
             F.lit(0),
         )
         # Spark sorts NULLS LAST under desc -> force the final bucket
-        bucket = F.when(key.isNull(), F.lit(len(splits))).otherwise(raw)
+        bucket = F.when(k.isNull(), F.lit(len(splits))).otherwise(raw)
     else:
-        raw = sum(
+        # a NULL key falls through every when-condition to 0 -> bucket
+        # 0, matching Spark's NULLS FIRST under asc
+        bucket = sum(
             [F.when(F.lit(float(sp)) < kd, 1).otherwise(0) for sp in splits],
             F.lit(0),
         )
-        # a NULL key falls through every when-condition to 0 -> bucket
-        # 0, matching Spark's NULLS FIRST under asc
-        bucket = raw
-    return df.withColumn(_B, bucket.cast("int")), p
+    return df.withColumn(_B, bucket.cast("int"))
 
 
-def _offsets(per_bucket: DataFrame, sum_col: str) -> DataFrame:
-    one = single_partition(_B)
-    w_off = (
-        Window.partitionBy(one)
-        .orderBy(_B)
-        .rowsBetween(Window.unboundedPreceding, 0)
+def _scan(
+    df: DataFrame,
+    key: Column,
+    accs: "dict[str, tuple[str, Column]]",
+    *,
+    desc: bool = False,
+    tiebreaks: "list[Column] | None" = None,
+    total_col: "str | None" = None,
+    next_key_col: "str | None" = None,
+) -> DataFrame:
+    """The one bucketed two-pass plan behind every public scan: ``df``
+    + one column per ``accs`` entry (out_name -> (op, value)) under
+    (key asc|desc, tiebreaks... asc). ``op`` is ``"sum"`` (inclusive
+    running sum), ``"max"`` (inclusive running max) or ``"max_prev"``
+    (max over strictly preceding rows, NULL on the first row).
+
+    Each value rides in its own type through the per-bucket aggregate,
+    the carry and the bucket-local window, so decimal/bigint inputs
+    stay exact. The carry is the exclusive prefix sum (or the preceding
+    max) over the bounded per-bucket table, broadcast back. The
+    ``total_col`` (the first entry's grand total) and the
+    ``next_key_col`` (the global LEAD of the key, asc only) are read off
+    the same per-bucket table, with no extra pass over the data.
+    """
+    tmp = {n: f"__dr_v{i}" for i, n in enumerate(accs)}
+    base = df.withColumn(_K, key)
+    for n, (_, value) in accs.items():
+        base = base.withColumn(tmp[n], value)
+    base = _bucketed(base, desc)
+    aggs = [
+        (F.sum if op == "sum" else F.max)(tmp[n]).alias(f"{tmp[n]}_b")
+        for n, (op, _) in accs.items()
+    ]
+    if next_key_col is not None:
+        aggs.append(F.min(_K).alias("__dr_kmin"))
+    # the carry window: bounded by the bucket count, never by data
+    w = Window.partitionBy(single_partition(_B)).orderBy(_B)
+    carry = []
+    for n, (op, _) in accs.items():
+        b = F.col(f"{tmp[n]}_b")
+        if op == "sum":
+            c = F.sum(b).over(w.rowsBetween(_UNB, 0)) - b
+        else:
+            c = F.max(b).over(w.rowsBetween(_UNB, -1))
+        carry.append(c.alias(f"{tmp[n]}_c"))
+    if total_col is not None:
+        first = F.col(f"{next(iter(tmp.values()))}_b")
+        carry.append(
+            F.sum(first)
+            .over(w.rowsBetween(_UNB, Window.unboundedFollowing))
+            .alias("__dr_total")
+        )
+    if next_key_col is not None:
+        carry.append(F.lead("__dr_kmin").over(w).alias("__dr_knext"))
+    offs = base.groupBy(_B).agg(*aggs).select(_B, *carry)
+    out = base.join(F.broadcast(offs), _B)
+    local = Window.partitionBy(_B).orderBy(
+        F.col(_K).desc() if desc else F.col(_K).asc(),
+        *[t.asc() for t in tiebreaks or []],
     )
-    return per_bucket.select(
-        F.col(_B),
-        (F.sum(sum_col).over(w_off) - F.col(sum_col)).alias("__dr_off"),
-        F.sum(sum_col).over(Window.partitionBy(one)).alias("__dr_total"),
+    for n, (op, _) in accs.items():
+        v, c = F.col(tmp[n]), F.col(f"{tmp[n]}_c")
+        if op == "sum":
+            cum = F.sum(v).over(local.rowsBetween(_UNB, 0))
+            out = out.withColumn(n, cum + F.coalesce(c, F.lit(0)))
+        else:
+            end = -1 if op == "max_prev" else 0
+            cum = F.max(v).over(local.rowsBetween(_UNB, end))
+            # a NULL carry (first bucket) -> greatest skips it
+            out = out.withColumn(n, F.greatest(cum, c))
+    if total_col is not None:
+        out = out.withColumn(total_col, F.col("__dr_total"))
+    if next_key_col is not None:
+        # within-bucket lead, patched at bucket boundaries by the next
+        # non-empty bucket's min key: sound because the bucket is
+        # monotone in the key
+        out = out.withColumn(
+            next_key_col,
+            F.coalesce(F.lead(_K).over(local), F.col("__dr_knext")),
+        )
+    return out.drop(
+        _B,
+        _K,
+        "__dr_total",
+        "__dr_knext",
+        *tmp.values(),
+        *[f"{t}_c" for t in tmp.values()],
     )
 
 
@@ -161,60 +250,22 @@ def global_row_number(
     desc: bool = False,
     out_col: str = "__i",
     total_col: "str | None" = None,
-    num_buckets: "int | None" = None,
 ) -> DataFrame:
     """``df`` + ``out_col`` = exact 1-based global row number under
     (key asc|desc, tiebreaks... asc) — which must be a TOTAL order —
-    with no single-partition sort of the data. With ``total_col`` the
-    total row count rides along from the already-built per-bucket
-    counts (no extra pass) — NTILE-style consumers need it.
+    with no single-partition sort of the data: the running sum of 1.
+    With ``total_col`` the total row count rides along from the
+    already-built per-bucket counts (no extra pass) — NTILE-style
+    consumers need it.
     """
-    base, _ = _bucketed(df, key, desc, num_buckets)
-    counts = base.groupBy(_B).agg(F.count("*").alias("__dr_cnt"))
-    order = [key.desc() if desc else key.asc()] + [
-        t.asc() for t in (tiebreaks or [])
-    ]
-    local = F.row_number().over(Window.partitionBy(_B).orderBy(*order))
-    out = base.join(F.broadcast(_offsets(counts, "__dr_cnt")), _B).withColumn(
-        out_col, local.cast("long") + F.col("__dr_off").cast("long")
+    return _scan(
+        df,
+        key,
+        {out_col: ("sum", F.lit(1))},
+        desc=desc,
+        tiebreaks=tiebreaks,
+        total_col=total_col,
     )
-    if total_col is not None:
-        out = out.withColumn(total_col, F.col("__dr_total").cast("long"))
-    return out.drop(_B, "__dr_off", "__dr_total")
-
-
-def global_running_sum(
-    df: DataFrame,
-    key: Column,
-    value_col: Column,
-    *,
-    out_col: str = "__cum",
-    total_col: "str | None" = None,
-    num_buckets: "int | None" = None,
-) -> DataFrame:
-    """``df`` + ``out_col`` = exact INCLUSIVE running sum of
-    ``value_col`` under ``key`` ascending (callers pass a key that is
-    unique per row — the distinct-value-grain contract), same bucketed
-    two-pass shape as :func:`global_row_number`. The per-bucket
-    pre-aggregate sums in the value's own type, so a decimal/bigint
-    input keeps exact arithmetic end to end. With ``total_col`` the
-    grand total rides along from the already-built per-bucket sums (no
-    extra pass over the data, no 1-row cross join) — share-of-total
-    consumers (ABC cuts, Pareto coverage) need it.
-    """
-    base, _ = _bucketed(df.withColumn("__dr_v", value_col), key, False, num_buckets)
-    sums = base.groupBy(_B).agg(F.sum("__dr_v").alias("__dr_psum"))
-    local = F.sum("__dr_v").over(
-        Window.partitionBy(_B)
-        .orderBy(key.asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = base.join(F.broadcast(_offsets(sums, "__dr_psum")), _B).withColumn(
-        out_col, local + F.coalesce(F.col("__dr_off"), F.lit(0))
-    )
-    if total_col is not None:
-        out = out.withColumn(total_col, F.col("__dr_total"))
-    return out.drop(_B, "__dr_off", "__dr_total", "__dr_v")
 
 
 def global_running_sums(
@@ -223,85 +274,28 @@ def global_running_sums(
     sums: "dict[str, Column]",
     *,
     next_key_col: "str | None" = None,
-    num_buckets: "int | None" = None,
+    total_col: "str | None" = None,
 ) -> DataFrame:
     """``df`` + one exact INCLUSIVE running-sum column per ``sums``
     entry (out_name -> value expression) under ``key`` ascending, all
-    computed in ONE bucketed two-pass — the multi-accumulator sibling of
-    :func:`global_running_sum` for operators that cumulate several
-    series over the same order (ECDF gaps need cum_a AND cum_b; CUSUM
-    needs cumsum AND the row index). ``key`` must be unique per row
-    (the distinct-value / time-grain contract) and approxQuantile-able.
+    computed in ONE bucketed two-pass (ECDF gaps need cum_a AND cum_b;
+    CUSUM needs cumsum AND the row index). ``key`` must be unique per
+    row (the distinct-value / time-grain contract).
 
-    With ``next_key_col`` the global LEAD of the key rides along (NULL
-    on the last row), without any global window: within-bucket
-    ``lead`` patched at bucket boundaries by the next non-empty
-    bucket's min key — a window over the bounded per-bucket table.
-    Sound because the bucket expression is monotone in the key, so
-    every key in bucket b+1 >= every key in bucket b.
-
-    Each per-bucket pre-aggregate sums in the value's own type, so
+    With ``total_col`` the grand total of the FIRST ``sums`` entry
+    rides along — share-of-total consumers (ABC cuts, Pareto coverage)
+    need it. With ``next_key_col`` the global LEAD of the key rides
+    along (NULL on the last row), without any global window. Each
+    per-bucket pre-aggregate sums in the value's own type, so
     decimal/bigint inputs keep exact arithmetic end to end.
     """
-    names = list(sums)
-    tmp = {name: f"__dr_v{i}" for i, name in enumerate(names)}
-    base = df.withColumn("__dr_key", key)
-    for name in names:
-        base = base.withColumn(tmp[name], sums[name])
-    base, _ = _bucketed(base, F.col("__dr_key"), False, num_buckets)
-    aggs = [F.sum(tmp[n]).alias(f"{tmp[n]}_s") for n in names]
-    if next_key_col is not None:
-        aggs.append(F.min("__dr_key").alias("__dr_kmin"))
-    per_bucket = base.groupBy(_B).agg(*aggs)
-    one = single_partition(_B)
-    w_cum = (
-        Window.partitionBy(one)
-        .orderBy(_B)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    return _scan(
+        df,
+        key,
+        {n: ("sum", v) for n, v in sums.items()},
+        total_col=total_col,
+        next_key_col=next_key_col,
     )
-    off_cols = [
-        (F.sum(f"{tmp[n]}_s").over(w_cum) - F.col(f"{tmp[n]}_s")).alias(
-            f"{tmp[n]}_off"
-        )
-        for n in names
-    ]
-    if next_key_col is not None:
-        off_cols.append(
-            F.lead("__dr_kmin").over(
-                Window.partitionBy(one).orderBy(_B)
-            ).alias("__dr_knext")
-        )
-    offs = per_bucket.select(F.col(_B), *off_cols)
-    w_local = (
-        Window.partitionBy(_B)
-        .orderBy(F.col("__dr_key").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = base.join(F.broadcast(offs), _B)
-    for n in names:
-        out = out.withColumn(
-            n,
-            F.sum(tmp[n]).over(w_local)
-            + F.coalesce(F.col(f"{tmp[n]}_off"), F.lit(0)),
-        )
-    if next_key_col is not None:
-        out = out.withColumn(
-            next_key_col,
-            F.coalesce(
-                F.lead("__dr_key").over(
-                    Window.partitionBy(_B).orderBy(F.col("__dr_key").asc())
-                ),
-                F.col("__dr_knext"),
-            ),
-        )
-    drop = (
-        [_B, "__dr_key"]
-        + [tmp[n] for n in names]
-        + [f"{tmp[n]}_off" for n in names]
-    )
-    if next_key_col is not None:
-        drop.append("__dr_knext")
-    return out.drop(*drop)
 
 
 def global_running_max(
@@ -311,42 +305,17 @@ def global_running_max(
     *,
     out_col: str = "__rmax",
     exclusive: bool = False,
-    num_buckets: "int | None" = None,
 ) -> DataFrame:
     """``df`` + ``out_col`` = exact running MAX of ``value_col`` under
     ``key`` ascending (unique-key contract, same as the running sums) —
     the drawdown primitive. ``exclusive=True`` maxes over STRICTLY
     preceding rows only (NULL on the global first row) — the skyline
-    sweep's dominator test. Same bucketed shape; the cross-bucket carry
-    is the prefix max of the bounded per-bucket max table (NULL before
-    the first bucket -> ``greatest`` skips it; with ``exclusive`` the
-    first row's local max is NULL too, so the output is NULL exactly
-    when no row precedes). The value rides in its own type (decimal
-    stays exact).
+    sweep's dominator test. The cross-bucket carry is the prefix max of
+    the bounded per-bucket max table; the value rides in its own type
+    (decimal stays exact).
     """
-    base, _ = _bucketed(
-        df.withColumn("__dr_v", value_col), key, False, num_buckets
-    )
-    per_bucket = base.groupBy(_B).agg(F.max("__dr_v").alias("__dr_m"))
-    one = single_partition(_B)
-    w_prev = (
-        Window.partitionBy(one)
-        .orderBy(_B)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = per_bucket.select(
-        F.col(_B), F.max("__dr_m").over(w_prev).alias("__dr_pmax")
-    )
-    local = F.max("__dr_v").over(
-        Window.partitionBy(_B)
-        .orderBy(key.asc())
-        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
-    )
-    return (
-        base.join(F.broadcast(offs), _B)
-        .withColumn(out_col, F.greatest(local, F.col("__dr_pmax")))
-        .drop(_B, "__dr_pmax", "__dr_v")
-    )
+    op = "max_prev" if exclusive else "max"
+    return _scan(df, key, {out_col: (op, value_col)})
 
 
 def group_offsets(

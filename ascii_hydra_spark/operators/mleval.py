@@ -72,7 +72,7 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     rank+count window formulation on every input (both fold exact
     half-integers), but the only data-sized stages here are one
     score-keyed aggregate and the bucketed prefix sum — no global
-    window: `distrank.global_running_sum` over the DISTINCT-score table
+    window: `distrank.global_running_sums` over the DISTINCT-score table
     replaces the single-reducer sort, so 1e9 distinct scores rank in
     parallel (the old entity-level-input contract is gone).
 
@@ -88,8 +88,8 @@ def auc_score(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
         F.coalesce(F.sum(pos.cast("bigint")), F.lit(0)).alias("__pos_s"),
         F.coalesce(F.sum((~pos).cast("bigint")), F.lit(0)).alias("__neg_s"),
     )
-    cum = distrank.global_running_sum(
-        per, F.col("__s"), F.col("__n_s"), out_col="__cum"
+    cum = distrank.global_running_sums(
+        per, F.col("__s"), {"__cum": F.col("__n_s")}
     )
     below = F.col("__cum") - F.col("__n_s")
     rp2 = F.col("__pos_s") * (

@@ -46,12 +46,6 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).orc(path)
 
 
-def text_record_count(spark: SparkSession, path: str) -> int:
-    """Line count of a text dataset (reference counts via RDD textFile,
-    utils.py:66; DataFrame `read.text` keeps it in the optimized reader)."""
-    return spark.read.text(path).count()
-
-
 def write_parquet(
     df: DataFrame,
     path: str,

@@ -12,10 +12,30 @@ ranks before the value-derived design.
 
 from __future__ import annotations
 
+import contextlib
+import datetime
+
 import pytest
 from pyspark.sql import Window, functions as F
 
 from ascii_hydra_spark.operators import distrank
+
+
+@contextlib.contextmanager
+def shuffle_partitions(spark, n):
+    """Run the block with ``spark.sql.shuffle.partitions`` = ``n`` (the
+    bucket count every scan takes), then put back what the shared
+    session had before, even when the block fails."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def _rows(spark, n=5000, seed_mod=977):
@@ -59,7 +79,7 @@ def test_global_row_number_desc_and_total(spark):
 
 def test_global_running_sum_matches_single_window(spark):
     df = _rows(spark, n=3000).groupBy("v").agg(F.count("*").alias("c"))
-    got = distrank.global_running_sum(df, F.col("v"), F.col("c"), out_col="cum")
+    got = distrank.global_running_sums(df, F.col("v"), {"cum": F.col("c")})
     want = df.select(
         "v",
         F.sum("c")
@@ -87,9 +107,11 @@ def test_ntile_formula_matches_spark_ntile(spark, n, tiles):
 
 def test_single_bucket_degenerate(spark):
     df = _rows(spark, n=40)
-    got = distrank.global_row_number(
-        df, F.col("v"), [F.col("tb")], out_col="i", num_buckets=1
-    )
+    # the bucket count is read while the plan is built
+    with shuffle_partitions(spark, 1):
+        got = distrank.global_row_number(
+            df, F.col("v"), [F.col("tb")], out_col="i"
+        )
     want = df.select(
         "k",
         F.row_number()
@@ -166,8 +188,8 @@ def test_global_running_sum_total_col_rides_along(spark):
     df = spark.createDataFrame(
         [(i, f"{i}.{i % 100:02d}") for i in range(400)], "k long, raw string"
     ).select("k", F.col("raw").cast("decimal(18,2)").alias("x"))
-    got = distrank.global_running_sum(
-        df, F.col("k"), F.col("x"), out_col="cum", total_col="tot"
+    got = distrank.global_running_sums(
+        df, F.col("k"), {"cum": F.col("x")}, total_col="tot"
     )
     want_total = df.agg(F.sum("x")).collect()[0][0]
     assert got.count() == 400
@@ -332,3 +354,32 @@ def test_round8_conversions_match_single_window_values(spark):
     got_sky = relational.skyline_2d(pts, "price", "size")
     assert got_sky.exceptAll(want_sky).count() == 0
     assert want_sky.exceptAll(got_sky).count() == 0
+
+
+@pytest.mark.parametrize("kind", ["date", "string"])
+def test_date_and_string_keys_match_single_window(spark, kind):
+    # date keys bucket through unix_date, string keys fall back to one
+    # bucket: both still give the single-window running sum and max
+    day0 = datetime.date(2024, 1, 1)
+    rows = [
+        (day0 + datetime.timedelta(days=i), (i * 37) % 211) for i in range(400)
+    ]
+    df = spark.createDataFrame(rows, "d date, x long")
+    if kind == "string":
+        df = df.withColumn("d", F.col("d").cast("string"))
+    sums = distrank.global_running_sums(
+        df, F.col("d"), {"cum": F.col("x")}, next_key_col="nd"
+    )
+    peak = distrank.global_running_max(df, F.col("d"), F.col("x"), out_col="pk")
+    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
+    want_sums = df.select(
+        "d", F.sum("x").over(w).alias("cum"),
+        F.lead("d").over(Window.orderBy("d")).alias("nd"),
+    )
+    want_peak = df.select("d", F.max("x").over(w).alias("pk"))
+    got_sums = sums.select("d", "cum", "nd")
+    assert got_sums.exceptAll(want_sums).count() == 0
+    assert want_sums.exceptAll(got_sums).count() == 0
+    got_peak = peak.select("d", "pk")
+    assert got_peak.exceptAll(want_peak).count() == 0
+    assert want_peak.exceptAll(got_peak).count() == 0

@@ -16,7 +16,6 @@ from ascii_hydra_spark.verification import REGISTRY
 from tests.oracle_compare import assert_results_match
 
 SQL_CHECKED = [name for name, spec in REGISTRY.items() if spec.sql is not None]
-ROWS_ONLY = [name for name, spec in REGISTRY.items() if spec.sql is None]
 
 
 @pytest.mark.parametrize("name", SQL_CHECKED)
@@ -27,13 +26,10 @@ def test_query_matches_oracle(spark, oracle, sf_dir, name):
     assert_results_match(spark_df, duck_pdf, name=name)
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_query_runs(spark, sf_dir, name):
-    """No-oracle queries must at least execute and return a stable schema."""
-    spec = REGISTRY[name]
-    df = spec.fn(spark, sf_dir)
-    assert df.columns, name
-    assert df.count() >= 0, name
+def test_sim_pairs_lsh_portable_finds_pairs(spark, sf_dir):
+    # its hash check only bites if the fixture holds pairs at or above
+    # the entry's cosine threshold: two empty results always match
+    assert REGISTRY["sim_pairs_lsh_portable"].fn(spark, sf_dir).count() > 0
 
 
 def test_entry_smoke(spark):

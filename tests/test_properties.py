@@ -399,16 +399,17 @@ def test_distrank_row_number_equals_python_sort(spark, values, buckets, desc):
     both directions — the invariant the two rejected designs (partition-
     id buckets, in-plan percentile splits) each violated."""
     from ascii_hydra_spark.operators import distrank
+    from tests.test_distrank import shuffle_partitions
 
     rows = [(k, v) for k, v in enumerate(values)]
     df = spark.createDataFrame(rows, "k long, v long")
-    got = {
-        r["k"]: r["i"]
-        for r in distrank.global_row_number(
-            df, F.col("v"), [F.col("k")], desc=desc, out_col="i",
-            num_buckets=buckets,
-        ).collect()
-    }
+    with shuffle_partitions(spark, buckets):
+        got = {
+            r["k"]: r["i"]
+            for r in distrank.global_row_number(
+                df, F.col("v"), [F.col("k")], desc=desc, out_col="i",
+            ).collect()
+        }
     want = {
         k: i + 1
         for i, (k, v) in enumerate(
