@@ -119,6 +119,16 @@ def md5_fingerprint(text: Column | str) -> Column:
     return F.md5(c.cast("binary"))
 
 
+def md5_int60(value: Column | str) -> Column:
+    """The portable 60-bit hash: the first 15 hex digits of md5 as a
+    non-negative bigint. DuckDB spells it the same way, so an operator
+    that hashes with it (the Bloom, count-min, HLL, MinHash and SimHash
+    arms, feature hashing, DSIR buckets) can carry a hash-matched
+    oracle."""
+    c = F.col(value) if isinstance(value, str) else value
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
+
+
 def rolling_fingerprint(text: Column | str, base: int = 257, mod: int = 1_000_000_007) -> Column:
     """Polynomial rolling hash over characters: fold(acc*B + code) % M.
 

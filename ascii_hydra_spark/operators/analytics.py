@@ -25,7 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ascii_hydra_spark.functions import dsum
+from ascii_hydra_spark.functions import dsum, md5_int60
 from ascii_hydra_spark.operators import distrank
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
@@ -2175,21 +2175,11 @@ def poisson_bootstrap_ci(
         F.col(id_col).alias("__id"),
         b,
     )
-    u = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("__id").cast("string"),
-                    F.lit("#boot#"),
-                    F.col("__b").cast("string"),
-                )
-            ),
-            1,
-            12,
-        ),
-        16,
-        10,
-    ).cast("double") / F.lit(float(1 << 48))
+    # the top 48 of the 60 hash bits: exact in a double
+    h = md5_int60(
+        F.concat(F.col("__id").cast("string"), F.lit("#boot#"), F.col("__b").cast("string"))
+    )
+    u = F.shiftright(h, 12).cast("double") / F.lit(float(1 << 48))
     w = F.lit(8)
     for j in range(len(_POISSON1_CDF) - 1, -1, -1):
         w = F.when(u < F.lit(_POISSON1_CDF[j]), F.lit(j)).otherwise(w)

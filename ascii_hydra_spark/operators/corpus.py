@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ascii_hydra_spark.functions import ngrams, word_tokens
+from ascii_hydra_spark.functions import md5_int60, ngrams, word_tokens
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 # Knuth multiplicative hash constants shared with relational.hash_stratified_sample:
@@ -765,8 +765,7 @@ def dsir_importance(
       bucket-keyed broadcast join; nothing shuffles document text.
     """
     def bucket(col):
-        h = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-        return F.pmod(h, F.lit(int(n_buckets)))
+        return F.pmod(md5_int60(col), F.lit(int(n_buckets)))
 
     # NOTE: a min-parallelism round-robin of docs/target was A/B-measured
     # (r10) and came out a WASH (1.69 -> 1.66 s min at sf0.1, 2/3 paired

@@ -13,8 +13,6 @@ Five dedup families, each designed so the shuffle structure survives 100 TB:
 - simhash_pairs        — 64-bit SimHash; Hamming-distance candidates via
                          chunk-equality banding (pigeonhole: dist<=3 -> one of
                          4 16-bit chunks equal).
-- embedding_dup_pairs  — near-dup by embedding cosine (delegates to
-                         operators.similarity).
 
 Determinism: every similarity/candidate pipeline tie-breaks on ids and uses
 seeded hash functions (Spark murmur3 `hash(..., seed-ish lit)` / xxhash64),
@@ -27,7 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ascii_hydra_spark.functions import char_shingles, word_tokens
+from ascii_hydra_spark.functions import char_shingles, md5_int60, word_tokens
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 
@@ -137,48 +135,125 @@ def incremental_minhash_dedup(
     # signatures twice)
     b_sig = minhash_signatures(batch, id_col, text_col, num_hashes)
     c_sig = minhash_signatures(corpus, id_col, text_col, num_hashes)
-    rows = num_hashes // bands
-
-    def buckets(sig: DataFrame, out: str) -> DataFrame:
-        return sig.select(
-            F.col("__id").alias(out),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.xxhash64(F.slice("signature", b * rows + 1, rows)),
-                )
-            ).alias("__band", "__bucket"),
-        )
-
     cand = (
-        buckets(b_sig, "__bid")
-        .join(buckets(c_sig, "__cid"), ["__band", "__bucket"])
-        .select("__bid", "__cid")
+        _band_keys(b_sig, num_hashes, bands).withColumnRenamed("__id", "id_a")
+        .join(
+            _band_keys(c_sig, num_hashes, bands).withColumnRenamed("__id", "id_b"),
+            ["__band", "__bucket"],
+        )
+        .select("id_a", "id_b")
         .distinct()
     )
     # exact verify on candidates only: shingle Jaccard batch-doc vs corpus-doc
-    def shingle_sets(df: DataFrame, out: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out),
-            F.array_distinct(char_shingles(text_col, 5)).alias(f"__sh_{out}"),
-        )
-
     verified = (
-        cand.join(shingle_sets(batch, "__bid"), "__bid")
-        .join(shingle_sets(corpus, "__cid"), "__cid")
-        .withColumn(
-            "__inter", F.size(F.array_intersect("__sh___bid", "__sh___cid"))
+        _set_jaccard(
+            cand,
+            _shingle_sets(batch, id_col, text_col, 5),
+            _shingle_sets(corpus, id_col, text_col, 5),
+            threshold,
         )
-        .withColumn(
-            "__jac",
-            F.col("__inter")
-            / (F.size("__sh___bid") + F.size("__sh___cid") - F.col("__inter")),
-        )
-        .filter(F.col("__jac") >= threshold)
-        .select(F.col("__bid").alias("__dup_id"))
+        .select(F.col("id_a").alias("__dup_id"))
         .distinct()
     )
     return batch.join(verified, batch[id_col] == verified["__dup_id"], "left_anti")
+
+
+def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(__id, __band, __bucket): one row per LSH band of a MinHash
+    signature table, the bucket being the xxhash64 of the band's slice of
+    the signature. Docs whose slices agree share a bucket."""
+    rows = num_hashes // bands
+    return sig.select(
+        "__id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.xxhash64(F.slice("signature", b * rows + 1, rows)),
+            )
+        ).alias("__band", "__bucket"),
+    )
+
+
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_k: int) -> DataFrame:
+    """(__id, __set): each document's distinct character shingles."""
+    return df.select(
+        F.col(id_col).alias("__id"),
+        F.array_distinct(char_shingles(text_col, shingle_k)).alias("__set"),
+    )
+
+
+def _set_jaccard(
+    cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verify of candidate pairs (id_a, id_b) against shingle arrays:
+    id_a's set comes from `sets_a`, id_b's from `sets_b` (both
+    `_shingle_sets` tables). Keeps the pairs whose set Jaccard clears
+    `threshold`, with the unrounded score in `jaccard`."""
+    sa = sets_a.select(F.col("__id").alias("id_a"), F.col("__set").alias("__seta"))
+    sb = sets_b.select(F.col("__id").alias("id_b"), F.col("__set").alias("__setb"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("__inter", F.size(F.array_intersect("__seta", "__setb")))
+        .withColumn(
+            "jaccard",
+            F.col("__inter")
+            / (F.size("__seta") + F.size("__setb") - F.col("__inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _self_join_pairs(table: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Distinct candidate pairs (id_a, id_b), id_a < id_b, of the `__id`s
+    in `table` whose rows agree on every column in `keys` (a token, an
+    LSH band and bucket, ...): the quadratic step is confined to docs
+    that share a key."""
+    a, b = table.alias("a"), table.alias("b")
+    return (
+        a.join(
+            b,
+            [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+            + [F.col("a.__id") < F.col("b.__id")],
+        )
+        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _posting_jaccard(
+    cand: DataFrame, posting: DataFrame, item: str, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verify of candidate pairs (id_a, id_b) against a distinct
+    (__id, `item`) posting table: count the shared items with two
+    posting joins, then score against the (__id, __sz) set sizes."""
+    ta = posting.select(F.col("__id").alias("id_a"), item)
+    tb = posting.select(F.col("__id").alias("id_b"), item)
+    inter = (
+        cand.join(ta, "id_a")
+        .join(tb, ["id_b", item])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("__inter"))
+    )
+    return _jaccard_scores(inter, sizes, threshold)
+
+
+def _jaccard_scores(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) from intersection counts (id_a, id_b,
+    __inter) and set sizes (__id, __sz): i / (|A| + |B| - i), kept at or
+    above `threshold`, rounded to 6 places."""
+    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__sz").alias("__sza"))
+    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__sz").alias("__szb"))
+    return (
+        inter.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("__inter") / (F.col("__sza") + F.col("__szb") - F.col("__inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
 
 
 def _doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -248,21 +323,8 @@ def jaccard_pairs(
     toks = truncate_lineage(_doc_tokens(df, id_col, text_col))
     sizes = toks.groupBy("__id").agg(F.count("*").alias("__sz"))
     if prefix_filter and threshold > 0:
-        idx = prefix_index(toks, sizes, threshold)
-        a, b = idx.alias("a"), idx.alias("b")
-        cand = (
-            a.join(b, (F.col("a.__tok") == F.col("b.__tok")) & (F.col("a.__id") < F.col("b.__id")))
-            .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-            .distinct()
-        )
-        ta = toks.select(F.col("__id").alias("id_a"), "__tok")
-        tb = toks.select(F.col("__id").alias("id_b"), "__tok")
-        inter = (
-            cand.join(ta, "id_a")
-            .join(tb, ["id_b", "__tok"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("__inter"))
-        )
+        cand = _self_join_pairs(prefix_index(toks, sizes, threshold), ["__tok"])
+        return _posting_jaccard(cand, toks, "__tok", sizes, threshold)
     else:
         # Size-ratio prefilter (r10; exact, guide §3.2-style pre-reduction):
         # jaccard = i/(|A|+|B|-i) <= min(|A|,|B|)/max(|A|,|B|), so a pair
@@ -308,18 +370,7 @@ def jaccard_pairs(
             .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
             .agg(F.count("*").alias("__inter"))
         )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__sz").alias("__sza"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__sz").alias("__szb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.col("__sza") + F.col("__szb") - F.col("__inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _jaccard_scores(inter, sizes, threshold)
 
 
 def minhash_signatures(
@@ -376,7 +427,6 @@ def minhash_lsh_pairs(
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    rows = num_hashes // bands
     # cut: the signature table feeds BOTH sides of the candidate
     # self-join plus the estimate prefilter. A lazy persist would not stop
     # AQE from submitting all consumer leaf stages concurrently, each
@@ -388,29 +438,8 @@ def minhash_lsh_pairs(
     sig = truncate_lineage(minhash_signatures(
         _ensure_min_parallelism(df), id_col, text_col, num_hashes, shingle_k
     ))
-    band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
-    banded = sig.select(
-        "__id",
-        F.explode(
-            F.transform(
-                band_idx,
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(F.concat_ws(",", F.slice("signature", b * rows + 1, rows))).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("__id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
+    candidates = _self_join_pairs(
+        _band_keys(sig, num_hashes, bands), ["__band", "__bucket"]
     )
     # cheap prefilter: estimated Jaccard = fraction of agreeing signature
     # components; a true >=threshold pair has estimate ~ Binomial(64, j)/64
@@ -452,25 +481,13 @@ def minhash_lsh_pairs(
     # Spreading the surviving (id, text) rows is cheap; no-op at scale.
     # cut: sa and sb below are independent AQE leaf stages — without it
     # each side re-runs the candidate semi-join + shingle explode
-    shingle_sets = truncate_lineage(
+    shingle_sets = truncate_lineage(_shingle_sets(
         _ensure_min_parallelism(
             df.join(F.broadcast(cand_ids), F.col(id_col) == F.col("__cid"), "left_semi")
-        )
-        .select(F.col(id_col).alias("__id"), F.array_distinct(char_shingles(text_col, shingle_k)).alias("__set"))
-    )
-    sa = shingle_sets.select(F.col("__id").alias("id_a"), F.col("__set").alias("__seta"))
-    sb = shingle_sets.select(F.col("__id").alias("id_b"), F.col("__set").alias("__setb"))
-    verified = (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("__inter", F.size(F.array_intersect("__seta", "__setb")))
-        .withColumn(
-            "jaccard",
-            F.col("__inter")
-            / (F.size("__seta") + F.size("__setb") - F.col("__inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        ),
+        id_col, text_col, shingle_k,
+    ))
+    verified = _set_jaccard(candidates, shingle_sets, shingle_sets, threshold)
     return verified.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -514,6 +531,13 @@ def containment_pairs(
     posting = chunks.select(
         "__id", F.explode(F.array_distinct("chunks")).alias("__ch")
     )
+    return _containment(posting, threshold)
+
+
+def _containment(posting: DataFrame, threshold: float) -> DataFrame:
+    """Ordered pairs (id_a, id_b, containment) from a distinct (__id, __ch)
+    chunk posting table: the share of a's chunks that b also holds,
+    kept at or above `threshold`, rounded to 6 places."""
     sizes = posting.groupBy("__id").agg(F.count("*").alias("__n"))
     a, b = posting.alias("a"), posting.alias("b")
     inter = (
@@ -703,9 +727,7 @@ def simhash(
     if hash_fn == "md5":
         if bits > 60:
             raise ValueError("md5 portable hash carries 60 bits")
-        h = F.conv(F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10).cast(
-            "bigint"
-        )
+        h = md5_int60("__tok")
         # md5+hex-conv is ~10x an xxhash64; hash each DISTINCT token once
         # and join the hash back to the occurrence rows (same values, so
         # the sign-sums are unchanged). The distinct side is
@@ -957,13 +979,7 @@ def minhash_lsh_pairs_portable(
     )
 
     def hv(i: int):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("__s"), F.lit("#"), F.lit(str(i)))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        return md5_int60(F.concat(F.col("__s"), F.lit("#"), F.lit(str(i))))
 
     # NOTE: a distinct-shingle hash table joined back to (doc, shingle)
     # was A/B-measured here (r10) and REGRESSED (~3.5 s -> ~4.2 s best
@@ -995,35 +1011,9 @@ def minhash_lsh_pairs_portable(
             )
         ).alias("__bk"),
     ).select("__id", F.col("__bk.band").alias("__band"), F.col("__bk.key").alias("__key"))
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.__band") == F.col("b.__band"))
-            & (F.col("a.__key") == F.col("b.__key"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
+    cand = _self_join_pairs(band_rows, ["__band", "__key"])
     sizes = sh.groupBy("__id").agg(F.count("*").alias("__sz"))
-    sa = sh.select(F.col("__id").alias("id_a"), "__s")
-    sb = sh.select(F.col("__id").alias("id_b"), "__s")
-    inter = (
-        cand.join(sa, "id_a")
-        .join(sb, ["id_b", "__s"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__i"))
-    )
-    za = sizes.select(F.col("__id").alias("id_a"), F.col("__sz").alias("__sza"))
-    zb = sizes.select(F.col("__id").alias("id_b"), F.col("__sz").alias("__szb"))
-    jac = F.col("__i") / (F.col("__sza") + F.col("__szb") - F.col("__i"))
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(jac >= F.lit(float(threshold)))
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _posting_jaccard(cand, sh, "__s", sizes, threshold)
 
 
 def containment_pairs_portable(
@@ -1056,9 +1046,7 @@ def containment_pairs_portable(
         F.col(id_col).alias("__id"),
         F.posexplode(word_tokens(text_col)).alias("__pos", "__tok"),
     )
-    hv = F.conv(F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
+    hv = md5_int60("__tok")
     # boundary flag per DISTINCT token, joined back to occurrences (same
     # flag values — the running-sum chunk ids are unchanged); saves one
     # md5+hex-conv per token occurrence, and the vocabulary-sized flag
@@ -1090,22 +1078,4 @@ def containment_pairs_portable(
             )
         ).alias("__ch")
     )
-    posting = chunks.select("__id", "__ch").distinct()
-    sizes = posting.groupBy("__id").agg(F.count("*").alias("__n"))
-    a, b = posting.alias("a"), posting.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.__ch") == F.col("b.__ch"))
-            & (F.col("a.__id") != F.col("b.__id")),
-        )
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count("*").alias("__shared"))
-    )
-    na = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    return (
-        inter.join(na, "id_a")
-        .withColumn("containment", F.col("__shared") / F.col("__na"))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", F.round("containment", 6).alias("containment"))
-    )
+    return _containment(chunks.select("__id", "__ch").distinct(), threshold)

@@ -224,8 +224,17 @@ def triangle_count(
     bounding per-vertex wedge fan-out by O(sqrt(m)) instead of O(d²) —
     an id-ordered orientation would put celebrity-node wedge explosion
     on single tasks. Shuffles: dedup + two degree joins + the wedge
-    self-join + the closing semi-join, all on edge keys.
+    self-join + the closing join, all on edge keys.
     """
+    tri, _ = _oriented_triangles(edges, src, dst)
+    return tri.agg(F.count("*").cast("bigint").alias("n_triangles"))
+
+
+def _undirected_degrees(edges: DataFrame, src: str, dst: str):
+    """(with_deg, deg) over the canonical undirected edge list — each edge
+    once as (u, v) = (least, greatest) endpoint, self-loops dropped:
+    `with_deg` is (u, v, du, dv) with both endpoint degrees, `deg` the
+    (n, deg) degree table."""
     u, v = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
     e = (
         edges.select(u.alias("u"), v.alias("v"))
@@ -242,37 +251,41 @@ def triangle_count(
         e.join(deg.withColumnRenamed("n", "u").withColumnRenamed("deg", "du"), "u")
         .join(deg.withColumnRenamed("n", "v").withColumnRenamed("deg", "dv"), "v")
     )
+    return with_deg, deg
+
+
+def _oriented_triangles(edges: DataFrame, src: str, dst: str):
+    """(tri, deg): every triangle of the undirected graph exactly once as
+    (a, x, y), enumerated from its lowest-(degree, id) vertex a, plus the
+    (n, deg) degree table (see :func:`triangle_count`)."""
+    with_deg, deg = _undirected_degrees(edges, src, dst)
     # orient toward the higher (degree, id) endpoint
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
     # the oriented edge list feeds BOTH wedge sides and the closing
-    # semi-join — materialize once or the whole dedup+degree pipeline
+    # join — materialize once or the whole dedup+degree pipeline
     # executes three times (measured 11 s -> ~4 s at sf0.1)
     oriented = truncate_lineage(
         with_deg.select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-            F.when(fwd, F.col("du")).otherwise(F.col("dv")).alias("da"),
             F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
         ),
     )
-    o1 = oriented.select(
-        F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx")
-    )
-    o2 = oriented.select(
-        F.col("a"), F.col("b").alias("y"), F.col("db").alias("dy")
-    )
+    o1 = oriented.select(F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx"))
+    o2 = oriented.select(F.col("a"), F.col("b").alias("y"), F.col("db").alias("dy"))
     wedges = o1.join(o2, "a").filter(
         (F.col("dx") < F.col("dy"))
         | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
     )
-    closed = wedges.join(
+    # inner close: the oriented edges are distinct, so each wedge matches
+    # at most one closing edge and each match IS one triangle (a, x, y)
+    tri = wedges.join(
         oriented.select(F.col("a").alias("x"), F.col("b").alias("y")),
         ["x", "y"],
-        "left_semi",
-    )
-    return closed.agg(F.count("*").cast("bigint").alias("n_triangles"))
+    ).select("a", "x", "y")
+    return tri, deg
 
 
 def label_propagation(
@@ -559,9 +572,9 @@ def clustering_coefficients(
 
     Same degree-oriented triangle enumeration as :func:`triangle_count`
     (each triangle generated exactly once from its lowest-(degree,id)
-    vertex, bounding hub fan-out by O(sqrt(m))), but the closing join is
-    an INNER join so every found triangle credits all three of its
-    vertices. Every accumulated quantity is an exact integer:
+    vertex, bounding hub fan-out by O(sqrt(m))); every found triangle
+    credits all three of its vertices. Every accumulated quantity is an
+    exact integer:
 
     - wedges per node = deg*(deg-1)/2 (exact bigint),
     - triangles per node (exact count),
@@ -577,49 +590,13 @@ def clustering_coefficients(
     Transitivity = 3T / wedges is one final double division. Shuffle
     profile identical to triangle_count plus one node-keyed groupBy.
     """
-    u, v = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(u.alias("u"), v.alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
     # deg feeds BOTH the orientation and the final per-node join, but a
     # single-reuse DAG needs no checkpoint: the degree table is
     # node-cardinality (cheap to recompute) and Spark reuses identical
     # shuffle exchanges where it can — an A/B measured the checkpoint
     # barrier as a net LOSS here (~+0.5 s at sf0.1). Loops are the
     # case that amplifies recompute (kcore/pagerank), not DAGs.
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .union(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("deg"))
-    )
-    with_deg = (
-        e.join(deg.withColumnRenamed("n", "u").withColumnRenamed("deg", "du"), "u")
-        .join(deg.withColumnRenamed("n", "v").withColumnRenamed("deg", "dv"), "v")
-    )
-    fwd = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = truncate_lineage(
-        with_deg.select(
-            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-            F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
-        ),
-    )
-    o1 = oriented.select(F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx"))
-    o2 = oriented.select(F.col("a"), F.col("b").alias("y"), F.col("db").alias("dy"))
-    wedges = o1.join(o2, "a").filter(
-        (F.col("dx") < F.col("dy"))
-        | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
-    )
-    # inner close (not semi): each matched wedge IS one triangle (a,x,y)
-    tri = wedges.join(
-        oriented.select(F.col("a").alias("x"), F.col("b").alias("y")),
-        ["x", "y"],
-    ).select("a", "x", "y")
+    tri, deg = _oriented_triangles(edges, src, dst)
     t_per_node = (
         tri.select(F.explode(F.array("a", "x", "y")).alias("n"))
         .groupBy("n")
@@ -683,21 +660,7 @@ def degree_assortativity(
     :func:`powerlaw_alpha`) typically measure r < 0 — this is the
     diagnostic that says whether degree-oriented tricks are needed.
     """
-    u, v = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(u.alias("u"), v.alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .union(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
-    both = e.join(
-        deg.withColumnRenamed("n", "u").withColumnRenamed("deg", "du"), "u"
-    ).join(deg.withColumnRenamed("n", "v").withColumnRenamed("deg", "dv"), "v")
+    both, _ = _undirected_degrees(edges, src, dst)
     directed = both.select(
         F.col("du").alias("dx"), F.col("dv").alias("dy")
     ).union(both.select(F.col("dv").alias("dx"), F.col("du").alias("dy")))

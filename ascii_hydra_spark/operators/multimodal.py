@@ -747,29 +747,6 @@ def decode_jpeg(payload: bytes):
     return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
 
 
-def _jpeg_features(payload: bytes) -> list[float]:
-    """Same 9-feature layout as BMP/PNG ([w, h, corner RGBs, mean]) — but
-    JPEG is LOSSY, so values are deterministic yet not closed-form; the
-    registry entry is rows-only and the accuracy bound (PSNR vs source)
-    is asserted in tests/test_multimodal.py instead."""
-    import numpy as np
-
-    arr = decode_jpeg(payload)
-    h, w = arr.shape[:2]
-    tl, br = arr[0, 0], arr[h - 1, w - 1]
-    return [
-        float(w),
-        float(h),
-        float(tl[0]),
-        float(tl[1]),
-        float(tl[2]),
-        float(br[0]),
-        float(br[1]),
-        float(br[2]),
-        round(float(np.mean(arr.astype(np.float64))), 6),
-    ]
-
-
 def _paeth(a, b, c):
     """Paeth predictor (PNG spec §9, filter type 4), vectorized over numpy
     int16 arrays: pick whichever of left/up/up-left is closest to
@@ -922,39 +899,19 @@ def decode_png(payload: bytes):
     return recon.astype(np.uint8).reshape(h, w, 3)
 
 
-def _png_features(payload: bytes) -> list[float]:
-    """REAL decode features for a PNG payload — same 9-element layout as
-    :func:`_bmp_features` ([w, h, top-left RGB, bottom-right RGB, mean])
-    so the same closed-form SQL oracle applies. The corners pin the filter
-    reversals: a decoder that botched Sub/Up/Average/Paeth would corrupt
-    later rows and miss the bottom-right pixel."""
+def _rgb_features(arr) -> list[float]:
+    """REAL decode features of a decoded (h, w, 3) RGB image: [width,
+    height, top-left R/G/B, bottom-right R/G/B, round(mean over all pixel
+    bytes, 6)]. The corner pixels pin each decoder's layout transforms —
+    BMP's bottom-up flip and BGR swap, PNG's filter reversals (a botched
+    Sub/Up/Average/Paeth corrupts later rows and misses the bottom-right
+    pixel) — which the mean alone would not catch. BMP and PNG are
+    lossless, so one closed-form SQL oracle applies to both; JPEG is
+    LOSSY, so its values are deterministic but not closed-form (its
+    registry entry is rows-only and tests/test_multimodal.py bounds its
+    PSNR against the source instead)."""
     import numpy as np
 
-    arr = decode_png(payload)
-    h, w = arr.shape[:2]
-    tl, br = arr[0, 0], arr[h - 1, w - 1]
-    return [
-        float(w),
-        float(h),
-        float(tl[0]),
-        float(tl[1]),
-        float(tl[2]),
-        float(br[0]),
-        float(br[1]),
-        float(br[2]),
-        round(float(np.mean(arr.astype(np.float64))), 6),
-    ]
-
-
-def _bmp_features(payload: bytes) -> list[float]:
-    """REAL decode features for a BMP payload: [width, height, top-left
-    R/G/B, bottom-right R/G/B, round(mean over all pixel bytes, 6)].
-    The corner pixels pin the layout transforms (bottom-up flip + BGR
-    swap) — a decoder that ignored row order would still get the mean
-    right but fail the corners."""
-    import numpy as np
-
-    arr = decode_bmp(payload)
     h, w = arr.shape[:2]
     tl, br = arr[0, 0], arr[h - 1, w - 1]
     return [
@@ -987,9 +944,9 @@ def _wav_features(payload: bytes) -> list[float]:
 
 
 def _decode_batch(batch: pd.DataFrame, n_features: int) -> pd.DataFrame:
-    """Per-codec dispatch: bmp/wav rows get REAL pure-numpy decodes
-    (:func:`_bmp_features` / :func:`_wav_features`); everything else gets
-    the vectorized deterministic stand-in — per-row normalized byte
+    """Per-codec dispatch: bmp/png/jpeg/gif/wav rows get REAL pure-numpy
+    decodes (:func:`_rgb_features`, :func:`_gif_features`,
+    :func:`_wav_features`); everything else gets the vectorized deterministic stand-in — per-row normalized byte
     histograms, computed as ONE bincount over the whole Arrow batch
     (payloads concatenated; bucket = row_index * n_features + byte % n) —
     no per-row or per-byte Python in the stand-in hot path. (The real
@@ -1001,10 +958,10 @@ def _decode_batch(batch: pd.DataFrame, n_features: int) -> pd.DataFrame:
     if decodable.any():
         real = batch[decodable]
         decoders = {
-            "bmp": _bmp_features,
+            "bmp": lambda p: _rgb_features(decode_bmp(p)),
             "wav": _wav_features,
-            "png": _png_features,
-            "jpeg": _jpeg_features,
+            "png": lambda p: _rgb_features(decode_png(p)),
+            "jpeg": lambda p: _rgb_features(decode_jpeg(p)),
             "gif": _gif_features,
         }
         feats = [

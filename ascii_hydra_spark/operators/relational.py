@@ -20,6 +20,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ascii_hydra_spark.functions import md5_int60
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 
@@ -580,9 +581,7 @@ def dataset_fingerprint(df: DataFrame, cols: "list[str]") -> DataFrame:
         F.coalesce(F.col(c).cast("string"), F.lit("<null>")) for c in cols
     ]
     row_str = F.concat_ws(sep, *parts)
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast(
-        "decimal(38,0)"
-    )
+    h = md5_int60(row_str).cast("decimal(38,0)")
     return df.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum(h).cast("string").alias("fingerprint"),

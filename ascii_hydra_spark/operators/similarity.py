@@ -20,6 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ascii_hydra_spark.functions import cosine_similarity, l2_norm, to_double_array
+from ascii_hydra_spark.operators.dedup import _self_join_pairs
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
 
@@ -429,17 +430,9 @@ def cosine_pairs_lsh(
         F.col(id_col).alias("__id"),
         F.explode(bucket_keys(F.col(vec_col))).alias("__bucket"),
     )
-    a, b = tables.alias("a"), tables.alias("b")
     # dedupe candidate PAIRS before scoring: a pair colliding in k tables
     # would otherwise pay the 64-dim dot product k times
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.__bucket") == F.col("b.__bucket")) & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
+    candidates = _self_join_pairs(tables, ["__bucket"])
     from ascii_hydra_spark.functions.udfs import dot_product
 
     # va/vb re-run the per-row normalization once each (hash(id_a) vs
@@ -461,15 +454,6 @@ def cosine_pairs_lsh(
         )
         .filter(F.col("sim") >= threshold)
     )
-
-
-def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.99, **kw) -> DataFrame:
-    """Embedding-cosine near-duplicate detection (dedup family facade).
-
-    Routes through the blocked-GEMM exact formulation — identical result
-    set to `cosine_pairs` (value-equality asserted in tests), ~10x faster.
-    """
-    return cosine_pairs_blocked(emb, threshold=threshold, **kw)
 
 
 def embedding_dedup(

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ascii_hydra_spark.functions import md5_int60
+
 
 def _cms_bucket(col: "F.Column", r: int, width: int, hash_fn: str) -> "F.Column":
     """Row-r bucket address. hash_fn='xxhash64' is the fast JVM path;
@@ -35,15 +37,7 @@ def _cms_bucket(col: "F.Column", r: int, width: int, hash_fn: str) -> "F.Column"
     that lets a count-min entry verify against a SQL oracle bit-for-bit
     instead of registering rows-only."""
     if hash_fn == "md5":
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(col.cast("string"), F.lit("#"), F.lit(str(r)))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        h = md5_int60(F.concat(col.cast("string"), F.lit("#"), F.lit(str(r))))
         return F.pmod(h, F.lit(width))
     if hash_fn != "xxhash64":
         raise ValueError(f"unknown hash_fn: {hash_fn!r}")
@@ -107,15 +101,7 @@ def _md5_bit_pos(key: "F.Column", seed: "F.Column", m_bits: int) -> "F.Column":
     mod m. md5 (not xxhash64) on purpose — both engines expose it, so the
     Bloom entries verify against the DuckDB oracle bit-for-bit, where the
     count-min arm has to register rows-only."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(key.cast("string"), F.lit("#"), seed.cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_int60(F.concat(key.cast("string"), F.lit("#"), seed.cast("string")))
     return F.pmod(h, F.lit(m_bits))
 
 
@@ -210,9 +196,7 @@ def hll_portable_cells(
     """
     gcols = list(group_cols or [])
     m = 1 << b_bits
-    h = F.conv(
-        F.substring(F.md5(F.col(item_col).cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
+    h = md5_int60(F.col(item_col).cast("string"))
     bucket = F.pmod(h, F.lit(m))
     # quotient bits carry the rank: INTEGER shift, never a double
     # round-trip (the hash has 60 significant bits, double keeps 53)

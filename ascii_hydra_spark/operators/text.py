@@ -16,6 +16,7 @@ from ascii_hydra_spark.functions import (
     bpe_ish_tokens,
     lang_marker_score,
     md5_fingerprint,
+    md5_int60,
     ngrams,
     quality_score,
     rolling_fingerprint,
@@ -867,10 +868,7 @@ def feature_hashing(
         F.col(id_col).alias("doc_id"),
         F.explode(word_tokens(text_col)).alias("__t"),
     )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("__t")), 1, 15), 16, 10).cast("bigint"),
-        F.lit(n_buckets),
-    )
+    bucket = F.pmod(md5_int60("__t"), F.lit(n_buckets))
     return (
         tok.select("doc_id", bucket.cast("int").alias("bucket"))
         .groupBy("doc_id", "bucket")

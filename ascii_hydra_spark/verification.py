@@ -3733,7 +3733,7 @@ def pyds_jsonl_sink(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     path = scratch_dir("ahs_jsonl_") + "/out"
     d.write.format("ahs_jsonl").mode("overwrite").option("path", path).save()
-    back = spark.read.json(f"{path}/part-*.jsonl")
+    back = spark.read.option("pathGlobFilter", "*.jsonl").json(path)
     return back.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("doc_id").cast("bigint").alias("id_sum"),
@@ -6965,7 +6965,7 @@ def cdx_index_jsonl_sink(spark, sf_dir):
     idx.write.format("ahs_jsonl").mode("overwrite").option(
         "path", sink
     ).save()
-    back = spark.read.json(f"{sink}/part-*.jsonl")
+    back = spark.read.option("pathGlobFilter", "*.jsonl").json(sink)
     w = Window.partitionBy("warc_file").orderBy("seq")
     inc = (F.col("offset") > F.lag("offset").over(w)).cast("int")
     return (

@@ -59,6 +59,27 @@ def test_degree_assortativity_regular_graph_is_null(spark):
     assert row["assortativity"] is None
 
 
+def test_triangle_kernel_on_noisy_k4(spark):
+    # K4 on {1..4} (4 triangles) plus a reversed edge, a self-loop, a
+    # pendant edge, an island edge and a duplicate: 8 canonical edges,
+    # degrees 3,3,3,4 on the clique and 1 on nodes 5, 6, 7
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    noise = [(2, 1), (3, 3), (4, 5), (6, 7), (1, 2)]
+    df = spark.createDataFrame(k4 + noise, "src INT, dst INT")
+    n_tri = graph.triangle_count(df).collect()[0]["n_triangles"]
+    assert n_tri == 4
+    cc = graph.clustering_coefficients(df).collect()[0]
+    assert cc["n_closed_wedges"] == 3 * n_tri
+    assert cc["n_nodes_deg2"] == 4
+    assert cc["n_wedges"] == 3 + 3 + 3 + 6
+    # local cc: 1 on nodes 1-3, 2*3/(4*3) = 0.5 on node 4
+    assert cc["transitivity"] == 0.8 and cc["avg_local_cc"] == 0.875
+    r = graph.degree_assortativity(df).collect()[0]
+    assert r["n_edges"] == 8
+    # 16 directed copies: sum dx = 46, sum dx^2 = 148, sum dx*dy = 136
+    assert r["assortativity"] == round((16 * 136 - 46**2) / (16 * 148 - 46**2), 6)
+
+
 def test_hits_path_graph_authority_ordering(spark):
     # directed path a->b->c plus d->c: c has two hub parents -> top
     # authority; normalization makes its score exactly 1.0
