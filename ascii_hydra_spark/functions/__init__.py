@@ -37,6 +37,28 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+# ---------------------------------------------------------------- rounding
+
+def round_half_up(scaled: Column) -> Column:
+    """floor(scaled + 0.5): the fixed-point grid every exact-integer
+    operator snaps a scaled double onto (embedding coordinates times
+    10^scale or 2^20, int8 quantization steps). One IEEE add and floor,
+    spelled the same way in the DuckDB oracles, so both engines land on
+    the same integer; exact halves (a float32 odd multiple of 1/32 times
+    1e4 ends in .5) round up on both sides, where a half-even rint or a
+    decimal cast would not."""
+    return F.floor(scaled + F.lit(0.5))
+
+
+def round6(x: Column) -> Column:
+    """x rounded half up to 6 dp as floor(x*1e6 + 0.5)/1e6 — for
+    irrational outputs (sqrt, division) where Spark's HALF_UP ROUND and
+    the oracle's correctly-rounded ROUND can disagree by 1e-6 at a
+    double-repr half; this written float order is one both engines
+    share."""
+    return round_half_up(x * F.lit(1e6)) / F.lit(1e6)
+
+
 # ---------------------------------------------------------------- aggregates
 
 def dsum(col: Column | str, scale: int = 2) -> Column:

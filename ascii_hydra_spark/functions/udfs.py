@@ -158,28 +158,41 @@ def make_cdc_chunk_udf(window: int = 8, target_chunk: int = 64, seed: int = 42):
     return cdc_chunks
 
 
-def make_hyperplane_bucket_udf(planes, n_planes: int, n_tables: int):
+def make_hyperplane_bucket_udf(n_planes: int, n_tables: int, seed: int):
     """Factory for the LSH bucket-assignment UDF (see operators.similarity).
 
     Computes ALL `n_tables` random-hyperplane keys for a batch of vectors in
     one numpy matmul (N x dim @ dim x (tables*planes)); key = table_index <<
     n_planes | sign_bits, a plain long, so the candidate join shuffles
-    8-byte keys. Lives here (not similarity.py) because pandas_udf infers
-    its eval type from RUNTIME type hints and this module keeps PEP-563
-    stringification off.
+    8-byte keys. The equivalent per-plane zip_with+aggregate expression is
+    evaluated interpreted (higher-order functions never enter whole-stage
+    codegen), so at 48 planes x 64 dims it dominated the whole pipeline;
+    one BLAS matmul per Arrow batch is ~100x cheaper.
+
+    The planes are `tables*planes` uniform(-1, 1) rows from numpy's legacy
+    RandomState(seed) stream (stability-guaranteed: same seed, same planes
+    on every run), as wide as the vectors in the batch and cached per
+    width, so no width knob can disagree with the data. Lives here (not
+    similarity.py) because pandas_udf infers its eval type from RUNTIME
+    type hints and this module keeps PEP-563 stringification off.
     """
     import numpy as np
 
-    plane_mat = np.asarray(planes)
     pow2 = (2 ** np.arange(n_planes)).astype(np.int64)
     offsets = np.arange(n_tables, dtype=np.int64) << n_planes
+    planes_by_width: dict = {}
 
     @pandas_udf(ArrayType(LongType()))
     def bucket_keys(vecs: pd.Series) -> pd.Series:
         import numpy as np  # noqa: F811 (executor-side import)
 
         m = np.stack(vecs.to_numpy()).astype(np.float64)
-        signs = (m @ plane_mat.T) >= 0.0
+        width = m.shape[1]
+        if width not in planes_by_width:
+            planes_by_width[width] = np.random.RandomState(seed).uniform(
+                -1.0, 1.0, size=(n_planes * n_tables, width)
+            )
+        signs = (m @ planes_by_width[width].T) >= 0.0
         bits = signs.reshape(len(m), n_tables, n_planes) @ pow2
         return pd.Series(list(bits + offsets))
 

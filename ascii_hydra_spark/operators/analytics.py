@@ -25,7 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ascii_hydra_spark.functions import dsum, md5_int60
+from ascii_hydra_spark.functions import dsum, md5_int60, round6
 from ascii_hydra_spark.operators import distrank
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
@@ -2054,19 +2054,13 @@ def bollinger_bands(
     upper = mid + F.lit(n_sigma) * std
     lower = mid - F.lit(n_sigma) * std
 
-    # floor(x*1e6 + 0.5)/1e6, NOT engine ROUND: the bands are irrational
-    # (sqrt), and at a double-repr half boundary Spark's HALF_UP and the
-    # oracle's correctly-rounded ROUND legitimately disagree by 1e-6;
-    # this spelling is one written float order both engines share.
-    def _r6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
+    # round6, NOT engine ROUND: the bands are irrational (sqrt)
     return framed.select(
         "day",
         "n_window",
-        _r6(mid).alias("mid"),
-        _r6(upper).alias("upper"),
-        _r6(lower).alias("lower"),
+        round6(mid).alias("mid"),
+        round6(upper).alias("upper"),
+        round6(lower).alias("lower"),
         ((F.col("__x") > upper) | (F.col("__x") < lower)).alias("breakout"),
     )
 
@@ -2625,6 +2619,30 @@ def population_stability_index(
     )
 
 
+def _centered_power_sums(df: DataFrame, value_col: str, scale: int) -> DataFrame:
+    """One row (n, __mean, __m2s, __m3s, __m4s): the two-pass centered
+    power sums behind :func:`central_moments` and :func:`jarque_bera` —
+    the exact DECIMAL(18, scale) sum fixes the mean, a 1-row broadcast
+    carries it back onto the rows, and one aggregate sums the centered
+    second, third and fourth powers."""
+    x = F.col(value_col).cast(f"decimal(18,{scale})")
+    base = df.agg(
+        F.count("*").cast("bigint").alias("n"), F.sum(x).alias("__s")
+    ).select(
+        "n", (F.col("__s").cast("double") / F.col("n").cast("double")).alias("__mean")
+    )
+    d = F.col(value_col).cast("double") - F.col("__mean")
+    return (
+        df.crossJoin(F.broadcast(base))
+        .groupBy("n", "__mean")
+        .agg(
+            F.sum(d * d).alias("__m2s"),
+            F.sum(d * d * d).alias("__m3s"),
+            F.sum(d * d * d * d).alias("__m4s"),
+        )
+    )
+
+
 def central_moments(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFrame:
     """One row (n, mean, stddev_pop, skewness, kurtosis): population
     moments of a value column by the TWO-PASS centered formulation —
@@ -2639,22 +2657,7 @@ def central_moments(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFra
     Shape: two scans (first can feed off statistics-only metadata at
     scale), a 1-row broadcast of the mean, map-side centered powers.
     """
-    x = F.col(value_col).cast(f"decimal(18,{scale})")
-    base = df.agg(
-        F.count("*").cast("bigint").alias("n"), F.sum(x).alias("__s")
-    ).select(
-        "n", (F.col("__s").cast("double") / F.col("n").cast("double")).alias("__mean")
-    )
-    d = F.col(value_col).cast("double") - F.col("__mean")
-    cm = (
-        df.crossJoin(F.broadcast(base))
-        .groupBy("n", "__mean")
-        .agg(
-            F.sum(d * d).alias("__m2s"),
-            F.sum(d * d * d).alias("__m3s"),
-            F.sum(d * d * d * d).alias("__m4s"),
-        )
-    )
+    cm = _centered_power_sums(df, value_col, scale)
     nd = F.col("n").cast("double")
     m2 = F.col("__m2s") / nd
     m3 = F.col("__m3s") / nd
@@ -3354,25 +3357,7 @@ def jarque_bera(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFrame:
     closed-form chi2(df=2) survival p = exp(-JB/2). The normality gate
     run before parametric A/B tests are trusted.
     """
-    x = F.col(value_col).cast(f"decimal(18,{scale})")
-    base = df.agg(
-        F.count("*").cast("bigint").alias("n"), F.sum(x).alias("__s")
-    ).select(
-        "n",
-        (F.col("__s").cast("double") / F.col("n").cast("double")).alias(
-            "__mean"
-        ),
-    )
-    d = F.col(value_col).cast("double") - F.col("__mean")
-    cm = (
-        df.crossJoin(F.broadcast(base))
-        .groupBy("n", "__mean")
-        .agg(
-            F.sum(d * d).alias("__m2s"),
-            F.sum(d * d * d).alias("__m3s"),
-            F.sum(d * d * d * d).alias("__m4s"),
-        )
-    )
+    cm = _centered_power_sums(df, value_col, scale)
     nd = F.col("n").cast("double")
     m2 = F.col("__m2s") / nd
     skew = (F.col("__m3s") / nd) / F.pow(m2, F.lit(1.5))

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ascii_hydra_spark.operators.lineage import truncate_lineage
+from ascii_hydra_spark.operators.similarity import _label_coordinate_sums
 
 
 def _dist2(vec_col, cent_col):
@@ -298,20 +299,9 @@ def calinski_harabasz(
     (this IS one-way ANOVA in embedding space).
     """
     mult = float(10**scale)
-    pe = F.posexplode(F.col(vec_col))
-    coords = emb.select(F.col(label_col).alias("__l"), pe).select(
-        "__l",
-        F.col("pos").alias("__p"),
-        F.floor(F.col("col").cast("double") * F.lit(mult) + F.lit(0.5))
-        .cast("decimal(28,0)")
-        .alias("__x"),
-    )
-    per_lp = coords.groupBy("__l", "__p").agg(F.sum("__x").alias("__s"))
+    coords, per_lp, n_per = _label_coordinate_sums(emb, label_col, vec_col, scale)
     q_tot = coords.agg(
         F.sum(F.col("__x") * F.col("__x")).cast("double").alias("__q")
-    )
-    n_per = emb.groupBy(F.col(label_col).alias("__l")).agg(
-        F.count("*").alias("__nl")
     )
     norms = (
         per_lp.groupBy("__l")
@@ -320,8 +310,8 @@ def calinski_harabasz(
     )
     per_label = norms.agg(
         F.count("*").cast("bigint").alias("k_clusters"),
-        F.sum("__nl").cast("bigint").alias("n"),
-        F.sum(F.col("__s2") / F.col("__nl").cast("double")).alias("__within_sub"),
+        F.sum("__n").cast("bigint").alias("n"),
+        F.sum(F.col("__s2") / F.col("__n").cast("double")).alias("__within_sub"),
     )
     glob = per_lp.groupBy("__p").agg(F.sum("__s").alias("__gs")).agg(
         F.sum(F.col("__gs") * F.col("__gs")).cast("double").alias("__g2")

@@ -19,7 +19,14 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ascii_hydra_spark.functions import cosine_similarity, l2_norm, to_double_array
+from ascii_hydra_spark.functions import (
+    cosine_similarity,
+    dot,
+    l2_norm,
+    round6,
+    round_half_up,
+    to_double_array,
+)
 from ascii_hydra_spark.operators.dedup import _self_join_pairs
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
@@ -37,7 +44,7 @@ def _quantize_parts(vec_col):
     mx = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = mx / F.lit(127.0)
     q = F.when(mx == 0.0, F.transform(v, lambda x: F.lit(0).cast("tinyint"))).otherwise(
-        F.transform(v, lambda x: F.floor(x / scale + F.lit(0.5)).cast("tinyint"))
+        F.transform(v, lambda x: round_half_up(x / scale).cast("tinyint"))
     )
     return scale, q
 
@@ -67,6 +74,28 @@ def _quantized_cosine(a, b) -> Column:
     norm_product = _int_norm(a) * _int_norm(b)
     return F.when(norm_product == 0, F.lit(None).cast("double")).otherwise(
         _int_dot(a, b).cast("double") / norm_product
+    )
+
+
+def _top_k(
+    rows: DataFrame,
+    sim: Column,
+    k: int,
+    id_col: str,
+    *,
+    name: str = "sim",
+    src_id: str | None = None,
+) -> DataFrame:
+    """The top-k tail every similarity search ends in: (id_col, `name` =
+    sim ROUND 6), the k highest first, ties broken on ascending id. One
+    `orderBy().limit(k)` (TakeOrderedAndProject: per-partition heap +
+    k-row driver merge), so the tie policy has a single home. `src_id`
+    names the id column in `rows` when it is not already `id_col`."""
+    ident = F.col(id_col) if src_id is None else F.col(src_id).alias(id_col)
+    return (
+        rows.select(ident, F.round(sim, 6).alias(name))
+        .orderBy(F.desc(name), F.col(id_col))
+        .limit(k)
     )
 
 
@@ -109,11 +138,7 @@ def cosine_topk(
     """
     q = _as_query_array(query)
     sim = cosine_similarity(to_double_array(vec_col), q)
-    return (
-        emb.select(F.col(id_col), F.round(sim, 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(emb, sim, k, id_col)
 
 
 def cosine_topk_by_id(
@@ -129,13 +154,8 @@ def cosine_topk_by_id(
         to_double_array(vec_col).alias("__q")
     )
     sim = cosine_similarity(to_double_array(vec_col), F.col("__q"))
-    return (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(sim, 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.col(id_col))
-        .limit(k)
-    )
+    rows = emb.crossJoin(F.broadcast(q)).filter(F.col(id_col) != query_id)
+    return _top_k(rows, sim, k, id_col)
 
 
 def cosine_topk_quantized(
@@ -158,11 +178,7 @@ def cosine_topk_quantized(
     qd = quantize_embeddings(emb, id_col=id_col, vec_col=vec_col)
     qq = _quantize_query_literal(query)
     sim = _quantized_cosine(F.col("q_embedding"), qq)
-    return (
-        qd.select(F.col(id_col), F.round(sim, 6).alias("sim_q"))
-        .orderBy(F.desc("sim_q"), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(qd, sim, k, id_col, name="sim_q")
 
 
 def _quantize_query_literal(query: Sequence[float]) -> Column:
@@ -193,13 +209,8 @@ def cosine_topk_quantized_by_id(
         F.col("q_embedding").alias("__qq")
     )
     sim = _quantized_cosine(F.col("q_embedding"), F.col("__qq"))
-    return (
-        qd.crossJoin(F.broadcast(q_row))
-        .filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(sim, 6).alias("sim_q"))
-        .orderBy(F.desc("sim_q"), F.col(id_col))
-        .limit(k)
-    )
+    rows = qd.crossJoin(F.broadcast(q_row)).filter(F.col(id_col) != query_id)
+    return _top_k(rows, sim, k, id_col, name="sim_q")
 
 
 def cosine_pairs(
@@ -219,24 +230,19 @@ def cosine_pairs(
         _normalize(to_double_array(vec_col)).alias("__v"),
     )
     a, b = normed.alias("a"), normed.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.__v"), F.col("b.__v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         a.join(b, F.col("a.__id") < F.col("b.__id"))
         .select(
             F.col("a.__id").alias("id_a"),
             F.col("b.__id").alias("id_b"),
-            F.round(dot, 6).alias("sim"),
+            F.round(dot(F.col("a.__v"), F.col("b.__v")), 6).alias("sim"),
         )
         .filter(F.col("sim") >= threshold)
     )
 
 
 def _normalize(v):
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+    norm = l2_norm(v)
     return F.transform(v, lambda x: x / norm)
 
 
@@ -332,47 +338,11 @@ def cosine_pairs_blocked(
     )
 
 
-def _plane_literals(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    """Deterministic random hyperplanes, generated once on the driver.
-
-    numpy's legacy RandomState stream is stability-guaranteed, so the same
-    seed yields the same planes on every run/engine. The planes ship as
-    plan literals (n_planes x dim doubles — bytes, not a broadcast), which
-    keeps the per-row work to plain multiplies instead of regenerating
-    pseudo-random components per row in interpreted expression eval.
-    """
-    import numpy as np
-
-    rs = np.random.RandomState(seed)
-    return rs.uniform(-1.0, 1.0, size=(n_planes, dim)).tolist()
-
-
-def _hyperplane_bucket_udf(dim: int, n_planes: int, n_tables: int, seed: int):
-    """Arrow-batched bucket assignment: ALL `n_tables` LSH keys for a vector
-    in one numpy matmul per batch (N x dim @ dim x (tables*planes)).
-
-    The equivalent per-plane zip_with+aggregate expression is evaluated
-    interpreted (higher-order functions never enter whole-stage codegen), so
-    at 48 planes x 64 dims it dominated the whole pipeline; one BLAS matmul
-    per Arrow batch is ~100x cheaper.
-
-    Sign bits are scale-invariant (sign(v.p) == sign(v_hat.p)), so bucketing
-    reads the RAW embedding — normalization happens only in the exact-verify
-    stage.
-    """
-    from ascii_hydra_spark.functions.udfs import make_hyperplane_bucket_udf
-
-    return make_hyperplane_bucket_udf(
-        _plane_literals(dim, n_planes * n_tables, seed), n_planes, n_tables
-    )
-
-
 def cosine_pairs_lsh(
     emb: DataFrame,
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     n_planes: int | None = None,
     n_tables: int | None = None,
     seed: int = 42,
@@ -401,9 +371,12 @@ def cosine_pairs_lsh(
     Pass explicit n_planes/n_tables to pin a configuration; identical
     vectors share every bucket in every configuration, so exact-duplicate
     recall is always 1.0.
-    """
-    import math
 
+    Buckets come from :func:`functions.udfs.make_hyperplane_bucket_udf`
+    (planes sized to the batch's vector width). Sign bits are
+    scale-invariant (sign(v.p) == sign(v_hat.p)), so bucketing reads the
+    RAW embedding — normalization happens only in the exact-verify stage.
+    """
     if n_planes is None:
         n = emb.count()  # one cheap scan; sizing must see the data scale
         n_planes = max(6, min(14, math.ceil(math.log2(max(n, 1) / target_occupancy))))
@@ -417,7 +390,9 @@ def cosine_pairs_lsh(
                 math.log(max(1.0 - recall_target, 1e-9))
                 / math.log(max(1.0 - collide, 1e-12))
             )))
-    bucket_keys = _hyperplane_bucket_udf(dim, n_planes, n_tables, seed)
+    from ascii_hydra_spark.functions.udfs import dot_product, make_hyperplane_bucket_udf
+
+    bucket_keys = make_hyperplane_bucket_udf(n_planes, n_tables, seed)
     # NOTE(r10, negative result — do not re-add): an eager
     # persist+count barrier here (plus a round-robin min-parallelism
     # repartition) was tried and REVERTED on paired ABAB evidence
@@ -433,8 +408,6 @@ def cosine_pairs_lsh(
     # dedupe candidate PAIRS before scoring: a pair colliding in k tables
     # would otherwise pay the 64-dim dot product k times
     candidates = _self_join_pairs(tables, ["__bucket"])
-    from ascii_hydra_spark.functions.udfs import dot_product
-
     # va/vb re-run the per-row normalization once each (hash(id_a) vs
     # hash(id_b) partitionings cannot share an exchange), but the fold is
     # cheap; persisting it eagerly was measured as a loss (see the ABAB
@@ -476,26 +449,24 @@ def embedding_dedup(
     return emb.join(dups, id_col, "left_anti")
 
 
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize: bool = False,
-) -> None:
-    """Persist an IVF index: the corpus written as parquet PARTITIONED BY
-    its cell id, so a probe is a partition-pruned scan instead of a full
-    read. This is the at-scale form of cosine_topk_ivf's in-memory cell
-    assignment — build once at ingest, probe many times.
+def _ivf_cells(
+    emb: DataFrame, n_centroids: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(normed, cents, assigned): the IVF cell assignment shared by the
+    in-memory probe (:func:`cosine_topk_ivf`) and the persisted index
+    (:func:`build_ivf_index`).
 
-    Layout: `<path>/__cell=<c>/...parquet` with the normalized vector
-    stored alongside the original row id. With `quantize=True` the stored
-    vector is int8 (see :func:`quantize_embeddings` — cosine is
-    scale-invariant so the quantized index scores with integer dot
-    products): the index is ~4x smaller, so each probed partition reads
-    4x fewer bytes — the two scale levers (partition pruning x narrow
-    storage) compose. `ivf_search` auto-detects which form it reads.
+    `normed` is (__id, __v) with unit vectors; the `n_centroids`
+    lowest-id vectors seed the centroid set `cents` (__cid, __cv)
+    (deterministic; a production build would k-means-refine them — the
+    partitioning plumbing is identical); `assigned` is (__id, __cell,
+    __v), every vector's argmax-dot centroid via a broadcast nested loop
+    against the tiny centroid table, so the corpus is partitioned into
+    cells WITHOUT any shuffle of the big side. The max_by ordinal is
+    (dot, -cid), so an EXACT dot tie — a duplicated centroid vector, or a
+    vector equidistant to two cells — resolves to the lowest centroid id
+    instead of whichever partial arrived last (an external oracle repeats
+    the same rule as ORDER BY dot DESC, cid ASC).
     """
     normed = emb.select(
         F.col(id_col).alias("__id"), _normalize(to_double_array(vec_col)).alias("__v")
@@ -507,10 +478,43 @@ def build_ivf_index(
         normed.crossJoin(F.broadcast(cents))
         .groupBy("__id")
         .agg(
-            F.max_by("__cid", _dot_col(F.col("__v"), F.col("__cv"))).alias("__cell"),
+            F.max_by(
+                "__cid",
+                F.struct(
+                    dot(F.col("__v"), F.col("__cv")).alias("d"),
+                    (-F.col("__cid")).alias("c"),
+                ),
+            ).alias("__cell"),
             F.first("__v").alias("__v"),
         )
     )
+    return normed, cents, assigned
+
+
+def build_ivf_index(
+    emb: DataFrame,
+    path: str,
+    n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    quantize: bool = False,
+) -> None:
+    """Persist an IVF index: the corpus written as parquet PARTITIONED BY
+    its cell id, so a probe is a partition-pruned scan instead of a full
+    read. This is the at-scale form of cosine_topk_ivf's in-memory cell
+    assignment (the same :func:`_ivf_cells`, so both place every vector,
+    ties included, in the same cell) — build once at ingest, probe many
+    times.
+
+    Layout: `<path>/__cell=<c>/...parquet` with the normalized vector
+    stored alongside the original row id. With `quantize=True` the stored
+    vector is int8 (see :func:`quantize_embeddings` — cosine is
+    scale-invariant so the quantized index scores with integer dot
+    products): the index is ~4x smaller, so each probed partition reads
+    4x fewer bytes — the two scale levers (partition pruning x narrow
+    storage) compose. `ivf_search` auto-detects which form it reads.
+    """
+    _, cents, assigned = _ivf_cells(emb, n_centroids, id_col, vec_col)
     if quantize:
         # per-vector scale not stored: cosine scoring is scale-invariant
         _, qe = _quantize_parts("__v")
@@ -530,15 +534,10 @@ def ivf_search(
     """Top-k over a persisted IVF index: rank centroids against the query,
     then scan ONLY the top-nprobe cell partitions (partition pruning via the
     `__cell IN (...)` filter — verify with explain: PartitionFilters)."""
-    q = F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
-    qn = F.transform(
-        q,
-        lambda x: x
-        / F.sqrt(F.aggregate(q, F.lit(0.0), lambda a, y: a + y * y)),
-    )
+    qn = _normalize(_as_query_array(query))
     cents = spark.read.parquet(f"{path}__centroids")
     probe_rows = (
-        cents.select("__cid", _dot_col(F.col("__cv"), qn).alias("__cd"))
+        cents.select("__cid", dot(F.col("__cv"), qn).alias("__cd"))
         .orderBy(F.desc("__cd"), F.col("__cid"))
         .limit(nprobe)
         .collect()  # bounded: nprobe rows
@@ -548,26 +547,10 @@ def ivf_search(
     if "q_embedding" in idx.columns:
         # quantized index: integer dot products against the quantized query
         # (scales cancel out of cosine); int8 cells = 4x fewer bytes probed
-        qq = _quantize_query_literal(query)
-        sim = _quantized_cosine(F.col("q_embedding"), qq)
-        return (
-            idx.select(F.col("__id").alias(id_col), F.round(sim, 6).alias("sim"))
-            .orderBy(F.desc("sim"), F.col(id_col))
-            .limit(k)
-        )
-    return (
-        idx.select(
-            F.col("__id").alias(id_col), F.round(_dot_col(F.col("__v"), qn), 6).alias("sim")
-        )
-        .orderBy(F.desc("sim"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def _dot_col(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+        sim = _quantized_cosine(F.col("q_embedding"), _quantize_query_literal(query))
+    else:
+        sim = dot(F.col("__v"), qn)
+    return _top_k(idx, sim, k, id_col, src_id="__id")
 
 
 def cosine_topk_ivf(
@@ -581,72 +564,33 @@ def cosine_topk_ivf(
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: the 100 TB scale path for C3.
 
-    Index build: the `n_centroids` lowest-id vectors seed the centroid set
-    (deterministic; a production build would k-means-refine them — the
-    partitioning plumbing is identical). Every vector is assigned to its
-    max-dot centroid via a broadcast nested-loop against the tiny centroid
-    table, so the corpus is partitioned into cells WITHOUT any shuffle of
-    the big side. Query: score the query against all centroids, probe the
-    top `nprobe` cells, exact-rescore only those rows. At scale the cell
-    assignment is computed once at ingest and stored as a partition column,
-    making the probe a partition-pruned scan.
+    Index build: :func:`_ivf_cells` — lowest-id seed centroids, every
+    vector assigned to its max-dot centroid (ties to the lowest cid).
+    Query: score the query against all centroids, probe the top `nprobe`
+    cells, exact-rescore only those rows. At scale the cell assignment is
+    computed once at ingest and stored as a partition column
+    (:func:`build_ivf_index`), making the probe a partition-pruned scan.
 
     Recall < 1.0 by construction (rows-only driver check); measured against
     exact `cosine_topk_by_id` in tests/test_similarity.py.
     """
-    normed = emb.select(
-        F.col(id_col).alias("__id"), _normalize(to_double_array(vec_col)).alias("__v")
-    )
-    cents = normed.filter(F.col("__id") < n_centroids).select(
-        F.col("__id").alias("__cid"), F.col("__v").alias("__cv")
-    )
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
-    # cell assignment: argmax-dot centroid per vector (broadcast small
-    # side). The max_by ordinal is (dot, -cid) so an EXACT dot tie — a
-    # duplicated centroid vector, or a vector equidistant to two cells —
-    # resolves to the lowest centroid id deterministically instead of
-    # whichever partial arrived last (and an external oracle can repeat
-    # the same rule as ORDER BY dot DESC, cid ASC).
-    assigned = (
-        normed.crossJoin(F.broadcast(cents))
-        .groupBy("__id")
-        .agg(
-            F.max_by(
-                "__cid",
-                F.struct(
-                    _dot(F.col("__v"), F.col("__cv")).alias("d"),
-                    (-F.col("__cid")).alias("c"),
-                ),
-            ).alias("__cell"),
-            F.first("__v").alias("__v"),
-        )
-    )
+    normed, cents, assigned = _ivf_cells(emb, n_centroids, id_col, vec_col)
     # probe list: the query's top-nprobe centroids
     qv = normed.filter(F.col("__id") == query_id).select(F.col("__v").alias("__qv"))
     probes = (
         cents.crossJoin(F.broadcast(qv))
-        .select("__cid", _dot(F.col("__cv"), F.col("__qv")).alias("__cd"))
+        .select("__cid", dot(F.col("__cv"), F.col("__qv")).alias("__cd"))
         .orderBy(F.desc("__cd"), F.col("__cid"))
         .limit(nprobe)
         .select("__cid")
     )
     # exact rescore within probed cells only
-    return (
+    rows = (
         assigned.join(F.broadcast(probes), assigned["__cell"] == probes["__cid"])
         .crossJoin(F.broadcast(qv))
         .filter(F.col("__id") != query_id)
-        .select(
-            F.col("__id").alias(id_col),
-            F.round(_dot(F.col("__v"), F.col("__qv")), 6).alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.col(id_col))
-        .limit(k)
     )
+    return _top_k(rows, dot(F.col("__v"), F.col("__qv")), k, id_col, src_id="__id")
 
 
 def embedding_norm_histogram(
@@ -679,29 +623,22 @@ def embedding_norm_histogram(
     )
 
 
-def embedding_covariance(
-    emb: DataFrame, vec_col: str = "embedding", *, scale: int = 4
-) -> DataFrame:
-    """(i, j, n, cov): upper-triangle (1-based, i <= j) sample covariance
-    of the embedding coordinates — the distributed X^T X (Gram) pass that
-    PCA / whitening / SemDeDup preprocessing starts from.
+def _gram_partials(
+    emb: DataFrame, vec_col: str, scale: int
+) -> tuple[int, DataFrame]:
+    """(d, parts): the embedding width and the per-Arrow-batch Gram
+    partials (i, j, q, si, sj, n) that :func:`embedding_covariance` and
+    :func:`gram_power_iteration_eigen` reduce with an (i, j) groupBy.
 
-    Physical shape: `mapInPandas` computes each Arrow batch's partial
-    Gram as ONE int64 numpy matmul on 10^scale-scaled rounded
-    coordinates and emits d(d+1)/2 partial rows; an (i, j)-keyed groupBy
-    sums the partials — the map-side combine IS the distributed matrix
-    multiply, and the shuffle moves d(d+1)/2 rows per batch regardless
-    of corpus size. No driver-side matrix ever exists.
-
-    Exactness bridge to the oracle: a float32 coordinate times 10^4 fits
-    float64's mantissa exactly (24 + 14 bits < 53), so np.rint equals
-    the oracle's DECIMAL(_,4) cast bit-for-bit (an exact half at 4 dp is
-    not a binary fraction, so neither engine's tie rule ever fires);
-    partials reduce as DECIMAL(38,0) so row count can't overflow the
-    int64 batch partials; the single float conversion is the last step.
-    int64 partial headroom: |x| <= 10^scale * max|v|, one batch of B
-    rows needs B * (10^scale * max|v|)^2 < 2^63 — at scale 4, |v| <= 2,
-    that is ~23M rows per batch; lower `scale` if coordinates are large.
+    Coordinates snap to the integer grid floor(x * 10^scale + 0.5) — the
+    numpy spelling of `functions.round_half_up`, the same IEEE
+    multiply-add-floor on the same float64 values, so the integers equal
+    the oracles' FLOOR(x*1e4 + 0.5) bit-for-bit, exact halves included.
+    Each batch then yields its d(d+1)/2 upper-triangle (1-based, i <= j)
+    rows from ONE int64 matmul: q = sum x_i x_j, si/sj = the coordinate
+    sums, n = the batch's row count. The shuffle moves d(d+1)/2 rows per
+    batch regardless of corpus size, and integer sums are order-free.
+    EAGER: one bounded one-row probe reads the width.
     """
     import numpy as np
     import pandas as pd
@@ -711,17 +648,19 @@ def embedding_covariance(
 
     def part(batches):
         iu = np.triu_indices(d)
+        i_out = (iu[0] + 1).astype("int32")
+        j_out = (iu[1] + 1).astype("int32")
         for pdf in batches:
             if pdf.empty:
                 continue
             m = np.stack(pdf["__v"].to_numpy()).astype("float64")
-            x = np.rint(m * mult).astype("int64")
+            x = np.floor(m * mult + 0.5).astype("int64")
             q = x.T @ x
             s = x.sum(axis=0)
             yield pd.DataFrame(
                 {
-                    "i": (iu[0] + 1).astype("int32"),
-                    "j": (iu[1] + 1).astype("int32"),
+                    "i": i_out,
+                    "j": j_out,
                     "q": q[iu],
                     "si": s[iu[0]],
                     "sj": s[iu[1]],
@@ -732,6 +671,37 @@ def embedding_covariance(
     parts = emb.select(F.col(vec_col).alias("__v")).mapInPandas(
         part, "i int, j int, q long, si long, sj long, n long"
     )
+    return d, parts
+
+
+def embedding_covariance(
+    emb: DataFrame, vec_col: str = "embedding", *, scale: int = 4
+) -> DataFrame:
+    """(i, j, n, cov): upper-triangle (1-based, i <= j) sample covariance
+    of the embedding coordinates — the distributed X^T X (Gram) pass that
+    PCA / whitening / SemDeDup preprocessing starts from.
+
+    Physical shape: :func:`_gram_partials` computes each Arrow batch's
+    partial Gram as ONE int64 numpy matmul on 10^scale-scaled rounded
+    coordinates and emits d(d+1)/2 partial rows; an (i, j)-keyed groupBy
+    sums the partials — the map-side combine IS the distributed matrix
+    multiply, and the shuffle moves d(d+1)/2 rows per batch regardless
+    of corpus size. No driver-side matrix ever exists.
+
+    Exactness bridge to the oracle: a float32 coordinate times 10^4 fits
+    float64's mantissa exactly (24 + 14 bits < 53), so the scaled value
+    is exact — and it IS an exact half whenever the coordinate is an odd
+    multiple of 1/32 (1e4/32 = 312.5). The tie rule therefore matters:
+    the partials and the oracle both round half up (floor(x*1e4 + 0.5)),
+    where a half-even rint or DuckDB's float->decimal cast would not
+    agree. Partials reduce as DECIMAL(38,0) so row count can't overflow
+    the int64 batch partials; the single float conversion is the last
+    step. int64 partial headroom: |x| <= 10^scale * max|v|, one batch of
+    B rows needs B * (10^scale * max|v|)^2 < 2^63 — at scale 4, |v| <= 2,
+    that is ~23M rows per batch; lower `scale` if coordinates are large.
+    """
+    _, parts = _gram_partials(emb, vec_col, scale)
+    mult = float(10**scale)
     agg = parts.groupBy("i", "j").agg(
         F.sum(F.col("q").cast("decimal(38,0)")).alias("__q"),
         F.sum(F.col("si").cast("decimal(38,0)")).alias("__si"),
@@ -744,14 +714,37 @@ def embedding_covariance(
         / (F.col("__n") * (F.col("__n") - 1)).cast("double")
         / F.lit(mult * mult)
     )
-    # floor(x*1e6 + 0.5)/1e6 instead of engine ROUND: identical written
-    # float order both engines (see analytics.bollinger_bands)
     return agg.select(
         "i",
         "j",
         F.col("__n").cast("bigint").alias("n"),
-        (F.floor(cov * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("cov"),
+        round6(cov).alias("cov"),
     )
+
+
+def _label_coordinate_sums(
+    emb: DataFrame, label_col: str, vec_col: str, scale: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(coords, sums, counts) for the per-label embedding geometry
+    operators (:func:`label_centroid_separation`,
+    `clustering.calinski_harabasz`): `coords` is (__l, __p, __x), every
+    coordinate posexploded map-side onto the exact DECIMAL(28,0) grid
+    floor(x * 10^scale + 0.5); `sums` is (__l, __p, __s), the
+    per-(label, coordinate) sums (one keyed groupBy of labels x d rows);
+    `counts` is (__l, __n), the rows per label."""
+    pe = F.posexplode(F.col(vec_col))
+    coords = emb.select(F.col(label_col).alias("__l"), pe).select(
+        "__l",
+        F.col("pos").alias("__p"),
+        round_half_up(F.col("col").cast("double") * F.lit(float(10**scale)))
+        .cast("decimal(28,0)")
+        .alias("__x"),
+    )
+    sums = coords.groupBy("__l", "__p").agg(F.sum("__x").alias("__s"))
+    counts = emb.groupBy(F.col(label_col).alias("__l")).agg(
+        F.count("*").cast("bigint").alias("__n")
+    )
+    return coords, sums, counts
 
 
 def label_centroid_separation(
@@ -769,23 +762,11 @@ def label_centroid_separation(
     Exactness: cosine(mean_a, mean_b) == cosine(sum_a, sum_b) (the 1/n
     scaling cancels), so the whole computation runs on per-(label,
     coordinate) DECIMAL sums of 10^scale-scaled exact-rounded
-    coordinates (posexplode map-side, one keyed groupBy of
-    labels x d rows); the single sqrt/division is the last step. Label
-    pairs are label-cardinality-squared — dimension-table sized.
+    coordinates (:func:`_label_coordinate_sums`); the single
+    sqrt/division is the last step. Label pairs are
+    label-cardinality-squared — dimension-table sized.
     """
-    pe = F.posexplode(F.col(vec_col))
-    scaled = F.floor(
-        F.col("__x").cast("double") * F.lit(float(10**scale)) + F.lit(0.5)
-    ).cast("decimal(28,0)")
-    coords = emb.select(F.col(label_col).alias("__l"), pe).select(
-        "__l", F.col("pos").alias("__p"), F.col("col").alias("__x")
-    )
-    per = coords.groupBy("__l", "__p").agg(
-        F.sum(scaled).alias("__s"),
-    )
-    counts = emb.groupBy(F.col(label_col).alias("__l")).agg(
-        F.count("*").cast("bigint").alias("__n")
-    )
+    _, per, counts = _label_coordinate_sums(emb, label_col, vec_col, scale)
     a = per.select(
         F.col("__l").alias("label_a"), "__p", F.col("__s").alias("__sa")
     )
@@ -813,14 +794,13 @@ def label_centroid_separation(
         )
     )
     cos = F.col("__dot") / (F.sqrt(F.col("__qa")) * F.sqrt(F.col("__qb")))
-    # floor(x*1e6 + 0.5)/1e6: irrational output — engine-native ROUNDs
-    # disagree at double-repr halves (see analytics.bollinger_bands)
+    # round6, not engine ROUND: irrational output
     return out.select(
         "label_a",
         "label_b",
         "n_a",
         "n_b",
-        (F.floor(cos * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("cos"),
+        round6(cos).alias("cos"),
     ).orderBy("label_a", "label_b")
 
 
@@ -872,17 +852,10 @@ def cosine_pairs_lsh_portable(
     signs = rademacher_planes(dim, n_planes, seed)
     v = to_double_array(vec_col)
 
-    def dot_j(j: int):
-        sa = F.array(*[F.lit(s) for s in signs[j]])
-        return F.aggregate(
-            F.zip_with(v, sa, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     bucket = None
     for j in range(n_planes):
-        term = F.when(dot_j(j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
+        plane = F.array(*[F.lit(s) for s in signs[j]])
+        term = F.when(dot(v, plane) > 0, F.lit(1 << j)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
     # cut: the self-join's sides are independent AQE leaf stages and
     # would each recompute the n_planes sign folds
@@ -930,7 +903,7 @@ def embedding_dim_stats(
     )
     q = d.select(
         "dim",
-        F.floor(F.col("x") * F.lit(quant) + F.lit(0.5)).alias("__q"),
+        round_half_up(F.col("x") * F.lit(quant)).alias("__q"),
     )
     agg = q.groupBy("dim").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1058,45 +1031,15 @@ def gram_power_iteration_eigen(
     max-normalization is order-free. The eigenvalue descales by
     10^(2*scale) at the end.
 
-    The Gram builds via mapInPandas integer-GEMM partials (the
-    :func:`embedding_covariance` shape): one int64 matmul per Arrow
-    batch emits d(d+1)/2 partial rows, an (i, j) groupBy sums them —
-    the shuffle moves d(d+1)/2 rows per batch regardless of corpus
-    size, and the integers (hence the folds and the oracle hash) are
-    identical to the coordinate-pair-join formulation it replaced.
+    The Gram builds from :func:`_gram_partials` (the partials
+    :func:`embedding_covariance` reduces; this arm reads only q): one
+    int64 matmul per Arrow batch emits d(d+1)/2 partial rows, an (i, j)
+    groupBy sums them — the shuffle moves d(d+1)/2 rows per batch
+    regardless of corpus size.
     """
-    import numpy as np
-    import pandas as pd
-
-    d = len(emb.select(vec_col).first()[0])
+    d, parts = _gram_partials(emb, vec_col, scale)
     mult = 10**scale
-    mult_f = float(mult)
-
-    # Gram build as mapInPandas integer-GEMM partials (the docstring's
-    # documented 100 TB form, now the only form): each Arrow batch yields
-    # its d(d+1)/2 upper-triangle partial sums from ONE int64 matmul, and
-    # the (i, j) groupBy sums the partials. The previous coordinate pair
-    # join (posexplode -> self-join on the row id -> filter i <= j)
-    # shuffled n*d(d+1)/2 rows (41.6M at sf0.1's 20k x 64) to produce the
-    # same 2080 integers. Bit-identical by construction: q =
-    # floor(x * 10^scale + 0.5) is the same IEEE multiply-add-floor on the
-    # same float64 coordinates, and integer sums are order-free.
-    def gram_part(batches):
-        iu = np.triu_indices(d)
-        i_out = (iu[0] + 1).astype("int32")
-        j_out = (iu[1] + 1).astype("int32")
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["__v"].to_numpy()).astype("float64")
-            x = np.floor(m * mult_f + 0.5).astype("int64")
-            g = x.T @ x
-            yield pd.DataFrame({"i": i_out, "j": j_out, "v": g[iu]})
-
-    parts = emb.select(to_double_array(F.col(vec_col)).alias("__v")).mapInPandas(
-        gram_part, "i int, j int, v long"
-    )
-    upper = parts.groupBy("i", "j").agg(F.sum("v").cast("bigint").alias("v"))
+    upper = parts.groupBy("i", "j").agg(F.sum("q").cast("bigint").alias("v"))
     full_g = upper.unionAll(
         upper.filter(F.col("i") != F.col("j")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "v"
@@ -1115,13 +1058,7 @@ def gram_power_iteration_eigen(
         y = cur.select(
             "i",
             "row_v",
-            F.aggregate(
-                F.zip_with(
-                    F.col("row_v"), F.col("__x"), lambda r, xx: r * xx
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).alias("__y"),
+            dot(F.col("row_v"), F.col("__x")).alias("__y"),
         )
         norm = y.agg(
             F.max(F.abs(F.col("__y"))).alias("__m"),

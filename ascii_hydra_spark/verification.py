@@ -10176,10 +10176,10 @@ def bollinger_daily_revenue(spark, sf_dir):
     """
     WITH pos AS (SELECT CAST(range AS INT) AS p FROM range(1, 65)),
     -- FLOOR(double*1e4 + 0.5), NOT CAST(.. AS DECIMAL): DuckDB's
-    -- float->decimal cast rounds the float's SHORTEST repr (which can
-    -- be an exact .5 at 4 dp) while the engine rounds the true binary
-    -- value; float32*1e4 is exact in float64 and true ties are
-    -- impossible, so this formulation is the bit-exact one
+    -- float->decimal cast rounds the float's SHORTEST repr while the
+    -- engine rounds the true binary value; float32*1e4 is exact in
+    -- float64, and it is a true .5 tie for every odd multiple of 1/32,
+    -- which this formulation and the engine's partials both round up
     v AS (
         SELECT vec_id, p,
                CAST(FLOOR(CAST(embedding[p] AS DOUBLE) * 10000.0 + 0.5)

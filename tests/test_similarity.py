@@ -7,6 +7,8 @@ the scale arms: LSH pair output is a subset of the exact pairs (precision
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from ascii_hydra_spark.operators import similarity
@@ -60,6 +62,51 @@ def test_persisted_ivf_index_prunes_partitions(spark, sf_dir, tmp_path):
         hits._jdf.queryExecution(), "simple"
     )
     assert "PartitionFilters" in plan and "__cell" in plan.split("PartitionFilters")[1][:200]
+
+
+def test_persisted_ivf_index_breaks_ties_to_lowest_cell(spark, sf_dir, tmp_path):
+    """Seed vectors 0 and 1 are identical, so every vector nearest to them
+    ties EXACTLY on dot; the persisted index must resolve that tie the way
+    cosine_topk_ivf and its oracle do — (dot DESC, cid ASC), i.e. cell 0
+    — and every other vector must land in its argmax cell."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    v0 = emb.filter("vec_id = 0").select("embedding")
+    dup = emb.crossJoin(v0.withColumnRenamed("embedding", "__e0")).select(
+        "vec_id",
+        F.when(F.col("vec_id") == 1, F.col("__e0"))
+        .otherwise(F.col("embedding"))
+        .alias("embedding"),
+    )
+    path = str(tmp_path / "tied")
+    similarity.build_ivf_index(dup, path, n_centroids=3)
+    cells = {
+        r["__id"]: r["__cell"]
+        for r in spark.read.parquet(path).select("__id", "__cell").collect()
+    }
+
+    def sum_seq(xs):
+        # the engine's left fold (builtin sum() compensates from Python 3.12)
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    def unit(v):
+        norm = math.sqrt(sum_seq(x * x for x in v))
+        return [x / norm for x in v]
+
+    vecs = {r.vec_id: unit([float(x) for x in r.embedding]) for r in dup.collect()}
+    cents = [vecs[c] for c in range(3)]
+    expected = {
+        i: min(
+            range(3),
+            key=lambda c: (-sum_seq(a * b for a, b in zip(v, cents[c])), c),
+        )
+        for i, v in vecs.items()
+    }
+    assert cells == expected
+    assert 1 not in cells.values()
+    assert sum(1 for c in cells.values() if c == 0) > 2  # the tie really fires
 
 
 def test_cosine_topk_constant_query(spark, sf_dir):
@@ -215,6 +262,31 @@ def test_embedding_covariance_closed_form(spark):
     assert out[(2, 2)] == (3, 4.0)
     assert out[(1, 2)] == (3, 4.0)
     assert (2, 1) not in out  # upper triangle only
+
+    # odd multiples of 1/32 scale to an exact .5 at 4 dp (1e4/32 = 312.5):
+    # the Gram partials must round them half up, as the oracle's
+    # FLOOR(x*1e4 + 0.5) does, not half to even
+    rows = [(1, [0.03125, 0.5]), (2, [0.0, 0.25]), (3, [0.09375, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    out = {
+        (r["i"], r["j"]): (r["n"], r["cov"])
+        for r in similarity.embedding_covariance(emb, "embedding").collect()
+    }
+    # the oracle's formula, replayed in Python
+    x = [[math.floor(c * 1e4 + 0.5) for c in v] for _, v in rows]
+    n = len(x)
+
+    def cov(i, j):
+        q = sum(r[i] * r[j] for r in x)
+        si, sj = sum(r[i] for r in x), sum(r[j] for r in x)
+        c = (n * q - si * sj) / (n * (n - 1)) / 1e8
+        return math.floor(c * 1e6 + 0.5) / 1e6
+
+    assert x[0][0] == 313 and x[2][0] == 938  # the two halves, rounded up
+    for i, j in ((0, 0), (0, 1), (1, 1)):
+        assert out[(i + 1, j + 1)] == (3, cov(i, j))
+    assert out[(1, 1)][1] == 0.002281
+    assert out[(1, 2)][1] == -0.007812
 
 
 def test_embedding_covariance_partition_invariant(spark):
