@@ -122,11 +122,18 @@ class Catalog:
         ANALYZE, so CBO is inert there; we make it real. ANALYZE only works
         on catalog tables (not temp views), so each dataset is registered as
         an external parquet table first; SQL that resolves these names gets
-        CBO cardinalities.
+        CBO cardinalities. A table with a fixture normalizer is then shadowed
+        by a temp view of the normalized table, so its names keep the types
+        `load()` gives (the raw events `ts` reads as TIMESTAMP_NTZ or as a
+        ns-epoch long) while the plan still scans the analyzed table.
         """
         for n in names:
             spark.sql(f"DROP VIEW IF EXISTS {n}")
             spark.sql(f"DROP TABLE IF EXISTS {n}")
             spark.sql(f"CREATE TABLE {n} USING parquet LOCATION '{self.path(n)}'")
             spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS")
+            norm = _NORMALIZERS.get(n)
+            if norm:
+                table = f"spark_catalog.{spark.catalog.currentDatabase()}.{n}"
+                norm(spark.table(table)).createOrReplaceTempView(n)
 

@@ -61,12 +61,12 @@ def round6(x: Column) -> Column:
 
 # ---------------------------------------------------------------- aggregates
 
-def dsum(col: Column | str, scale: int = 2) -> Column:
-    """Decimal-accumulated sum, surfaced as double: exact and
+def dsum(col: Column | str) -> Column:
+    """DECIMAL(18,2)-accumulated sum, surfaced as double: exact and
     independent of partition order, so it is deterministic across
     engines."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
+    return F.sum(c.cast("decimal(18,2)")).cast("double")
 
 
 # ---------------------------------------------------------------- text
@@ -151,8 +151,9 @@ def md5_int60(value: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def rolling_fingerprint(text: Column | str, base: int = 257, mod: int = 1_000_000_007) -> Column:
-    """Polynomial rolling hash over characters: fold(acc*B + code) % M.
+def rolling_fingerprint(text: Column | str) -> Column:
+    """Polynomial rolling hash over characters: fold(acc*257 + code) %
+    1_000_000_007.
 
     Deterministic and cheap; stays in codegen via aggregate over the char
     array. Used for content-defined chunk fingerprints.
@@ -162,7 +163,7 @@ def rolling_fingerprint(text: Column | str, base: int = 257, mod: int = 1_000_00
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
+        lambda acc, ch: (acc * 257 + F.ascii(ch)) % 1_000_000_007,
     )
 
 
@@ -347,8 +348,8 @@ def luhn_valid(digits: Column | str) -> Column:
     return F.call_function("luhn_check", c)
 
 
-def zorder_key(x: Column | str, y: Column | str, bits: int = 16) -> Column:
-    """Morton (Z-order) key: interleave the low `bits` of two non-negative
+def zorder_key(x: Column | str, y: Column | str) -> Column:
+    """Morton (Z-order) key: interleave the low 16 bits of two non-negative
     int columns into one sort key. Sorting/clustering files by this key
     gives row-group min/max locality in BOTH dimensions at once — the
     open-format stand-in for Delta OPTIMIZE ZORDER. Plan-time unrolled
@@ -358,7 +359,7 @@ def zorder_key(x: Column | str, y: Column | str, bits: int = 16) -> Column:
     cx = (F.col(x) if isinstance(x, str) else x).cast("long")
     cy = (F.col(y) if isinstance(y, str) else y).cast("long")
     key = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(16):
         key = (
             key
             + F.shiftleft(F.shiftright(cx, b).bitwiseAND(F.lit(1)), 2 * b)

@@ -39,17 +39,17 @@ def weighted_mean(values: pd.Series, weights: pd.Series) -> float:
     return float((values * weights).sum() / weights.sum())
 
 
-def make_minhash_udf(num_hashes: int, shingle_k: int, seed: int = 42):
+def make_minhash_udf(num_hashes: int, shingle_k: int):
     """Factory for the per-document MinHash signature UDF.
 
     Whole signature in one Arrow batch pass: char-k-shingles via a numpy
     sliding window over the utf-8 bytes, a Horner polynomial base hash mod
     the Mersenne prime 2^31-1, then `num_hashes` universal-hash mins
-    computed as one (H x n_shingles) affine transform + min-reduce. This is
-    a pure per-row map — no explode, no shuffle — so at 100 TB the
-    signature stage costs one scan of the corpus (contrast: exploding
-    shingles multiplies the row count by ~doc_length before aggregating
-    back down).
+    computed as one (H x n_shingles) affine transform + min-reduce (the
+    coefficients come from RandomState(42)). This is a pure per-row map — no
+    explode, no shuffle — so at 100 TB the signature stage costs one scan of
+    the corpus (contrast: exploding shingles multiplies the row count by
+    ~doc_length before aggregating back down).
 
     All arithmetic stays below 2^62 (a_i < P = 2^31-1, h < P), so values
     are exact in int64 — deterministic across runs, batch sizes, and
@@ -60,7 +60,7 @@ def make_minhash_udf(num_hashes: int, shingle_k: int, seed: int = 42):
     import numpy as np
 
     p = 2147483647  # 2^31 - 1
-    rs = np.random.RandomState(seed)
+    rs = np.random.RandomState(42)
     a = rs.randint(1, p, size=num_hashes).astype(np.int64)
     b = rs.randint(0, p, size=num_hashes).astype(np.int64)
 
@@ -113,24 +113,25 @@ def make_minhash_udf(num_hashes: int, shingle_k: int, seed: int = 42):
     return minhash_sig
 
 
-def make_cdc_chunk_udf(window: int = 8, target_chunk: int = 64, seed: int = 42):
+def make_cdc_chunk_udf():
     """Factory for the content-defined-chunking UDF: text -> array<long> of
     chunk fingerprints.
 
-    Boundaries are where a rolling hash of the last `window` bytes hits
-    `h % target_chunk == 0` — so they are defined by CONTENT, not offsets:
-    inserting text into a document shifts every byte offset but leaves the
-    chunk fingerprints outside the edit untouched. That is what makes
+    Boundaries are where a rolling hash of the last 8 bytes hits
+    `h % 64 == 0` — so they are defined by CONTENT, not offsets: inserting
+    text into a document shifts every byte offset but leaves the chunk
+    fingerprints outside the edit untouched. That is what makes
     chunk-overlap a partial-duplicate (containment/quotation) signal that
-    whole-document fingerprints cannot provide. Expected chunk length ~=
-    target_chunk bytes. Fully vectorized per Arrow batch: sliding-window
-    polynomial hashes (as in MinHash), boundary mask, add.reduceat per
-    chunk; fingerprint = (chunk-hash-sum * 131 + chunk_len) % p, exact in
-    int64 and independent of batch/partition boundaries.
+    whole-document fingerprints cannot provide. Expected chunk length ~= 64
+    bytes. Fully vectorized per Arrow batch: sliding-window polynomial
+    hashes (as in MinHash), boundary mask, add.reduceat per chunk;
+    fingerprint = (chunk-hash-sum * 131 + chunk_len) % p, exact in int64
+    and independent of batch/partition boundaries.
     """
     import numpy as np
 
     p = 2147483647  # 2^31 - 1
+    window, target_chunk = 8, 64
 
     @pandas_udf(ArrayType(LongType()))
     def cdc_chunks(texts: pd.Series) -> pd.Series:

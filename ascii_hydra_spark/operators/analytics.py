@@ -290,19 +290,17 @@ def time_to_convert(
     user_col: str = "user_id",
     ts_col: str = "ts",
     tiebreak: str = "event_id",
-    from_type: str = "view",
-    to_type: str = "purchase",
     type_col: str = "event_type",
 ) -> DataFrame:
     """One row (n_from, n_converted, conv_rate, p50_s, p90_s): funnel
-    LATENCY — for each user, the gap between their first `from_type`
-    event and the first `to_type` event at-or-after it, summarized as a
-    conversion rate plus exact interpolated latency percentiles.
+    LATENCY — for each user, the gap between their first 'view' event and
+    the first 'purchase' event at-or-after it, summarized as a conversion
+    rate plus exact interpolated latency percentiles.
 
-    Join-free single-shuffle shape: a running min-of-from-event window
-    keyed by user tags every later row with the user's first `from_type`
-    time; the per-user aggregate (same partitioning, no second exchange)
-    takes the minimum gap over qualifying `to_type` rows. No broadcast of
+    Join-free single-shuffle shape: a running min-of-view window keyed by
+    user tags every later row with the user's first view time; the
+    per-user aggregate (same partitioning, no second exchange) takes the
+    minimum gap over qualifying purchase rows. No broadcast of
     anything user-sized — per-user state stays on its shuffle partition.
     Gaps are exact integer microseconds converted once; the percentile is
     Spark's exact `percentile` ≡ DuckDB `QUANTILE_CONT` (swap
@@ -317,7 +315,7 @@ def time_to_convert(
     w = keyed_window([user_col], [F.col(ts_col), F.col(tiebreak)]).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    v_run = F.min(F.when(F.col(type_col) == from_type, us)).over(w)
+    v_run = F.min(F.when(F.col(type_col) == "view", us)).over(w)
     tagged = events.select(
         F.col(user_col),
         F.col(type_col),
@@ -325,10 +323,10 @@ def time_to_convert(
         v_run.alias("__v"),
     )
     per_user = tagged.groupBy(user_col).agg(
-        F.max(F.col(type_col) == from_type).alias("__has_from"),
+        F.max(F.col(type_col) == "view").alias("__has_from"),
         F.min(
             F.when(
-                (F.col(type_col) == to_type) & F.col("__v").isNotNull(),
+                (F.col(type_col) == "purchase") & F.col("__v").isNotNull(),
                 F.col("__us") - F.col("__v"),
             )
         ).alias("__gap_us"),
@@ -726,8 +724,6 @@ def cuped_adjusted_ab(
     group_col: str,
     pre_col: str,
     post_col: str,
-    *,
-    scale: int = 2,
 ) -> DataFrame:
     """One row (n_a, n_b, raw_diff, adjusted_diff, theta,
     var_reduction): CUPED variance reduction (Deng et al. 2013, the
@@ -737,7 +733,7 @@ def cuped_adjusted_ab(
     theta-adjusted means. Same treatment effect, (1 - rho^2) of the
     variance.
 
-    Moments accumulate as EXACT integer sums in 10^-scale units (the
+    Moments accumulate as EXACT integer sums in cents (the
     cents trick: a decimal cast then one exact scale-up to bigint, so
     sums of squares stay inside int64 instead of tripping the
     wide-decimal->double 2^53 rounding gotcha); every derived float
@@ -749,11 +745,11 @@ def cuped_adjusted_ab(
     """
     ga, _gb = _two_group_labels(df, group_col, "cuped_adjusted_ab")
     is_a = F.col(group_col) == F.lit(ga)
-    m = 10 ** scale
-    x = (F.col(pre_col).cast(f"decimal(18,{scale})") * F.lit(m)).cast(
+    m = 100
+    x = (F.col(pre_col).cast("decimal(18,2)") * F.lit(m)).cast(
         "bigint"
     )
-    y = (F.col(post_col).cast(f"decimal(18,{scale})") * F.lit(m)).cast(
+    y = (F.col(post_col).cast("decimal(18,2)") * F.lit(m)).cast(
         "bigint"
     )
     agg = df.agg(
@@ -1233,7 +1229,6 @@ def quantile_normalize(
     group_col: str,
     value_col: str,
     id_col: str,
-    scale: int = 4,
     out_col: str = "value_norm",
 ) -> DataFrame:
     """Per-row quantile normalization across groups: the row holding
@@ -1252,13 +1247,13 @@ def quantile_normalize(
       :func:`distrank.global_row_number` under (value, id); the rank
       lookup is a plain equi-join on the rank integer.
 
-    Requires value_col exactly representable at `scale` decimals
-    (cast decimal upstream) and |value| < 10^(12-scale); r*N must fit
+    Requires value_col exactly representable at 4 decimals
+    (cast decimal upstream) and |value| < 10^8; r*N must fit
     a bigint (documented ~3e9-row bound, decimal-widen beyond). NULL
     values AND NULL groups are dropped.
     """
     e2, counts = _grouped_value_counts(
-        df, group_col, value_col, scale, {"__id": F.col(id_col)}
+        df, group_col, value_col, 4, {"__id": F.col(id_col)}
     )
     base = counts.select(
         "__g",
@@ -1301,7 +1296,6 @@ def grouped_exact_median(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    scale: int = 4,
 ) -> DataFrame:
     """Per-group EXACT median (interpolated at even counts, matching
     SQL quantile_cont(0.5)) with no per-group window: the
@@ -1313,12 +1307,12 @@ def grouped_exact_median(
     per-(group, value) counts). The median ranks lo = (n+1)//2 and
     hi = n//2 + 1 are then found by a plain conditional MIN over the
     distinct-value grain — every data-sized stage parallel. Value must
-    be exactly representable at `scale` decimals; NULL values AND
+    be exactly representable at 4 decimals; NULL values AND
     NULL groups are dropped.
     Returns (group, n, median) with median = (x_lo + x_hi)/2 computed
     in decimal before one double cast.
     """
-    _, j = _grouped_value_counts(df, group_col, value_col, scale)
+    _, j = _grouped_value_counts(df, group_col, value_col, 4)
     lo_t = F.expr("(__ng + 1) div 2")
     hi_t = F.expr("__ng div 2 + 1")
     picked = j.groupBy("__g").agg(
@@ -1667,13 +1661,13 @@ def rolling_active_entities(
 
 
 def mad_outliers(
-    df: DataFrame, group_col: str, value_col: str, k: float = 3.0
+    df: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
     """Per group (group, n, median_v, mad, n_outliers): robust outlier
     gate using the median / MAD scale instead of mean / stddev — immune
     to the very outliers it hunts (a single 1e9 row inflates a z-score
     sigma until nothing is an outlier; it barely moves the MAD).
-    Outlier = |x - median| > k * 1.4826 * MAD (1.4826 scales MAD to
+    Outlier = |x - median| > 3 * 1.4826 * MAD (1.4826 scales MAD to
     sigma-equivalent under normality).
 
     Two exact interpolated-percentile passes (the driver-proven
@@ -1692,7 +1686,7 @@ def mad_outliers(
         "__d", F.abs(F.col("__x") - F.col("__med"))
     )
     mad = dev.groupBy("grp").agg(F.expr("percentile(__d, 0.5)").alias("__mad"))
-    thresh = F.lit(float(k)) * F.lit(1.4826) * F.col("__mad")
+    thresh = F.lit(3.0) * F.lit(1.4826) * F.col("__mad")
     return (
         dev.join(F.broadcast(mad), "grp")
         .groupBy("grp")
@@ -1833,7 +1827,7 @@ def cusum_changepoint(
 
 
 def welch_ttest(
-    df: DataFrame, group_col: str, value_col: str, *, scale: int = 2
+    df: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
     """One row (n_a, n_b, mean_a, mean_b, t, dof): Welch's unequal-
     variance t-test between exactly two groups — the parametric A/B
@@ -1841,7 +1835,7 @@ def welch_ttest(
     (1947) drops the pooled-variance assumption, so unbalanced arms with
     different spreads stay honest.
 
-    Determinism: values accumulate as DECIMAL(18,scale) (sums) and their
+    Determinism: values accumulate as DECIMAL(18,2) (sums) and their
     exact decimal squares (sums of squares), so partition order cannot
     move a bit; every derived float (mean, variance, t, the Welch-
     Satterthwaite dof) follows ONE written operation order mirrored in
@@ -1853,7 +1847,7 @@ def welch_ttest(
     """
     ga, _gb = _two_group_labels(df, group_col, "welch_ttest")
     is_a = F.col(group_col) == F.lit(ga)
-    x = F.col(value_col).cast(f"decimal(18,{scale})")
+    x = F.col(value_col).cast("decimal(18,2)")
     xx = x * x
     agg = df.agg(
         F.sum(F.when(is_a, 1).otherwise(0)).cast("bigint").alias("__na"),
@@ -1893,7 +1887,6 @@ def lagged_crosscorr(
     y_col: str,
     *,
     max_lag: int = 3,
-    scale: int = 4,
 ) -> DataFrame:
     """(lag, n_days, r): Pearson cross-correlation between x(t) and
     y(t + lag) for lag = 0..max_lag — the leading-indicator scan ("does
@@ -1904,13 +1897,13 @@ def lagged_crosscorr(
 
     The x side explodes its lag fan-out map-side (sequence + explode, no
     driver loop), joins y on the shifted calendar day, and reduces per
-    lag. All five correlation sums accumulate as exact DECIMAL(18,scale)
+    lag. All five correlation sums accumulate as exact DECIMAL(18,4)
     products, so r = (n*sxy - sx*sy) / (sqrt(n*sxx - sx*sx) *
     sqrt(n*syy - sy*sy)) sees identical inputs on any partitioning; the
     float expression follows that single written order, 6-dp-rounded.
     """
-    dx = F.col(x_col).cast(f"decimal(18,{scale})")
-    dy = F.col(y_col).cast(f"decimal(18,{scale})")
+    dx = F.col(x_col).cast("decimal(18,4)")
+    dy = F.col(y_col).cast("decimal(18,4)")
     lx = xs.select(
         F.explode(F.sequence(F.lit(0), F.lit(max_lag))).alias("lag"),
         F.col(day_col).cast("date").alias("__d"),
@@ -2008,11 +2001,9 @@ def bollinger_bands(
     value_col: str,
     *,
     window_days: int = 7,
-    n_sigma: float = 2.0,
-    scale: int = 2,
 ) -> DataFrame:
     """(day, n_window, mid, upper, lower, breakout): rolling mean +/-
-    n_sigma rolling sample-std bands over a calendar RANGE frame (gaps
+    2 rolling sample-std bands over a calendar RANGE frame (gaps
     count as absent days, not missing rows) — the volatility-band
     breakout monitor, day-grain twin of the per-entity z-score gate.
 
@@ -2024,7 +2015,7 @@ def bollinger_bands(
     Days with fewer than 2 frame rows carry NULL bands (sample std
     undefined), never a divide-by-zero.
     """
-    v = F.col(value_col).cast(f"decimal(18,{scale})")
+    v = F.col(value_col).cast("decimal(18,2)")
     epoch_day = F.datediff(F.col(day_col), F.lit("1970-01-01"))
     based = daily.select(
         F.col(day_col).alias("day"),
@@ -2051,8 +2042,8 @@ def bollinger_bands(
             (F.col("__q") - F.col("__s") * F.col("__s") / n) / (n - F.lit(1.0))
         ),
     )
-    upper = mid + F.lit(n_sigma) * std
-    lower = mid - F.lit(n_sigma) * std
+    upper = mid + F.lit(2.0) * std
+    lower = mid - F.lit(2.0) * std
 
     # round6, NOT engine ROUND: the bands are irrational (sqrt)
     return framed.select(
@@ -2091,14 +2082,14 @@ def cumulative_distinct_by_day(
 
 
 def weighted_median(
-    df: DataFrame, value_col: str, weight_col: str, *, scale: int = 2
+    df: DataFrame, value_col: str, weight_col: str
 ) -> DataFrame:
     """One row (total_weight, weighted_median): smallest value whose
     cumulative weight reaches half the total — the weighted quantile
     primitive (plain median treats a 10,000-unit line item like a
     1-unit one).
 
-    Weights accumulate as DECIMAL(18,scale) and the half-total test is
+    Weights accumulate as DECIMAL(18,2) and the half-total test is
     the integer-space cross-multiplication (2*cumw >= total), so no
     float division can move the pick; cumulative weights ride
     :func:`distrank.global_running_sums` over DISTINCT values
@@ -2106,7 +2097,7 @@ def weighted_median(
     values never single-partition), and the pick is a TakeOrdered
     limit 1.
     """
-    w_ = F.col(weight_col).cast(f"decimal(18,{scale})")
+    w_ = F.col(weight_col).cast("decimal(18,2)")
     byv = df.groupBy(F.col(value_col).alias("v")).agg(
         F.sum(w_).alias("__w")
     )
@@ -2146,9 +2137,6 @@ def poisson_bootstrap_ci(
     id_col: str,
     *,
     replicates: int = 100,
-    lo: float = 0.025,
-    hi: float = 0.975,
-    scale: int = 2,
 ) -> DataFrame:
     """One row (replicates, mean_point, ci_lo, ci_hi): a bootstrap
     confidence interval for the mean with DETERMINISTIC Poisson(1)
@@ -2161,11 +2149,12 @@ def poisson_bootstrap_ci(
     Entity-level-input contract (the replicate fan-out is B x rows —
     feed per-entity aggregates). Values accumulate as decimals per
     replicate; the replicate means are exact-input doubles; the interval
-    is the exact interpolated percentile over the B means.
+    is the exact interpolated 2.5th-97.5th percentile pair over the B
+    means.
     """
     b = F.explode(F.sequence(F.lit(0), F.lit(replicates - 1))).alias("__b")
     expanded = df.select(
-        F.col(value_col).cast(f"decimal(18,{scale})").alias("__x"),
+        F.col(value_col).cast("decimal(18,2)").alias("__x"),
         F.col(id_col).alias("__id"),
         b,
     )
@@ -2188,13 +2177,13 @@ def poisson_bootstrap_ci(
     )
     point = df.agg(
         (
-            dsum(value_col, scale) / F.count("*").cast("double")
+            dsum(value_col) / F.count("*").cast("double")
         ).alias("__point")
     )
     return per_rep.agg(
         F.count("*").cast("bigint").alias("replicates"),
-        F.round(F.percentile(F.col("__mean"), F.lit(lo)), 6).alias("ci_lo"),
-        F.round(F.percentile(F.col("__mean"), F.lit(hi)), 6).alias("ci_hi"),
+        F.round(F.percentile(F.col("__mean"), F.lit(0.025)), 6).alias("ci_lo"),
+        F.round(F.percentile(F.col("__mean"), F.lit(0.975)), 6).alias("ci_hi"),
     ).crossJoin(F.broadcast(point)).select(
         "replicates",
         F.round(F.col("__point"), 6).alias("mean_point"),
@@ -2251,11 +2240,11 @@ def wasserstein_1d(
 
 
 def k_anonymity_report(
-    df: DataFrame, quasi_cols: "list[str]", *, k: int = 5
+    df: DataFrame, quasi_cols: "list[str]"
 ) -> DataFrame:
     """One row (k, n_rows, n_classes, min_class_size, violating_classes,
-    violating_rows): k-anonymity audit over a quasi-identifier set — a
-    release is k-anonymous iff every equivalence class (distinct
+    violating_rows): k-anonymity audit (k = 5) over a quasi-identifier
+    set — a release is k-anonymous iff every equivalence class (distinct
     quasi-identifier combination) holds >= k rows. The governance gate
     run before sharing "de-identified" data; pairs with the PII
     redaction pass (which removes direct identifiers — this measures
@@ -2266,14 +2255,14 @@ def k_anonymity_report(
     """
     classes = df.groupBy(*quasi_cols).agg(F.count("*").alias("__sz"))
     return classes.agg(
-        F.lit(k).cast("int").alias("k"),
+        F.lit(5).cast("int").alias("k"),
         F.sum("__sz").cast("bigint").alias("n_rows"),
         F.count("*").cast("bigint").alias("n_classes"),
         F.min("__sz").cast("bigint").alias("min_class_size"),
-        F.sum((F.col("__sz") < k).cast("bigint"))
+        F.sum((F.col("__sz") < 5).cast("bigint"))
         .cast("bigint")
         .alias("violating_classes"),
-        F.sum(F.when(F.col("__sz") < k, F.col("__sz")).otherwise(0))
+        F.sum(F.when(F.col("__sz") < 5, F.col("__sz")).otherwise(0))
         .cast("bigint")
         .alias("violating_rows"),
     )
@@ -2283,12 +2272,9 @@ def seasonal_naive_mape(
     daily: DataFrame,
     day_col: str,
     value_col: str,
-    *,
-    season_days: int = 7,
-    scale: int = 2,
 ) -> DataFrame:
     """One row (n_scored, mape, smape): backtest of the seasonal-naive
-    forecast f(d) = value(d - season_days) — the baseline every real
+    forecast f(d) = value(d - 7) — the baseline every real
     forecasting model must beat, and the cheapest drift alarm for a
     daily metric. Scored only on days whose seasonal ancestor exists
     (a calendar self-join on exact epoch-day arithmetic, so gaps score
@@ -2298,12 +2284,12 @@ def seasonal_naive_mape(
     of decimal-exact doubles; the day-bounded mean follows the
     KL-family 6-dp-round convention.
     """
-    v = F.col(value_col).cast(f"decimal(18,{scale})")
+    v = F.col(value_col).cast("decimal(18,2)")
     based = daily.select(
         F.col(day_col).cast("date").alias("__d"), v.alias("__v")
     )
     future = based.select(
-        F.date_sub(F.col("__d"), season_days).alias("__dpast"),
+        F.date_sub(F.col("__d"), 7).alias("__dpast"),
         F.col("__v").alias("__actual"),
     )
     j = future.join(
@@ -2323,7 +2309,7 @@ def seasonal_naive_mape(
 
 
 def anova_oneway(
-    df: DataFrame, group_col: str, value_col: str, *, scale: int = 2
+    df: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
     """One row (k_groups, n, ss_between, ss_within, f_stat): one-way
     ANOVA F — does the mean differ across k groups? The k-group
@@ -2335,7 +2321,7 @@ def anova_oneway(
     SSB = sum_g(s_g^2/n_g) - s^2/n are then k-bounded float sums in one
     written order; F = (SSB/(k-1)) / (SSW/(n-k)) divides last.
     """
-    x = F.col(value_col).cast(f"decimal(18,{scale})")
+    x = F.col(value_col).cast("decimal(18,2)")
     per = df.groupBy(F.col(group_col).alias("__g")).agg(
         F.count("*").alias("__n"),
         F.sum(x).cast("double").alias("__s"),
@@ -2373,7 +2359,6 @@ def hbos_outlier_scores(
     id_col: str,
     feature_cols: "list[str]",
     *,
-    n_bins: int = 10,
     k: int = 20,
 ) -> DataFrame:
     """Top-k (id, score) by histogram-based outlier score (HBOS,
@@ -2384,7 +2369,7 @@ def hbos_outlier_scores(
     histogram) and broadcast joins back, so it runs at fact-table scale
     where k-NN outlier methods can't.
 
-    Bin index = clamp(floor((x - min) / (max - min) * n_bins)) in one
+    Bin index = clamp(floor((x - min) / (max - min) * 10)) in one
     written float order; all densities are exact integers over n; the
     top-k is a TakeOrdered with an id tiebreak.
     """
@@ -2403,10 +2388,10 @@ def hbos_outlier_scores(
         raw = F.floor(
             (F.col(c).cast("double") - F.col(f"__lo_{c}"))
             / span
-            * F.lit(float(n_bins))
+            * F.lit(10.0)
         )
         bin_ = F.when(span == 0.0, F.lit(0)).otherwise(
-            F.least(F.greatest(raw, F.lit(0)), F.lit(n_bins - 1))
+            F.least(F.greatest(raw, F.lit(0)), F.lit(9))
         ).cast("int")
         cur = cur.withColumn(f"__bin_{c}", bin_)
         hist = cur.groupBy(f"__bin_{c}").agg(
@@ -2423,7 +2408,7 @@ def hbos_outlier_scores(
 
 
 def theil_sen_trend(
-    daily: DataFrame, day_col: str, value_col: str, *, scale: int = 2
+    daily: DataFrame, day_col: str, value_col: str
 ) -> DataFrame:
     """One row (n_days, n_pairs, slope_per_day): Theil-Sen robust trend
     — the median of all pairwise slopes (v_j - v_i) / (d_j - d_i), the
@@ -2443,7 +2428,7 @@ def theil_sen_trend(
     re-execute the quadratic join otherwise. Same contract as
     `remove_boilerplate`.
     """
-    v = F.col(value_col).cast(f"decimal(18,{scale})")
+    v = F.col(value_col).cast("decimal(18,2)")
     based = daily.select(
         F.datediff(F.col(day_col), F.lit("1970-01-01")).alias("__d"),
         v.alias("__v"),
@@ -2532,12 +2517,13 @@ def two_sided_p_from_z(z: Column) -> Column:
 
 
 def benjamini_hochberg(
-    df: DataFrame, p_col: str, tiebreak: str, *, alpha: float = 0.05
+    df: DataFrame, p_col: str, tiebreak: str
 ) -> DataFrame:
     """Adds (p_rank, p_adj, significant) to a TEST-GRAIN table of raw
     p-values — the Benjamini-Hochberg step-up FDR correction every
     segment-sweep A/B readout needs before declaring winners (m tests at
-    alpha uncorrected expect m*alpha false discoveries).
+    alpha uncorrected expect m*alpha false discoveries); significant
+    means p_adj < 0.05.
 
     adj_i = min_{j >= i}(p_j * m / j), capped at 1 — the suffix-min is a
     cumulative MIN over the descending-p window (min is accumulation-
@@ -2558,7 +2544,7 @@ def benjamini_hochberg(
         "p_adj", F.least(F.min(factor).over(w_suffix), F.lit(1.0))
     )
     return adjusted.withColumn(
-        "significant", F.col("p_adj") < F.lit(alpha)
+        "significant", F.col("p_adj") < F.lit(0.05)
     ).drop("__m")
 
 
@@ -2566,11 +2552,9 @@ def population_stability_index(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    *,
-    n_bins: int = 10,
 ) -> DataFrame:
     """One row (n_a, n_b, psi): population stability index between two
-    groups' value distributions — sum over bins of
+    groups' value distributions — sum over 10 bins of
     (share_a - share_b) * ln(share_a / share_b), THE model-monitoring
     drift score (rule of thumb: < 0.1 stable, > 0.25 shifted). Bin edges
     are the EXPECTED group's interior quantiles (group a = min label,
@@ -2580,12 +2564,12 @@ def population_stability_index(
     Edges come from one exact interpolated percentile (broadcast 1-row
     array); bin assignment is size(filter(edges, e -> x > e)) — the same
     lambda on both engines; bin counts are exact integers and the final
-    combination is an n_bins-bounded float sum under the KL-family 6-dp
+    combination is a 10-term float sum under the KL-family 6-dp
     round.
     """
     ga, _gb = _two_group_labels(df, group_col, "population_stability_index")
     is_a = F.col(group_col) == F.lit(ga)
-    qs = [i / n_bins for i in range(1, n_bins)]
+    qs = [i / 10 for i in range(1, 10)]
     edges = df.filter(is_a).agg(
         F.percentile(F.col(value_col), F.lit(qs).cast("array<double>")).alias(
             "__edges"
@@ -2605,7 +2589,7 @@ def population_stability_index(
     )
     tot = cells.agg(F.sum("__ca").alias("__na"), F.sum("__cb").alias("__nb"))
     j = cells.crossJoin(F.broadcast(tot))
-    k = F.lit(float(n_bins))
+    k = F.lit(10.0)
     sa = (F.col("__ca").cast("double") + F.lit(0.5)) / (
         F.col("__na").cast("double") + F.lit(0.5) * k
     )
@@ -2619,13 +2603,13 @@ def population_stability_index(
     )
 
 
-def _centered_power_sums(df: DataFrame, value_col: str, scale: int) -> DataFrame:
+def _centered_power_sums(df: DataFrame, value_col: str) -> DataFrame:
     """One row (n, __mean, __m2s, __m3s, __m4s): the two-pass centered
     power sums behind :func:`central_moments` and :func:`jarque_bera` —
-    the exact DECIMAL(18, scale) sum fixes the mean, a 1-row broadcast
+    the exact DECIMAL(18, 2) sum fixes the mean, a 1-row broadcast
     carries it back onto the rows, and one aggregate sums the centered
     second, third and fourth powers."""
-    x = F.col(value_col).cast(f"decimal(18,{scale})")
+    x = F.col(value_col).cast("decimal(18,2)")
     base = df.agg(
         F.count("*").cast("bigint").alias("n"), F.sum(x).alias("__s")
     ).select(
@@ -2643,7 +2627,7 @@ def _centered_power_sums(df: DataFrame, value_col: str, scale: int) -> DataFrame
     )
 
 
-def central_moments(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFrame:
+def central_moments(df: DataFrame, value_col: str) -> DataFrame:
     """One row (n, mean, stddev_pop, skewness, kurtosis): population
     moments of a value column by the TWO-PASS centered formulation —
     the exact DECIMAL sum fixes the mean, then one aggregate sums the
@@ -2657,7 +2641,7 @@ def central_moments(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFra
     Shape: two scans (first can feed off statistics-only metadata at
     scale), a 1-row broadcast of the mean, map-side centered powers.
     """
-    cm = _centered_power_sums(df, value_col, scale)
+    cm = _centered_power_sums(df, value_col)
     nd = F.col("n").cast("double")
     m2 = F.col("__m2s") / nd
     m3 = F.col("__m3s") / nd
@@ -2672,10 +2656,10 @@ def central_moments(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFra
 
 
 def tukey_fences(
-    df: DataFrame, value_col: str, group_cols: "list[str]", *, k: float = 1.5
+    df: DataFrame, value_col: str, group_cols: "list[str]"
 ) -> DataFrame:
     """Per group (group..., n, q1, q3, n_low, n_high): Tukey's boxplot
-    fences — flag values below q1 - k*IQR or above q3 + k*IQR, with
+    fences — flag values below q1 - 1.5*IQR or above q3 + 1.5*IQR, with
     EXACT linear-interpolation quartiles. The quartile-based gate beside
     the z-score (moment) and MAD (median) outlier gates: resistant to
     the outliers it hunts, unlike the z-score, and keeps the classic
@@ -2692,8 +2676,8 @@ def tukey_fences(
         F.percentile(x, F.lit(0.25)).alias("__q1"),
         F.percentile(x, F.lit(0.75)).alias("__q3"),
     )
-    lo = F.col("__q1") - F.lit(float(k)) * (F.col("__q3") - F.col("__q1"))
-    hi = F.col("__q3") + F.lit(float(k)) * (F.col("__q3") - F.col("__q1"))
+    lo = F.col("__q1") - F.lit(1.5) * (F.col("__q3") - F.col("__q1"))
+    hi = F.col("__q3") + F.lit(1.5) * (F.col("__q3") - F.col("__q1"))
     j = df.join(F.broadcast(q), group_cols)
     return (
         j.groupBy(*group_cols)
@@ -2708,10 +2692,10 @@ def tukey_fences(
 
 
 def new_vs_returning(
-    df: DataFrame, entity_col: str, ts_col: str, *, grain: str = "week"
+    df: DataFrame, entity_col: str, ts_col: str
 ) -> DataFrame:
-    """Per period (period, n_active, n_new, n_returning): classify each
-    period's active entities by whether this is their FIRST-EVER active
+    """Per week (period, n_active, n_new, n_returning): classify each
+    week's active entities by whether this is their FIRST-EVER active
     period — the growth-accounting split behind every activation
     dashboard (and the acquisition sibling of `retention_cohorts`).
 
@@ -2720,7 +2704,7 @@ def new_vs_returning(
     period rollup. All counts exact integers; no window over the full
     event table.
     """
-    period = F.date_trunc(grain, F.col(ts_col))
+    period = F.date_trunc("week", F.col(ts_col))
     active = df.select(
         period.alias("period"), F.col(entity_col).alias("__e")
     ).distinct()
@@ -2739,8 +2723,6 @@ def session_duration_percentiles(
     keys: "list[str]",
     session_col: str,
     ts_col: str,
-    *,
-    percentiles: "tuple[float, ...]" = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """One row (n_sessions, p50_s, p90_s, p99_s): the session-length
     distribution over gap-rule sessions (input = `windows.session_ids`
@@ -2758,7 +2740,7 @@ def session_duration_percentiles(
         .agg(((F.max(us) - F.min(us)).cast("double") / 1e6).alias("__dur"))
     )
     cols = [F.count("*").cast("bigint").alias("n_sessions")]
-    for p in percentiles:
+    for p in (0.5, 0.9, 0.99):
         cols.append(
             F.round(F.percentile(F.col("__dur"), F.lit(p)), 6).alias(
                 f"p{int(p * 100)}_s"
@@ -3034,15 +3016,14 @@ def pareto_coverage(
     entities: DataFrame,
     key_col: str,
     value_col: str,
-    threshold_pct: int = 80,
 ) -> DataFrame:
     """One row (n_entities, n_needed, entity_share, covered_share): the
-    smallest top-value entity set covering `threshold_pct` percent of
+    smallest top-value entity set covering 80 percent of
     total value (the 80/20 concentration readout).
 
     An entity is in the covering set while the cumulative value BEFORE
     it is still under the threshold — tested exactly as
-    100*(cum - v) < pct*total in decimal, so the crossing entity is
+    100*(cum - v) < 80*total in decimal, so the crossing entity is
     included and the cut is engine-exact. Rank and cumulative value via
     the bucketed distrank primitives (decimal arithmetic keeps the cut
     identical to the single-window spelling), the grand total riding
@@ -3066,7 +3047,7 @@ def pareto_coverage(
         "__tot",
         (
             F.lit(100) * (F.col("__cum") - F.col("__v"))
-            < F.lit(threshold_pct) * F.col("__tot")
+            < F.lit(80) * F.col("__tot")
         ).alias("__in"),
     )
     return flagged.agg(
@@ -3296,26 +3277,22 @@ def ols_two_features(
     y_col: str,
     x1_col: str,
     x2_col: str,
-    *,
-    y_scale: int = 2,
-    x1_scale: int = 2,
-    x2_scale: int = 4,
 ) -> DataFrame:
     """One row (n, b0, b1, b2, r2): two-feature OLS with intercept by
     the closed-form normal equations (2x2 Cramer solve on centered
     sums) — the multivariate sibling of regr_stats.
 
     Every RAW power sum (x1, x2, y, their squares and cross products)
-    accumulates in exact DECIMAL — the inputs are fixed-point business
-    values, so the products carry bounded scale and the sums are
-    partition-order-free; the centered sums, the Cramer solve, and R^2
-    are then ONE deterministic double expression each. One aggregate
-    scan; no iteration, no broadcast (the solve is driver-free algebra
-    inside the single result row).
+    accumulates in exact DECIMAL (y and x1 at 2 decimals, x2 at 4) — the
+    inputs are fixed-point business values, so the products carry bounded
+    scale and the sums are partition-order-free; the centered sums, the
+    Cramer solve, and R^2 are then ONE deterministic double expression
+    each. One aggregate scan; no iteration, no broadcast (the solve is
+    driver-free algebra inside the single result row).
     """
-    y = F.col(y_col).cast(f"decimal(18,{y_scale})")
-    x1 = F.col(x1_col).cast(f"decimal(18,{x1_scale})")
-    x2 = F.col(x2_col).cast(f"decimal(18,{x2_scale})")
+    y = F.col(y_col).cast("decimal(18,2)")
+    x1 = F.col(x1_col).cast("decimal(18,2)")
+    x2 = F.col(x2_col).cast("decimal(18,4)")
     m = df.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(x1).cast("double").alias("__sx1"),
@@ -3349,7 +3326,7 @@ def ols_two_features(
     )
 
 
-def jarque_bera(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFrame:
+def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
     """One row (n, skewness, kurtosis, jb, p_value): Jarque-Bera
     normality test — JB = n*(S^2/6 + (K-3)^2/24) from the same two-pass
     centered moments as :func:`central_moments` (exact decimal mean
@@ -3357,7 +3334,7 @@ def jarque_bera(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFrame:
     closed-form chi2(df=2) survival p = exp(-JB/2). The normality gate
     run before parametric A/B tests are trusted.
     """
-    cm = _centered_power_sums(df, value_col, scale)
+    cm = _centered_power_sums(df, value_col)
     nd = F.col("n").cast("double")
     m2 = F.col("__m2s") / nd
     skew = (F.col("__m3s") / nd) / F.pow(m2, F.lit(1.5))
@@ -3376,13 +3353,14 @@ def jarque_bera(df: DataFrame, value_col: str, *, scale: int = 2) -> DataFrame:
 
 
 def l_diversity(
-    df: DataFrame, qi_cols: Sequence[str], sensitive_col: str, l_min: int = 3
+    df: DataFrame, qi_cols: Sequence[str], sensitive_col: str
 ) -> DataFrame:
     """One row (n_groups, min_l, avg_l, n_below): distinct-l diversity
     of a sensitive attribute within quasi-identifier groups — the
     re-identification audit beyond :func:`k_anonymity_report` (a group
     can be large yet expose everyone if all rows share one sensitive
-    value). Exact distinct counts per QI group, one division.
+    value). n_below counts groups with fewer than 3 distinct values.
+    Exact distinct counts per QI group, one division.
     """
     per = df.groupBy(*[F.col(c) for c in qi_cols]).agg(
         F.countDistinct(sensitive_col).cast("bigint").alias("__l")
@@ -3393,7 +3371,7 @@ def l_diversity(
         F.round(
             F.sum("__l").cast("double") / F.count("*").cast("double"), 6
         ).alias("avg_l"),
-        F.sum(F.when(F.col("__l") < l_min, 1).otherwise(0))
+        F.sum(F.when(F.col("__l") < 3, 1).otherwise(0))
         .cast("bigint")
         .alias("n_below"),
     )
@@ -3505,11 +3483,11 @@ def lifecycle_states(
 
 
 def active_days_histogram(
-    events: DataFrame, entity_col: str, ts_col: str, clamp: int = 60
+    events: DataFrame, entity_col: str, ts_col: str
 ) -> DataFrame:
     """Per-bucket row (days_active, n_users, share): the power-user
     curve — how many entities were active on exactly N distinct days
-    (clamped at `clamp` so the output stays bucket-bounded). The
+    (clamped at 60 so the output stays bucket-bounded). The
     engagement-depth distribution behind stickiness; two-level distinct
     aggregation, exact counts, bucket-window shares.
     """
@@ -3523,7 +3501,7 @@ def active_days_histogram(
         .agg(F.count("*").alias("__days"))
     )
     h = per.select(
-        F.least(F.col("__days"), F.lit(clamp)).cast("int").alias("days_active")
+        F.least(F.col("__days"), F.lit(60)).cast("int").alias("days_active")
     ).groupBy("days_active").agg(F.count("*").cast("bigint").alias("n_users"))
     return h.select(
         "days_active",
@@ -3618,24 +3596,24 @@ def entity_mix_entropy_hist(
 
 
 def last_digit_profile(
-    df: DataFrame, value_col: str, modulus: int = 100
+    df: DataFrame, value_col: str
 ) -> DataFrame:
     """(digit, n_obs, share, dev_from_uniform): distribution of a money
-    column's last cent digits (value*100 mod `modulus`) — the pricing /
+    column's last two cent digits (value*100 mod 100) — the pricing /
     fraud DQ audit Benford's first-digit test can't do: psychological
     price endings (.99), rounding policies, and fabricated values all
-    show up as spikes against the uniform baseline 1/modulus.
+    show up as spikes against the uniform baseline 1/100.
 
     The digit extracts in exact integer space (cents via one ROUND,
     never float modulo) from the ABSOLUTE value — a refund of -1.99 is
     still a .99 ending (and pmod/% disagree across engines on negative
     operands, so signed modulo would also break oracle parity); counts
-    are a single map-side-partial groupBy with `modulus`-bounded
+    are a single map-side-partial groupBy with 100-bounded
     output; share and the deviation are final divisions against a
     window-free broadcast total.
     """
     cents = F.abs(F.round(F.col(value_col) * 100, 0).cast("bigint"))
-    digit = F.pmod(cents, F.lit(int(modulus))).cast("int")
+    digit = F.pmod(cents, F.lit(100)).cast("int")
     counts = (
         df.select(digit.alias("digit"))
         .groupBy("digit")
@@ -3647,7 +3625,7 @@ def last_digit_profile(
         "digit",
         "n_obs",
         F.round(share, 6).alias("share"),
-        F.round(share - F.lit(1.0 / modulus), 6).alias("dev_from_uniform"),
+        F.round(share - F.lit(0.01), 6).alias("dev_from_uniform"),
     )
 
 

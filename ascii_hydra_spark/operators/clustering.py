@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ascii_hydra_spark.operators.lineage import truncate_lineage
-from ascii_hydra_spark.operators.similarity import _label_coordinate_sums
+from ascii_hydra_spark.operators.similarity import GRID, _label_coordinate_sums
 
 
 def _dist2(vec_col, cent_col):
@@ -44,12 +44,12 @@ def _dist2(vec_col, cent_col):
     )
 
 
-def auto_k(n: int, target_cluster_size: int = 1024) -> int:
-    """Cluster count that keeps expected cluster size constant as data
+def auto_k(n: int) -> int:
+    """Cluster count that keeps expected cluster size near 1024 as data
     grows — the SemDeDup pair space per task is (n/k)², so k must scale
     with n or the per-cluster GEMM grows quadratically (same lesson as
     the LSH bucket-occupancy auto-sizing in similarity.py)."""
-    return max(8, min(4096, n // target_cluster_size))
+    return max(8, min(4096, n // 1024))
 
 
 def kmeans_assign(
@@ -176,11 +176,11 @@ def _kmeans_assign_full(
 
 
 def cluster_sizes(
-    emb: DataFrame, k: int = 8, iterations: int = 2, **kw
+    emb: DataFrame, k: int = 8, **kw
 ) -> DataFrame:
     """(cluster_id, n_vectors, avg_dist2): the shard-balance summary a
     mixing pipeline reads before sampling per semantic shard."""
-    a = kmeans_assign(emb, k=k, iterations=iterations, **kw)
+    a = kmeans_assign(emb, k=k, **kw)
     return a.groupBy("cluster_id").agg(
         F.count("*").cast("bigint").alias("n_vectors"),
         F.round(F.avg("dist2"), 6).alias("avg_dist2"),
@@ -261,18 +261,15 @@ def semantic_dup_pairs(
 def semantic_dedup(
     emb: DataFrame,
     k: int | None = None,
-    iterations: int = 2,
-    threshold: float = 0.99,
     id_col: str = "vec_id",
     **kw,
 ) -> DataFrame:
-    """Full SemDeDup decision: intra-cluster cosine pairs -> connected
-    components -> keep the minimum-id vector per duplicate group."""
+    """Full SemDeDup decision: intra-cluster cosine (>= 0.99) pairs ->
+    connected components -> keep the minimum-id vector per duplicate
+    group."""
     from ascii_hydra_spark.operators.dedup import cluster_dedup
 
-    pairs = semantic_dup_pairs(
-        emb, k=k, iterations=iterations, threshold=threshold, id_col=id_col, **kw
-    )
+    pairs = semantic_dup_pairs(emb, k=k, id_col=id_col, **kw)
     return cluster_dedup(emb, pairs, id_col)
 
 
@@ -280,8 +277,6 @@ def calinski_harabasz(
     emb: DataFrame,
     label_col: str,
     vec_col: str = "embedding",
-    *,
-    scale: int = 4,
 ) -> DataFrame:
     """One row (k_clusters, n, ss_between, ss_within, ch): the
     Calinski-Harabasz (variance-ratio) clustering quality index over a
@@ -293,13 +288,13 @@ def calinski_harabasz(
     Algebra keeps everything in sums: SSW = Q - sum_l |S_l|^2/n_l and
     SSB = sum_l |S_l|^2/n_l - |S|^2/n, where Q is the total squared
     norm and S_l the per-label coordinate sums — all exact integers
-    after the same 10^scale rounding the covariance/centroid operators
+    after the same GRID rounding the covariance/centroid operators
     use; the only floats are the k-bounded final combinations. Same
     2-dp SS / 6-dp ratio output policy as `analytics.anova_oneway`
     (this IS one-way ANOVA in embedding space).
     """
-    mult = float(10**scale)
-    coords, per_lp, n_per = _label_coordinate_sums(emb, label_col, vec_col, scale)
+    mult = float(GRID)
+    coords, per_lp, n_per = _label_coordinate_sums(emb, label_col, vec_col)
     q_tot = coords.agg(
         F.sum(F.col("__x") * F.col("__x")).cast("double").alias("__q")
     )

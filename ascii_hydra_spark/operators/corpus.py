@@ -37,21 +37,19 @@ def _hash_bucket(key_col: str, buckets: int = 1000):
 def train_val_test_split(
     df: DataFrame,
     key_col: str,
-    val_permille: int = 50,
-    test_permille: int = 50,
 ) -> DataFrame:
     """Assign every row a deterministic split label by key hash.
 
-    bucket < test_permille -> 'test'; next val_permille -> 'val'; rest ->
-    'train'. Hash-based (not RNG) so the assignment is identical across
-    engines, reruns, partitionings, and *appends* — a new crawl snapshot
-    never flips an old document's split, which is what prevents silent
-    eval-set leakage over a corpus's lifetime.
+    Permille bucket < 50 -> 'test'; next 50 -> 'val'; rest -> 'train'.
+    Hash-based (not RNG) so the assignment is identical across engines,
+    reruns, partitionings, and *appends* — a new crawl snapshot never
+    flips an old document's split, which is what prevents silent eval-set
+    leakage over a corpus's lifetime.
     """
     b = _hash_bucket(key_col)
     split = (
-        F.when(b < test_permille, F.lit("test"))
-        .when(b < test_permille + val_permille, F.lit("val"))
+        F.when(b < 50, F.lit("test"))
+        .when(b < 100, F.lit("val"))
         .otherwise(F.lit("train"))
     )
     return df.withColumn("split", split)
@@ -63,10 +61,9 @@ def contamination_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    min_shared: int = 1,
 ) -> DataFrame:
     """Benchmark-contamination detection: (train_doc, eval_doc) pairs that
-    share >= `min_shared` distinct word n-grams.
+    share at least one distinct word n-gram.
 
     Shape: distinct n-gram inverted index on both sides, inner join on the
     n-gram, count per pair — the shuffle key is the n-gram, never a doc
@@ -95,7 +92,6 @@ def contamination_pairs(
         t.join(e, "__g")
         .groupBy("train_id", "eval_id")
         .agg(F.count("*").alias("shared_ngrams"))
-        .filter(F.col("shared_ngrams") >= min_shared)
     )
 
 
@@ -185,10 +181,10 @@ def balanced_resample(
     keep_permille: dict[str, int],
     by: str = "lang",
     key_col: str = "doc_id",
-    default_permille: int = 1000,
 ) -> DataFrame:
     """Rebalance group proportions by deterministic per-group downsampling:
-    keep a row iff its hash bucket < keep_permille[group].
+    keep a row iff its hash bucket < keep_permille[group]; groups without
+    a quota keep every row.
 
     The corpus-mixing step that caps over-represented languages/sources at
     a target share. Same multiplicative-hash bucket as
@@ -200,7 +196,7 @@ def balanced_resample(
     column, not a join.
     """
     b = _hash_bucket(key_col)
-    quota = F.lit(default_permille)
+    quota = F.lit(1000)
     for grp, pm in sorted(keep_permille.items()):
         quota = F.when(F.col(by) == grp, F.lit(pm)).otherwise(quota)
     return df.filter(b < quota)
@@ -291,13 +287,12 @@ def tokenize_to_ids(
     vocab: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    unk_id: int = 0,
 ) -> DataFrame:
     """Apply a built vocabulary (see text.build_vocab: token -> vocab_id,
     ids start at 1) to the corpus: (doc_id, token_ids array in document
-    order, n_tokens, n_oov). Out-of-vocabulary tokens map to `unk_id`
-    (0 by default — below every real id). This is the tokenizer-encode
-    step between curation and sequence packing.
+    order, n_tokens, n_oov). Out-of-vocabulary tokens map to id 0 (below
+    every real id). This is the tokenizer-encode step between curation and
+    sequence packing.
 
     Scale shape: posexplode -> broadcast join against the vocab (even a
     1M-entry vocab is tens of MB — always broadcast-able) -> one groupBy
@@ -315,7 +310,7 @@ def tokenize_to_ids(
                 F.collect_list(
                     F.struct(
                         F.col("pos"),
-                        F.coalesce(F.col("vocab_id"), F.lit(unk_id)).alias("vid"),
+                        F.coalesce(F.col("vocab_id"), F.lit(0)).alias("vid"),
                     )
                 )
             ),
@@ -352,7 +347,6 @@ def top_merge_pairs(
     docs: DataFrame,
     k: int = 20,
     text_col: str = "text",
-    tokens=None,
 ) -> DataFrame:
     """One BPE training step as a corpus aggregation: the k most frequent
     ADJACENT token pairs (count desc, pair asc — deterministic).
@@ -362,15 +356,13 @@ def top_merge_pairs(
     exactly this query — pair explode, map-side partial counts, one
     shuffle on the pair, TakeOrdered k. The merge/retokenize step is a
     driver-side vocabulary update between rounds (k pairs, bounded).
-    Defaults to the engine's BPE-ish pre-tokenizer; pass `tokens` to run
-    over an already-merged token column in later rounds.
+    Tokens come from the engine's BPE-ish pre-tokenizer.
     """
     from ascii_hydra_spark.functions import bpe_ish_tokens
     from ascii_hydra_spark.functions import ngrams as _ngrams
 
-    toks = tokens if tokens is not None else bpe_ish_tokens(text_col)
     return (
-        docs.select(F.explode(_ngrams(toks, 2)).alias("pair"))
+        docs.select(F.explode(_ngrams(bpe_ish_tokens(text_col), 2)).alias("pair"))
         .groupBy("pair")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.col("pair"))
@@ -525,7 +517,6 @@ def negative_pairs(
     id_col: str = "doc_id",
     k: int = 2,
     seed: int = 13,
-    shard_chars: int = 2,
 ) -> DataFrame:
     """(doc_id, draw, neg_id): k deterministic pseudo-random negative
     partners per document — the contrastive-training sampler (in-batch
@@ -538,11 +529,10 @@ def negative_pairs(
     repartition- and cluster-size-stable, uniform because md5 is, and
     O(1) state per row — no global index, no RNG, no collect.
 
-    Scale shape: the ring is sharded by the first `shard_chars` hex
-    characters (16^shard_chars shards — raise it with corpus size; the
-    wrap stays shard-local, which preserves uniformity since shards
-    partition the hash space evenly). Per shard: one sorted window pass
-    (successor = windowed MIN over following positions), one key-equi
+    Scale shape: the ring is sharded by the first 2 hex characters (256
+    shards; the wrap stays shard-local, which preserves uniformity since
+    shards partition the hash space evenly). Per shard: one sorted window
+    pass (successor = windowed MIN over following positions), one key-equi
     join back to resolve the successor's doc, one per-shard min for the
     wraparound. Self-pairs (a doc probing into its own position) are
     filtered; expected loss is k/N draws.
@@ -551,7 +541,7 @@ def negative_pairs(
     pos_key = F.md5(F.concat_ws("_", sid, F.lit("ring"), F.lit(str(seed))))
     positions = docs.select(
         F.col(id_col).alias("__pos_doc"), pos_key.alias("__key")
-    ).withColumn("__shard", F.substring("__key", 1, shard_chars))
+    ).withColumn("__shard", F.substring("__key", 1, 2))
     draws = docs.select(
         F.col(id_col).alias("__src"),
         F.explode(F.sequence(F.lit(0), F.lit(int(k) - 1))).alias("draw"),
@@ -566,7 +556,7 @@ def negative_pairs(
         )
     )
     probes = draws.select("__src", "draw", probe_key.alias("__key")).withColumn(
-        "__shard", F.substring("__key", 1, shard_chars)
+        "__shard", F.substring("__key", 1, 2)
     )
     u = positions.select(
         "__shard", "__key", "__pos_doc",
@@ -596,7 +586,7 @@ def negative_pairs(
     # shard's last position takes the first position of the next
     # non-empty shard, and a probe past everything wraps to the global
     # first position. Both lookups are bounded: shard-min table has at
-    # most 16^shard_chars rows, so the inequality join below is a tiny
+    # most 256 rows, so the inequality join below is a tiny
     # broadcast, never corpus-sized.
     shard_min = positions.groupBy("__shard").agg(F.min("__key").alias("__minkey"))
     probe_shards = resolved.select("__shard").distinct()
@@ -681,11 +671,10 @@ def split_unigram_kl(
     docs: DataFrame,
     key_col: str = "doc_id",
     text_col: str = "text",
-    alpha: float = 0.5,
 ) -> DataFrame:
     """One row (n_train_tokens, n_val_tokens, vocab, kl): KL divergence
     KL(P_train || P_val) between the unigram distributions of the
-    deterministic train and val splits, with add-alpha smoothing over the
+    deterministic train and val splits, with add-0.5 smoothing over the
     UNION vocabulary (otherwise one split-only term makes the divergence
     infinite) — the distribution-shift check that a split is
     representative, and the proper-scoring cousin of
@@ -711,7 +700,7 @@ def split_unigram_kl(
         F.count("*").alias("__v"),
     )
     j = per_term.crossJoin(F.broadcast(stats))
-    a = float(alpha)
+    a = 0.5
     p = (F.col("c_p").cast("double") + F.lit(a)) / (
         F.col("__np").cast("double") + F.lit(a) * F.col("__v").cast("double")
     )
@@ -732,9 +721,6 @@ def dsir_importance(
     target: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    *,
-    n_buckets: int = 1024,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Per-doc DSIR importance score (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): hashed-unigram
@@ -742,12 +728,12 @@ def dsir_importance(
     docs) against the RAW corpus — the published recipe for choosing
     which web documents to keep when you want more target-like data.
     Output: (id, n_tokens, dsir_score) with score = sum over the doc's
-    tokens of ln(p_target(bucket)/p_raw(bucket)), add-alpha smoothed.
+    tokens of ln(p_target(bucket)/p_raw(bucket)), add-0.5 smoothed.
 
     Determinism/scale discipline:
 
     - features are HASHED buckets (the portable top-60-bits-of-md5 hash
-      the sketch arms share, mod `n_buckets`), so the parameter table
+      the sketch arms share, mod 1024), so the parameter table
       is fixed-size regardless of vocabulary — DSIR's own design point,
       and what keeps the lookup table broadcastable at 100 TB;
     - each bucket's log-ratio is quantized ONCE as
@@ -765,7 +751,7 @@ def dsir_importance(
       bucket-keyed broadcast join; nothing shuffles document text.
     """
     def bucket(col):
-        return F.pmod(md5_int60(col), F.lit(int(n_buckets)))
+        return F.pmod(md5_int60(col), F.lit(1024))
 
     # NOTE: a min-parallelism round-robin of docs/target was A/B-measured
     # (r10) and came out a WASH (1.69 -> 1.66 s min at sf0.1, 2/3 paired
@@ -805,8 +791,8 @@ def dsir_importance(
     totals = per_b.agg(
         F.sum("c_r").alias("__nr"), F.sum("c_t").alias("__nt")
     )
-    a = float(alpha)
-    b_count = float(n_buckets)
+    a = 0.5
+    b_count = 1024.0
     pt = (F.col("c_t").cast("double") + F.lit(a)) / (
         F.col("__nt").cast("double") + F.lit(a * b_count)
     )

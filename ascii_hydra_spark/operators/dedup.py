@@ -116,29 +116,25 @@ def incremental_minhash_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
 ) -> DataFrame:
     """Near-dup arm of incremental ingestion: drop batch docs whose MinHash
-    LSH buckets collide with the corpus AND whose exact shingle Jaccard
-    against a collided corpus doc clears `threshold`.
+    LSH buckets (64 hashes in 16 bands) collide with the corpus AND whose
+    exact shingle Jaccard against a collided corpus doc clears `threshold`.
 
     Candidate generation joins batch band-buckets against corpus
     band-buckets — shuffle key is (band, bucket), never a doc product, and
     at scale the corpus side is the persisted signature/bucket index, not
     the corpus text. Exact verification touches only collided pairs.
     """
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
     # each signature table feeds exactly one bucket explosion — nothing to
     # persist (contrast minhash_lsh_pairs, whose self-join reads its
     # signatures twice)
-    b_sig = minhash_signatures(batch, id_col, text_col, num_hashes)
-    c_sig = minhash_signatures(corpus, id_col, text_col, num_hashes)
+    b_sig = minhash_signatures(batch, id_col, text_col)
+    c_sig = minhash_signatures(corpus, id_col, text_col)
     cand = (
-        _band_keys(b_sig, num_hashes, bands).withColumnRenamed("__id", "id_a")
+        _band_keys(b_sig, 64, 16).withColumnRenamed("__id", "id_a")
         .join(
-            _band_keys(c_sig, num_hashes, bands).withColumnRenamed("__id", "id_b"),
+            _band_keys(c_sig, 64, 16).withColumnRenamed("__id", "id_b"),
             ["__band", "__bucket"],
         )
         .select("id_a", "id_b")
@@ -495,14 +491,12 @@ def cdc_chunk_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    window: int = 8,
-    target_chunk: int = 64,
 ) -> DataFrame:
     """(id, array<long>) content-defined chunk fingerprints per document
     (see functions.udfs.make_cdc_chunk_udf). Per-row map, no shuffle."""
     from ascii_hydra_spark.functions.udfs import make_cdc_chunk_udf
 
-    chunk_udf = make_cdc_chunk_udf(window, target_chunk)
+    chunk_udf = make_cdc_chunk_udf()
     return df.select(
         F.col(id_col).alias("__id"), chunk_udf(F.col(text_col)).alias("chunks")
     )
@@ -512,12 +506,9 @@ def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
-    window: int = 8,
-    target_chunk: int = 64,
 ) -> DataFrame:
     """Partial-duplicate detection: ordered pairs (id_a, id_b) where at
-    least `threshold` of a's DISTINCT content-defined chunks also appear
+    least half of a's DISTINCT content-defined chunks also appear
     in b — the containment/quotation signal (doc b contains most of doc a)
     that whole-document fingerprints and symmetric Jaccard both miss when
     b is much longer than a.
@@ -527,17 +518,17 @@ def containment_pairs(
     only in docs SHARING a chunk. Asymmetric score:
     containment(a in b) = |chunks(a) ∩ chunks(b)| / |chunks(a)|.
     """
-    chunks = cdc_chunk_fingerprints(df, id_col, text_col, window, target_chunk)
+    chunks = cdc_chunk_fingerprints(df, id_col, text_col)
     posting = chunks.select(
         "__id", F.explode(F.array_distinct("chunks")).alias("__ch")
     )
-    return _containment(posting, threshold)
+    return _containment(posting)
 
 
-def _containment(posting: DataFrame, threshold: float) -> DataFrame:
+def _containment(posting: DataFrame) -> DataFrame:
     """Ordered pairs (id_a, id_b, containment) from a distinct (__id, __ch)
     chunk posting table: the share of a's chunks that b also holds,
-    kept at or above `threshold`, rounded to 6 places."""
+    kept at or above 0.5, rounded to 6 places."""
     sizes = posting.groupBy("__id").agg(F.count("*").alias("__n"))
     a, b = posting.alias("a"), posting.alias("b")
     inter = (
@@ -549,7 +540,7 @@ def _containment(posting: DataFrame, threshold: float) -> DataFrame:
     return (
         inter.join(na, "id_a")
         .withColumn("containment", F.col("__shared") / F.col("__na"))
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= 0.5)
         .select("id_a", "id_b", F.round("containment", 6).alias("containment"))
     )
 
@@ -560,7 +551,6 @@ def connected_components(
     id_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
@@ -579,7 +569,7 @@ def connected_components(
     a bounded aggregate (count of changed labels — a scalar, not a
     collect), and labels are checkpointed every iteration
     (`truncate_lineage`) to truncate the lineage that iterative plans otherwise grow without
-    bound. Raises if max_iter rounds pass without convergence rather than
+    bound. Raises if 25 rounds pass without convergence rather than
     returning partial labels silently.
     """
     # materialize the edge list ONCE before symmetrizing: `edges` is
@@ -602,7 +592,7 @@ def connected_components(
     )
     labels = nodes.select(F.col(id_col).alias("__id"), F.col(id_col).alias("__label"))
     labels = truncate_lineage(labels)
-    for _ in range(max_iter):
+    for _ in range(25):
         neighbor_min = (
             sym.join(labels, sym["__v"] == labels["__id"])
             .groupBy("__u")
@@ -645,7 +635,7 @@ def connected_components(
             break
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            "connected_components did not converge in 25 rounds"
         )
     return labels.select(F.col("__id").alias(id_col), F.col("__label").alias("component"))
 
@@ -765,32 +755,28 @@ def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int = 3,
-    chunks: int = 4,
     bits: int = 64,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Pairs with SimHash Hamming distance <= max_hamming.
+    """Pairs with SimHash Hamming distance <= 3.
 
     Candidate generation by the pigeonhole principle: split the hash into
-    `chunks` equal-width words; any pair within distance chunks-1 must agree
-    on at least one chunk, so an equality join per chunk finds all of them
+    4 equal-width words; any pair within distance 3 must agree on at
+    least one chunk, so an equality join per chunk finds all of them
     without a cartesian product. `bits`/`hash_fn` pass through to
     :func:`simhash` (the md5 portable path uses bits=48 so the four chunk
     words stay 12-bit).
     """
-    if max_hamming >= chunks * 2:
-        raise ValueError("raise `chunks` so pigeonhole banding stays sound")
-    if bits % chunks != 0:
-        raise ValueError("chunks must divide bits")
+    if bits % 4 != 0:
+        raise ValueError("bits must be a multiple of 4")
     # cut: one 8-byte hash per doc, read by both sides of the self-join —
     # independent AQE leaf stages that would each recompute the hash scan
     sh = truncate_lineage(simhash(df, id_col, text_col, bits=bits, hash_fn=hash_fn))
-    width = bits // chunks
+    width = bits // 4
     chunk_vals = F.array(
         *[
             F.shiftright(F.col("simhash"), c * width).bitwiseAND(F.lit((1 << width) - 1))
-            for c in range(chunks)
+            for c in range(4)
         ]
     )
     banded = sh.select(
@@ -816,7 +802,7 @@ def simhash_pairs(
     )
     return (
         cand.withColumn("hamming", F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -824,14 +810,13 @@ def simhash_pairs(
 def fuzzy_name_pairs(
     df: DataFrame,
     name_col: str,
-    max_distance: int = 2,
 ) -> DataFrame:
     """Entity-resolution candidate pairs: distinct names within Levenshtein
-    `max_distance` of each other. Returns (name_a, name_b, dist) with
-    name_a < name_b and 0 < dist <= max_distance.
+    distance 2 of each other. Returns (name_a, name_b, dist) with
+    name_a < name_b and 0 < dist <= 2.
 
-    Scale shape: names within edit distance d differ in length by at most
-    d, so the self-join is BLOCKED on length buckets of width d+1 — each
+    Scale shape: names within edit distance d = 2 differ in length by at
+    most d, so the self-join is BLOCKED on length buckets of width d+1 — each
     name lands in its own bucket and probes at most one neighbor (explode
     into <= 2 bucket keys on one side, equi-join on the key), turning the
     O(n^2) name cross join into per-bucket work. The Levenshtein itself is
@@ -839,7 +824,7 @@ def fuzzy_name_pairs(
     add a q-gram prefix filter in front; length banding alone is the
     correct first cut and is exact (never drops a true pair).
     """
-    w = max_distance + 1
+    w = 3
     names = (
         df.select(F.col(name_col).alias("name"))
         .filter(F.col("name").isNotNull())
@@ -854,9 +839,9 @@ def fuzzy_name_pairs(
         F.explode(
             F.array_distinct(
                 F.array(
-                    F.floor((F.col("__len") - max_distance) / w),
+                    F.floor((F.col("__len") - 2) / w),
                     F.floor(F.col("__len") / w),
-                    F.floor((F.col("__len") + max_distance) / w),
+                    F.floor((F.col("__len") + 2) / w),
                 )
             )
         ).alias("__bucket"),
@@ -871,14 +856,14 @@ def fuzzy_name_pairs(
         a.join(b, "__bucket")
         .filter(
             (F.col("name") < F.col("name_b"))
-            & (F.abs(F.col("__len") - F.col("__len_b")) <= max_distance)
+            & (F.abs(F.col("__len") - F.col("__len_b")) <= 2)
         )
         .select(
             F.col("name").alias("name_a"),
             "name_b",
             dist.cast("bigint").alias("dist"),
         )
-        .filter((F.col("dist") > 0) & (F.col("dist") <= max_distance))
+        .filter((F.col("dist") > 0) & (F.col("dist") <= 2))
         .distinct()
     )
 
@@ -920,8 +905,6 @@ def minhash_lsh_pairs_portable(
     id_col: str,
     text_col: str,
     threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH with a fully
     PORTABLE hash path: word-bigram shingles, per-seed hash =
@@ -942,9 +925,6 @@ def minhash_lsh_pairs_portable(
     hash work of the numpy arm — the price of engine-portable
     determinism; use the fast arm when no cross-engine replay is needed.
     """
-    rows = num_hashes // bands
-    if rows * bands != num_hashes:
-        raise ValueError("bands must divide num_hashes")
     # tokenize ONCE into a materialized column before indexing into it:
     # element_at(word_tokens(text), i) inside the transform lambda would
     # re-run the split per bigram position — O(len^2) per document
@@ -989,7 +969,7 @@ def minhash_lsh_pairs_portable(
     # so the extra distinct shuffle + broadcast join bought nothing.
     # Inline evaluation inside the partial aggregate stays.
     sig = sh.groupBy("__id").agg(
-        *[F.min(hv(i)).alias(f"__m{i}") for i in range(num_hashes)]
+        *[F.min(hv(i)).alias(f"__m{i}") for i in range(16)]
     )
     band_rows = sig.select(
         "__id",
@@ -1001,12 +981,12 @@ def minhash_lsh_pairs_portable(
                         F.concat_ws(
                             ":",
                             *[
-                                F.col(f"__m{b * rows + r}").cast("string")
-                                for r in range(rows)
+                                F.col(f"__m{b * 4 + r}").cast("string")
+                                for r in range(4)
                             ],
                         ).alias("key"),
                     )
-                    for b in range(bands)
+                    for b in range(4)
                 ]
             )
         ).alias("__bk"),
@@ -1020,12 +1000,10 @@ def containment_pairs_portable(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
-    gap: int = 8,
 ) -> DataFrame:
-    """Partial-duplicate containment pairs with a PORTABLE content-defined
-    chunking: a chunk boundary falls after any token whose md5-derived
-    hash is 0 mod `gap` (expected chunk length = `gap` tokens). Like the
+    """Partial-duplicate containment pairs (share >= 0.5) with a PORTABLE
+    content-defined chunking: a chunk boundary falls after any token whose
+    md5-derived hash is 0 mod 8 (expected chunk length = 8 tokens). Like the
     gear-hash CDC arm (`containment_pairs`), boundaries move with the
     CONTENT — an insertion only redraws the chunks it touches, so shared
     runs between a quote and its source still collide — but the boundary
@@ -1055,7 +1033,7 @@ def containment_pairs_portable(
         toks.select("__tok")
         .distinct()
         .select(
-            "__tok", (F.pmod(hv, F.lit(gap)) == 0).cast("int").alias("__b")
+            "__tok", (F.pmod(hv, F.lit(8)) == 0).cast("int").alias("__b")
         )
     )
     flagged = toks.join(uniq, "__tok").select("__id", "__pos", "__tok", "__b")
@@ -1078,4 +1056,4 @@ def containment_pairs_portable(
             )
         ).alias("__ch")
     )
-    return _containment(chunks.select("__id", "__ch").distinct(), threshold)
+    return _containment(chunks.select("__id", "__ch").distinct())

@@ -358,23 +358,23 @@ def label_propagation(
     return labels
 
 
-def top_ranked(ranks: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k nodes by rank, deterministic tie-break on node id; plans as
-    TakeOrderedAndProject (per-partition heaps, k rows to the driver)."""
+def top_ranked(ranks: DataFrame) -> DataFrame:
+    """Top-10 nodes by rank, deterministic tie-break on node id; plans as
+    TakeOrderedAndProject (per-partition heaps, 10 rows to the driver)."""
     return (
         ranks.select("node", F.round("rank", 6).alias("rank"))
         .orderBy(F.desc("rank"), F.col("node"))
-        .limit(k)
+        .limit(10)
     )
 
 
 def powerlaw_alpha(
-    degrees: DataFrame, degree_col: str = "degree", d_min: int = 1
+    degrees: DataFrame, degree_col: str = "degree"
 ) -> DataFrame:
     """One row (n_nodes, alpha, sigma): continuous maximum-likelihood
     power-law exponent of a degree distribution (Clauset-Shalizi-Newman
-    2009, eq. 3.1): alpha = 1 + n / sum(ln(d / (d_min - 0.5))) over
-    degrees >= d_min, with standard error sigma = (alpha - 1) / sqrt(n).
+    2009, eq. 3.1) at d_min = 1: alpha = 1 + n / sum(ln(d / (d_min - 0.5)))
+    over degrees >= d_min, with standard error sigma = (alpha - 1) / sqrt(n).
 
     The scale-free test every large graph gets before algorithm choice
     (hub-safe strategies like the oriented triangle count matter exactly
@@ -382,8 +382,8 @@ def powerlaw_alpha(
     node-cardinality) degree table; the only float accumulation is the
     per-partition partial sum of ln terms, rounded to 6 dp in the output.
     """
-    shift = float(d_min) - 0.5
-    filt = degrees.filter(F.col(degree_col) >= d_min)
+    shift = 0.5
+    filt = degrees.filter(F.col(degree_col) >= 1)
     agg = filt.agg(
         F.count("*").cast("bigint").alias("n_nodes"),
         F.sum(F.log(F.col(degree_col).cast("double") / F.lit(shift))).alias("__s"),
@@ -692,7 +692,6 @@ def degree_assortativity(
 def bfs_frontier_counts(
     edges: DataFrame,
     seeds: DataFrame,
-    hops: int = 3,
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
@@ -705,7 +704,7 @@ def bfs_frontier_counts(
     every hop is one hash join on the frontier + one anti-join against
     the visited set, both persisted per round (the kcore lesson: an
     unpersisted loop invariant re-executes the whole chain each round).
-    Hop count is FIXED, so the run is deterministic and schedulable;
+    Hop count is FIXED at 3, so the run is deterministic and schedulable;
     the per-hop stats are 1-row aggregates off the persisted frames.
     """
     both = truncate_lineage(
@@ -718,7 +717,7 @@ def bfs_frontier_counts(
     )
     visited = frontier
     stats = []
-    for k in range(1, hops + 1):
+    for k in range(1, 4):
         nxt = truncate_lineage(
             both.join(frontier.withColumnRenamed("n", "a"), "a")
             .select(F.col("b").alias("n"))
@@ -747,23 +746,20 @@ def bfs_frontier_counts(
 
 def hits(
     edges: DataFrame,
-    iterations: int = 2,
     src: str = "src",
     dst: str = "dst",
     k: int = 10,
 ) -> DataFrame:
-    """Top-k nodes by HITS authority after a fixed number of
-    hub/authority power iterations — the bipartite-flavored authority
-    score beside PageRank (a node is a good authority when good hubs
-    point at it).
+    """Top-k nodes by HITS authority after two hub/authority power
+    iterations — the bipartite-flavored authority score beside PageRank (a
+    node is a good authority when good hubs point at it).
 
     Same iterative discipline as pagerank: the directed edge list is
-    deduped, persisted once, and reused as both the forward and the
-    reverse propagation table; every iteration is two keyed sums with
-    a max-normalization (max is accumulation-order-free, unlike the
-    L2 norm) and the score frames are lineage-truncated per round.
-    Iteration count is FIXED. Output rounds to 6 dp; tie-break on
-    node id.
+    deduped, persisted once, and reused as both the forward and the reverse
+    propagation table; every iteration is two keyed sums with a
+    max-normalization (max is accumulation-order-free, unlike the L2 norm)
+    and the score frames are lineage-truncated per round. Output rounds to 6
+    dp; tie-break on node id.
     """
     e = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
@@ -777,7 +773,7 @@ def hits(
         .distinct(),
     )
     auth = nodes.select("n", F.lit(1.0).alias("a"))
-    for _ in range(iterations):
+    for _ in range(2):
         # truncate the RAW sums, not the normalized frame: the
         # max-normalization reads its input twice (the broadcast max agg
         # + the main side), so an untruncated raw frame re-ran the

@@ -434,13 +434,11 @@ def split_conformal_coverage(
     pred_col: str,
     actual_col: str,
     cal_flag_col: str,
-    *,
-    alpha: float = 0.1,
 ) -> DataFrame:
     """One row (n_cal, n_test, qhat, coverage): split conformal
-    prediction — qhat is the adjusted (1-alpha) quantile of calibration
-    |residuals|, and `coverage` is the share of held-out rows whose
-    actual lands within pred +/- qhat. The distribution-free interval
+    prediction at alpha = 0.1 — qhat is the adjusted (1-alpha) quantile
+    of calibration |residuals|, and `coverage` is the share of held-out
+    rows whose actual lands within pred +/- qhat. The distribution-free interval
     guarantee (coverage >= 1-alpha in expectation) every production
     regression model should ship with; `cal_flag_col` marks the
     calibration split (the caller's deterministic hash split).
@@ -455,7 +453,7 @@ def split_conformal_coverage(
     cal = df.filter(F.col(cal_flag_col))
     q = cal.agg(
         F.count("*").cast("bigint").alias("n_cal"),
-        F.percentile(resid, F.lit(1.0 - alpha)).alias("__qhat"),
+        F.percentile(resid, F.lit(0.9)).alias("__qhat"),
     )
     test = df.filter(~F.col(cal_flag_col))
     cov = test.crossJoin(F.broadcast(q)).agg(

@@ -50,6 +50,9 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
+# width of the stand-in byte-histogram features (_decode_batch)
+_HIST_BINS = 16
+
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -758,12 +761,12 @@ def _paeth(a, b, c):
     return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
 
 
-def encode_png(pixels, level: int = 6) -> bytes:
+def encode_png(pixels) -> bytes:
     """(h, w, 3) uint8 RGB array -> 8-bit truecolor PNG bytes.
 
-    Real DEFLATE compression via stdlib zlib. The scanline filter rotates
-    through all five spec filter types (row r uses filter r % 5), so a
-    decoder must implement every reversal path to round-trip the output —
+    Real DEFLATE compression via stdlib zlib (level 6). The scanline filter
+    rotates through all five spec filter types (row r uses filter r % 5), so
+    a decoder must implement every reversal path to round-trip the output —
     that is deliberate: it makes the in-repo decode_png round-trip test an
     actual test of the filter logic, not just of zlib.
     """
@@ -810,7 +813,7 @@ def encode_png(pixels, level: int = 6) -> bytes:
     return (
         b"\x89PNG\r\n\x1a\n"
         + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(out), level))
+        + chunk(b"IDAT", zlib.compress(bytes(out), 6))
         + chunk(b"IEND", b"")
     )
 
@@ -943,12 +946,13 @@ def _wav_features(payload: bytes) -> list[float]:
     ]
 
 
-def _decode_batch(batch: pd.DataFrame, n_features: int) -> pd.DataFrame:
+def _decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
     """Per-codec dispatch: bmp/png/jpeg/gif/wav rows get REAL pure-numpy
     decodes (:func:`_rgb_features`, :func:`_gif_features`,
     :func:`_wav_features`); everything else gets the vectorized deterministic stand-in — per-row normalized byte
-    histograms, computed as ONE bincount over the whole Arrow batch
-    (payloads concatenated; bucket = row_index * n_features + byte % n) —
+    histograms of _HIST_BINS buckets, computed as ONE bincount over the
+    whole Arrow batch (payloads concatenated; bucket = row_index *
+    _HIST_BINS + byte % _HIST_BINS) —
     no per-row or per-byte Python in the stand-in hot path. (The real
     decodes are per-payload by nature; each is a handful of numpy slices.)"""
     import numpy as np
@@ -979,7 +983,7 @@ def _decode_batch(batch: pd.DataFrame, n_features: int) -> pd.DataFrame:
         if rest.empty:
             return out_real
         return pd.concat(
-            [out_real, _decode_batch(rest, n_features)], ignore_index=True
+            [out_real, _decode_batch(rest)], ignore_index=True
         )
     payloads = [bytes(p) if p is not None else b"" for p in batch["payload"]]
     n = len(payloads)
@@ -988,11 +992,11 @@ def _decode_batch(batch: pd.DataFrame, n_features: int) -> pd.DataFrame:
         allbytes = np.frombuffer(b"".join(payloads), dtype=np.uint8)
         row_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
         hist = np.bincount(
-            row_idx * n_features + (allbytes % n_features).astype(np.int64),
-            minlength=n * n_features,
-        ).reshape(n, n_features)
+            row_idx * _HIST_BINS + (allbytes % _HIST_BINS).astype(np.int64),
+            minlength=n * _HIST_BINS,
+        ).reshape(n, _HIST_BINS)
     else:
-        hist = np.zeros((n, n_features), dtype=np.int64)
+        hist = np.zeros((n, _HIST_BINS), dtype=np.int64)
     totals = np.maximum(lens, 1).astype(np.float64)
     feats = np.round(hist / totals[:, None], 6)
     return pd.DataFrame(
@@ -1005,7 +1009,7 @@ def _decode_batch(batch: pd.DataFrame, n_features: int) -> pd.DataFrame:
     )
 
 
-def decode_media(media: DataFrame, n_features: int = 16) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract pipeline over binary payloads.
 
     mapInPandas keeps payloads off the driver and processes executor-local
@@ -1016,7 +1020,7 @@ def decode_media(media: DataFrame, n_features: int = 16) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            yield _decode_batch(batch, n_features)
+            yield _decode_batch(batch)
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
@@ -1025,20 +1029,16 @@ def synthetic_media(
     docs: DataFrame,
     kind: str = "bmp",
     id_col: str = "doc_id",
-    width: int = 8,
-    height: int = 4,
-    n_samples: int = 64,
-    sample_rate: int = 8000,
 ) -> DataFrame:
     """Deterministic media payloads derived from ids, ENCODED with the real
-    codecs: pixel byte i of doc d is (d*7 + i) % 256 (row-major top-down
-    RGB); WAV sample i is ((d*13 + i*31) % 65536) - 32768. Because the
-    content is a closed-form function of the id, the decoded features are
-    oracle-checkable in plain SQL — the encode->decode round trip through
-    the actual BMP/WAV/PNG byte layout is what the check exercises. For
-    kind="png" the same pixel rule goes through DEFLATE + all five
-    scanline filters, so the identical oracle also proves the compressed
-    round trip."""
+    codecs: 8x4 images whose pixel byte i of doc d is (d*7 + i) % 256
+    (row-major top-down RGB); 64-sample 8 kHz WAV clips whose sample i is
+    ((d*13 + i*31) % 65536) - 32768. Because the content is a closed-form
+    function of the id, the decoded features are oracle-checkable in plain
+    SQL — the encode->decode round trip through the actual BMP/WAV/PNG byte
+    layout is what the check exercises. For kind="png" the same pixel rule
+    goes through DEFLATE + all five scanline filters, so the identical
+    oracle also proves the compressed round trip."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -1048,18 +1048,16 @@ def synthetic_media(
             payloads = []
             for d in ids:
                 if kind in ("bmp", "png", "jpeg"):
-                    px = (int(d) * 7 + np.arange(width * height * 3)) % 256
-                    arr = px.astype(np.uint8).reshape(height, width, 3)
+                    px = (int(d) * 7 + np.arange(8 * 4 * 3)) % 256
+                    arr = px.astype(np.uint8).reshape(4, 8, 3)
                     enc = {"bmp": encode_bmp, "png": encode_png, "jpeg": encode_jpeg}
                     payloads.append(enc[kind](arr))
                 elif kind == "gif":
-                    px = (int(d) * 7 + np.arange(width * height)) % 256
-                    payloads.append(
-                        encode_gif(px.astype(np.uint8).reshape(height, width))
-                    )
+                    px = (int(d) * 7 + np.arange(8 * 4)) % 256
+                    payloads.append(encode_gif(px.astype(np.uint8).reshape(4, 8)))
                 else:
-                    s = (int(d) * 13 + np.arange(n_samples) * 31) % 65536 - 32768
-                    payloads.append(encode_wav(s.astype("<i2"), sample_rate))
+                    s = (int(d) * 13 + np.arange(64) * 31) % 65536 - 32768
+                    payloads.append(encode_wav(s.astype("<i2"), 8000))
             yield pd.DataFrame(
                 {
                     "media_id": ids,
@@ -1132,8 +1130,9 @@ def resize_media(media: DataFrame, width: int = 32, height: int = 32) -> DataFra
     return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per sampled frame index.
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: one output row per sampled frame index
+    (every 10th frame).
 
     Generates (media_id, frame_idx) rows with sequence+explode so the
     expensive decode fans out across executors; the actual frame grab is the
@@ -1142,7 +1141,7 @@ def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
     n_frames = F.coalesce(
         F.get_json_object("meta_json", "$.n_frames").cast("int"), F.lit(0)
     )
-    idx = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
+    idx = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(10))
     return media.select("media_id", F.explode(idx).alias("frame_idx"))
 
 
@@ -1157,9 +1156,9 @@ AUDIO_FRAME_SCHEMA = StructType(
 )
 
 
-def audio_frame_energy(media: DataFrame, frame_size: int = 16) -> DataFrame:
+def audio_frame_energy(media: DataFrame) -> DataFrame:
     """Per-frame energy features from 16-bit PCM WAV payloads: one row
-    per (clip, frame) with the frame's peak |amplitude| and EXACT
+    per (clip, 16-sample frame) with the frame's peak |amplitude| and EXACT
     integer sum of squares — the framing pass in front of any audio
     feature extractor (VAD, loudness gates, silence trimming pick
     frames, not whole clips). RMS = sqrt(sum_sq / n) is left to the
@@ -1186,15 +1185,15 @@ def audio_frame_energy(media: DataFrame, frame_size: int = 16) -> DataFrame:
             ):
                 _rate, samples = decode_wav(bytes(payload))
                 s = samples.astype(np.int64)
-                nf = len(s) // frame_size
+                nf = len(s) // 16
                 if nf == 0:
                     continue
-                frames = s[: nf * frame_size].reshape(nf, frame_size)
+                frames = s[: nf * 16].reshape(nf, 16)
                 peaks = np.abs(frames).max(axis=1)
                 sums = (frames * frames).sum(axis=1)
                 out["media_id"].extend([int(mid)] * nf)
                 out["frame_idx"].extend(range(nf))
-                out["n_samples"].extend([frame_size] * nf)
+                out["n_samples"].extend([16] * nf)
                 out["peak"].extend(int(p) for p in peaks)
                 out["sum_sq"].extend(int(v) for v in sums)
             yield pd.DataFrame(out, columns=list(AUDIO_FRAME_SCHEMA.names))

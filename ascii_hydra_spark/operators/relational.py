@@ -28,15 +28,13 @@ def dim_join(
     fact: DataFrame,
     dim: DataFrame,
     on: str | list[str] | Column,
-    how: str = "inner",
-    broadcast: bool = True,
 ) -> DataFrame:
-    """Fact x dimension join; broadcasts the dim side by default.
+    """Inner fact x dimension join with the dim side broadcast.
 
     At 100 TB the fact side must never shuffle for a small dim — the
     broadcast hint makes that explicit instead of trusting size stats.
     """
-    return fact.join(F.broadcast(dim) if broadcast else dim, on, how)
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 def star_join(fact: DataFrame, dims: Sequence[tuple[DataFrame, str | Column]]) -> DataFrame:
@@ -198,11 +196,11 @@ def weighted_sample(
 def quantile_buckets(
     df: DataFrame,
     value_col: str,
-    probs: Sequence[float] = (0.25, 0.5, 0.75),
     out_col: str = "bucket",
 ) -> DataFrame:
-    """Value-boundary quantile bucketing: bucket i = rows with
-    boundary[i-1] < value <= boundary[i] (exact interpolated percentiles).
+    """Value-boundary quartile bucketing: bucket i (1-4) = rows with
+    boundary[i-1] < value <= boundary[i] (exact interpolated 25th, 50th
+    and 75th percentiles).
 
     This is the SCALE formulation of NTILE-style scoring: the boundaries
     are one aggregate row (computed with exact `percentile` here; swap in
@@ -212,6 +210,7 @@ def quantile_buckets(
     in the lower bucket on both engines (<=), so results are deterministic
     without a row order.
     """
+    probs = (0.25, 0.5, 0.75)
     bounds = df.agg(
         *[
             F.expr(f"percentile({value_col}, {p})").alias(f"__b{i}")
@@ -398,10 +397,10 @@ def association_rules(
     basket_col: str,
     item_col: str,
     *,
-    min_pair: int = 2,
     k: int = 20,
 ) -> DataFrame:
-    """Top-k directional association rules a -> b by lift:
+    """Top-k directional association rules a -> b by lift, over pairs
+    co-occurring in at least 2 baskets:
     (antecedent, consequent, n_both, n_ante, n_cons, support, confidence,
     lift) — the market-basket rule miner (Agrawal & Srikant 1994's 2-item
     case): support = P(a,b), confidence = P(b|a), lift = P(a,b) /
@@ -434,7 +433,7 @@ def association_rules(
             F.col("a.__i").alias("antecedent"), F.col("b.__i").alias("consequent")
         )
         .agg(F.count("*").cast("bigint").alias("n_both"))
-        .filter(F.col("n_both") >= min_pair)
+        .filter(F.col("n_both") >= 2)
     )
     scored = (
         pairs.join(
@@ -485,7 +484,6 @@ def target_encode_loo(
     value_col: str,
     *,
     smoothing: float = 10.0,
-    scale: int = 2,
 ) -> DataFrame:
     """(key, cat, encoded): leave-one-out target encoding with additive
     smoothing toward the global mean — enc_i = (S_cat - x_i + m * prior)
@@ -494,12 +492,12 @@ def target_encode_loo(
     feature (the train-time leakage guard), smoothing keeps rare
     categories from memorizing.
 
-    Category sums accumulate as DECIMAL(18,scale) (exact, order-free);
+    Category sums accumulate as DECIMAL(18,2) (exact, order-free);
     the global prior is a broadcast scalar; the per-row float follows
     one written order. Two aggregates + two broadcast joins back onto
     the fact rows — no window, no self-join.
     """
-    v = F.col(value_col).cast(f"decimal(18,{scale})")
+    v = F.col(value_col).cast("decimal(18,2)")
     base = df.select(
         F.col(key_col).alias("key"), F.col(cat_col).alias("cat"), v.alias("__x")
     )
@@ -524,12 +522,11 @@ def fixed_size_sample(
     strata: "list[str]",
     id_col: str,
     *,
-    k: int = 5,
     salt: str = "s1",
 ) -> DataFrame:
-    """Deterministic fixed-k-per-stratum sample: rank rows inside each
-    stratum by md5(id || '#' || salt) and keep rank <= k — the
-    "exactly k examples per language/source" sampler, where
+    """Deterministic fixed-size-per-stratum sample: rank rows inside each
+    stratum by md5(id || '#' || salt) and keep rank <= 5 — the
+    "exactly 5 examples per language/source" sampler, where
     `hash_stratified_sample` keeps a *fraction*. Re-running with the
     same salt reproduces the sample exactly; changing the salt redraws
     it. One keyed window (rank by hash), no RNG, no collect.
@@ -538,7 +535,7 @@ def fixed_size_sample(
     w = Window.partitionBy(*strata).orderBy(h, F.col(id_col))
     return (
         df.withColumn("sample_rank", F.row_number().over(w))
-        .filter(F.col("sample_rank") <= k)
+        .filter(F.col("sample_rank") <= 5)
     )
 
 

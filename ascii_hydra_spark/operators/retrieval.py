@@ -36,7 +36,7 @@ from ascii_hydra_spark.operators.lineage import truncate_lineage
 from ascii_hydra_spark.operators.distrank import single_partition
 from ascii_hydra_spark.operators.similarity import block_pair_sides
 
-# Okapi defaults, shared with the verification oracle so both engines
+# Okapi constants, shared with the verification oracle so both engines
 # compute with bit-identical constants (0.25 / 0.75 / 2.2 are interpolated
 # from THESE floats into the DuckDB SQL).
 K1 = 1.2
@@ -50,12 +50,10 @@ def bm25_scores(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
-    """(id, bm25): Okapi BM25 score of every document that contains at
-    least one query term (docs with no match are absent, as in a posting-
-    list engine).
+    """(id, bm25): Okapi BM25 score (k1 = K1, b = B) of every document
+    that contains at least one query term (docs with no match are absent,
+    as in a posting-list engine).
 
     idf is the Lucene non-negative variant ``ln(1 + (N - df + .5)/(df + .5))``;
     N and avgdl are computed over documents with >= 1 token (the only docs
@@ -74,10 +72,10 @@ def bm25_scores(
     idf = F.log(
         F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl")
+    denom = F.col("tf") + F.lit(K1) * (
+        F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl")
     )
-    contrib = idf * F.col("tf") * F.lit(k1 + 1.0) / denom
+    contrib = idf * F.col("tf") * F.lit(K1 + 1.0) / denom
     return scored.groupBy(id_col).agg(F.sum(contrib).alias("bm25"))
 
 
@@ -88,13 +86,11 @@ def bm25_topk(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
-    """Top-k BM25 hits, deterministically tie-broken by id. Scores are
+    """Top-k BM25 hits (K1, B), deterministically tie-broken by id. Scores are
     rounded to 6 dp BEFORE the sort so the cut line is stable across
     engines (a last-ulp summation difference must not reorder the list)."""
-    s = bm25_scores(docs, query_terms, id_col=id_col, text_col=text_col, k1=k1, b=b)
+    s = bm25_scores(docs, query_terms, id_col=id_col, text_col=text_col)
     return (
         s.select(F.col(id_col), F.round("bm25", 6).alias("bm25"))
         .orderBy(F.desc("bm25"), F.col(id_col))
@@ -140,7 +136,6 @@ def hybrid_search(
     query_vec_id: int,
     *,
     candidates_per_ranker: int = 50,
-    k: int = 20,
     id_col: str = "doc_id",
     vec_id_col: str = "vec_id",
 ) -> DataFrame:
@@ -149,7 +144,7 @@ def hybrid_search(
 
     The dense arm reuses :func:`similarity.cosine_topk_by_id` (1-row query
     broadcast, TakeOrdered top-R); at scale it swaps for the IVF arm with
-    no change to the fusion step. Returns (id, rrf, n_rankers) top-k.
+    no change to the fusion step. Returns (id, rrf, n_rankers) top-20.
     """
     from ascii_hydra_spark.operators import similarity
 
@@ -163,7 +158,7 @@ def hybrid_search(
     return (
         fused.select(id_col, F.round("rrf", 6).alias("rrf"), "n_rankers")
         .orderBy(F.desc("rrf"), F.col(id_col))
-        .limit(k)
+        .limit(20)
     )
 
 

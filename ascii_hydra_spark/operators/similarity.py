@@ -30,6 +30,11 @@ from ascii_hydra_spark.functions import (
 from ascii_hydra_spark.operators.dedup import _self_join_pairs
 from ascii_hydra_spark.operators.lineage import truncate_lineage
 
+# Fixed-point grid of the exact embedding-geometry operators: coordinates
+# snap to floor(x * GRID + 0.5), the same multiply-add-floor the oracles
+# spell FLOOR(x*1e4 + 0.5).
+GRID = 10**4
+
 
 def _as_query_array(query: Sequence[float]):
     return F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
@@ -242,8 +247,16 @@ def cosine_pairs(
 
 
 def _normalize(v):
-    norm = l2_norm(v)
-    return F.transform(v, lambda x: x / norm)
+    # l2_norm's fold, once per vector: the finish lambda hands the sum to
+    # the elements. A norm referenced inside the transform lambda re-folds
+    # per element (Catalyst neither hoists it nor keeps it in a separate
+    # projection, which CollapseProject inlines back).
+    return F.aggregate(
+        v,
+        F.lit(0.0),
+        lambda acc, x: acc + x * x,
+        lambda acc: F.transform(v, lambda x: x / F.sqrt(acc)),
+    )
 
 
 def block_pair_sides(rows: DataFrame, key_col: str, block_size: int) -> DataFrame:
@@ -345,9 +358,6 @@ def cosine_pairs_lsh(
     vec_col: str = "embedding",
     n_planes: int | None = None,
     n_tables: int | None = None,
-    seed: int = 42,
-    target_occupancy: int = 64,
-    recall_target: float = 0.98,
 ) -> DataFrame:
     """Scale path for cosine_pairs: random-hyperplane LSH candidates + exact
     verification. Similar vectors collide on a sign-pattern bucket in at
@@ -362,10 +372,10 @@ def cosine_pairs_lsh(
     work grows QUADRATICALLY with data size (2x vectors -> 2x bucket
     occupancy -> 4x pairs; measured 24 s -> 102 s on the 20k -> 40k
     stress fixtures). So when n_planes is None it is sized to the data —
-    ceil(log2(n / target_occupancy)), floor 6, cap 14 — keeping expected
-    bucket occupancy constant (work returns to ~linear), and n_tables is
-    then derived from the recall target at the given threshold:
-    T = ceil(ln(1-recall) / ln(1 - p^planes)). Higher thresholds need
+    ceil(log2(n / 64)), floor 6, cap 14 — keeping expected bucket
+    occupancy near 64 (work returns to ~linear), and n_tables is then
+    derived from a 0.98 recall target at the given threshold:
+    T = ceil(ln(1-0.98) / ln(1 - p^planes)). Higher thresholds need
     FEWER tables (near-identical vectors agree on almost every plane), so
     the dedup regime (0.99) gets cheaper as planes grow, not dearer.
     Pass explicit n_planes/n_tables to pin a configuration; identical
@@ -379,7 +389,7 @@ def cosine_pairs_lsh(
     """
     if n_planes is None:
         n = emb.count()  # one cheap scan; sizing must see the data scale
-        n_planes = max(6, min(14, math.ceil(math.log2(max(n, 1) / target_occupancy))))
+        n_planes = max(6, min(14, math.ceil(math.log2(max(n, 1) / 64))))
     if n_tables is None:
         p = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
         collide = p**n_planes
@@ -387,12 +397,12 @@ def cosine_pairs_lsh(
             n_tables = 1
         else:
             n_tables = max(2, min(24, math.ceil(
-                math.log(max(1.0 - recall_target, 1e-9))
+                math.log(1.0 - 0.98)
                 / math.log(max(1.0 - collide, 1e-12))
             )))
     from ascii_hydra_spark.functions.udfs import dot_product, make_hyperplane_bucket_udf
 
-    bucket_keys = make_hyperplane_bucket_udf(n_planes, n_tables, seed)
+    bucket_keys = make_hyperplane_bucket_udf(n_planes, n_tables, 42)
     # NOTE(r10, negative result — do not re-add): an eager
     # persist+count barrier here (plus a round-robin min-parallelism
     # repartition) was tried and REVERTED on paired ABAB evidence
@@ -557,16 +567,14 @@ def cosine_topk_ivf(
     emb: DataFrame,
     query_id: int,
     k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: the 100 TB scale path for C3.
 
-    Index build: :func:`_ivf_cells` — lowest-id seed centroids, every
+    Index build: :func:`_ivf_cells` — 16 lowest-id seed centroids, every
     vector assigned to its max-dot centroid (ties to the lowest cid).
-    Query: score the query against all centroids, probe the top `nprobe`
+    Query: score the query against all centroids, probe the top 4
     cells, exact-rescore only those rows. At scale the cell assignment is
     computed once at ingest and stored as a partition column
     (:func:`build_ivf_index`), making the probe a partition-pruned scan.
@@ -574,14 +582,14 @@ def cosine_topk_ivf(
     Recall < 1.0 by construction (rows-only driver check); measured against
     exact `cosine_topk_by_id` in tests/test_similarity.py.
     """
-    normed, cents, assigned = _ivf_cells(emb, n_centroids, id_col, vec_col)
-    # probe list: the query's top-nprobe centroids
+    normed, cents, assigned = _ivf_cells(emb, 16, id_col, vec_col)
+    # probe list: the query's top-4 centroids
     qv = normed.filter(F.col("__id") == query_id).select(F.col("__v").alias("__qv"))
     probes = (
         cents.crossJoin(F.broadcast(qv))
         .select("__cid", dot(F.col("__cv"), F.col("__qv")).alias("__cd"))
         .orderBy(F.desc("__cd"), F.col("__cid"))
-        .limit(nprobe)
+        .limit(4)
         .select("__cid")
     )
     # exact rescore within probed cells only
@@ -594,12 +602,12 @@ def cosine_topk_ivf(
 
 
 def embedding_norm_histogram(
-    emb: DataFrame, vec_col: str = "embedding", bucket_width: float = 0.25
+    emb: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Sparse histogram of embedding L2 norms (bucket, bucket_lo, n,
-    min_norm, max_norm) — the first sanity gate on a vector corpus:
-    un-normalized rows, zero vectors, and mixed-model batches all show
-    up as stray norm buckets before any similarity search runs.
+    """Sparse histogram of embedding L2 norms in 0.25-wide buckets
+    (bucket, bucket_lo, n, min_norm, max_norm) — the first sanity gate on
+    a vector corpus: un-normalized rows, zero vectors, and mixed-model
+    batches all show up as stray norm buckets before any similarity search runs.
 
     The norm is a sequential in-row fold (functions.l2_norm) — the same
     left-to-right double accumulation DuckDB's LIST_REDUCE performs, so
@@ -608,7 +616,7 @@ def embedding_norm_histogram(
     Pure map + keyed count; output is bucket-cardinality sized.
     """
     norm = l2_norm(to_double_array(vec_col))
-    w = float(bucket_width)
+    w = 0.25
     bucket = F.floor(norm / F.lit(w)).cast("bigint")
     return (
         emb.select(norm.alias("__n"), bucket.alias("bucket"))
@@ -623,14 +631,12 @@ def embedding_norm_histogram(
     )
 
 
-def _gram_partials(
-    emb: DataFrame, vec_col: str, scale: int
-) -> tuple[int, DataFrame]:
+def _gram_partials(emb: DataFrame, vec_col: str) -> tuple[int, DataFrame]:
     """(d, parts): the embedding width and the per-Arrow-batch Gram
     partials (i, j, q, si, sj, n) that :func:`embedding_covariance` and
     :func:`gram_power_iteration_eigen` reduce with an (i, j) groupBy.
 
-    Coordinates snap to the integer grid floor(x * 10^scale + 0.5) — the
+    Coordinates snap to the integer grid floor(x * GRID + 0.5) — the
     numpy spelling of `functions.round_half_up`, the same IEEE
     multiply-add-floor on the same float64 values, so the integers equal
     the oracles' FLOOR(x*1e4 + 0.5) bit-for-bit, exact halves included.
@@ -644,7 +650,7 @@ def _gram_partials(
     import pandas as pd
 
     d = len(emb.select(vec_col).first()[0])  # bounded probe (one row)
-    mult = float(10**scale)
+    mult = float(GRID)
 
     def part(batches):
         iu = np.triu_indices(d)
@@ -675,14 +681,14 @@ def _gram_partials(
 
 
 def embedding_covariance(
-    emb: DataFrame, vec_col: str = "embedding", *, scale: int = 4
+    emb: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
     """(i, j, n, cov): upper-triangle (1-based, i <= j) sample covariance
     of the embedding coordinates — the distributed X^T X (Gram) pass that
     PCA / whitening / SemDeDup preprocessing starts from.
 
     Physical shape: :func:`_gram_partials` computes each Arrow batch's
-    partial Gram as ONE int64 numpy matmul on 10^scale-scaled rounded
+    partial Gram as ONE int64 numpy matmul on GRID-scaled rounded
     coordinates and emits d(d+1)/2 partial rows; an (i, j)-keyed groupBy
     sums the partials — the map-side combine IS the distributed matrix
     multiply, and the shuffle moves d(d+1)/2 rows per batch regardless
@@ -696,12 +702,12 @@ def embedding_covariance(
     where a half-even rint or DuckDB's float->decimal cast would not
     agree. Partials reduce as DECIMAL(38,0) so row count can't overflow
     the int64 batch partials; the single float conversion is the last
-    step. int64 partial headroom: |x| <= 10^scale * max|v|, one batch of
-    B rows needs B * (10^scale * max|v|)^2 < 2^63 — at scale 4, |v| <= 2,
-    that is ~23M rows per batch; lower `scale` if coordinates are large.
+    step. int64 partial headroom: |x| <= GRID * max|v|, one batch of
+    B rows needs B * (GRID * max|v|)^2 < 2^63 — at |v| <= 2 that is ~23M
+    rows per batch.
     """
-    _, parts = _gram_partials(emb, vec_col, scale)
-    mult = float(10**scale)
+    _, parts = _gram_partials(emb, vec_col)
+    mult = float(GRID)
     agg = parts.groupBy("i", "j").agg(
         F.sum(F.col("q").cast("decimal(38,0)")).alias("__q"),
         F.sum(F.col("si").cast("decimal(38,0)")).alias("__si"),
@@ -723,20 +729,20 @@ def embedding_covariance(
 
 
 def _label_coordinate_sums(
-    emb: DataFrame, label_col: str, vec_col: str, scale: int
+    emb: DataFrame, label_col: str, vec_col: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(coords, sums, counts) for the per-label embedding geometry
     operators (:func:`label_centroid_separation`,
     `clustering.calinski_harabasz`): `coords` is (__l, __p, __x), every
     coordinate posexploded map-side onto the exact DECIMAL(28,0) grid
-    floor(x * 10^scale + 0.5); `sums` is (__l, __p, __s), the
+    floor(x * GRID + 0.5); `sums` is (__l, __p, __s), the
     per-(label, coordinate) sums (one keyed groupBy of labels x d rows);
     `counts` is (__l, __n), the rows per label."""
     pe = F.posexplode(F.col(vec_col))
     coords = emb.select(F.col(label_col).alias("__l"), pe).select(
         "__l",
         F.col("pos").alias("__p"),
-        round_half_up(F.col("col").cast("double") * F.lit(float(10**scale)))
+        round_half_up(F.col("col").cast("double") * F.lit(float(GRID)))
         .cast("decimal(28,0)")
         .alias("__x"),
     )
@@ -751,8 +757,6 @@ def label_centroid_separation(
     emb: DataFrame,
     label_col: str,
     vec_col: str = "embedding",
-    *,
-    scale: int = 4,
 ) -> DataFrame:
     """(label_a, label_b, n_a, n_b, cos): pairwise cosine between
     per-label centroid vectors — the class-separation diagnostic a
@@ -761,12 +765,12 @@ def label_centroid_separation(
 
     Exactness: cosine(mean_a, mean_b) == cosine(sum_a, sum_b) (the 1/n
     scaling cancels), so the whole computation runs on per-(label,
-    coordinate) DECIMAL sums of 10^scale-scaled exact-rounded
+    coordinate) DECIMAL sums of GRID-scaled exact-rounded
     coordinates (:func:`_label_coordinate_sums`); the single
     sqrt/division is the last step. Label pairs are
     label-cardinality-squared — dimension-table sized.
     """
-    _, per, counts = _label_coordinate_sums(emb, label_col, vec_col, scale)
+    _, per, counts = _label_coordinate_sums(emb, label_col, vec_col)
     a = per.select(
         F.col("__l").alias("label_a"), "__p", F.col("__s").alias("__sa")
     )
@@ -832,7 +836,6 @@ def cosine_pairs_lsh_portable(
     threshold: float = 0.5,
     n_planes: int = 8,
     dim: int = 64,
-    seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -849,7 +852,7 @@ def cosine_pairs_lsh_portable(
     oracle. Precision 1.0 (exact verify); recall follows the single
     sign-pattern table (identical vectors always collide).
     """
-    signs = rademacher_planes(dim, n_planes, seed)
+    signs = rademacher_planes(dim, n_planes, 7)
     v = to_double_array(vec_col)
 
     bucket = None
@@ -884,7 +887,6 @@ def cosine_pairs_lsh_portable(
 def embedding_dim_stats(
     emb: DataFrame,
     vec_col: str = "embedding",
-    quant: float = 1048576.0,
 ) -> DataFrame:
     """Per-dimension row (dim, n, sum_q, mean, min_q, max_q): coordinate
     statistics of an embedding corpus — the drift/collapse monitor (a
@@ -903,7 +905,7 @@ def embedding_dim_stats(
     )
     q = d.select(
         "dim",
-        round_half_up(F.col("x") * F.lit(quant)).alias("__q"),
+        round_half_up(F.col("x") * F.lit(1048576.0)).alias("__q"),
     )
     agg = q.groupBy("dim").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -918,7 +920,7 @@ def embedding_dim_stats(
         F.round(
             F.col("sum_q").cast("double")
             / F.col("n").cast("double")
-            / F.lit(quant),
+            / F.lit(1048576.0),
             6,
         ).alias("mean"),
         "min_q",
@@ -930,15 +932,14 @@ def quantized_cosine_pair_histogram(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    stride: int = 1,
 ) -> DataFrame:
     """Per cosine-decile row (bucket, n, share): the similarity
-    distribution over the deterministic (id, id+stride) ring pairing —
+    distribution over the deterministic (id, id+1) ring pairing —
     the corpus-geometry sanity gate (a distribution collapsing toward
     bucket 9-10 says the embedding space has degenerated, BEFORE any
     expensive all-pairs job is launched).
 
-    The ring pairing is an EQUI join on id+stride (hash join, no
+    The ring pairing is an EQUI join on id+1 (hash join, no
     sampling RNG, any scale); cosine runs over the shared int8
     quantization (integer dot products, one sqrt/divide on identical
     inputs — the sim_topk_quantized exactness argument), bucket =
@@ -949,7 +950,7 @@ def quantized_cosine_pair_histogram(
         F.col(id_col).alias("__ia"), F.col("q_embedding").alias("__qa")
     )
     b = q.select(
-        (F.col(id_col) - F.lit(stride)).alias("__ia"),
+        (F.col(id_col) - F.lit(1)).alias("__ia"),
         F.col("q_embedding").alias("__qb"),
     )
     cos = _quantized_cosine(F.col("__qa"), F.col("__qb"))
@@ -1010,17 +1011,15 @@ def quantization_error_stats(
 def gram_power_iteration_eigen(
     emb: DataFrame,
     vec_col: str = "embedding",
-    iterations: int = 3,
-    scale: int = 4,
     id_col: str = "vec_id",
 ) -> DataFrame:
     """One row (d, eigenvalue, top_dim): dominant eigenvalue of the
-    corpus Gram matrix X^T X by fixed-iteration power iteration — the
+    corpus Gram matrix X^T X by 3-iteration power iteration — the
     spectral-concentration readout (a dominant eigenvalue carrying most
     of the trace means the embedding space has collapsed to ~1
     direction and ANN partitioning will degenerate).
 
-    Exactness chain: coordinates fix to the floor(x * 10^scale + 0.5)
+    Exactness chain: coordinates fix to the floor(x * GRID + 0.5)
     integer grid (the embedding_dim_stats convention — one
     deterministic IEEE multiply-add-floor; NOT a decimal cast, whose
     tie rounding differs between Spark's HALF_UP and DuckDB's
@@ -1029,7 +1028,7 @@ def gram_power_iteration_eigen(
     the j-sorted row (0.0-init F.aggregate == LIST_REDUCE), so all
     three iterations are bit-identical across engines;
     max-normalization is order-free. The eigenvalue descales by
-    10^(2*scale) at the end.
+    GRID^2 at the end.
 
     The Gram builds from :func:`_gram_partials` (the partials
     :func:`embedding_covariance` reduces; this arm reads only q): one
@@ -1037,8 +1036,8 @@ def gram_power_iteration_eigen(
     groupBy sums them — the shuffle moves d(d+1)/2 rows per batch
     regardless of corpus size.
     """
-    d, parts = _gram_partials(emb, vec_col, scale)
-    mult = 10**scale
+    d, parts = _gram_partials(emb, vec_col)
+    mult = GRID
     upper = parts.groupBy("i", "j").agg(F.sum("q").cast("bigint").alias("v"))
     full_g = upper.unionAll(
         upper.filter(F.col("i") != F.col("j")).select(
@@ -1054,7 +1053,7 @@ def gram_power_iteration_eigen(
     x = F.array_repeat(F.lit(1.0), d)
     cur = rows_g.select("i", "row_v", x.alias("__x"))
     m_col = None
-    for _ in range(iterations):
+    for _ in range(3):
         y = cur.select(
             "i",
             "row_v",

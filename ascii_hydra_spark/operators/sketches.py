@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from ascii_hydra_spark.functions import md5_int60
 
+# portable HLL sizing: 2^9 registers; the oracle SQL interpolates _HLL_M
+_HLL_B_BITS = 9
+_HLL_M = 1 << _HLL_B_BITS
+
 
 def _cms_bucket(col: "F.Column", r: int, width: int, hash_fn: str) -> "F.Column":
     """Row-r bucket address. hash_fn='xxhash64' is the fast JVM path;
@@ -172,13 +176,11 @@ def hll_portable_cells(
     items: DataFrame,
     item_col: str,
     group_cols: "list[str] | None" = None,
-    *,
-    b_bits: int = 9,
 ) -> DataFrame:
     """(group..., bucket, max_rho): HyperLogLog register table with a
     fully PORTABLE hash path — the md5-derived 60-bit integer the Bloom
-    and portable-CMS arms share, split into a `b_bits` bucket prefix and
-    a TRAILING-ZERO rank rho on the remaining bits.
+    and portable-CMS arms share, split into a `_HLL_B_BITS` bucket prefix
+    and a TRAILING-ZERO rank rho on the remaining bits.
 
     Trailing zeros (not the textbook leading zeros) on purpose: tz is
     extracted exactly as round(log2(x & -x)) — log2 of an exact power of
@@ -191,27 +193,26 @@ def hll_portable_cells(
 
     The register table is the MERGEABLE state: union + groupBy-max
     combines shards/days, same as cms_merge's union + sum. Registers for
-    a group are at most 2^b_bits rows — broadcastable at any corpus
+    a group are at most `_HLL_M` rows — broadcastable at any corpus
     size.
     """
     gcols = list(group_cols or [])
-    m = 1 << b_bits
     h = md5_int60(F.col(item_col).cast("string"))
-    bucket = F.pmod(h, F.lit(m))
+    bucket = F.pmod(h, F.lit(_HLL_M))
     # quotient bits carry the rank: INTEGER shift, never a double
     # round-trip (the hash has 60 significant bits, double keeps 53)
-    rem = F.shiftright(h, b_bits)
+    rem = F.shiftright(h, _HLL_B_BITS)
     low_bit = rem.bitwiseAND(-rem)  # exact power of two: lowest set bit
     tz = F.round(F.log2(low_bit.cast("double"))).cast("int")
     # INTENTIONAL deviation from the textbook rank: Flajolet's rho for an
     # all-zero remainder is rank_bits + 1, but that rho would make the
     # estimator's fixed-point term 2^(rank_bits - rho) = 2^-1 — breaking
     # hll_portable_estimate's exact-integer Z accumulation. The all-zero
-    # pattern (P ~ 2^-51 per item at default sizing) is merged into the
+    # pattern (P ~ 2^-51 per item) is merged into the
     # highest observable trailing-zero rank instead; the estimator bias
     # from the merge is below the 6-dp output rounding. Mirrored in the
     # DuckDB oracle arm.
-    rho = F.when(rem == 0, F.lit(60 - b_bits)).otherwise(tz + 1)
+    rho = F.when(rem == 0, F.lit(60 - _HLL_B_BITS)).otherwise(tz + 1)
     return (
         items.select(*gcols, bucket.alias("bucket"), rho.alias("rho"))
         .groupBy(*gcols, "bucket")
@@ -222,26 +223,24 @@ def hll_portable_cells(
 def hll_portable_estimate(
     cells: DataFrame,
     group_cols: "list[str] | None" = None,
-    *,
-    b_bits: int = 9,
 ) -> DataFrame:
     """(group..., est_distinct): the HLL estimate from a
     `hll_portable_cells` register table — alpha_m * m^2 / (Z + zeros),
     with the standard small-range linear-counting correction
     (E <= 2.5m and empty registers present -> m * ln(m / V)).
 
-    Bucket-grain input (<= 2^b_bits rows per group), one aggregate; the
+    Bucket-grain input (<= `_HLL_M` rows per group), one aggregate; the
     float sum runs over at most m power-of-two terms and the result is
     6-dp rounded, so an external engine running the same closed form
     lands on the same value.
     """
     gcols = list(group_cols or [])
-    m = 1 << b_bits
-    rank_bits = 60 - b_bits  # max rho; also the fixed-point scale below
+    m = _HLL_M
+    rank_bits = 60 - _HLL_B_BITS  # max rho; also the fixed-point scale below
     alpha = 0.7213 / (1.0 + 1.079 / m)
     # Z = sum 2^-rho accumulated EXACTLY as integers: each term is
     # 1 << (rank_bits - rho), the sum is <= m * 2^rank_bits (= 2^60 at
-    # the default sizing — inside int64), divided once by 2^rank_bits.
+    # this sizing — inside int64), divided once by 2^rank_bits.
     # A float accumulation would span 57 bits of magnitude and make the
     # sum partition-order-dependent in the last ulp.
     # 2^(rank_bits - rho) as bigint: pow is exact for these exponents

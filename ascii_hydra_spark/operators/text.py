@@ -57,12 +57,10 @@ def document_frequencies(docs: DataFrame, id_col: str = "doc_id", text_col: str 
     )
 
 
-def ngram_counts(
-    docs: DataFrame, n: int = 2, text_col: str = "text"
-) -> DataFrame:
-    """(ngram, cnt): corpus-wide word n-gram counts."""
+def ngram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(ngram, cnt): corpus-wide word bigram counts."""
     return (
-        docs.select(F.explode(ngrams(word_tokens(text_col), n)).alias("ngram"))
+        docs.select(F.explode(ngrams(word_tokens(text_col), 2)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count("*").alias("cnt"))
     )
@@ -214,22 +212,21 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 def redact_pii(
     docs: DataFrame,
     text_col: str = "text",
-    patterns: tuple[tuple[str, str], ...] = PII_PATTERNS,
 ) -> DataFrame:
     """Scrub PII-shaped spans and count them per document.
 
     Adds `text_redacted` (every match replaced by `<TYPE>`) and one
-    `n_<type>` count column per pattern. Pure `regexp_replace` /
-    `regexp_count` column expressions — a narrow projection over the scan
+    `n_<type>` count column per `PII_PATTERNS` entry. Pure `regexp_replace`
+    / `regexp_count` column expressions — a narrow projection over the scan
     with zero shuffles, which is the only shape that works as a
     pre-tokenizer pass over 100 TB. Counts are computed on the ORIGINAL
-    text, replacement is sequential in declaration order (each pattern
-    sees the previous pattern's output, so overlapping families like
-    ipv4/phone resolve deterministically).
+    text, replacement is sequential in declaration order (each pattern sees
+    the previous pattern's output, so overlapping families like ipv4/phone
+    resolve deterministically).
     """
     out = docs
     red = F.col(text_col)
-    for name, pat in patterns:
+    for name, pat in PII_PATTERNS:
         out = out.withColumn(f"n_{name}", F.regexp_count(F.col(text_col), F.lit(pat)))
         red = F.regexp_replace(red, pat, f"<{name.upper()}>")
     return out.withColumn("text_redacted", red)
@@ -237,14 +234,14 @@ def redact_pii(
 
 # ---------------------------------------------------------------- boilerplate
 
-def token_window_segments(text: Column | str, k: int = 4) -> Column:
-    """Non-overlapping k-token windows, space-joined — the fixture-visible
-    segmentation (the synthetic docs are single-line; on real corpora pass
-    `line_segments` to segment on newlines instead)."""
+def token_window_segments(text: Column | str) -> Column:
+    """Non-overlapping 4-token windows, space-joined — the segmentation
+    `remove_boilerplate` dedups (the synthetic docs are single-line, so
+    `line_segments` would see each document as one segment)."""
     toks = word_tokens(text)
-    n_seg = F.ceil(F.size(toks) / F.lit(k)).cast("int")
+    n_seg = F.ceil(F.size(toks) / F.lit(4)).cast("int")
     idx = F.sequence(F.lit(0), F.greatest(n_seg - 1, F.lit(0)))
-    segs = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i * k + 1, k)))
+    segs = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i * 4 + 1, 4)))
     return F.when(F.size(toks) == 0, F.array().cast("array<string>")).otherwise(segs)
 
 
@@ -258,19 +255,18 @@ def remove_boilerplate(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    segments=token_window_segments,
-    min_docs: int = 3,
 ) -> DataFrame:
-    """Corpus-wide boilerplate removal (CCNet-style paragraph dedup).
+    """Corpus-wide boilerplate removal (CCNet-style paragraph dedup) over
+    :func:`token_window_segments`.
 
-    A segment occurring in >= `min_docs` DISTINCT documents is boilerplate
+    A segment occurring in >= 3 DISTINCT documents is boilerplate
     (headers, footers, cookie banners at crawl scale); every occurrence is
     dropped and each document is reassembled from its surviving segments
     in original order.
 
     Scale shape: posexplode -> distinct (doc, segment) -> count per segment
     gives the blacklist, which is TINY relative to the corpus (only
-    segments repeated across >= min_docs docs survive the HAVING) — so the
+    segments repeated across >= 3 docs survive the HAVING) — so the
     scrub join is `left_anti` against a small table AQE broadcasts. The
     expensive shuffle is the segment-keyed count, whose shuffled bytes are
     (segment, doc) pairs after map-side partial distinct, never document
@@ -293,7 +289,8 @@ def remove_boilerplate(
 
     seg = truncate_lineage(
         _ensure_min_parallelism(docs).select(
-            F.col(id_col), F.posexplode(segments(text_col)).alias("pos", "seg")
+            F.col(id_col),
+            F.posexplode(token_window_segments(text_col)).alias("pos", "seg"),
         ),
     )
     blacklist = (
@@ -301,7 +298,7 @@ def remove_boilerplate(
         .distinct()
         .groupBy("seg")
         .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 3)
         .select("seg")
     )
     kept = seg.join(blacklist, "seg", "left_anti")
@@ -577,10 +574,9 @@ def distinctive_terms(
     group_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
-    top_k: int = 5,
     min_count: int = 10,
 ) -> DataFrame:
-    """(group, term, n, lift, rank): the top-k most DISTINCTIVE terms per
+    """(group, term, n, lift, rank): the top-5 most DISTINCTIVE terms per
     group by log-lift ln(p(term|group) / p(term)) — keyness analysis:
     "what vocabulary marks this language/source apart", the standard
     corpus-comparison diagnostic (cf. Dunning 1993's signed root being
@@ -625,7 +621,7 @@ def distinctive_terms(
     w = Window.partitionBy("grp").orderBy(F.desc("lift"), F.col("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= 5)
         .withColumnRenamed("grp", group_col)
     )
 
@@ -997,10 +993,9 @@ def token_length_histogram(
     docs: DataFrame,
     group_col: str = "lang",
     text_col: str = "text",
-    clamp: int = 15,
 ) -> DataFrame:
     """Per (group, token length) row (grp, tok_len, n, share): the
-    token-length distribution, lengths clamped at `clamp` so the output
+    token-length distribution, lengths clamped at 15 so the output
     stays bucket-bounded — the tokenizer-sanity profile (a shifted
     length histogram means the segmenter or the source changed).
     Exact counts; shares via a per-group window over bucket rows.
@@ -1010,7 +1005,7 @@ def token_length_histogram(
         F.explode(word_tokens(text_col)).alias("__tok"),
     ).select(
         "grp",
-        F.least(F.length("__tok"), F.lit(clamp)).cast("int").alias("tok_len"),
+        F.least(F.length("__tok"), F.lit(15)).cast("int").alias("tok_len"),
     )
     counts = toks.groupBy("grp", "tok_len").agg(
         F.count("*").cast("bigint").alias("n")
@@ -1030,17 +1025,16 @@ def prefix_dup_rate(
     docs: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    prefix_chars: int = 64,
 ) -> DataFrame:
     """Per-group row (grp, n_docs, n_distinct_prefixes, prefix_dup_rate):
-    share of documents whose leading `prefix_chars` characters are not
+    share of documents whose leading 64 characters are not
     unique within the group — the cheap partial-duplication screen that
     catches templated boilerplate heads before any shingling runs.
     Exact distinct counts over md5(prefix) fingerprints; one division.
     """
     fp = docs.select(
         F.col(group_col).alias("grp"),
-        F.md5(F.substring(F.col(text_col), 1, prefix_chars)).alias("__f"),
+        F.md5(F.substring(F.col(text_col), 1, 64)).alias("__f"),
     )
     agg = fp.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1154,7 +1148,6 @@ def gopher_quality_flags(
     max_words: int = 100_000,
     min_mean_word_len: float = 3.0,
     max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
     min_alpha_word_ratio: float = 0.8,
     stop_words: "tuple[str, ...]" = (
         "the", "be", "to", "of", "and", "that", "have", "with",
@@ -1163,12 +1156,12 @@ def gopher_quality_flags(
 ) -> DataFrame:
     """Per-doc Gopher quality-rule evaluation (Rae et al. 2021, the
     published repetition-free subset every open corpus pipeline reuses:
-    Gopher -> MassiveText -> Dolma/RefinedWeb): word-count bounds, mean
-    word length bounds, symbol-to-word ratio ('#' and ellipsis), share
-    of words containing an alphabetic character, and the required
-    stop-word count — plus the conjunction gate `passes`. `keep_cols`
-    ride through unchanged (a pure projection, so the gate drops into a
-    STREAMING pipeline as-is — no join needed to retain grouping keys).
+    Gopher -> MassiveText -> Dolma/RefinedWeb): word-count bounds, mean word
+    length bounds, symbol-to-word ratio ('#' and ellipsis, at most 0.1),
+    share of words containing an alphabetic character, and the required
+    stop-word count — plus the conjunction gate `passes`. `keep_cols` ride
+    through unchanged (a pure projection, so the gate drops into a STREAMING
+    pipeline as-is — no join needed to retain grouping keys).
 
     Output row: (id, keep_cols..., n_words, mean_word_len, symbol_word_ratio,
     alpha_word_ratio, n_stop_words, ok_word_count, ok_mean_word_len,
@@ -1220,7 +1213,7 @@ def gopher_quality_flags(
             (mean_wl >= F.lit(float(min_mean_word_len)))
             & (mean_wl <= F.lit(float(max_mean_word_len)))
         ).alias("ok_mean_word_len"),
-        (sym_ratio <= F.lit(float(max_symbol_word_ratio))).alias(
+        (sym_ratio <= F.lit(0.1)).alias(
             "ok_symbol_ratio"
         ),
         (alpha_ratio >= F.lit(float(min_alpha_word_ratio))).alias(
@@ -1348,10 +1341,9 @@ def nb_langid_confusion(
     id_col: str = "doc_id",
     text_col: str = "text",
     lang_col: str = "lang",
-    k: float = 0.5,
 ) -> DataFrame:
-    """(true_lang, pred_lang, n_docs): confusion matrix of an add-k
-    naive-Bayes unigram language classifier trained on the labeled
+    """(true_lang, pred_lang, n_docs): confusion matrix of an add-k (k =
+    0.5) naive-Bayes unigram language classifier trained on the labeled
     corpus itself — the fastText-style lang-ID eval loop of a curation
     pipeline (language_id is the heuristic arm; this is the supervised
     counting arm, deterministic so the oracle arbitrates the MODEL).
@@ -1395,8 +1387,8 @@ def nb_langid_confusion(
             "m_lang",
             "tok",
             F.log2(
-                (F.coalesce(F.col("c"), F.lit(0)) + F.lit(k))
-                / (F.col("cl") + F.lit(k) * F.col("v"))
+                (F.coalesce(F.col("c"), F.lit(0)) + F.lit(0.5))
+                / (F.col("cl") + F.lit(0.5) * F.col("v"))
             ).alias("s"),
         )
     )

@@ -296,10 +296,9 @@ def session_ids(
     keys: Sequence[str],
     ts_col: str,
     tiebreak: str,
-    gap_s: int = 1800,
 ) -> DataFrame:
     """Tag each row with a per-key `session_id`: a new session starts when
-    the gap to the previous event exceeds `gap_s` seconds (the classic
+    the gap to the previous event exceeds 1800 seconds (the classic
     30-minute web-analytics rule). session_id = running count of
     session-starts — one lag window and one running sum over the SAME
     keyed sort, so the operator costs a single shuffle.
@@ -313,7 +312,7 @@ def session_ids(
     us = F.unix_micros(F.col(ts_col))
     is_new = (
         F.when(
-            (us - F.lag(us).over(w)) > F.lit(int(gap_s) * 1_000_000), 1
+            (us - F.lag(us).over(w)) > F.lit(1800 * 1_000_000), 1
         )
         .otherwise(0)
         + F.when(F.lag(us).over(w).isNull(), 1).otherwise(0)
@@ -355,13 +354,12 @@ def session_paths(
     ts_col: str,
     tiebreak: str,
     type_col: str,
-    gap_s: int = 1800,
     top_n: int = 20,
 ) -> DataFrame:
     """Top ``top_n`` session paths (path, n_sessions): the ordered
-    sequence of event types inside each gap-rule session, joined with
-    '>' — the UX/funnel answer to "what do sessions actually look like",
-    one level up from the pairwise `transition_matrix`.
+    sequence of event types inside each 30-minute gap-rule session, joined
+    with '>' — the UX/funnel answer to "what do sessions actually look
+    like", one level up from the pairwise `transition_matrix`.
 
     Sessions come from `session_ids` (one keyed shuffle); each session
     reduces to a path string via collect_list of (ts, tiebreak, type)
@@ -370,7 +368,7 @@ def session_paths(
     struct), then a count per path and a TakeOrdered top-N with a path
     tiebreak. Path strings are session-bounded, counts map-side partial.
     """
-    tagged = session_ids(df, keys, ts_col, tiebreak, gap_s=gap_s)
+    tagged = session_ids(df, keys, ts_col, tiebreak)
     paths = (
         tagged.groupBy(*keys, "session_id")
         .agg(
@@ -477,8 +475,6 @@ def time_weighted_avg(
     ts_col: str,
     value_col: str,
     tiebreak: str,
-    *,
-    scale: int = 2,
 ) -> DataFrame:
     """Per-key TWAP (keys..., n_obs, held_s, twap): each observation holds
     until the key's next one; its weight is that hold duration. The
@@ -486,7 +482,7 @@ def time_weighted_avg(
     over-weights bursts of rapid updates.
 
     Durations are exact integer microseconds (lead over one keyed window
-    — the sessionizer's shuffle); values clamp to DECIMAL(18,scale), so
+    — the sessionizer's shuffle); values clamp to DECIMAL(18,2), so
     the weighted sum accumulates exactly and partition order cannot move
     a bit. The final (last) observation has no hold duration and carries
     zero weight; keys with a single observation have no weighted span and
@@ -494,7 +490,7 @@ def time_weighted_avg(
     """
     w = keyed_window(list(keys), [F.col(ts_col), F.col(tiebreak)])
     us = F.unix_micros(F.col(ts_col))
-    v = F.col(value_col).cast(f"decimal(18,{scale})")
+    v = F.col(value_col).cast("decimal(18,2)")
     stepped = df.select(
         *keys, (F.lead(us).over(w) - us).alias("__dur"), v.alias("__v")
     )

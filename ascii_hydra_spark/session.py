@@ -258,24 +258,23 @@ def build_spark(profile: SessionProfile | None = None) -> SparkSession:
     return spark
 
 
-def calculate_parallelism(record_count: int, cap: int = 90_000, floor: int = 200) -> int:
+def calculate_parallelism(record_count: int) -> int:
     """Shuffle-parallelism heuristic (reference: orchestration/pipes/utils.py:65-71).
 
-    >= cap records -> cap partitions; else max(floor, records/4). Pure, so it
-    is unit-testable without a session. With AQE on, prefer leaving
+    >= 90,000 records -> 90,000 partitions; else max(200, records/4). Pure,
+    so it is unit-testable without a session. With AQE on, prefer leaving
     `spark.sql.shuffle.partitions` high and letting AQE coalesce — this
     exists for parity and for engines with AQE disabled.
     """
-    if record_count >= cap:
-        return cap
-    return max(floor, record_count // 4)
+    if record_count >= 90_000:
+        return 90_000
+    return max(200, record_count // 4)
 
 
 def configure_runtime(
     spark: SparkSession,
     mode: ExecutionMode = ExecutionMode.DEV_SAMPLE_LOCAL,
     parallelism: int | None = None,
-    max_partition_bytes: str | None = None,
 ) -> dict[str, str]:
     """Set runtime (non-static) conf per execution mode; returns what was set.
 
@@ -286,8 +285,6 @@ def configure_runtime(
     applied: dict[str, str] = {
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
     }
-    if max_partition_bytes:
-        applied["spark.sql.files.maxPartitionBytes"] = max_partition_bytes
     if mode is ExecutionMode.FULL and parallelism:
         applied["spark.sql.shuffle.partitions"] = str(parallelism)
         applied["spark.default.parallelism"] = str(parallelism)

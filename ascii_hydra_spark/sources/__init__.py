@@ -20,14 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema: StructType | str, header: bool = True) -> DataFrame:
-    """CSV with an *explicit* schema — schema inference is a full extra scan
-    of the data (unacceptable at 100 TB) and type-unstable between runs."""
-    return spark.read.csv(path, schema=schema, header=header)
+def read_csv(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
+    """CSV with a header row and an *explicit* schema — schema inference is
+    a full extra scan of the data (unacceptable at 100 TB) and
+    type-unstable between runs."""
+    return spark.read.csv(path, schema=schema, header=True)
 
 
 def read_json(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
@@ -42,18 +39,18 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").orc(path)
 
 
 def write_parquet(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: tuple[str, ...] = (),
     sort_within: tuple[str, ...] = (),
 ) -> None:
-    """Parquet sink; Hive-style partition layout when partition_by is given.
+    """Overwriting parquet sink; Hive-style partition layout when
+    partition_by is given.
 
     With `spark.sql.sources.partitionOverwriteMode=dynamic` (session
     default), overwrite replaces only the partitions present in `df` —
@@ -67,18 +64,18 @@ def write_parquet(
     """
     if sort_within:
         df = df.sortWithinPartitions(*sort_within)
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
 def write_bucketed(
@@ -87,10 +84,10 @@ def write_bucketed(
     bucket_cols: tuple[str, ...] | list[str],
     num_buckets: int = 16,
     sort_cols: tuple[str, ...] | list[str] = (),
-    mode: str = "overwrite",
     path: str | None = None,
 ) -> None:
-    """Bucketed (hash-clustered) table sink — the co-located-join primitive.
+    """Overwriting bucketed (hash-clustered) table sink — the co-located-join
+    primitive.
 
     Both sides of a recurring large-large join written `bucketBy` the join
     key with the SAME bucket count join WITHOUT a shuffle exchange (verify:
@@ -101,7 +98,7 @@ def write_bucketed(
     catalog table (saveAsTable), not a bare path — pass `path` to make it
     external.
     """
-    w = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
+    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     if path:
@@ -222,14 +219,15 @@ def read_delta(spark: SparkSession, path: str, version: int | None = None) -> Da
     return r.load(path)
 
 
-def vacuum_delta(spark: SparkSession, path: str, retention_hours: float = 168.0) -> bool:
-    """Delta VACUUM (reference: pipes/utils.py:85-89 vacuums with parallel
-    delete on EMR). False (no-op) when delta-spark is absent."""
+def vacuum_delta(spark: SparkSession, path: str) -> bool:
+    """Delta VACUUM with the 7-day (168 h) retention (reference:
+    pipes/utils.py:85-89 vacuums with parallel delete on EMR). False
+    (no-op) when delta-spark is absent."""
     if not delta_available():
         return False
     from delta.tables import DeltaTable
 
-    DeltaTable.forPath(spark, path).vacuum(retention_hours)
+    DeltaTable.forPath(spark, path).vacuum(168.0)
     return True
 
 
@@ -277,11 +275,12 @@ def avro_available(spark: SparkSession) -> bool:
     return True
 
 
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> bool:
-    """Avro sink when the connector is present; False (no-op) otherwise."""
+def write_avro(df: DataFrame, path: str) -> bool:
+    """Overwriting Avro sink when the connector is present; False (no-op)
+    otherwise."""
     if not avro_available(df.sparkSession):
         return False
-    df.write.mode(mode).format("avro").save(path)
+    df.write.mode("overwrite").format("avro").save(path)
     return True
 
 
@@ -292,23 +291,16 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.format("avro").load(path)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    sort_within: str | None = None,
-) -> tuple[int, int]:
+def compact_parquet(spark: SparkSession, path: str) -> tuple[int, int]:
     """Small-files compaction: rewrite an UNPARTITIONED local parquet
-    dataset into ~target-sized files. Returns (files_before, files_after).
+    dataset into ~128 MB files. Returns (files_before, files_after).
 
     Streaming ingests accumulate thousands of tiny files; at 100 TB that
     is scheduler pressure (one task per file), footer overhead, and dead
     scan throughput — compaction is the standing maintenance job behind
     every file-based lake (Delta's OPTIMIZE is this plus a transaction
     log). The target file count comes from the dataset's actual on-disk
-    size; `coalesce` (not repartition) avoids a shuffle, and an optional
-    `sort_within` re-sorts rows inside each output file so range-scan
-    row-group pruning survives compaction.
+    size; `coalesce` (not repartition) avoids a shuffle.
 
     Scope, honestly: LOCAL filesystem paths only (the listing and the
     directory swap are os-level; non-local URIs are rejected), and
@@ -355,10 +347,8 @@ def compact_parquet(
         files = data_files(path)
         n_before = len(files)
         total_bytes = sum(os.path.getsize(f) for f in files)
-        n_target = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
+        n_target = max(1, round(total_bytes / (128 * 1024 * 1024)))
         df = spark.read.parquet(path).coalesce(n_target)
-        if sort_within:
-            df = df.sortWithinPartitions(sort_within)
         df.write.mode("overwrite").parquet(staging)
     return n_before, len(data_files(path))
 
@@ -401,23 +391,20 @@ def _swap_dir(path: str) -> Iterator[str]:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def write_xml(
-    df: DataFrame, path: str, row_tag: str = "row", mode: str = "overwrite"
-) -> None:
-    """XML sink via Spark 4's NATIVE xml data source (the former
-    spark-xml package, merged upstream in 4.0 — no external jar)."""
-    df.write.format("xml").option("rowTag", row_tag).mode(mode).save(path)
+def write_xml(df: DataFrame, path: str) -> None:
+    """Overwriting XML sink (one <row> element per row) via Spark 4's
+    NATIVE xml data source (the former spark-xml package, merged upstream
+    in 4.0 — no external jar)."""
+    df.write.format("xml").option("rowTag", "row").mode("overwrite").save(path)
 
 
-def read_xml(
-    spark: SparkSession, path: str, schema: StructType | str, row_tag: str = "row"
-) -> DataFrame:
-    """Explicit-schema XML source. Schema is REQUIRED here for the same
-    reason as read_csv: at 100 TB, schema inference is a full extra pass
-    over the data before the real job starts."""
+def read_xml(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
+    """Explicit-schema XML source over <row> elements. Schema is REQUIRED
+    here for the same reason as read_csv: at 100 TB, schema inference is a
+    full extra pass over the data before the real job starts."""
     return (
         spark.read.format("xml")
-        .option("rowTag", row_tag)
+        .option("rowTag", "row")
         .schema(schema)
         .load(path)
     )

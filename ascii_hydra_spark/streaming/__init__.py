@@ -57,39 +57,35 @@ def read_events_stream(spark: SparkSession, events_path: str) -> DataFrame:
 
 
 def tumbling_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "1 hour"
+    events: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:
-    """Per-window event counts + value sum. Batch-equivalent: group by
+    """Per-hour-window event counts + value sum. Batch-equivalent: group by
     date_trunc — see verification query `stream_tumbling_hourly`."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("value_sum"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "value_sum")
     )
 
 
-def sliding_counts(
-    events: DataFrame, window: str = "1 hour", slide: str = "15 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Sliding-window counts; batch oracle: explode the (window/slide) slide
-    starts covering each event and group by start."""
+def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """1-hour windows sliding every 15 minutes, counted; batch oracle:
+    explode the four slide starts covering each event and group by start."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("window_start"), "n")
     )
 
 
-def session_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Per-user session windows (gap-based); batch oracle: gaps-and-islands
-    (lag + cumulative new-session flag)."""
+def session_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Per-user session windows (30-minute gap); batch oracle:
+    gaps-and-islands (lag + cumulative new-session flag)."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("user_id"),
@@ -99,27 +95,26 @@ def session_counts(
     )
 
 
-def stream_dedup(events: DataFrame, keys: list[str], watermark: str = "1 hour") -> DataFrame:
-    """Streaming dropDuplicates bounded by watermark state."""
-    return events.withWatermark("ts", watermark).dropDuplicates(keys)
+def stream_dedup(events: DataFrame, keys: list[str]) -> DataFrame:
+    """Streaming dropDuplicates bounded by a 1-hour watermark's state."""
+    return events.withWatermark("ts", "1 hour").dropDuplicates(keys)
 
 
 def run_available_now(
     stream_df: DataFrame,
     sink_dir: str | None = None,
     checkpoint_dir: str | None = None,
-    output_mode: str = "append",
 ) -> str:
-    """Run a streaming DataFrame to completion (availableNow) into a parquet
-    sink; returns the sink path. Deterministic + replayable: the test/oracle
-    contract for every streaming recipe."""
+    """Run a streaming DataFrame to completion (availableNow) into an
+    append-mode parquet sink; returns the sink path. Deterministic +
+    replayable: the test/oracle contract for every streaming recipe."""
     sink = sink_dir or scratch_dir("ahs_sink_")
     ckpt = checkpoint_dir or scratch_dir("ahs_ckpt_")
     q = (
         stream_df.writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
-        .outputMode(output_mode)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -132,14 +127,13 @@ def stream_static_join(
     dim: DataFrame,
     on_left: str,
     on_right: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Stream enriched by a STATIC dimension (no watermark needed: static
+    """Stream inner-joined to a STATIC dimension (no watermark needed: static
     side is bounded, Spark re-broadcasts it per micro-batch). The standard
     at-scale enrichment pattern — decode user/partner/geo attributes onto
     an event stream without any state store. The dim is broadcast-hinted:
     a shuffled stream-static join would re-shuffle every micro-batch."""
-    return stream.join(F.broadcast(dim), stream[on_left] == dim[on_right], how)
+    return stream.join(F.broadcast(dim), stream[on_left] == dim[on_right], "inner")
 
 
 def stream_incremental_dedup(
@@ -170,37 +164,35 @@ def stream_stream_interval_join(
     left: DataFrame,
     right: DataFrame,
     key: str = "user_id",
-    interval: str = "5 minutes",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Stream-stream inner join with a time-interval condition.
 
-    Both sides carry watermarks (mandatory: they bound the join state the
-    engine must retain — without them state grows with the stream). The
-    join matches right rows in [left.ts - interval, left.ts]. Inner joins
-    emit matches as both sides arrive; under availableNow the sink equals
-    the batch theta join on the same inputs.
+    Both sides carry 1-hour watermarks (mandatory: they bound the join
+    state the engine must retain — without them state grows with the
+    stream). The join matches right rows in [left.ts - 5 minutes,
+    left.ts]. Inner joins emit matches as both sides arrive; under
+    availableNow the sink equals the batch theta join on the same inputs.
     """
     l = left.select(
         F.col(key).alias("l_key"),
         F.col("event_id").alias("l_event_id"),
         F.col("ts").alias("l_ts"),
-    ).withWatermark("l_ts", watermark)
+    ).withWatermark("l_ts", "1 hour")
     r = right.select(
         F.col(key).alias("r_key"),
         F.col("event_id").alias("r_event_id"),
         F.col("ts").alias("r_ts"),
-    ).withWatermark("r_ts", watermark)
+    ).withWatermark("r_ts", "1 hour")
     return l.join(
         r,
         F.expr(
-            f"l_key = r_key AND r_ts BETWEEN l_ts - INTERVAL {interval} AND l_ts"
+            "l_key = r_key AND r_ts BETWEEN l_ts - INTERVAL 5 minutes AND l_ts"
         ),
         "inner",
     )
 
 
-def stateful_max_value(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def stateful_max_value(events: DataFrame) -> DataFrame:
     """Per-key running max via transformWithStateInPandas (Spark 4's
     arbitrary-state API, the successor to applyInPandasWithState): typed
     ValueState, explicit processor lifecycle, RocksDB state store.
@@ -235,7 +227,7 @@ def stateful_max_value(events: DataFrame, watermark: str = "1 hour") -> DataFram
             pass
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=MaxProcessor(),
@@ -300,7 +292,7 @@ def run_foreach_batch_upsert(
     return state
 
 
-def stateful_running_count(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def stateful_running_count(events: DataFrame) -> DataFrame:
     """Custom stateful per-key processing: cumulative event count per user
     via applyInPandasWithState (SURVEY.md C28). Emits one row per input
     batch per user with the updated total; operator mode is "append" so the
@@ -320,7 +312,7 @@ def stateful_running_count(events: DataFrame, watermark: str = "1 hour") -> Data
         yield pd.DataFrame({"user_id": [key[0]], "total": [total]})
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy("user_id")
         .applyInPandasWithState(
             update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout

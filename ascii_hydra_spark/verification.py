@@ -44,6 +44,7 @@ from ascii_hydra_spark.operators import (
     windows,
 )
 from ascii_hydra_spark.operators.lineage import truncate_lineage
+from ascii_hydra_spark.operators.sketches import _HLL_M
 from ascii_hydra_spark import sources, streaming
 from ascii_hydra_spark.session import scratch_dir
 from ascii_hydra_spark.session import ship_package  # noqa: F401  (re-export)
@@ -1563,7 +1564,7 @@ def minhash_dedup_survivors(spark, sf_dir):
 )
 def containment_pairs_q(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return dedup.containment_pairs(d, "doc_id", "text", threshold=0.5)
+    return dedup.containment_pairs(d, "doc_id", "text")
 
 
 @q(
@@ -1573,7 +1574,7 @@ def containment_pairs_q(spark, sf_dir):
 )
 def simhash_pairs_q(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return dedup.simhash_pairs(d, "doc_id", "text", max_hamming=3)
+    return dedup.simhash_pairs(d, "doc_id", "text")
 
 
 # ===================================================================
@@ -1756,7 +1757,7 @@ def token_counts(spark, sf_dir):
 )
 def ngram_bigrams(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return text.ngram_counts(d, n=2).orderBy(F.desc("cnt"), F.col("ngram")).limit(20)
+    return text.ngram_counts(d).orderBy(F.desc("cnt"), F.col("ngram")).limit(20)
 
 
 @q(
@@ -2107,7 +2108,7 @@ def hybrid_rrf_topk(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     e = _t(spark, sf_dir, "embeddings")
     return retrieval.hybrid_search(
-        d, e, _BM25_Q, query_vec_id=0, candidates_per_ranker=50, k=20
+        d, e, _BM25_Q, query_vec_id=0, candidates_per_ranker=50
     )
 
 
@@ -2519,7 +2520,7 @@ def sliding_15min(spark, sf_dir):
 )
 def stream_tumbling_hourly(spark, sf_dir):
     ev = streaming.read_events_stream(spark, f"{sf_dir}/events.parquet")
-    agg = streaming.tumbling_counts(ev, window="1 hour", watermark="0 seconds")
+    agg = streaming.tumbling_counts(ev, watermark="0 seconds")
     sink = streaming.run_available_now(agg)
     return spark.read.parquet(sink)
 
@@ -2540,7 +2541,7 @@ def stream_tumbling_hourly(spark, sf_dir):
 )
 def stream_sliding(spark, sf_dir):
     ev = streaming.read_events_stream(spark, f"{sf_dir}/events.parquet")
-    agg = streaming.sliding_counts(ev, window="1 hour", slide="15 minutes", watermark="0 seconds")
+    agg = streaming.sliding_counts(ev, watermark="0 seconds")
     sink = streaming.run_available_now(agg)
     return spark.read.parquet(sink)
 
@@ -2574,7 +2575,7 @@ def stream_sliding(spark, sf_dir):
 )
 def stream_session(spark, sf_dir):
     ev = streaming.read_events_stream(spark, f"{sf_dir}/events.parquet")
-    agg = streaming.session_counts(ev, gap="30 minutes", watermark="0 seconds")
+    agg = streaming.session_counts(ev, watermark="0 seconds")
     sink = streaming.run_available_now(agg)
     return spark.read.parquet(sink)
 
@@ -2599,7 +2600,7 @@ def stream_stream_join(spark, sf_dir):
     clicks = ev1.filter(F.col("event_type") == "click")
     errors = ev2.filter(F.col("event_type") == "error")
     joined = streaming.stream_stream_interval_join(
-        clicks, errors, key="user_id", interval="5 minutes"
+        clicks, errors, key="user_id"
     )
     out = joined.select(
         F.col("l_event_id").alias("click_id"),
@@ -2618,7 +2619,7 @@ def stream_stream_join(spark, sf_dir):
 )
 def stream_stateful_counts(spark, sf_dir):
     ev = streaming.read_events_stream(spark, f"{sf_dir}/events.parquet")
-    agg = streaming.stateful_running_count(ev, watermark="1 hour")
+    agg = streaming.stateful_running_count(ev)
     sink = streaming.run_available_now(agg)
     return spark.read.parquet(sink)
 
@@ -3149,7 +3150,7 @@ def multimodal_frame_sample(spark, sf_dir):
         ),
         "media_id",
     ).drop("meta_json").withColumnRenamed("__meta", "meta_json")
-    out = multimodal.frame_sample_plan(media, every_n=10)
+    out = multimodal.frame_sample_plan(media)
     return out.select("media_id", F.col("frame_idx").cast("int").alias("frame_idx"))
 
 
@@ -3205,7 +3206,7 @@ def multimodal_resize(spark, sf_dir):
 def multimodal_decode_features(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     media = multimodal.documents_as_media(d)
-    feats = multimodal.decode_media(media, n_features=16)
+    feats = multimodal.decode_media(media)
 
     def cnt(i: int, name: str):
         return (
@@ -4048,7 +4049,7 @@ def wat_domain_pagerank(spark, sf_dir):
         F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
     )
     ranks = graph.pagerank(dom, iterations=5)
-    return graph.top_ranked(ranks, 10)
+    return graph.top_ranked(ranks)
 
 
 def _rd_sql(h: str) -> str:
@@ -4276,7 +4277,7 @@ def wat_pagerank_etld1(spark, sf_dir):
         F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
     )
     ranks = graph.pagerank(dom, iterations=5)
-    return graph.top_ranked(ranks, 10)
+    return graph.top_ranked(ranks)
 
 
 @q(
@@ -4560,7 +4561,7 @@ def pii_redaction(spark, sf_dir):
 )
 def boilerplate_removal(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    clean = text.remove_boilerplate(d, min_docs=3)
+    clean = text.remove_boilerplate(d)
     joined = d.join(clean, "doc_id")
     changed = (
         F.col("text_clean") != F.concat_ws(" ", word_tokens("text"))
@@ -5085,7 +5086,7 @@ def graph_pagerank_top(spark, sf_dir):
         .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
     )
     ranks = graph.pagerank(edges, iterations=5)
-    return graph.top_ranked(ranks, 10)
+    return graph.top_ranked(ranks)
 
 
 @q(
@@ -5996,7 +5997,7 @@ def tokenizer_prep_pipeline(spark, sf_dir):
 )
 def fuzzy_name_pairs(spark, sf_dir):
     p = _t(spark, sf_dir, "part")
-    return dedup.fuzzy_name_pairs(p, "p_name", max_distance=2)
+    return dedup.fuzzy_name_pairs(p, "p_name")
 
 
 @q(
@@ -6777,7 +6778,6 @@ def warc_content_dedup_pipeline(spark, sf_dir):
         max_words=1000,
         min_mean_word_len=1.0,
         max_mean_word_len=20.0,
-        max_symbol_word_ratio=0.1,
         min_alpha_word_ratio=0.5,
         stop_words=("shared", "crawl"),
         min_stop_words=1,
@@ -6789,7 +6789,7 @@ def warc_content_dedup_pipeline(spark, sf_dir):
         flags.filter("passes").select(F.col("id").alias("doc_id"), "text")
     )
     pairs = dedup.minhash_lsh_pairs_portable(
-        kept, "doc_id", "text", threshold=0.8, num_hashes=16, bands=4
+        kept, "doc_id", "text", threshold=0.8
     )
     surv = dedup.cluster_dedup(kept, pairs, "doc_id")
     return surv.select(
@@ -8015,7 +8015,7 @@ def event_transitions(spark, sf_dir):
 )
 def distinctive_terms_by_lang(spark, sf_dir):
     return text.distinctive_terms(
-        _t(spark, sf_dir, "documents"), "lang", top_k=5, min_count=10
+        _t(spark, sf_dir, "documents"), "lang", min_count=10
     )
 
 
@@ -8051,7 +8051,7 @@ def powerlaw_alpha_degrees(spark, sf_dir):
         .groupBy(F.col("l_suppkey").alias("node"))
         .agg(F.countDistinct("o_custkey").alias("degree"))
     )
-    return graph.powerlaw_alpha(deg, "degree", d_min=1)
+    return graph.powerlaw_alpha(deg, "degree")
 
 
 @q(
@@ -8197,7 +8197,7 @@ def segment_priority_chi2(spark, sf_dir):
 )
 def session_bounce_rate(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id", gap_s=1800)
+    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id")
     per = tagged.groupBy("user_id", "session_id").agg(F.count("*").alias("n_ev"))
     return per.agg(
         F.count("*").cast("bigint").alias("n_sessions"),
@@ -9088,7 +9088,7 @@ def rolling_active_users_7d(spark, sf_dir):
 )
 def mad_outliers_quantity(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return analytics.mad_outliers(li, "l_returnflag", "l_quantity", k=3.0)
+    return analytics.mad_outliers(li, "l_returnflag", "l_quantity")
 
 
 @q(
@@ -9250,8 +9250,7 @@ def format_mask_profile_props(spark, sf_dir):
 def session_path_topk(spark, sf_dir):
     return windows.session_paths(
         _t(spark, sf_dir, "events"),
-        ["user_id"], "ts", "event_id", "event_type",
-        gap_s=1800, top_n=20,
+        ["user_id"], "ts", "event_id", "event_type", top_n=20,
     )
 
 
@@ -9355,7 +9354,7 @@ def item_cf_neighbors(spark, sf_dir):
 )
 def embedding_norm_hist(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_norm_histogram(e, "embedding", bucket_width=0.25)
+    return similarity.embedding_norm_histogram(e, "embedding")
 
 
 @q(
@@ -10027,7 +10026,7 @@ def calibration_value_purchase(spark, sf_dir):
 def association_rules_parts(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return relational.association_rules(
-        li, "l_orderkey", "l_partkey", min_pair=2, k=20
+        li, "l_orderkey", "l_partkey", k=20
     )
 
 
@@ -10164,7 +10163,7 @@ def bollinger_daily_revenue(spark, sf_dir):
         .alias("revenue")
     )
     bands = analytics.bollinger_bands(
-        daily, "day", "revenue", window_days=7, n_sigma=2.0
+        daily, "day", "revenue", window_days=7
     )
     # dates compare as strings (pandas renders DateType as midnight
     # Timestamps — the cusum_changepoint_events convention)
@@ -10211,7 +10210,7 @@ def bollinger_daily_revenue(spark, sf_dir):
 )
 def embedding_covariance_gram(spark, sf_dir):
     return similarity.embedding_covariance(
-        _t(spark, sf_dir, "embeddings"), "embedding", scale=4
+        _t(spark, sf_dir, "embeddings"), "embedding"
     )
 
 
@@ -10234,7 +10233,7 @@ def embedding_covariance_gram(spark, sf_dir):
 def fixed_size_sample_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return relational.fixed_size_sample(
-        d, ["lang"], "doc_id", k=5, salt="s1"
+        d, ["lang"], "doc_id", salt="s1"
     ).select("doc_id", "lang", "sample_rank")
 
 
@@ -10720,7 +10719,7 @@ def wasserstein_value_ab(spark, sf_dir):
 )
 def label_centroid_separation(spark, sf_dir):
     return similarity.label_centroid_separation(
-        _t(spark, sf_dir, "embeddings"), "label", "embedding", scale=4
+        _t(spark, sf_dir, "embeddings"), "label", "embedding"
     )
 
 
@@ -10747,7 +10746,7 @@ def label_centroid_separation(spark, sf_dir):
 )
 def k_anonymity_customers(spark, sf_dir):
     return analytics.k_anonymity_report(
-        _t(spark, sf_dir, "customer"), ["c_mktsegment", "c_nationkey"], k=5
+        _t(spark, sf_dir, "customer"), ["c_mktsegment", "c_nationkey"]
     )
 
 
@@ -10782,7 +10781,7 @@ def seasonal_naive_mape_revenue(spark, sf_dir):
         .cast("double")
         .alias("revenue")
     )
-    return analytics.seasonal_naive_mape(daily, "day", "revenue", season_days=7)
+    return analytics.seasonal_naive_mape(daily, "day", "revenue")
 
 
 @q(
@@ -10870,7 +10869,7 @@ def hbos_event_outliers(spark, sf_dir):
         F.hour("ts").cast("double").alias("hour_of_day"),
     )
     return analytics.hbos_outlier_scores(
-        feats, "event_id", ["value", "hour_of_day"], n_bins=10, k=20
+        feats, "event_id", ["value", "hour_of_day"], k=20
     )
 
 
@@ -11014,7 +11013,7 @@ def bh_fdr_nation_urgency(spark, sf_dir):
         z.alias("__z"),
         analytics.two_sided_p_from_z(z).alias("__p"),
     )
-    adj = analytics.benjamini_hochberg(tests, "__p", "nation", alpha=0.05)
+    adj = analytics.benjamini_hochberg(tests, "__p", "nation")
     return adj.select(
         "nation",
         "n_users",
@@ -11073,7 +11072,7 @@ def bh_fdr_nation_urgency(spark, sf_dir):
 )
 def calinski_harabasz_labels(spark, sf_dir):
     return clustering.calinski_harabasz(
-        _t(spark, sf_dir, "embeddings"), "label", "embedding", scale=4
+        _t(spark, sf_dir, "embeddings"), "label", "embedding"
     )
 
 
@@ -11259,7 +11258,7 @@ def psi_value_ab(spark, sf_dir):
         F.lit("A"),
     ).otherwise(F.lit("B"))
     return analytics.population_stability_index(
-        per_user.withColumn("grp", grp), "grp", "x", n_bins=10
+        per_user.withColumn("grp", grp), "grp", "x"
     )
 
 
@@ -11319,7 +11318,7 @@ def conformal_orders_priority(spark, sf_dir):
     )
     j = base.join(F.broadcast(means), "prio")
     return mleval.split_conformal_coverage(
-        j, "pred", "actual", "is_cal", alpha=0.1
+        j, "pred", "actual", "is_cal"
     )
 
 
@@ -11418,7 +11417,7 @@ def dataset_fingerprint_orders(spark, sf_dir):
 def near_dup_minhash_portable(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs_portable(
-        d, "doc_id", "text", threshold=0.8, num_hashes=16, bands=4
+        d, "doc_id", "text", threshold=0.8
     )
 
 
@@ -11471,7 +11470,7 @@ def near_dup_minhash_portable(spark, sf_dir):
 def containment_pairs_portable_q(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return dedup.containment_pairs_portable(
-        d, "doc_id", "text", threshold=0.5, gap=8
+        d, "doc_id", "text"
     )
 
 
@@ -11520,7 +11519,7 @@ def _srp_oracle(
 def sim_pairs_lsh_portable(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_pairs_lsh_portable(
-        e, threshold=0.4, n_planes=8, dim=64, seed=7
+        e, threshold=0.4, n_planes=8, dim=64
     )
 
 
@@ -11571,7 +11570,7 @@ def sim_pairs_lsh_portable(spark, sf_dir):
 def simhash_pairs_portable(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return dedup.simhash_pairs(
-        d, "doc_id", "text", max_hamming=3, chunks=4, bits=48, hash_fn="md5"
+        d, "doc_id", "text", bits=48, hash_fn="md5"
     )
 
 
@@ -11608,7 +11607,7 @@ _PORTABLE_MINHASH_CTE = _portable_minhash_cte()
 def minhash_dedup_survivors_portable(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs_portable(
-        d, "doc_id", "text", threshold=0.8, num_hashes=16, bands=4
+        d, "doc_id", "text", threshold=0.8
     )
     return dedup.cluster_dedup(d, pairs, "doc_id").select("doc_id")
 
@@ -11639,7 +11638,7 @@ def minhash_dedup_survivors_portable(spark, sf_dir):
 def incremental_minhash_portable(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs_portable(
-        d, "doc_id", "text", threshold=0.8, num_hashes=16, bands=4
+        d, "doc_id", "text", threshold=0.8
     )
     cross = pairs.filter(
         (F.col("id_a") % 3 == 0) != (F.col("id_b") % 3 == 0)
@@ -11659,7 +11658,6 @@ def incremental_minhash_portable(spark, sf_dir):
 # HLL constants shared verbatim between the Spark operator and the SQL
 # oracle: the alpha*m^2 literal is computed ONCE in Python and inlined
 # into both sides bit-for-bit.
-_HLL_M = 512  # b_bits = 9
 _HLL_ALPHA_M2 = 0.7213 / (1.0 + 1.079 / _HLL_M) * _HLL_M * _HLL_M
 
 
@@ -11899,7 +11897,7 @@ def tukey_fences_outliers(spark, sf_dir):
 )
 def new_vs_returning_weekly(spark, sf_dir):
     return analytics.new_vs_returning(
-        _t(spark, sf_dir, "events"), "user_id", "ts", grain="week"
+        _t(spark, sf_dir, "events"), "user_id", "ts"
     )
 
 
@@ -11964,7 +11962,7 @@ def simpson_diversity_by_source(spark, sf_dir):
 )
 def session_duration_percentiles(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id", gap_s=1800)
+    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id")
     return analytics.session_duration_percentiles(
         tagged, ["user_id"], "session_id", "ts"
     )
@@ -12530,7 +12528,7 @@ def pareto_coverage_customers(spark, sf_dir):
         .cast("decimal(18,2)")
         .alias("v")
     )
-    return analytics.pareto_coverage(cv, "k", "v", threshold_pct=80)
+    return analytics.pareto_coverage(cv, "k", "v")
 
 
 @q(
@@ -12761,7 +12759,7 @@ def event_type_lift(spark, sf_dir):
 )
 def session_entry_exit_types(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id", gap_s=1800)
+    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id")
     return analytics.session_entry_exit(
         tagged, ["user_id"], "session_id", "ts", "event_id", "event_type"
     )
@@ -12898,7 +12896,7 @@ def jarque_bera_totals(spark, sf_dir):
 )
 def l_diversity_customers(spark, sf_dir):
     return analytics.l_diversity(
-        _t(spark, sf_dir, "customer"), ["c_nationkey"], "c_mktsegment", l_min=3
+        _t(spark, sf_dir, "customer"), ["c_nationkey"], "c_mktsegment"
     )
 
 
@@ -13465,7 +13463,7 @@ def bfs_reachable_3hop(spark, sf_dir):
         .select("user_id")
     )
     return graph.bfs_frontier_counts(
-        _event_proximity_edges(spark, sf_dir), seeds, hops=3
+        _event_proximity_edges(spark, sf_dir), seeds
     )
 
 
@@ -13651,7 +13649,7 @@ def user_lifecycle_states(spark, sf_dir):
 )
 def power_user_curve(spark, sf_dir):
     return analytics.active_days_histogram(
-        _t(spark, sf_dir, "events"), "user_id", "ts", clamp=60
+        _t(spark, sf_dir, "events"), "user_id", "ts"
     )
 
 
@@ -13695,7 +13693,7 @@ def power_user_curve(spark, sf_dir):
 )
 def intersession_gap_percentiles(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id", gap_s=1800)
+    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id")
     return analytics.intersession_gap_percentiles(
         tagged, ["user_id"], "session_id", "ts"
     )
@@ -14201,7 +14199,7 @@ def peak_concurrency_sessions(spark, sf_dir):
     from ascii_hydra_spark.operators import distrank
 
     ev = _t(spark, sf_dir, "events")
-    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id", gap_s=1800)
+    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     # session-grain aggregate: feeds the sweep-point union TWICE, and the
     # downstream point table feeds four plan branches — unpersisted, the
@@ -14478,7 +14476,7 @@ def brand_yoy_growth(spark, sf_dir):
     "the oracle is the fully unrolled 2-iteration CTE chain",
 )
 def hits_top_authorities(spark, sf_dir):
-    return graph.hits(_event_directed_edges(spark, sf_dir), iterations=2, k=10)
+    return graph.hits(_event_directed_edges(spark, sf_dir), k=10)
 
 
 @q(
@@ -15119,7 +15117,7 @@ _GRAM_POWER_CTES = """
 )
 def gram_top_eigenvalue(spark, sf_dir):
     return similarity.gram_power_iteration_eigen(
-        _t(spark, sf_dir, "embeddings"), iterations=3, scale=4
+        _t(spark, sf_dir, "embeddings")
     )
 
 
@@ -15702,7 +15700,7 @@ def priority_mix_drift_monthly(spark, sf_dir):
 )
 def sessions_per_user_hist(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id", gap_s=1800)
+    tagged = windows.session_ids(ev, ["user_id"], "ts", "event_id")
     per = tagged.groupBy("user_id").agg(
         F.max("session_id").cast("bigint").alias("n_sessions")
     )
@@ -17140,7 +17138,7 @@ def bartlett_value_by_type(spark, sf_dir):
 def stable_rank_embeddings(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     eig = similarity.gram_power_iteration_eigen(
-        emb, iterations=3, scale=4
+        emb
     ).select("d", "eigenvalue")
     q_comp = F.floor(
         F.col("x").cast("double") * F.lit(10000.0) + F.lit(0.5)
@@ -18966,7 +18964,7 @@ def aa_test_value(spark, sf_dir):
 def audio_rms_frames(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     media = multimodal.synthetic_media(d, kind="wav")
-    frames = multimodal.audio_frame_energy(media, frame_size=16)
+    frames = multimodal.audio_frame_energy(media)
     return frames.select(
         "media_id",
         "frame_idx",

@@ -281,7 +281,7 @@ def test_distinctive_terms_exact_lift(spark):
         [(1, "a a b", "X"), (2, "b b c", "Y")],
         "doc_id long, text string, lang string",
     )
-    rows = text.distinctive_terms(df, "lang", top_k=5, min_count=1).collect()
+    rows = text.distinctive_terms(df, "lang", min_count=1).collect()
     out = {(r["lang"], r["term"]): r for r in rows}
     # C=6, C_X=C_Y=3; lift(X,a) = ln(2*6/(3*2)) = ln 2
     assert out[("X", "a")]["lift"] == pytest.approx(math.log(2), abs=1e-6)
@@ -752,7 +752,7 @@ def test_mad_outliers_robust_to_extremes(spark):
     rows = [("g", float(v)) for v in [8, 9, 9, 10, 10, 10, 11, 11, 12]]
     rows.append(("g", 1_000_000.0))
     df = spark.createDataFrame(rows, "grp string, v double")
-    r = analytics.mad_outliers(df, "grp", "v", k=3.0).collect()[0]
+    r = analytics.mad_outliers(df, "grp", "v").collect()[0]
     assert r["n"] == 10 and r["median_v"] == pytest.approx(10.0)
     assert r["mad"] == pytest.approx(1.0)
     assert r["n_outliers"] == 1  # only the spike exceeds 3*1.4826*1
@@ -805,7 +805,7 @@ def test_session_paths_gap_rule(spark):
     ]
     df = spark.createDataFrame(rows, "user_id long, event_id long, ts timestamp, event_type string")
     out = {r["path"]: r["n_sessions"] for r in windows.session_paths(
-        df, ["user_id"], "ts", "event_id", "event_type", gap_s=1800, top_n=10
+        df, ["user_id"], "ts", "event_id", "event_type", top_n=10
     ).collect()}
     assert out == {"view>click": 2, "purchase": 1}
 
@@ -1213,7 +1213,7 @@ def test_k_anonymity_report_crafted(spark):
         + [("b", 1)]              # class of 1: violating
     )
     df = spark.createDataFrame(rows, "seg string, nat int")
-    row = analytics.k_anonymity_report(df, ["seg", "nat"], k=5).collect()[0]
+    row = analytics.k_anonymity_report(df, ["seg", "nat"]).collect()[0]
     assert row["n_rows"] == 8 and row["n_classes"] == 3
     assert row["min_class_size"] == 1
     assert row["violating_classes"] == 2
@@ -1228,7 +1228,7 @@ def test_seasonal_naive_mape_closed_form(spark):
     df = spark.createDataFrame(rows, "day string, v double").select(
         F.col("day").cast("date").alias("day"), "v"
     )
-    row = analytics.seasonal_naive_mape(df, "day", "v", season_days=7).collect()[0]
+    row = analytics.seasonal_naive_mape(df, "day", "v").collect()[0]
     assert row["n_scored"] == 7
     assert row["mape"] == pytest.approx(10.0 / 110.0, abs=1e-6)
     assert row["smape"] == pytest.approx(20.0 / 210.0, abs=1e-6)

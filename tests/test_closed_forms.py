@@ -86,7 +86,7 @@ def test_hits_path_graph_authority_ordering(spark):
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 3)], "src INT, dst INT"
     )
-    rows = graph.hits(df, iterations=2, k=10).collect()
+    rows = graph.hits(df, k=10).collect()
     assert rows[0]["n"] == 3 and rows[0]["authority"] == 1.0
     assert all(r["authority"] <= 1.0 for r in rows)
 
@@ -111,7 +111,7 @@ def test_bfs_frontier_counts_on_a_path(spark):
     seeds = spark.createDataFrame([(0,)], "user_id INT")
     got = {
         r["hop"]: (r["n_frontier"], r["n_visited"])
-        for r in graph.bfs_frontier_counts(edges, seeds, hops=3).collect()
+        for r in graph.bfs_frontier_counts(edges, seeds).collect()
     }
     assert got == {1: (1, 2), 2: (1, 3), 3: (1, 4)}
 
@@ -173,7 +173,7 @@ def test_pareto_coverage_includes_crossing_entity(spark):
     df = spark.createDataFrame(
         [(1, 50.0), (2, 30.0), (3, 20.0)], "k INT, v DOUBLE"
     )
-    row = analytics.pareto_coverage(df, "k", "v", threshold_pct=80).collect()[0]
+    row = analytics.pareto_coverage(df, "k", "v").collect()[0]
     assert row["n_needed"] == 2
     assert row["covered_share"] == 0.8
 

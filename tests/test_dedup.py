@@ -65,7 +65,7 @@ def test_minhash_lsh_recall_and_precision(spark, sf_dir):
 
 def test_simhash_pairs_are_truly_close(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = dedup.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
+    pairs = dedup.simhash_pairs(docs, "doc_id", "text")
     assert pairs.filter(F.col("hamming") > 3).count() == 0
     # pigeonhole banding is exhaustive for <= chunks-1 distance: verify
     # against brute-force simhash hamming on a capped sample
@@ -198,7 +198,7 @@ def test_cdc_containment_detects_quotation(spark):
     pairs = {
         (r["id_a"], r["id_b"]): r["containment"]
         for r in dedup.containment_pairs(
-            docs, "doc_id", "text", threshold=0.5
+            docs, "doc_id", "text"
         ).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] >= 0.8, pairs
@@ -213,7 +213,7 @@ def test_connected_components_long_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src BIGINT, dst BIGINT"
     )
-    comps = dedup.connected_components(nodes, edges, max_iter=25)
+    comps = dedup.connected_components(nodes, edges)
     assert comps.filter(F.col("component") != 0).count() == 0
 
 
@@ -304,7 +304,7 @@ def test_fuzzy_name_pairs_blocking_is_exact(spark):
     df = spark.createDataFrame([(n,) for n in names], ["p_name"])
     got = {
         (r.name_a, r.name_b, r.dist)
-        for r in dedup.fuzzy_name_pairs(df, "p_name", max_distance=2).collect()
+        for r in dedup.fuzzy_name_pairs(df, "p_name").collect()
     }
 
     def lev(a, b):

@@ -230,7 +230,7 @@ def test_split_conformal_coverage_guarantee(spark):
     rows = [(i, 0.0, float(i % 10), i % 2 == 0) for i in range(200)]
     df = spark.createDataFrame(rows, "k long, pred double, actual double, is_cal boolean")
     row = mleval.split_conformal_coverage(
-        df, "pred", "actual", "is_cal", alpha=0.1
+        df, "pred", "actual", "is_cal"
     ).collect()[0]
     assert row["n_cal"] == 100 and row["n_test"] == 100
     # cal residuals 0,2,4,6,8 x20 each: interpolation position

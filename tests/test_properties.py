@@ -221,7 +221,7 @@ def test_fuzzy_blocking_matches_brute_force(spark, names):
     df = spark.createDataFrame([(n,) for n in names], ["nm"])
     got = {
         (r.name_a, r.name_b, r.dist)
-        for r in D.fuzzy_name_pairs(df, "nm", max_distance=2).collect()
+        for r in D.fuzzy_name_pairs(df, "nm").collect()
     }
     want = {
         (min(a, b), max(a, b), lev(a, b))

@@ -264,7 +264,7 @@ def test_association_rules_crafted(spark):
     out = {
         (r["antecedent"], r["consequent"]): r
         for r in relational.association_rules(
-            baskets, "b", "i", min_pair=2, k=10
+            baskets, "b", "i", k=10
         ).collect()
     }
     ab = out[("a", "b")]
@@ -282,19 +282,19 @@ def test_fixed_size_sample_exact_k_and_determinism(spark):
 
     rows = [(i, "en" if i % 2 else "fr") for i in range(1, 41)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = relational.fixed_size_sample(df, ["lang"], "doc_id", k=5).collect()
+    out = relational.fixed_size_sample(df, ["lang"], "doc_id").collect()
     per = {}
     for r in out:
         per.setdefault(r["lang"], []).append(r["doc_id"])
     assert {k: len(v) for k, v in per.items()} == {"en": 5, "fr": 5}
     again = relational.fixed_size_sample(
-        df.repartition(7), ["lang"], "doc_id", k=5
+        df.repartition(7), ["lang"], "doc_id"
     ).collect()
     assert sorted((r["lang"], r["doc_id"]) for r in out) == sorted(
         (r["lang"], r["doc_id"]) for r in again
     )
     other = relational.fixed_size_sample(
-        df, ["lang"], "doc_id", k=5, salt="s2"
+        df, ["lang"], "doc_id", salt="s2"
     ).collect()
     assert sorted((r["lang"], r["doc_id"]) for r in other) != sorted(
         (r["lang"], r["doc_id"]) for r in out

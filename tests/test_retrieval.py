@@ -91,7 +91,7 @@ def test_hybrid_search_end_to_end(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = retrieval.hybrid_search(
-        docs, emb, ["spark", "hash", "window"], query_vec_id=0, k=20
+        docs, emb, ["spark", "hash", "window"], query_vec_id=0
     )
     rows = out.collect()
     assert 0 < len(rows) <= 20

@@ -171,6 +171,22 @@ def test_catalog_analyze_feeds_cbo_stats(spark, sf_dir):
     spark.sql("DROP TABLE IF EXISTS nation")
 
 
+def test_catalog_analyze_keeps_events_normalizer(spark, sf_dir):
+    """After ANALYZE, SQL over `events` must see the same normalized `ts`
+    type as `load()`, not the raw fixture's TIMESTAMP_NTZ / ns long."""
+    cat = Catalog.for_dir(sf_dir)
+    want = cat.load(spark, "events").schema["ts"].dataType
+    try:
+        cat.analyze(spark, ("events",))
+        via_sql = spark.sql("SELECT * FROM events")
+        assert via_sql.schema["ts"].dataType == want
+        assert spark.table("events").schema["ts"].dataType == want
+        assert via_sql.count() == cat.load(spark, "events").count()
+    finally:
+        spark.catalog.dropTempView("events")
+        spark.sql("DROP TABLE IF EXISTS events")
+
+
 def test_delta_capability_gated(spark, tmp_path):
     """B8: Delta is provisioned-not-required (reference never writes Delta
     in-repo either, SURVEY §1.3). When delta-spark is importable the full

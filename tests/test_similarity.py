@@ -242,7 +242,7 @@ def test_embedding_norm_histogram(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = {r["bucket"]: r for r in
-           similarity.embedding_norm_histogram(df, "embedding", 0.25).collect()}
+           similarity.embedding_norm_histogram(df, "embedding").collect()}
     assert out[20]["n"] == 1 and out[20]["min_norm"] == 5.0
     assert out[0]["n"] == 1 and out[0]["max_norm"] == 0.0
     assert out[2]["bucket_lo"] == 0.5
@@ -321,3 +321,28 @@ def test_label_centroid_separation_orthogonal_and_aligned(spark):
     assert out[(0, 2)]["cos"] == pytest.approx(1.0, abs=1e-9)  # same direction
     assert out[(1, 2)]["cos"] == pytest.approx(0.0, abs=1e-9)
     assert (out[(0, 1)]["n_a"], out[(0, 1)]["n_b"]) == (4, 4)
+
+
+def test_normalize_folds_the_norm_once_per_vector(spark):
+    """The L2 norm is folded once per vector: no `aggregate(` may sit inside
+    the `transform(` lambda of the optimized plan (a per-element re-fold
+    made the normalization quadratic in the vector width), and the unit
+    vectors still match a per-row l2_norm division."""
+    from ascii_hydra_spark.functions import l2_norm
+
+    df = spark.createDataFrame(
+        [([3.0, 4.0],), ([1.0, 2.0, 2.0],)], "v array<double>"
+    )
+    out = df.select(similarity._normalize(F.col("v")).alias("n"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    start = plan.index("transform(")
+    depth, end = 0, start
+    for end in range(start + len("transform"), len(plan)):
+        depth += {"(": 1, ")": -1}.get(plan[end], 0)
+        if depth == 0:
+            break
+    assert "aggregate(" not in plan[start:end], plan
+    ref = df.select(
+        F.transform("v", lambda x: x / l2_norm(F.col("v"))).alias("n")
+    )
+    assert [r.n for r in out.collect()] == [r.n for r in ref.collect()]

@@ -160,7 +160,7 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     df = spark.range(0, 10_000).selectExpr("id", "id % 7 AS g")
     df.repartition(40).write.parquet(p)
     before_sum = spark.read.parquet(p).agg({"id": "sum"}).collect()[0][0]
-    n_before, n_after = sources.compact_parquet(spark, p, target_file_mb=128)
+    n_before, n_after = sources.compact_parquet(spark, p)
     assert n_before >= 40 and n_after < n_before and n_after <= 2
     after = spark.read.parquet(p)
     assert after.count() == 10_000

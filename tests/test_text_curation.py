@@ -44,7 +44,7 @@ def test_remove_boilerplate_crafted(spark):
         ],
         "doc_id LONG, text STRING",
     )
-    out = {r.doc_id: r for r in text.remove_boilerplate(docs, min_docs=3).collect()}
+    out = {r.doc_id: r for r in text.remove_boilerplate(docs).collect()}
     assert out[1].text_clean == "alpha beta gamma delta"
     assert out[2].text_clean == "epsilon zeta eta theta"
     assert out[3].text_clean == "iota kappa lam mu"
@@ -59,7 +59,7 @@ def test_remove_boilerplate_fully_boilerplate_doc_survives_empty(spark):
         [(i, "same four token text") for i in range(1, 5)],
         "doc_id LONG, text STRING",
     )
-    out = text.remove_boilerplate(docs, min_docs=3).collect()
+    out = text.remove_boilerplate(docs).collect()
     assert len(out) == 4
     assert all(r.text_clean == "" and r.n_segments_kept == 0 for r in out)
 

@@ -259,7 +259,7 @@ def test_html_fixture_near_dup_structure(spark, tmp_path):
     assert got[12] == "tiny doc 4"  # g=4 is a tiny group
     pairs = dedup.minhash_lsh_pairs_portable(
         docs.filter(F.length("t") > 20), "doc_id", "t",
-        threshold=0.8, num_hashes=16, bands=4,
+        threshold=0.8,
     ).collect()
     # every found pair is within one planted group, at J = 15/17
     assert pairs, "no near-dup pairs found in planted groups"

@@ -214,7 +214,7 @@ def main() -> int:
 
     # ---- SimHash near-dup arm ----
     def simhash():
-        sp = D.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
+        sp = D.simhash_pairs(docs, "doc_id", "text")
         n_pairs = sp.count()
         exact_hits = sp.filter(
             (F.col("id_b") >= n9) & (F.col("id_a") == F.col("id_b") - n9)
@@ -327,7 +327,7 @@ def main() -> int:
     def hybrid():
         fused = retrieval.hybrid_search(
             docs, emb, ["w1", "w2", "w3"], query_vec_id=0,
-            candidates_per_ranker=100, k=20,
+            candidates_per_ranker=100,
         )
         rows = fused.collect()
         assert len(rows) == 20, len(rows)
@@ -497,7 +497,7 @@ def main() -> int:
         ns = seeds.count()
         rows = {
             r["hop"]: (r["n_frontier"], r["n_visited"])
-            for r in G.bfs_frontier_counts(ring, seeds, hops=3).collect()
+            for r in G.bfs_frontier_counts(ring, seeds).collect()
         }
         assert rows == {
             1: (2 * ns, 3 * ns),
@@ -554,7 +554,7 @@ def main() -> int:
         hubs = spark.range(nn, nn + 20).select(F.col("id").alias("src"))
         auths = spark.range(nn + 20, nn + 25).select(F.col("id").alias("dst"))
         block = hubs.crossJoin(auths)
-        top = G.hits(ring.unionAll(block), iterations=2, k=5).collect()
+        top = G.hits(ring.unionAll(block), k=5).collect()
         got = {(r["n"], r["authority"]) for r in top}
         want = {(nn + 20 + j, 1.0) for j in range(5)}
         assert got == want, got
@@ -830,7 +830,7 @@ def main() -> int:
         flags = T.gopher_quality_flags(
             docs, "doc_id", "text",
             min_words=30, max_words=100, min_mean_word_len=1.0,
-            max_mean_word_len=10.0, max_symbol_word_ratio=0.1,
+            max_mean_word_len=10.0,
             min_alpha_word_ratio=0.5, stop_words=("footerxq", "alpha"),
             min_stop_words=1,
         )
@@ -909,7 +909,7 @@ def main() -> int:
         flags = TX.gopher_quality_flags(
             docs_w, "doc_id", "text", keep_cols=("text",),
             min_words=8, max_words=1000, min_mean_word_len=1.0,
-            max_mean_word_len=20.0, max_symbol_word_ratio=0.1,
+            max_mean_word_len=20.0,
             min_alpha_word_ratio=0.5, stop_words=("shared", "crawl"),
             min_stop_words=1,
         )
@@ -927,7 +927,7 @@ def main() -> int:
         assert got_kept == len(exp_kept), (got_kept, len(exp_kept))
         exp_groups = len({i // 3 for i in exp_kept})
         pairs = D.minhash_lsh_pairs_portable(
-            kept, "doc_id", "text", threshold=0.8, num_hashes=16, bands=4
+            kept, "doc_id", "text", threshold=0.8
         )
         surv = D.cluster_dedup(kept, pairs, "doc_id").count()
         kept.unpersist()
@@ -1116,7 +1116,7 @@ def main() -> int:
             else:
                 break
             cum += v
-        prow = A8.pareto_coverage(ents, "k", "v", threshold_pct=80).collect()[0]
+        prow = A8.pareto_coverage(ents, "k", "v").collect()[0]
         assert (prow["n_entities"], prow["n_needed"]) == (nr, n_need), (
             prow, n_need,
         )
