@@ -13,14 +13,29 @@ the Hive-style directory layout, so callers never hand-build paths
 (the reference hand-builds `.../seed_nodes=X/crawl_id=Y/main_language=*`
 strings at orchestration/pipes/utils.py:56-62 — wildcard reads become plain
 reads + filters here, which Catalyst turns into partition pruning).
+
+Schema memo: `Catalog.load` infers a dataset's schema once per
+SparkSession and resolved path, and every later load of that path in the
+session reads with the remembered schema. Inferring a parquet schema is a
+footer-read Spark job on every `spark.read.parquet`; with the schema given,
+a load runs no job. Only the schema is remembered, never the relation: each
+load still lists the files, so rewritten files and new partition values
+are seen at once (the registry builds a fresh `Catalog` per table, so the
+memo lives at module level, not on the instance). `sources.write_parquet`,
+the engine's one parquet write, drops the memo for the path it writes and
+for every remembered path under it. A schema changed by a writer outside
+the engine needs a new session to be seen — the contract of Spark's
+`REFRESH TABLE`.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ascii_hydra_spark.session import ExecutionMode
 
@@ -70,6 +85,24 @@ def normalize_events(df: DataFrame) -> DataFrame:
 
 _NORMALIZERS = {"events": normalize_events}
 
+# SparkSession -> {resolved path: inferred schema}; see the module docstring
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, StructType]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _resolve(path: str) -> str:
+    return path.rstrip("/") if "://" in path else os.path.abspath(path)
+
+
+def forget_schemas(spark: SparkSession, path: str) -> None:
+    """Drop the remembered schema of `path` and of every path under it."""
+    memo = _SCHEMAS.get(spark, {})
+    root = _resolve(path)
+    for key in list(memo):
+        if key == root or key.startswith(root + "/"):
+            memo.pop(key, None)
+
 
 @dataclass
 class Catalog:
@@ -101,8 +134,18 @@ class Catalog:
         return f"{root}/{name}.parquet"
 
     def load(self, spark: SparkSession, name: str) -> DataFrame:
-        """Load a logical table; fixture normalizers applied at the edge."""
-        df = spark.read.parquet(self.path(name))
+        """Load a logical table; fixture normalizers applied at the edge.
+
+        The session's first load of a path infers its schema (one Spark
+        job); later loads read with that schema and run no job."""
+        path = self.path(name)
+        memo, key = _SCHEMAS.setdefault(spark, {}), _resolve(path)
+        schema = memo.get(key)
+        if schema is None:
+            df = spark.read.parquet(path)
+            memo[key] = df.schema
+        else:
+            df = spark.read.schema(schema).parquet(path)
         norm = _NORMALIZERS.get(name)
         if norm:
             df = norm(df)

@@ -1013,8 +1013,8 @@ def decode_media(media: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract pipeline over binary payloads.
 
     mapInPandas keeps payloads off the driver and processes executor-local
-    Arrow batches — the correct shape for multi-GB media partitions. The
-    per-batch function is swappable; the default extracts deterministic
+    Arrow batches — the correct shape for multi-GB media partitions. Each
+    batch goes through `_decode_batch`, which extracts deterministic
     byte-histogram features (real codecs raise, see module docstring).
     """
 

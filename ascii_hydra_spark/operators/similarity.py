@@ -268,23 +268,31 @@ def block_pair_sides(rows: DataFrame, key_col: str, block_size: int) -> DataFram
     block pair that sees at most ~2 * block_size rows.
 
     EAGER: one `count()` of `rows` sizes the grid. The O(n_blocks^2) grid
-    is generated DISTRIBUTIVELY as explode(sequence(bi, n_blocks - 1)),
-    never as a driver-side Python list (at ~10M rows / block 1024 it is
-    ~50M pairs) and never as a `bi <= bj` non-equi self-join (a
-    BroadcastNestedLoopJoin); both sides then attach by equi-join.
+    is never materialized, neither as a driver-side Python list (at ~10M
+    rows / block 1024 it is ~50M pairs) nor as a distributed table joined
+    back to the rows: each row explodes its own block pairs, as side 0
+    `(b, explode(sequence(b, n_blocks - 1)))` and as side 1
+    `(explode(sequence(0, b)), b)`, so the layout is two narrow scans of
+    `rows` and a union, with no join and no broadcast.
     """
     n_blocks = max(1, -(-rows.count() // block_size))
-    grid = (
-        rows.sparkSession.range(n_blocks)
-        .select(F.col("id").cast("int").alias("bi"))
-        .select("bi", F.explode(F.sequence("bi", F.lit(n_blocks - 1))).alias("bj"))
-    )
+    cols = rows.columns
     tagged = rows.withColumn(
         "__b", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_blocks)).cast("int")
     )
-    left = grid.join(tagged, F.col("__b") == F.col("bi")).withColumn("__side", F.lit(0))
-    right = grid.join(tagged, F.col("__b") == F.col("bj")).withColumn("__side", F.lit(1))
-    return left.unionByName(right).drop("__b")
+    left = tagged.select(
+        F.col("__b").alias("bi"),
+        F.explode(F.sequence("__b", F.lit(n_blocks - 1))).alias("bj"),
+        *cols,
+        F.lit(0).alias("__side"),
+    )
+    right = tagged.select(
+        F.explode(F.sequence(F.lit(0), "__b")).alias("bi"),
+        F.col("__b").alias("bj"),
+        *cols,
+        F.lit(1).alias("__side"),
+    )
+    return left.unionByName(right)
 
 
 def cosine_pairs_blocked(

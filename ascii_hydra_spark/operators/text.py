@@ -237,18 +237,12 @@ def redact_pii(
 def token_window_segments(text: Column | str) -> Column:
     """Non-overlapping 4-token windows, space-joined — the segmentation
     `remove_boilerplate` dedups (the synthetic docs are single-line, so
-    `line_segments` would see each document as one segment)."""
+    newline-delimited segments would see each document as one segment)."""
     toks = word_tokens(text)
     n_seg = F.ceil(F.size(toks) / F.lit(4)).cast("int")
     idx = F.sequence(F.lit(0), F.greatest(n_seg - 1, F.lit(0)))
     segs = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i * 4 + 1, 4)))
     return F.when(F.size(toks) == 0, F.array().cast("array<string>")).otherwise(segs)
-
-
-def line_segments(text: Column | str) -> Column:
-    """Newline-delimited segments (CCNet-style paragraph units)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(c, r"\n+"), lambda s: s != "")
 
 
 def remove_boilerplate(

@@ -124,11 +124,13 @@ class Pipeline:
         rerunning one partition replaces only that partition's files —
         the idempotent-rerun contract (utils.py:87).
 
-        Every Spark job an asset launches — building, sinking and reading
-        it back — carries the job description ``asset:<name>``; the
-        caller's description is restored afterwards. A description, not a
-        job group, so callers' own job groups stay theirs."""
+        Every Spark job an asset launches — building, sinking and, when
+        another asset depends on it, reading it back — carries the job
+        description ``asset:<name>``; the caller's description is restored
+        afterwards. A description, not a job group, so callers' own job
+        groups stay theirs."""
         order = list(TopologicalSorter({n: a.deps for n, a in self.assets.items()}).static_order())
+        needed = {d for a in self.assets.values() for d in a.deps}
         outputs: dict[str, DataFrame] = {}
         reports: dict[str, dict] = {}
         sc = spark.sparkContext
@@ -144,8 +146,11 @@ class Pipeline:
                 else:
                     df = a.fn(spark, deps)
                 report = sink(df, f"{self.base_path}/{name}", a.partition_by)
-                # dependents read the materialized dataset, not the asset's plan
-                outputs[name] = spark.read.parquet(report["path"])
+                # dependents read the materialized dataset, not the asset's
+                # plan; a leaf is not read back (the read infers a schema,
+                # one job)
+                if name in needed:
+                    outputs[name] = spark.read.parquet(report["path"])
                 # an asset's time includes building its DataFrame: eager
                 # operators (PageRank, tf-idf, ...) run jobs there
                 report["duration_sec"] = round(time.monotonic() - t0, 3)

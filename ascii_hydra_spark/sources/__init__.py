@@ -19,6 +19,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ascii_hydra_spark.catalog import forget_schemas
+
 
 def read_csv(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
     """CSV with a header row and an *explicit* schema — schema inference is
@@ -61,13 +63,20 @@ def write_parquet(
     this is the cheap layout lever: sorted columns RLE/dictionary-compress
     far better, and parquet row-group min/max statistics become selective
     so later scans skip whole row groups on range predicates.
+
+    The catalog's remembered schemas of `path` and of every path under it
+    are dropped, so the next `Catalog.load` of the written data infers its
+    schema afresh.
     """
     if sort_within:
         df = df.sortWithinPartitions(*sort_within)
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    try:
+        w.parquet(path)
+    finally:
+        forget_schemas(df.sparkSession, path)
 
 
 def write_csv(df: DataFrame, path: str) -> None:

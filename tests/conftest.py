@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -29,6 +30,24 @@ def spark():
     s = build_spark(profile)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_run_by(spark):
+    """`jobs_run_by(fn)` -> (fn's result, the number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_run_by_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -105,6 +105,37 @@ def test_pipeline_dag_runs_in_dependency_order(spark, sf_dir, tmp_path):
     ]["row_count"]
 
 
+def test_pipeline_reads_back_only_depended_on_assets(spark, tmp_path, jobs_run_by):
+    """A leaf asset is sunk but not read back: a two-asset run costs as many
+    jobs as sinking the first asset, reading it back and sinking the leaf
+    by hand. The dependent gets the materialized dataset, not the upstream
+    asset's plan."""
+    pipe = plans.Pipeline(base_path=f"{tmp_path}/pipe")
+    seen = {}
+
+    @pipe.asset("first")
+    def first(spark_, deps):
+        return spark_.range(5)
+
+    @pipe.asset("leaf", deps=("first",))
+    def leaf(spark_, deps):
+        seen["files"] = deps["first"].inputFiles()
+        return deps["first"].withColumn("twice", F.col("id") * 2)
+
+    def by_hand():
+        plans.sink(spark.range(5), f"{tmp_path}/hand/first")
+        back = spark.read.parquet(f"{tmp_path}/hand/first")
+        plans.sink(back.withColumn("twice", F.col("id") * 2), f"{tmp_path}/hand/leaf")
+
+    _, run_jobs = jobs_run_by(lambda: pipe.run(spark))
+    _, hand_jobs = jobs_run_by(by_hand)
+    assert run_jobs == hand_jobs
+    assert seen["files"] and all(f"{tmp_path}/pipe/first/" in f for f in seen["files"])
+    assert sorted(
+        tuple(r) for r in spark.read.parquet(f"{tmp_path}/pipe/leaf").collect()
+    ) == [(i, 2 * i) for i in range(5)]
+
+
 def test_pipeline_labels_asset_jobs_and_restores_caller_description(spark, tmp_path):
     """Inside an asset fn the job description names the asset; after
     `run` the caller's own description is back in place."""

@@ -228,3 +228,59 @@ def test_no_catalog_leakage_across_sf_dirs(spark):
         small_2 = fn(spark, "/root/testdata/sf0.001").collect()
         assert sorted(map(str, small_1)) == sorted(map(str, small_2))
         assert sorted(map(str, small_1)) != sorted(map(str, big)), name
+
+
+def test_catalog_load_infers_each_schema_once(spark, sf_dir, tmp_path, jobs_run_by):
+    """The session's first load of a path infers its schema; a second load
+    through a fresh Catalog runs no Spark job and reads the same schema
+    and rows."""
+    from ascii_hydra_spark.sources import write_parquet
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    write_parquet(orders, f"{tmp_path}/orders.parquet")
+
+    def load():
+        return Catalog.for_dir(str(tmp_path)).load(spark, "orders")
+
+    first, first_jobs = jobs_run_by(load)
+    second, second_jobs = jobs_run_by(load)
+    assert first_jobs >= 1 and second_jobs == 0
+    assert second.schema == first.schema == orders.schema
+    assert sorted(map(tuple, second.collect())) == sorted(map(tuple, first.collect()))
+
+
+def test_materialize_with_a_new_schema_is_seen_by_the_next_table(spark, sf_dir, tmp_path):
+    """`HydraEngine.materialize` rewriting a name with another schema drops
+    the remembered one: the next `eng.table(name)` reads the new columns."""
+    from ascii_hydra_spark.engine import HydraEngine
+
+    eng = HydraEngine(spark, Catalog.for_dir(sf_dir), output_root=str(tmp_path))
+    eng.materialize(spark.createDataFrame([(1, "a")], "k INT, s STRING"), "saved")
+    assert eng.table("saved").columns == ["k", "s"]
+    eng.materialize(
+        spark.createDataFrame([(2, 2.5, True)], "k LONG, x DOUBLE, flag BOOLEAN"), "saved"
+    )
+    again = eng.table("saved")
+    assert again.dtypes == [("k", "bigint"), ("x", "double"), ("flag", "boolean")]
+    assert [tuple(r) for r in again.collect()] == [(2, 2.5, True)]
+
+
+def test_new_partition_value_is_seen_through_the_remembered_schema(
+    spark, sf_dir, tmp_path, jobs_run_by
+):
+    """Only the schema is remembered, never the file listing: a dynamic
+    overwrite that adds a partition value, written straight through
+    Spark with the same schema, is visible to the next load, which still
+    runs no schema job."""
+    from ascii_hydra_spark.engine import HydraEngine
+
+    eng = HydraEngine(spark, Catalog.for_dir(sf_dir), output_root=str(tmp_path))
+    rows = spark.createDataFrame([(1, 10), (2, 20)], "p INT, v INT")
+    eng.materialize(rows, "parts", partition_by=("p",))
+    assert sorted(r.p for r in eng.table("parts").collect()) == [1, 2]
+    spark.createDataFrame([(3, 30)], "p INT, v INT").write.mode("overwrite").partitionBy(
+        "p"
+    ).parquet(f"{tmp_path}/parts")
+    parts, jobs = jobs_run_by(lambda: eng.table("parts"))
+    assert jobs == 0
+    assert sorted(map(tuple, parts.select("p", "v").collect())) == [(1, 10), (2, 20), (3, 30)]

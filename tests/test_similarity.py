@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from ascii_hydra_spark.operators import similarity
@@ -148,6 +149,55 @@ def test_blocked_pairs_identical_to_expression_form(spark, sf_dir):
         for r in similarity.cosine_pairs_blocked(emb, threshold=0.3, block_size=100).collect()
     }
     assert old == new and len(old) > 0
+
+
+def _grid_join_block_pair_sides(rows, key_col, block_size):
+    """`block_pair_sides` as it was first written: a range/explode grid of
+    block pairs equi-joined to the rows once per side."""
+    n_blocks = max(1, -(-rows.count() // block_size))
+    grid = (
+        rows.sparkSession.range(n_blocks)
+        .select(F.col("id").cast("int").alias("bi"))
+        .select("bi", F.explode(F.sequence("bi", F.lit(n_blocks - 1))).alias("bj"))
+    )
+    tagged = rows.withColumn(
+        "__b", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_blocks)).cast("int")
+    )
+    left = grid.join(tagged, F.col("__b") == F.col("bi")).withColumn("__side", F.lit(0))
+    right = grid.join(tagged, F.col("__b") == F.col("bj")).withColumn("__side", F.lit(1))
+    return left.unionByName(right).drop("__b")
+
+
+@pytest.mark.parametrize("block_size", [100, 3])
+def test_block_pair_sides_matches_grid_join(spark, block_size):
+    """Each row exploding its own block pairs gives the grid join's rows
+    (as a multiset) and column order, with one block (block_size 100) and
+    with several (block_size 3). A NULL key hashes to xxhash64's seed, so
+    its row lands in a block on both sides, in both forms alike. The
+    layout needs no join and no broadcast."""
+    from ascii_hydra_spark.plans import plan_report
+
+    rows = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(10)] + [(None, "null-key")],
+        "k LONG, payload STRING",
+    )
+    new = similarity.block_pair_sides(rows, "k", block_size)
+    old = _grid_join_block_pair_sides(rows, "k", block_size)
+    assert new.columns == old.columns == ["bi", "bj", "k", "payload", "__side"]
+    got, want = sorted(map(tuple, new.collect()), key=repr), sorted(
+        map(tuple, old.collect()), key=repr
+    )
+    assert got == want
+    assert {side for _, _, k, _, side in got if k is None} == {0, 1}
+    pairs = {(bi, bj) for bi, bj, *_ in got}
+    if block_size >= 11:
+        assert pairs == {(0, 0)} and len(got) == 2 * 11
+    else:
+        assert len(pairs) > 1 and all(bi <= bj for bi, bj in pairs)
+    rep = plan_report(new)
+    assert rep["broadcasts"] == 0 and rep["broadcast_hash_joins"] == 0
+    assert rep["sort_merge_joins"] == 0
+    assert "Join" not in new._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_quantize_embeddings_reconstruction(spark, sf_dir):

@@ -92,15 +92,6 @@ def test_chunk_documents_no_overlap_reconstructs(spark):
     assert text.chunk_documents(empty, 3, 3).count() == 0
 
 
-def test_line_segments_split(spark):
-    docs = spark.createDataFrame(
-        [(1, "header line\nbody text here\n\nfooter line")],
-        "doc_id LONG, text STRING",
-    )
-    segs = docs.select(text.line_segments("text").alias("s")).collect()[0].s
-    assert segs == ["header line", "body text here", "footer line"]
-
-
 def test_build_vocab_rank_and_min_df(spark):
     docs = spark.createDataFrame(
         [(1, "b a a"), (2, "a b c"), (3, "a d")],
